@@ -1,26 +1,31 @@
-"""Fused per-document extraction kernel: E1 + E2 + E3 + D1 in ONE
-mapInPandas pass.
+"""Fused per-document extraction kernel: E1 + E2 + E3 + D1, and in the
+document kernel also E5 + E6 + E7 + E9 + D11, in ONE mapInPandas pass.
 
-Why fused: mention detection, confidence scoring, keyword extraction and
-first-seen-wins dedup are all strictly per-conversation — expressing them
-as global shuffles (explode -> groupBy -> window) moves ~10x the input
-volume through the shuffle for work that never crosses a document boundary.
-At 10^12-turn scale that shuffle volume is the bottleneck; in the kernel the
-intermediates never leave the task. Only genuinely cross-row operators
-(endpoint resolution joins, sentence co-occurrence self-join, global triple
-dedup, entity linking, connected components) remain Spark-side.
+Why fused: mention detection, confidence scoring, keyword extraction,
+first-seen-wins dedup, endpoint resolution, sentence co-occurrence,
+relation validation and the per-conversation triple dedup are all strictly
+per-conversation — expressing them as global shuffles and conv_id joins
+moves many times the input volume through the shuffle for work that never
+crosses a document boundary. In the kernel the intermediates never leave
+the task. Only genuinely cross-conversation operators (node/edge merge,
+entity linking, connected components) remain Spark-side.
 
-Everything inside is vectorized pandas (str.extractall per pattern per
-batch, groupby aggregations) — no per-row Python. Semantics are identical
-to the modular operators in extraction.py (same reference citations);
-tests/test_parity_reference.py holds both paths to exact reference parity.
+Entity and candidate extraction is vectorized pandas (str.extractall per
+pattern per batch, groupby aggregations); the relation steps loop per
+conversation, as the reference does per document. Semantics are identical
+to the modular operators in extraction.py and relations.py (same reference
+citations); tests/test_parity_reference.py holds both paths to exact
+reference parity and tests/test_kernel_equivalence.py holds them to each
+other.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import re
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -169,11 +174,12 @@ def extract_entities_fused(documents: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Document-extract kernel: one pass emitting per-conversation ARRAYS so the
-# downstream relation operators run as codegen array expressions with NO
-# joins and NO shuffles (see relations_fused.py). The entire per-document
-# dataflow is then: reassemble shuffle -> this kernel -> narrow array ops ->
-# global triple dedup shuffle. Two shuffles end-to-end.
+# Document-extract kernel: one pass per conversation emitting its entities,
+# its relation candidates AND its deduplicated triples. Endpoint resolution
+# (E7), sentence co-occurrence (E6), validation (E9) and the triple dedup
+# (D11) are all per conversation, so they run here on data the task already
+# holds instead of as conv_id joins. The per-document dataflow is then:
+# reassemble shuffle -> this kernel -> narrow explodes.
 # --------------------------------------------------------------------------
 
 _DOC_EXTRACT_SCHEMA = (
@@ -181,8 +187,17 @@ _DOC_EXTRACT_SCHEMA = (
     "ents array<struct<entity_order:bigint, name_norm:string, name:string, "
     "entity_type:string, confidence:double>>, "
     "cands array<struct<pred:string, head_text:string, tail_text:string>>, "
-    "cand_texts array<string>"
+    "triples array<struct<subj:string, pred:string, obj:string, conf:double>>"
 )
+_ENT_FIELDS = ["entity_order", "name_norm", "name", "entity_type", "confidence"]
+_CAND_FIELDS = ["pred", "head_text", "tail_text"]
+
+_VALID_COMBOS = frozenset(P.VALID_COMBOS)
+_RELAXED_PREDS = frozenset(P.RELAXED_PREDS)
+_SENTENCE_RX = re.compile(P.SENTENCE_SPLIT_REGEX)
+# joins the sentences of one conversation for a single substring scan per
+# entity; no entity pattern can match it, so no name spans two sentences
+_SENT_SEP = "\x00"
 
 
 def _candidates_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -211,67 +226,125 @@ def _candidates_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             )
         )
     if not outs:
-        return pd.DataFrame(columns=["row", "pred", "head_text", "tail_text"])
+        return pd.DataFrame(columns=["row", *_CAND_FIELDS])
     return pd.concat(outs, ignore_index=True).drop_duplicates()
+
+
+def _records_by_row(df: pd.DataFrame, fields: list[str], n_rows: int) -> list[list[dict]]:
+    """Per input row, its records of ``df`` (which carries a ``row``
+    column) as dicts, in ``df`` order."""
+    out: list[list[dict]] = [[] for _ in range(n_rows)]
+    for row, rec in zip(df["row"].to_numpy(), df[fields].to_dict("records")):
+        out[row].append(rec)
+    return out
+
+
+def conversation_triples(text: str, ents: list[dict], cands: list[dict]) -> list[dict]:
+    """E7 + E6 + E9 + D11 for one conversation, as the reference does them
+    per document (relation_extractor.py:400-487): the same results as
+    relations.pattern_relations / cooccurrence_relations /
+    validate_relations / to_triples restricted to one conv_id.
+
+    ``ents`` are the conversation's entities in emission (entity_order)
+    order, ``cands`` its (pred, head_text, tail_text) candidates. Returns
+    the validated (subj, pred, obj) triples with their max conf. Sentences
+    are stripped and lowered with Python's str methods, as the reference
+    does; the join form uses Java's (?U) trim and lower."""
+    if not ents:
+        return []
+    best: dict[tuple[str, str, str], float] = {}
+
+    def emit(head: dict, pred: str, tail: dict, conf: float) -> None:
+        h, t = head["name_norm"], tail["name_norm"]
+        if (
+            h != t
+            and conf >= P.CONFIDENCE_THRESHOLD
+            and (pred in _RELAXED_PREDS
+                 or (head["entity_type"], tail["entity_type"], pred) in _VALID_COMBOS)
+            and best.get((h, pred, t), -1.0) < conf
+        ):
+            best[(h, pred, t)] = conf
+
+    # E7: exact lower(name) first, else the first entity in emission order
+    # with containment either way ('' is in every name, so '' -> first)
+    exact = {e["name_norm"]: e for e in ents}
+    resolved: dict[str, dict | None] = {}
+
+    def resolve(text: str) -> dict | None:
+        if text not in resolved:
+            hit = exact.get(text)
+            if hit is None:
+                hit = next((e for e in ents if text in e["name_norm"] or e["name_norm"] in text), None)
+            resolved[text] = hit
+        return resolved[text]
+
+    for c in cands:
+        head, tail = resolve(c["head_text"]), resolve(c["tail_text"])
+        if head is not None and tail is not None:
+            emit(head, c["pred"], tail, P.PATTERN_RELATION_CONFIDENCE)
+
+    # E6: entities sharing a sentence, paired in emission order. Identical
+    # sentences give identical pairs, so each distinct one is scanned once.
+    sents = list(dict.fromkeys(
+        s for s in (x.strip().lower() for x in _SENTENCE_RX.split(text)) if s
+    ))
+    joined = _SENT_SEP.join(sents)
+    starts = list(itertools.accumulate((len(s) + 1 for s in sents[:-1]), initial=0))
+    hits: dict[int, list[dict]] = {}
+    for e in ents:  # emission order, so each sentence's hits are ordered too
+        name = e["name_norm"]
+        pos = joined.find(name)
+        while pos >= 0:
+            i = bisect.bisect_right(starts, pos) - 1
+            hits.setdefault(i, []).append(e)
+            pos = joined.find(name, starts[i] + len(sents[i]) + 1)
+    for row in hits.values():
+        for i, a in enumerate(row):
+            for b in row[i + 1:]:
+                emit(a, "related_to", b, P.COOCCURRENCE_CONFIDENCE)
+
+    return [{"subj": s, "pred": p, "obj": o, "conf": c} for (s, p, o), c in best.items()]
+
+
+def _doc_extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """documents(conv_id, text) -> one row each with its ents, cands and
+    triples arrays. conv_id must be unique within the batch."""
+    pdf = pdf.reset_index(drop=True)
+    n = len(pdf)
+    ents = extract_entities_batch(pdf)
+    # entity arrays sorted by emission order (dict-insertion order of the
+    # reference dedup) — downstream "first match wins" = first array hit.
+    # A null conv_id has no entities (the groupby drops it), hence no
+    # triples, as the conv_id equi-joins of the join form give.
+    ents = ents.sort_values(["conv_id", "entity_order"], kind="stable")
+    conv_to_row = pd.Series(pdf.index, index=pdf["conv_id"])
+    ents["row"] = conv_to_row.loc[ents["conv_id"]].to_numpy()
+    ent_lists = _records_by_row(ents, _ENT_FIELDS, n)
+    cand_lists = _records_by_row(_candidates_batch(pdf), _CAND_FIELDS, n)
+    texts = pdf["text"].fillna("")
+    return pd.DataFrame(
+        {
+            "conv_id": pdf["conv_id"],
+            "text": texts,
+            "ents": ent_lists,
+            "cands": cand_lists,
+            "triples": [
+                conversation_triples(t, e, c) for t, e, c in zip(texts, ent_lists, cand_lists)
+            ],
+        }
+    )
 
 
 def _doc_extract_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.reset_index(drop=True)
-        ents = extract_entities_batch(pdf)
-        # entity arrays sorted by emission order (dict-insertion order of the
-        # reference dedup) — downstream "first match wins" = first array hit
-        ents = ents.sort_values(["conv_id", "entity_order"], kind="stable")
-        conv_to_row = pd.Series(pdf.index, index=pdf["conv_id"])
-        ents["row"] = conv_to_row.loc[ents["conv_id"]].to_numpy()
-        ent_records = pd.Series(
-            ents[["entity_order", "name_norm", "name", "entity_type", "confidence"]]
-            .to_dict("records"),
-            index=ents["row"],
-        )
-        ents_by_row = ent_records.groupby(level=0).agg(list)
-
-        cands = _candidates_batch(pdf)
-        if len(cands):
-            cand_records = pd.Series(
-                cands[["pred", "head_text", "tail_text"]].to_dict("records"),
-                index=cands["row"],
-            )
-            cands_by_row = cand_records.groupby(level=0).agg(list)
-            texts = pd.concat(
-                [
-                    cands[["row", "head_text"]].rename(columns={"head_text": "t"}),
-                    cands[["row", "tail_text"]].rename(columns={"tail_text": "t"}),
-                ]
-            ).drop_duplicates()
-            texts_by_row = texts.groupby("row")["t"].agg(list)
-        else:
-            cands_by_row = pd.Series(dtype=object)
-            texts_by_row = pd.Series(dtype=object)
-
-        out = pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "text": pdf["text"].fillna(""),
-                "ents": ents_by_row.reindex(pdf.index).apply(
-                    lambda v: v if isinstance(v, list) else []
-                ),
-                "cands": cands_by_row.reindex(pdf.index).apply(
-                    lambda v: v if isinstance(v, list) else []
-                ),
-                "cand_texts": texts_by_row.reindex(pdf.index).apply(
-                    lambda v: v if isinstance(v, list) else []
-                ),
-            }
-        )
-        yield out
+        if len(pdf):
+            yield _doc_extract_batch(pdf)
 
 
 def extract_documents_fused(documents: DataFrame) -> DataFrame:
-    """(conv_id, text) -> (conv_id, text, ents[], cands[], cand_texts[]):
-    the single-pass extraction surface consumed by relations_fused."""
+    """(conv_id, text) -> (conv_id, text, ents[], cands[], triples[]): the
+    single-pass extraction surface; entities and triples are narrow
+    explodes of it."""
     return documents.select("conv_id", "text").mapInPandas(
         _doc_extract_kernel, schema=_DOC_EXTRACT_SCHEMA
     )
@@ -295,10 +368,7 @@ def _grouped_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         .agg(lambda s: "\n".join(s.dropna()))
         .reset_index()
     )
-    out = next(iter(_doc_extract_kernel(iter([docs]))), None)
-    if out is None:
-        out = pd.DataFrame(columns=["conv_id", "text", "ents", "cands", "cand_texts"])
-    return out
+    return _doc_extract_batch(docs)
 
 
 def extract_documents_fused_grouped(

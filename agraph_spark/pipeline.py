@@ -4,11 +4,12 @@ Mirrors the reference flagship path ``builder.build_graph(texts)``
 (/root/reference/agraph/builders/llm_builders.py:1035-1097) restated as one
 declarative DataFrame plan (SURVEY.md §3.1):
 
-  transcripts --window reassemble--> documents --mapInPandas--> mentions
-  --column exprs--> scored entities --joins--> relations --filter--> triples
+  transcripts --reassemble shuffle--> documents --mapInPandas kernel-->
+  per-conversation (entities, candidates, triples) arrays --explode-->
+  entities / triples
 
 Every stage is a DataFrame; Catalyst handles pushdown/pruning, AQE handles
-skew. The only Python code runs vectorized per Arrow batch.
+skew. The Python code runs once per Arrow batch in one kernel pass.
 """
 
 from __future__ import annotations
@@ -18,22 +19,36 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: F811
-
 from .caching import track
 from .operators.extraction import extract_entities
-from .operators.fused import extract_documents_fused, extract_entities_fused
+from .operators.fused import extract_documents_fused, extract_documents_fused_grouped
 from .operators.reassemble import reassemble_conversations
 from .operators.relations import extract_relations, to_triples
-from .operators.relations_fused import extract_relations_fused
 
 
 @dataclass
 class KGBuild:
+    """``relations`` holds the validated relation rows before the triple
+    dedup in "modular" mode; the kernel modes dedup inside the kernel, so
+    there it is the same frame as ``triples``."""
+
     documents: DataFrame
     entities: DataFrame
     relations: DataFrame
     triples: DataFrame
+
+
+def _kernel_entities(extracted: DataFrame) -> DataFrame:
+    return extracted.select("conv_id", F.explode("ents").alias("e")).select(
+        "conv_id", "e.name", "e.name_norm", "e.entity_type", "e.confidence",
+        "e.entity_order",
+    )
+
+
+def _kernel_triples(extracted: DataFrame) -> DataFrame:
+    return extracted.select("conv_id", F.explode("triples").alias("t")).select(
+        "conv_id", "t.subj", "t.pred", "t.obj", "t.conf"
+    )
 
 
 def build_kg(
@@ -42,111 +57,59 @@ def build_kg(
     """Run the deterministic extraction pipeline over a transcripts table.
 
     Modes (all held to exact reference parity by the test suite):
-    - "fused" (default): ALL per-document work — mentions, confidence,
-      keywords, dedup AND relation-candidate extraction — in ONE
-      mapInPandas pass emitting per-conversation arrays
-      (operators/fused.py); entity/candidate rows are narrow explodes of
-      the cached kernel output, and the cross-row relation steps (endpoint
-      resolution, sentence co-occurrence) run as join-based codegen
-      operators. One Python pass over the corpus total.
-    - "modular": every stage as an individually-tested Spark operator
-      (two Python passes + per-stage shuffles).
-    - "fused_arrays": the zero-join variant where E6/E7 run as nested
-      higher-order array expressions on per-conversation arrays
-      (operators/relations_fused.py). Measured ~2x SLOWER than the join
-      formulation: nested lambdas are evaluated interpreted (outside
-      whole-stage codegen), so the per-element cost dwarfs the saved
-      shuffles. Kept for the record and for inputs where shuffle volume,
-      not CPU, is the binding constraint.
-    - "grouped": reassembly + extraction fused into one
+    - "fused" (default): reassembly shuffle, then ALL per-conversation work
+      — mentions, confidence, keywords, entity dedup, relation candidates,
+      endpoint resolution, sentence co-occurrence, validation and the
+      triple dedup — in ONE mapInPandas pass emitting per-conversation
+      arrays (operators/fused.py). Entities and triples are narrow explodes
+      of the cached kernel output; the reassembly is the build's only
+      shuffle.
+    - "grouped": the same kernel, with reassembly folded into one
       groupBy(hash bucket).applyInPandas exchange — no JVM
       collect_list/array_sort aggregation before the Arrow transfer.
-      Exact-parity-tested vs "fused"; measured comparison in PLANS.md
-      (round 3).
+      Measured comparison in PLANS.md (round 3).
+    - "modular": every stage as an individually-tested Spark operator
+      (two Python passes, conv_id joins and per-stage shuffles).
     """
-    if mode in ("fused", "fused_arrays", "grouped"):
+    if mode not in ("fused", "grouped", "modular"):
+        raise ValueError(f"unknown build_kg mode {mode!r}")
+    if mode in ("fused", "grouped"):
         if mode == "grouped":
-            # reassembly + extraction share ONE exchange: raw turns shuffle
-            # on a conv_id hash bucket and a single applyInPandas reassembles
-            # and extracts (no JVM collect_list agg; see PLANS.md round 3)
-            from .operators.fused import extract_documents_fused_grouped
-
             extracted = extract_documents_fused_grouped(transcripts)
-            mode = "fused"
         else:
             extracted = extract_documents_fused(reassemble_conversations(transcripts))
         if cache_documents:
             extracted = track(extracted)
-            # eager materialization: the triples plan consumes this cache
-            # from five branches (documents, entities, candidates, pattern
-            # and co-occurrence subtrees) that otherwise RACE to build the
-            # same cached partitions concurrently — the kernel runs up to
-            # twice per partition. One up-front count builds it once;
-            # measured 6.0 -> 3.0 s cold on the docs corpus (r6).
+            # eager: entities and triples both read this cache, and a job
+            # that consumes both (materialize_graph's integrity join) would
+            # otherwise run the kernel twice per partition, racing to build it
             extracted.count()
-        documents = extracted.select("conv_id", "text")
-        entities = extracted.select(
-            "conv_id", F.explode("ents").alias("e")
-        ).select(
-            "conv_id", "e.name", "e.name_norm", "e.entity_type", "e.confidence",
-            "e.entity_order",
-        )
-        if mode == "fused_arrays":
-            relations = extract_relations_fused(extracted)
-        else:
-            from .operators.relations import (
-                cooccurrence_relations,
-                pattern_relations,
-                validate_relations,
-            )
-
-            candidates = extracted.select(
-                "conv_id", F.explode("cands").alias("c")
-            ).select("conv_id", "c.pred", "c.head_text", "c.tail_text")
-            pat = pattern_relations(candidates, entities)
-            coo = cooccurrence_relations(documents, entities)
-            relations = validate_relations(pat.unionByName(coo))
-        # expose the persisted kernel output for unpersist() by callers
-        documents = extracted
-    else:
-        documents = reassemble_conversations(transcripts)
-        if cache_documents:
-            documents = track(documents)
-        entities = extract_entities(documents)
-        if cache_documents:
-            entities = track(entities)
-        relations = extract_relations(documents, entities)
-    triples = to_triples(relations)
-    return KGBuild(documents, entities, relations, triples)
+        # documents is the persisted kernel output, for unpersist() by callers
+        triples = _kernel_triples(extracted)
+        return KGBuild(extracted, _kernel_entities(extracted), triples, triples)
+    documents = reassemble_conversations(transcripts)
+    if cache_documents:
+        documents = track(documents)
+    entities = extract_entities(documents)
+    if cache_documents:
+        entities = track(entities)
+    relations = extract_relations(documents, entities)
+    return KGBuild(documents, entities, relations, to_triples(relations))
 
 
 def build_triples_from_texts(documents: DataFrame, mode: str = "fused") -> DataFrame:
     """Same pipeline for inputs that are already one-document-per-row
-    (e.g. the driver's ``documents`` parquet): expects (conv_id, text)."""
+    (e.g. the driver's ``documents`` parquet): expects (conv_id, text),
+    conv_id unique per row."""
     from .session import spread
 
+    if mode not in ("fused", "modular"):
+        raise ValueError(f"unknown build_triples_from_texts mode {mode!r}")
     documents = spread(documents)
     if mode == "fused":
-        from .operators.relations import (
-            cooccurrence_relations,
-            pattern_relations,
-            validate_relations,
-        )
-
-        extracted = track(extract_documents_fused(documents))
-        # eager: see build_kg — builds the racing-consumer kernel cache once
-        extracted.count()
-        entities = extracted.select("conv_id", F.explode("ents").alias("e")).select(
-            "conv_id", "e.name", "e.name_norm", "e.entity_type", "e.confidence",
-            "e.entity_order",
-        )
-        candidates = extracted.select("conv_id", F.explode("cands").alias("c")).select(
-            "conv_id", "c.pred", "c.head_text", "c.tail_text"
-        )
-        pat = pattern_relations(candidates, entities)
-        coo = cooccurrence_relations(extracted.select("conv_id", "text"), entities)
-        return to_triples(validate_relations(pat.unionByName(coo)))
+        # persisted so a caller's repeated actions on the triples reuse one
+        # kernel run; one consumer, so no eager build is needed
+        return _kernel_triples(track(extract_documents_fused(documents)))
     documents = track(documents)
     entities = track(extract_entities(documents))
-    relations = extract_relations(documents, entities)
-    return to_triples(relations)
+    return to_triples(extract_relations(documents, entities))

@@ -16,13 +16,45 @@ produce golden triples (SURVEY.md §5.1).
 
 from __future__ import annotations
 
+import contextlib
 import importlib.util
+import json
 import logging
+import os
 import sys
 import types as pytypes
 
 REF_ROOT = "/root/reference/agraph"
+GOLDEN_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "golden"
+)
 _PKG = "refagraph"
+
+
+def reference_available() -> bool:
+    """True when the reference checkout is present to run live."""
+    return os.path.isdir(REF_ROOT)
+
+
+def golden(name: str):
+    """Recorded oracle outputs (tests/golden/<name>.json, written by
+    tests/golden/capture.py), the parity gate when the checkout is absent."""
+    with open(os.path.join(GOLDEN_DIR, f"{name}.json")) as fh:
+        return json.load(fh)
+
+
+@contextlib.contextmanager
+def _rollback_on_error():
+    """Drop every module registered inside the block if it raises, so a
+    failed first load re-raises its real error on the next call instead of
+    leaving half-initialized modules behind for the cache checks."""
+    before = set(sys.modules)
+    try:
+        yield
+    except BaseException:
+        for name in set(sys.modules) - before:
+            del sys.modules[name]
+        raise
 
 
 def _load(name: str, path: str):
@@ -41,7 +73,11 @@ def load_reference_extractors():
         ee = sys.modules[f"{_PKG}.extractors.entity_extractor"]
         re_ = sys.modules[f"{_PKG}.extractors.relation_extractor"]
         return ee.TextEntityExtractor, re_.TextRelationExtractor
+    with _rollback_on_error():
+        return _load_extractors()
 
+
+def _load_extractors():
     pkg = pytypes.ModuleType(_PKG)
     pkg.__path__ = [REF_ROOT]
     sys.modules[_PKG] = pkg
@@ -101,13 +137,14 @@ def load_reference_chunker():
     if name in sys.modules:
         m = sys.modules[name]
         return m.TokenChunker, m.SimpleTokenChunker
-    if "tiktoken" not in sys.modules:
-        try:
-            import tiktoken  # noqa: F401
-        except ImportError:
-            stub = pytypes.ModuleType("tiktoken")
-            stub.encoding_for_model = lambda model: FakeSegmentEncoding()
-            stub.get_encoding = lambda name: FakeSegmentEncoding()
-            sys.modules["tiktoken"] = stub
-    m = _load(name, f"{REF_ROOT}/chunker.py")
+    with _rollback_on_error():
+        if "tiktoken" not in sys.modules:
+            try:
+                import tiktoken  # noqa: F401
+            except ImportError:
+                stub = pytypes.ModuleType("tiktoken")
+                stub.encoding_for_model = lambda model: FakeSegmentEncoding()
+                stub.get_encoding = lambda name: FakeSegmentEncoding()
+                sys.modules["tiktoken"] = stub
+        m = _load(name, f"{REF_ROOT}/chunker.py")
     return m.TokenChunker, m.SimpleTokenChunker

@@ -31,10 +31,12 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-# one regex/model mention candidate per row (pre-dedup)
+# one regex/model mention candidate per row (pre-dedup); conv_id is
+# nullable here and in REL_CANDIDATES so a null-conv_id document passes
+# through the kernels (the conv_id joins then drop it) instead of failing
 MENTIONS = T.StructType(
     [
-        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("conv_id", T.StringType(), True),
         T.StructField("name", T.StringType(), False),
         T.StructField("entity_type", T.StringType(), False),
         # emission order inside one document: reference loops
@@ -60,7 +62,7 @@ ENTITIES = T.StructType(
 # raw (head_text, pred, tail_text) capture-group candidates (E5)
 REL_CANDIDATES = T.StructType(
     [
-        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("conv_id", T.StringType(), True),
         T.StructField("pred", T.StringType(), False),
         T.StructField("head_text", T.StringType(), False),
         T.StructField("tail_text", T.StringType(), False),

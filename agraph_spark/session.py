@@ -86,25 +86,28 @@ def local_df(spark: SparkSession, data, schema):
     <empty>``), which downstream scans fold away entirely.
 
     ``data`` may be a pandas DataFrame or a list of tuples; ``schema`` a
-    StructType or DDL string.
+    StructType or DDL string. Every input goes through one pyarrow Table
+    built here, so None (and pandas' NaN/NaT missing markers) arrive as SQL
+    NULL in every column type, while a float NaN in a list stays NaN, as
+    the plain createDataFrame path gives.
     """
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    if not isinstance(data, pd.DataFrame):
-        data = pd.DataFrame(data, columns=[f.name for f in schema.fields])
-    if len(data) == 0:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(schema)
-        empty = pa.Table.from_arrays(
-            [pa.array([], type=f.type) for f in arrow_schema], schema=arrow_schema
-        )
-        return spark.createDataFrame(empty, schema)
-    return spark.createDataFrame(data, schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        data = data.astype(object).where(data.notna(), None)
+        data = list(data.itertuples(index=False, name=None))
+    columns = list(zip(*data)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread(df, min_partitions: int | None = None):

@@ -121,65 +121,94 @@ def _gen_texts():
     return texts
 
 
+def _chunk_oracle():
+    """(hierarchical(text, size, overlap), simple(text, size)) from the
+    ACTUAL reference chunker when its checkout exists, else from its outputs
+    recorded in tests/golden/chunker.json for the _gen_texts() corpus."""
+    from agraph_spark.refload import golden, load_reference_chunker, reference_available
+
+    if reference_available():
+        TokenChunker, SimpleTokenChunker = load_reference_chunker()
+        return (
+            lambda t, s, o: TokenChunker(chunk_size=s, chunk_overlap=o).split_text(t),
+            lambda t, s: SimpleTokenChunker(chunk_size=s, chunk_overlap=0).split_text(t),
+        )
+    rec = golden("chunker")
+    assert rec["texts"] == _gen_texts(), "chunker corpus drifted from its recording"
+    idx = {t: i for i, t in enumerate(rec["texts"])}
+    return (
+        lambda t, s, o: rec["hierarchical"][f"{s}-{o}"][idx[t]],
+        lambda t, s: rec["simple"][str(s)][idx[t]],
+    )
+
+
 def test_hierarchical_chunker_matches_reference_tokenchunker(spark):
-    """Engine split_text_hierarchical == the ACTUAL reference
+    """Engine split_text_hierarchical == the reference
     TokenChunker.split_text under the same (injected) encoding, for every
     generated text and several (size, overlap) configs."""
     from agraph_spark.operators.chunking import split_text_hierarchical
-    from agraph_spark.refload import FakeSegmentEncoding, load_reference_chunker
+    from agraph_spark.refload import FakeSegmentEncoding
 
-    TokenChunker, _ = load_reference_chunker()
+    ref, _ = _chunk_oracle()
     enc = FakeSegmentEncoding()
     for size, ov in [(20, 5), (50, 10), (10, 0), (30, 29)]:
-        ref = TokenChunker(chunk_size=size, chunk_overlap=ov)
         for t in _gen_texts():
-            assert split_text_hierarchical(t, size, ov, enc) == ref.split_text(t), (
+            assert split_text_hierarchical(t, size, ov, enc) == ref(t, size, ov), (
                 size, ov, t[:50])
 
 
 def test_simple_chunker_matches_reference_simplechunker(spark):
     from agraph_spark.operators.chunking import split_text_simple
-    from agraph_spark.refload import load_reference_chunker
 
-    _, SimpleTokenChunker = load_reference_chunker()
+    _, ref = _chunk_oracle()
     for size in (10, 40, 200):
-        ref = SimpleTokenChunker(chunk_size=size, chunk_overlap=0)
         for t in _gen_texts():
-            assert split_text_simple(t, size) == ref.split_text(t), (size, t[:50])
+            assert split_text_simple(t, size) == ref(t, size), (size, t[:50])
 
 
 def test_token_chunk_documents_kernel(spark):
     """The mapInPandas wrapper emits one row per reference chunk, in order,
     with document/chunk typing."""
     from agraph_spark.operators.chunking import token_chunk_documents
-    from agraph_spark.refload import FakeSegmentEncoding, load_reference_chunker
 
-    TokenChunker, _ = load_reference_chunker()
+    ref, _ = _chunk_oracle()
     texts = [t for t in _gen_texts() if t.strip()][:6]
     docs = spark.createDataFrame(
         [(f"c{i}", t) for i, t in enumerate(texts)], "conv_id string, text string")
     got = (token_chunk_documents(docs, chunk_size=20, overlap=5)
            .orderBy("conv_id", "chunk_idx").collect())
-    ref = TokenChunker(chunk_size=20, chunk_overlap=5)
     want = []
     for i, t in enumerate(texts):
-        pieces = ref.split_text(t)
+        pieces = ref(t, 20, 5)
         for j, c in enumerate(pieces):
             want.append((f"c{i}", j, c, "document" if len(pieces) == 1 else "chunk"))
     assert [(r.conv_id, r.chunk_idx, r.content, r.chunk_type) for r in got] == sorted(want)
 
 
 def test_hierarchical_chunker_parity_fuzz(spark):
-    """Hypothesis fuzz: engine == reference TokenChunker on arbitrary text
-    built from separators + words (pure Python, no Spark jobs)."""
+    """Engine == reference TokenChunker on arbitrary text built from
+    separators + words (pure Python, no Spark jobs): hypothesis-generated
+    against the live reference, else the recorded seeded examples."""
+    from agraph_spark.operators.chunking import split_text_hierarchical
+    from agraph_spark.refload import (
+        FakeSegmentEncoding,
+        golden,
+        load_reference_chunker,
+        reference_available,
+    )
+
+    enc = FakeSegmentEncoding()
+    if not reference_available():
+        examples = golden("chunker")["fuzz_12_3"]
+        assert examples, "no chunker oracle ran"
+        for t, want in examples:
+            assert split_text_hierarchical(t, 12, 3, enc) == want, t[:50]
+        return
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from agraph_spark.operators.chunking import split_text_hierarchical
-    from agraph_spark.refload import FakeSegmentEncoding, load_reference_chunker
-
     TokenChunker, _ = load_reference_chunker()
-    enc = FakeSegmentEncoding()
     ref = TokenChunker(chunk_size=12, chunk_overlap=3)
     piece = st.sampled_from(
         ["word", "a", "Xy", "图", ".", "! ", "? ", ". ", " ", "\n", "\n\n", "", "longtokenword"])

@@ -1,0 +1,129 @@
+"""The fused document kernel computes endpoint resolution (E7), sentence
+co-occurrence (E6), validation (E9) and the triple dedup (D11) per
+conversation; "modular" mode computes them as conv_id joins
+(operators/relations.py). Both must give the same triples, conf included,
+on the inputs where the two forms could part ways.
+
+One real difference between the forms: the kernel strips sentences with
+Python's str.strip, the join form with Java's ``(?U)^\\s+|\\s+$``. Python
+counts \\x1c-\\x1f as whitespace and Java's Unicode White_Space does not,
+so a sentence of only those characters is empty in the kernel (dropped)
+and non-empty in the join form. It cannot change a triple: no entity name
+is made of them, and names never begin or end with whitespace, so
+containment in the stripped sentence is the same either way. The kernel
+follows Python, because the reference is Python. (Spark's lower() agrees
+with Python's str.lower on the cases probed: İ, final sigma, Unicode 14
+capitals.) The "sep" conversation below exercises it.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from agraph_spark.caching import release_caches
+from agraph_spark.operators.fused import conversation_triples
+from agraph_spark.pipeline import build_kg, build_triples_from_texts
+
+TRANSCRIPT_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+CONVERSATIONS = {
+    # a null conv_id: the equi-joins drop it, so the kernel yields nothing
+    None: ["Alice Smith works for Acme Corp.", "Acme Corp develops Python."],
+    "empty": [""],
+    "null": [None, None],
+    "no_ents": ["ok.", "fine then"],
+    # the tail captures '' after strip, and '' resolves to the first entity
+    "empty_cand": ["Acme Corp develops Python.", "Globex Inc describes  "],
+    # nested names: "acme corp" resolves exactly, "the acme" to the first
+    # entity containing or contained in it
+    "nested": ["acme corp and acme. The acme team uses acme corp tools.",
+               "acme corp is related to the acme"],
+    # found by the related_to pattern (0.7) and by co-occurrence (0.5)
+    "both": ["Python is related to TensorFlow."],
+    "sep": ["Python\x1c.\x1c\x1d. TensorFlow and Python!\x1f"],
+}
+
+
+def _transcripts(spark, convs: dict):
+    rows = [(cid, i, "user", text, None, None)
+            for cid, turns in convs.items() for i, text in enumerate(turns)]
+    return spark.createDataFrame(rows, TRANSCRIPT_DDL).repartition(3)
+
+
+def _monster(spark):
+    """test_skew_salting's monster conversation, one sentence per turn,
+    next to its 40 small conversations."""
+    from test_skew_salting import _skewed_corpus
+
+    docs, _ = _skewed_corpus(spark)
+    convs = {r.conv_id: r.text.split(". ") for r in docs.collect()}
+    assert len(convs["giant"]) == 1500
+    return _transcripts(spark, convs)
+
+
+def _rows(df) -> set[tuple]:
+    return {tuple(r) for r in df.select("conv_id", "subj", "pred", "obj", "conf").collect()}
+
+
+def _by_mode(tdf) -> dict[str, set[tuple]]:
+    out = {}
+    for mode in ("modular", "fused", "grouped"):
+        out[mode] = _rows(build_kg(tdf, mode=mode).triples)
+        release_caches(tdf.sparkSession)
+    return out
+
+
+@pytest.mark.parametrize("corpus", ["edge_cases", "monster"])
+def test_kernel_triples_match_joins(spark, corpus):
+    tdf = _transcripts(spark, CONVERSATIONS) if corpus == "edge_cases" else _monster(spark)
+    got = _by_mode(tdf)
+    assert got["fused"] == got["modular"]
+    assert got["grouped"] == got["modular"]
+    by_conv = {}
+    for row in got["modular"]:
+        by_conv.setdefault(row[0], set()).add(row[1:])
+    if corpus == "monster":
+        assert len(by_conv["giant"]) > 10
+        return
+    assert None not in by_conv
+    assert not {"empty", "null", "no_ents"} & set(by_conv)
+    assert ("globex inc", "describes", "acme corp", 0.7) in by_conv["empty_cand"]
+    assert ("acme corp", "related_to", "the acme", 0.7) in by_conv["nested"]
+    assert ("python", "related_to", "tensorflow", 0.7) in by_conv["both"]
+    assert ("python", "related_to", "tensorflow", 0.5) not in by_conv["both"]
+    assert by_conv["sep"]
+
+
+def test_documents_kernel_matches_joins(spark):
+    """build_triples_from_texts over one-row documents, same cases."""
+    docs = spark.createDataFrame(
+        [(cid, None if turns == [None, None] else "\n".join(turns))
+         for cid, turns in CONVERSATIONS.items()],
+        "conv_id string, text string")
+    modular = _rows(build_triples_from_texts(docs, mode="modular"))
+    release_caches(spark)
+    assert _rows(build_triples_from_texts(docs)) == modular and modular
+
+
+def test_conversation_triples_rules():
+    """The per-conversation function itself: exact match beats an earlier
+    containing entity, '' resolves to the first entity, co-occurrence pairs
+    follow emission order, E9 drops self-loops and invalid type combos."""
+    def ent(name, etype, order):
+        return {"name_norm": name, "entity_type": etype, "entity_order": order}
+
+    ents = [ent("acme corp", "organization", 0), ent("acme", "concept", 1),
+            ent("bob jones", "person", 2)]
+    cands = [{"pred": "describes", "head_text": "acme", "tail_text": ""},
+             {"pred": "belongs_to", "head_text": "bob jones", "tail_text": "acme corp inc"},
+             {"pred": "belongs_to", "head_text": "acme", "tail_text": "acme corp"},
+             {"pred": "describes", "head_text": "acme corp", "tail_text": "acme corp"}]
+    got = {(t["subj"], t["pred"], t["obj"], t["conf"])
+           for t in conversation_triples("Bob Jones met Acme. Nobody here", ents, cands)}
+    assert got == {
+        ("acme", "describes", "acme corp", 0.7),         # '' -> first entity
+        ("bob jones", "belongs_to", "acme corp", 0.7),   # first containing entity
+        ("acme", "related_to", "bob jones", 0.5),        # emission order 1 < 2
+    }
+    assert conversation_triples("anything", [], cands) == []
+

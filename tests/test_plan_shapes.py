@@ -149,6 +149,28 @@ def test_empty_mirror_results_stay_on_local_table_scan(spark):
     assert one.collect()[0].path == ["a", "b"]
 
 
+
+def test_local_df_round_trips_nulls(spark):
+    """local_df keeps SQL semantics for missing values: None in a double
+    column and in a mixed-null int column comes back as NULL (not NaN), a
+    real NaN stays NaN, and pandas input's NaN missing marker is NULL."""
+    import math
+
+    import pandas as pd
+
+    from agraph_spark.session import local_df
+
+    ddl = "x double, n int, s string"
+    df = local_df(spark, [(1.5, 1, "a"), (None, None, None), (float("nan"), 3, "c")], ddl)
+    assert "LocalTableScan" in plan_of(df)
+    assert df.selectExpr("count(x)", "count(n)", "count(s)").first() == (2, 2, 2)
+    rows = df.collect()
+    assert (rows[1].x, rows[1].n, rows[1].s) == (None, None, None)
+    assert math.isnan(rows[2].x) and rows[0] == (1.5, 1, "a")
+    pdf = pd.DataFrame({"x": [1.5, None], "n": [1, None], "s": ["a", None]})
+    assert [tuple(r) for r in local_df(spark, pdf, ddl).collect()] == [
+        (1.5, 1, "a"), (None, None, None)]
+
 def test_zero_pair_lsh_mirror_is_local_and_cheap(spark):
     """The LSH driver cutover with ZERO surviving pairs (the d7_chain
     corpus shape: mutually distant names) must produce an empty
@@ -168,3 +190,29 @@ def test_zero_pair_lsh_mirror_is_local_and_cheap(spark):
     release_caches(spark)
     assert out.count() == 0
     assert "LocalTableScan" in p and "ExistingRDD" not in p
+
+
+def test_kernel_build_has_no_joins_and_one_exchange(spark):
+    """Relation resolution, co-occurrence, validation and the triple dedup
+    run inside the fused document kernel: the fused build_kg triples plan
+    and the build_triples_from_texts plan hold no join, and the fused
+    build's only shuffle is the reassembly Exchange."""
+    import re
+
+    from agraph_spark.caching import release_caches
+    from agraph_spark.pipeline import build_kg, build_triples_from_texts
+    from agraph_spark.synth import transcripts_df
+
+    def joins(p):
+        return [n for n in ("Join", "CartesianProduct") if n in p]
+
+    p = plan_of(build_kg(transcripts_df(spark, n_convs=6, seed=5)).triples)
+    release_caches(spark)
+    assert not joins(p), p
+    # AQE prints the Exchange under both its final and initial plan, with one id
+    assert len(set(re.findall(r"\bExchange \((\d+)\)", p))) == 1, p
+    docs = spark.createDataFrame(
+        [("a", "Alice Smith works for Acme Corp. Acme Corp develops Python.")],
+        "conv_id string, text string")
+    p = plan_of(build_triples_from_texts(docs))
+    assert not joins(p) and "MapInPandas" in p, p
