@@ -983,10 +983,10 @@ def q_v_hybrid(spark, sf_dir):
     # DISPLAY score (see _display_topk) — the operator's reference-faithful
     # 9-decimal internal ordering picked a different member of a 3dp tie
     # group straddling the k boundary on this round's corpus (c291 vs
-    # c1835, both 0.461). Score the full chunk set (uncut), then cut at
-    # display precision with the chunk_id tie-break.
+    # c1835, both 0.461). Score the full chunk set (uncut, unsorted), then
+    # cut at display precision with the chunk_id tie-break: one sort.
     out = hybrid_search_chunks(
-        chunks, "table join query", q, k=2**31 - 1,
+        chunks, "table join query", q, k=None,
         text_weight=0.25, vector_weight=0.75,
     )
     return _display_topk(out, 10, score_col="hybrid_score", id_col="chunk_id")

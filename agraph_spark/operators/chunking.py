@@ -40,9 +40,18 @@ def chunk_documents(
 
     from .textstats import pystrip
 
-    stripped = pystrip(F.col("text"))
-    words = F.split(stripped, r"(?U)\s+")
-    n_words = F.when(F.length(stripped) == 0, 0).otherwise(F.size(words))
+    # stripped text, word array and word count are projected once per
+    # document: referenced inside the transform lambda they would be
+    # re-evaluated (strip + split) for every chunk
+    docs = (
+        documents.select("conv_id", pystrip(F.col("text")).alias("stripped"))
+        .select("conv_id", "stripped", F.split("stripped", r"(?U)\s+").alias("words"))
+        .select(
+            "conv_id", "words",
+            F.when(F.length("stripped") == 0, 0).otherwise(F.size("words")).alias("n_words"),
+        )
+    )
+    words, n_words = F.col("words"), F.col("n_words")
     n_chunks = F.when(n_words <= size_w, F.lit(1)).otherwise(
         F.ceil((n_words - size_w) / F.lit(step_w)) + 1
     )
@@ -57,8 +66,11 @@ def chunk_documents(
         ),
     )
     out = (
-        documents.where(n_words > 0)
-        .select("conv_id", n_chunks.alias("n_chunks"), F.explode(chunks).alias("c"))
+        # a blank (or null) document explodes a null array: no rows. A
+        # where(n_words > 0) would be pushed below the projections and
+        # strip and split every document once more
+        docs.select("conv_id", n_chunks.alias("n_chunks"),
+                    F.explode(F.when(n_words > 0, chunks)).alias("c"))
         .select(
             F.md5(F.concat_ws("|", "conv_id", F.col("c.chunk_idx"))).alias("chunk_id"),
             "conv_id",

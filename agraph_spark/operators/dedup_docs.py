@@ -33,11 +33,14 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def word_shingles(text: F.Column, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of lower(text)."""
-    from .textstats import pystrip
+def word_shingles(words: F.Column, n: int = 3) -> F.Column:
+    """Distinct word n-gram shingles of a word array; a document with fewer
+    than n words gives one whole-text shingle.
 
-    words = F.split(F.lower(pystrip(text)), r"(?U)\s+")
+    ``words`` must be a column reference, not the split expression:
+    higher-order lambdas run interpreted with no common-subexpression
+    elimination, so an expression referenced inside ``transform`` is
+    re-evaluated for every shingle (quadratic in document length)."""
     return F.array_distinct(
         F.when(
             F.size(words) >= n,
@@ -52,11 +55,18 @@ def word_shingles(text: F.Column, n: int = 3) -> F.Column:
 def shingle_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
+    """(doc, shingle) rows over the words of str.strip()-ed, lower-cased
+    text split on unicode whitespace. The word array is projected once per
+    document before the explode (Catalyst keeps it a separate projection
+    because it is referenced more than once and is not cheap)."""
     from ..session import spread
+    from .textstats import pystrip
 
-    df = spread(df)
-    return df.select(
-        F.col(id_col).alias("doc"), F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
+    words = F.split(F.lower(pystrip(F.col(text_col))), r"(?U)\s+")
+    return (
+        spread(df)
+        .select(F.col(id_col).alias("doc"), words.alias("words"))
+        .select("doc", F.explode(word_shingles(F.col("words"), n)).alias("shingle"))
     )
 
 

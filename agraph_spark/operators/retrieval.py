@@ -81,13 +81,14 @@ def hybrid_search_chunks(
     chunks: DataFrame,
     query_text: str,
     query: DataFrame,
-    k: int = 10,
+    k: int | None = 10,
     text_weight: float = 0.3,
     vector_weight: float = 0.7,
 ) -> DataFrame:
     """V6 (json_storage.py:750-814): text score = 0.8 exact-substring /
     0.6 title hit / word-overlap ratio, combined with cosine at the
-    normalized weights."""
+    normalized weights. ``k=None`` returns every scored row, unsorted,
+    for a caller that ranks them itself."""
     ql = query_text.lower()
     q_words = F.array(*[F.lit(w) for w in sorted(set(ql.split()))])
     content_l = F.lower(F.col("content"))
@@ -101,13 +102,14 @@ def hybrid_search_chunks(
     )
     tw = text_weight / (text_weight + vector_weight)
     vw = vector_weight / (text_weight + vector_weight)
-    return (
+    scored = (
         _scored(chunks, query)
         .withColumn("text_score", text_score)
         .withColumn("hybrid_score", F.round(tw * text_score + vw * F.col("score"), 9))
-        .orderBy(F.desc("hybrid_score"), F.asc("chunk_id"))
-        .limit(k)
     )
+    if k is None:
+        return scored
+    return scored.orderBy(F.desc("hybrid_score"), F.asc("chunk_id")).limit(k)
 
 
 def expand_connected_chunks(

@@ -62,6 +62,14 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",
+        # generated-class cache (JVM-wide, static), keyed by the generated
+        # source. One build + write + dedup cycle compiles 160-180 distinct
+        # classes; at the default 100 the LRU evicts them and every later
+        # operation recompiles identical source. The class name would carry
+        # the whole-stage codegen id, which AQE assigns in stage-completion
+        # order, so a repeated query would still miss now and then.
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

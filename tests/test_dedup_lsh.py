@@ -144,3 +144,37 @@ def test_caches_released_after_build(spark):
     assert added, "pipeline no longer persists its kernel output"
     release_caches(spark)
     assert not (persistent_ids() & added), "tracked caches survived release"
+
+
+def _py_shingles(text: str, n: int) -> set[str]:
+    """The shingling rules in plain Python: str.strip, lower, a unicode
+    whitespace split, word n-grams; one whole-text shingle when a
+    document has fewer than n words."""
+    import re
+
+    words = re.split(r"\s+", text.strip().lower())  # str patterns: unicode \s
+    if len(words) < n:
+        return {" ".join(words)}
+    return {" ".join(words[i:i + n]) for i in range(len(words) - n + 1)}
+
+
+@pytest.mark.parametrize("n", [2, 3])
+def test_shingle_table_matches_python_shingler(spark, n):
+    rng = random.Random(3)
+    long_doc = " ".join(rng.choice(["Alpha", "beta", "gamma", "delta", "eps"])
+                        for _ in range(4000))
+    texts = [
+        "",
+        "   \t\n ",
+        "\u00a0Alpha\u3000beta\u00a0 gamma\tDelta\n\nepsilon\u3000",
+        "\u3000\u00a0",
+        "one",
+        "one two",
+        "a b c a b c a b c a b",
+        "The Cat sat THE cat SAT the cat",
+        long_doc,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = sorted(tuple(r) for r in DD.shingle_table(df, n=n).collect())
+    want = sorted((i, s) for i, t in enumerate(texts) for s in _py_shingles(t, n))
+    assert got == want

@@ -216,3 +216,39 @@ def test_kernel_build_has_no_joins_and_one_exchange(spark):
         "conv_id string, text string")
     p = plan_of(build_triples_from_texts(docs))
     assert not joins(p) and "MapInPandas" in p, p
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every ``lambdafunction(...)`` in a plan string."""
+    opener = "lambdafunction("
+    bodies, start = [], 0
+    while (i := plan.find(opener, start)) >= 0:
+        j, depth = i + len(opener), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i + len(opener):j - 1])
+        start = j
+    return bodies
+
+
+def test_word_arrays_are_projected_before_the_lambdas(spark):
+    """Higher-order lambdas run interpreted, without common-subexpression
+    elimination: a strip/split referenced inside one is re-run for every
+    shingle or chunk, quadratic in document length. The shingle and chunk
+    lambdas must reference the projected word array instead."""
+    import re
+
+    from agraph_spark.operators.chunking import chunk_documents
+    from agraph_spark.operators.dedup_docs import shingle_table
+
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    convs = spark.createDataFrame([("c1", "a b c d e")], "conv_id string, text string")
+    for name, df in (("shingle_table", shingle_table(docs)),
+                     ("chunk_documents", chunk_documents(convs, 4, 1))):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, (name, plan)
+        for body in bodies:
+            assert "split(" not in body and "regexp_replace(" not in body, (name, body)
+            assert re.search(r"slice\(words#\d+", body), (name, body)

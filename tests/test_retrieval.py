@@ -62,6 +62,10 @@ def test_hybrid_search_prefers_exact_substring(spark):
     ).select(F.col("embedding").alias("query_vec"))
     top = hybrid_search_chunks(chunks, "apple pie", q, k=1).first()
     assert top.chunk_id == "c1" and top.text_score == 0.8
+    # k=None: every scored row, and no sort for the caller to repeat
+    every = hybrid_search_chunks(chunks, "apple pie", q, k=None)
+    assert "Sort" not in every._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r.chunk_id for r in every.collect()) == ["c1", "c2"]
 
 
 def test_expand_connected_chunks(spark):
