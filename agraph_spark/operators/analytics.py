@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import adaptive
+
 
 def degree_per_node(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """A3: per-node (in_degree, out_degree, degree); nodes without edges
@@ -119,27 +121,21 @@ def k_hop_neighbors(edges: DataFrame, start_id: str, k: int = 2, undirected: boo
 
 
 def _driver_pagerank_fixed(
-    nodes: DataFrame, adj: DataFrame, iterations: int, d_num: int
-) -> DataFrame:
-    """Driver mirror of the FIXED-POINT pagerank loop (r6c adaptive
-    cutover, completing the r5 family: CC/BFS/cycles/paths/canonical all
-    had one; the 10-iteration rank loop was the last per-job-floor-bound
-    iterative query). Safe ONLY in fixed-point mode: integer ppb
-    arithmetic is order-independent, so the mirror is bit-identical to
-    the distributed loop by construction (the float mode's pre-round
-    per-partition sum order is not reproducible and keeps the
-    distributed-only path). Mirrors the loop's exact join semantics:
-    contributions only from heads that are NODES (the rank join), null
-    tails accumulate but never match a node (Spark equi-join null
-    semantics), un-touched nodes take the closed-form floor rank via a
-    left-join fill so the full node set never crosses the driver."""
-    from pyspark.sql import types as T
-
-    from ..session import local_df
-
-    seed_v = 1_000_000_000
-    base_v = (100 - d_num) * 10_000_000
-    rows = [(r.head_id, r.tail_id, r.outd) for r in adj.collect()]
+    nodes: DataFrame, adj: DataFrame, rows: list, iterations: int,
+    d_num: int, seed_v: int, base_v: int,
+) -> list:
+    """Driver mirror of the FIXED-POINT pagerank loop over the collected
+    (head_id, tail_id, outd) adjacency rows, returning (entity_id, rank)
+    for every node the adjacency touches. Safe ONLY in fixed-point mode:
+    integer ppb arithmetic is order-independent, so the mirror is
+    bit-identical to the distributed loop by construction (the float
+    mode's pre-round per-partition sum order is not reproducible and
+    keeps the distributed-only path). Mirrors the loop's exact join
+    semantics: contributions only from heads that are NODES (the rank
+    join), null tails accumulate but never match a node (Spark equi-join
+    null semantics); un-touched nodes take the closed-form floor rank in
+    the caller's left-join fill, so the full node set never crosses the
+    driver."""
     adj_ids = (
         adj.select(F.col("head_id").alias("entity_id"))
         .unionByName(adj.select(F.col("tail_id").alias("entity_id")))
@@ -160,15 +156,7 @@ def _driver_pagerank_fixed(
             if rk is not None and t is not None:
                 recv[t] = recv.get(t, 0) + rk // outd
         ranks = {i: base_v + (recv.get(i, 0) * d_num) // 100 for i in touched}
-    id_type = nodes.schema["entity_id"].dataType  # preserve non-string ids
-    schema = T.StructType(
-        [T.StructField("entity_id", id_type), T.StructField("rank", T.LongType())]
-    )
-    mapping = local_df(nodes.sparkSession, list(ranks.items()), schema)
-    fill = F.lit(seed_v if iterations == 0 else base_v).cast("long")
-    return nodes.select("entity_id").join(mapping, "entity_id", "left").select(
-        "entity_id", F.coalesce("rank", fill).alias("rank")
-    )
+    return list(ranks.items())
 
 
 def pagerank(
@@ -178,7 +166,6 @@ def pagerank(
     damping: float = 0.85,
     checkpoint_dir: str | None = None,
     fixed_point: bool = False,
-    small_graph_threshold: int | None = 100_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank (unnormalized variant: seed 1.0,
     r' = (1-d) + d * sum_in(r/outdeg); parallel edges each carry mass).
@@ -187,16 +174,10 @@ def pagerank(
     importance upgrade for a KG at scale. Same loop machinery as connected
     components: cached adjacency, loop-sized shuffle partitions, per-round
     lineage cuts (reliable with checkpoint_dir). In fixed-point mode,
-    graphs at or under ``small_graph_threshold`` adjacency rows take the
-    driver mirror (``_driver_pagerank_fixed``) — the decision reuses the
-    loop's own sizing count, and integer arithmetic makes the mirror
-    bit-identical; the distributed loop is unchanged above the threshold
-    and is always used in float mode. The default threshold is TIGHTER
-    than the one-pass CC/BFS mirrors' 250k because the rank loop visits
-    every adjacency row ``iterations`` times: at ~170k rows x 10 iters
-    (sf1) the mirror measured a wash against the loop (4.7-6.0 vs
-    5.3-5.4 s), while at 17k rows it wins 2.4x — 100k keeps the cutover
-    on the winning side and sf1 on the verified distributed path.
+    graphs within ``adaptive.PAGERANK_ROWS`` adjacency rows take the
+    driver mirror (``_driver_pagerank_fixed``), which integer arithmetic
+    makes bit-identical; the distributed loop runs above the budget and
+    always in float mode.
 
     ``fixed_point=True`` runs the whole iteration in integer
     parts-per-billion (floor division per edge, exact BIGINT sums, damping
@@ -216,16 +197,26 @@ def pagerank(
     # RDD-leaf adjacency keeps each round's analyzed plan shallow
     # (measured on CC/cycles — PLANS.md round 3)
     adj = cut(edges.select("head_id", "tail_id").join(deg, "head_id"), eager=False)
-    n_adj = adj.count()  # sizes the loop AND decides the cutover (free probe)
     if fixed_point:
         d_num = int(round(damping * 100))
-        if small_graph_threshold is not None and n_adj <= small_graph_threshold:
-            return _driver_pagerank_fixed(nodes, adj, iterations, d_num)
-        seed = F.lit(1_000_000_000).cast("long")
-        base = F.lit((100 - d_num) * 10_000_000).cast("long")
+        seed_v, base_v = 1_000_000_000, (100 - d_num) * 10_000_000
+        id_t = nodes.schema["entity_id"].dataType.simpleString()
+        mapping = adaptive.cutover(
+            adj, adaptive.PAGERANK_ROWS,
+            lambda rows: _driver_pagerank_fixed(
+                nodes, adj, rows, iterations, d_num, seed_v, base_v),
+            f"entity_id {id_t}, rank bigint",
+        )
+        if mapping is not None:
+            fill = F.lit(seed_v if iterations == 0 else base_v).cast("long")
+            return nodes.select("entity_id").join(mapping, "entity_id", "left").select(
+                "entity_id", F.coalesce("rank", fill).alias("rank"))
+        seed = F.lit(seed_v).cast("long")
+        base = F.lit(base_v).cast("long")
         ranks = nodes.select("entity_id", seed.alias("rank"))
     else:
         ranks = nodes.select("entity_id", F.lit(1.0).alias("rank"))
+    n_adj = adj.count()  # sizes the loop
     with loop_shuffle_partitions(nodes.sparkSession, n_adj):
         ranks = cut(ranks)
         for _ in range(iterations):

@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+from . import adaptive
+
 
 class loop_shuffle_partitions:
     """Scale spark.sql.shuffle.partitions to the LOOP's data size for the
@@ -68,7 +71,6 @@ def connected_components(
     dst: str = "tail_id",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = 250_000,
 ) -> DataFrame:
     """Undirected connected components: (entity_id, component) where
     component = min entity_id in the component.
@@ -77,45 +79,37 @@ def connected_components(
     (llm_builders.py:519-531) and DFS components
     (graph_analyzer.py:173-204).
 
-    Adaptive execution (the AQE broadcast-cutover analog, same shape as
-    linking.canonical_mapping): the cutover probe counts the RAW
+    Adaptive execution (``adaptive.cutover``): the probe is the RAW
     symmetrized pairs — a narrow, shuffle-free pass over the edge scan —
     so the common small-graph case never pays the distinct exchange or
     the lineage-cut checkpoint at all (r6: those existed only to serve
-    the loop). Under ``small_graph_threshold`` raw pairs (~25 MB at the
-    default) the labels come from a driver-side union-find over the
-    collected pairs (duplicate-tolerant, so no distinct is needed), with
-    un-paired node ids labelled as singletons WITHOUT collecting the node
-    set (a left join). Larger graphs — the 100 TB path — build the
-    deduplicated, lineage-cut adjacency and run the unchanged hash-min +
-    pointer-jumping loop. Equivalence is pytest-gated."""
+    the loop). Within the budget the labels come from a driver-side
+    union-find over the collected pairs (duplicate-tolerant, so no
+    distinct is needed), with un-paired node ids labelled as singletons
+    WITHOUT collecting the node set (a left join). Larger graphs — the
+    100 TB path — build the deduplicated, lineage-cut adjacency and run
+    the unchanged hash-min + pointer-jumping loop."""
     cut = lineage_cutter(edges, checkpoint_dir)
     raw = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
-    spark = edges.sparkSession
-    if small_graph_threshold is not None and raw.count() <= small_graph_threshold:
-        touched = driver_union_find((p.a, p.b) for p in raw.collect())
-        ids = raw.select(F.col("a").alias("entity_id")).distinct()
+
+    def node_ids(pairs: DataFrame) -> DataFrame:
+        ids = pairs.select(F.col("a").alias("entity_id")).distinct()
         if nodes is not None:
             ids = ids.unionByName(nodes.select("entity_id")).distinct()
-        from pyspark.sql import types as T
+        return ids
 
-        id_type = ids.schema[0].dataType  # preserve non-string id types
-        schema = T.StructType([
-            T.StructField("entity_id", id_type),
-            T.StructField("component", id_type),
-        ])
-        # Arrow-backed local frame (session.local_df): the plain-list path
-        # runs python-worker conversion tasks exposed to multi-second
-        # worker stalls (r6 event-log audit); local_df converts
-        # driver-side with zero python tasks and keeps even an EMPTY
-        # mapping on the LocalTableScan path (r6b)
-        from ..session import local_df
-
-        mapping = local_df(spark, list(touched.items()), schema)
+    ids = node_ids(raw)
+    id_t = ids.schema[0].dataType.simpleString()  # preserve non-string ids
+    mapping = adaptive.cutover(
+        raw, adaptive.GRAPH_ROWS,
+        lambda rows: list(driver_union_find(rows).items()),
+        f"entity_id {id_t}, component {id_t}",
+    )
+    if mapping is not None:
         return ids.join(mapping, "entity_id", "left").select(
             "entity_id", F.coalesce("component", "entity_id").alias("component"))
     # lineage-cut, not persisted: every round joins against sym, and a
@@ -124,12 +118,9 @@ def connected_components(
     # measured 5.5 -> 3.6 s warm at sf0.1 switching to an RDD-leaf cut,
     # same lesson as bounded_cycles (PLANS.md round 3)
     sym = cut(raw.distinct(), eager=False)
-    ids = sym.select(F.col("a").alias("entity_id")).distinct()
-    if nodes is not None:
-        ids = ids.unionByName(nodes.select("entity_id")).distinct()
     n_sym = sym.count()  # materializes the lazy cut; sizes the loop
-    with loop_shuffle_partitions(spark, n_sym):
-        labels = _cc_loop(sym, ids, cut, max_iter)
+    with loop_shuffle_partitions(edges.sparkSession, n_sym):
+        labels = _cc_loop(sym, node_ids(sym), cut, max_iter)
     return labels
 
 
@@ -214,26 +205,50 @@ def component_sizes(labels: DataFrame) -> DataFrame:
     return labels.groupBy("component").agg(F.count("*").alias("size"))
 
 
+def _driver_bfs(pairs: list, start_id, max_depth: int) -> list:
+    """Driver mirror of the bfs_distances frontier loop over the collected
+    raw (src, dst) pairs: duplicate pairs are harmless to the visited-set
+    walk. Returns (entity_id, dist) rows."""
+    nbrs: dict = {}
+    for s, d in pairs:
+        # match the loop's null semantics exactly: a null dst can be
+        # REACHED (it lands in visited), but a null src never joins,
+        # so nothing is reachable THROUGH it — skip it as a hub key
+        if s is None:
+            continue
+        nbrs.setdefault(s, []).append(d)
+    dist = {start_id: 0}
+    frontier_ids = [start_id]
+    for depth in range(1, max_depth + 1):
+        nxt = []
+        for u in frontier_ids:
+            for v in nbrs.get(u, ()):
+                if v not in dist:
+                    dist[v] = depth
+                    nxt.append(v)
+        if not nxt:
+            break
+        frontier_ids = nxt
+    return list(dist.items())
+
+
 def bfs_distances(
     edges: DataFrame,
     start_id: str,
     max_depth: int = 5,
     undirected: bool = True,
     checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = 250_000,
 ) -> DataFrame:
     """A9: unweighted BFS distance from start to all nodes within max_depth
     (graph_path_finder.py:44-103). Frontier-expansion joins with a visited
     anti-join; at most max_depth iterations.
 
-    Same adaptive cutover as connected_components: the probe counts the
-    RAW (pre-distinct) adjacency — a narrow, shuffle-free pass — so under
-    ``small_graph_threshold`` edges the walk runs as a driver-side BFS
-    over the collected raw adjacency (duplicate rows are harmless to the
-    visited-set walk; no distinct exchange, no checkpoint) instead of one
-    join-job per depth; larger graphs build the deduplicated lineage-cut
-    adjacency and run the unchanged frontier loop. Equivalence
-    pytest-gated."""
+    Same adaptive cutover as connected_components: the probe is the RAW
+    (pre-distinct) adjacency, so within the budget the walk runs as a
+    driver-side BFS (``_driver_bfs``; no distinct exchange, no checkpoint)
+    instead of one join-job per depth; larger graphs build the
+    deduplicated lineage-cut adjacency and run the unchanged frontier
+    loop."""
     spark = edges.sparkSession
     cut = lineage_cutter(edges, checkpoint_dir)
 
@@ -242,44 +257,18 @@ def bfs_distances(
         raw = raw.unionByName(
             edges.select(F.col("tail_id").alias("src"), F.col("head_id").alias("dst"))
         )
-    from pyspark.sql import types as T
-
     # id type derived from the edge schema (ADVICE r5: the hardcoded string
     # schema broke non-string ids on this path only)
-    id_type = edges.schema["head_id"].dataType
-    seed_schema = T.StructType([
-        T.StructField("entity_id", id_type), T.StructField("dist", T.IntegerType())])
-    if small_graph_threshold is not None and raw.count() <= small_graph_threshold:
-        nbrs: dict = {}
-        for p in raw.collect():
-            # match the loop's null semantics exactly: a null dst can be
-            # REACHED (it lands in visited), but a null src never joins,
-            # so nothing is reachable THROUGH it — skip it as a hub key
-            if p.src is None:
-                continue
-            nbrs.setdefault(p.src, []).append(p.dst)
-        dist = {start_id: 0}
-        frontier_ids = [start_id]
-        for d in range(1, max_depth + 1):
-            nxt = []
-            for u in frontier_ids:
-                for v in nbrs.get(u, ()):
-                    if v not in dist:
-                        dist[v] = d
-                        nxt.append(v)
-            if not nxt:
-                break
-            frontier_ids = nxt
-        # Arrow-backed local frame (see connected_components / session.local_df)
-        from ..session import local_df
-
-        return local_df(spark, list(dist.items()), seed_schema)
+    seed_schema = f"entity_id {edges.schema['head_id'].dataType.simpleString()}, dist int"
+    got = adaptive.cutover(
+        raw, adaptive.GRAPH_ROWS,
+        lambda rows: _driver_bfs(rows, start_id, max_depth), seed_schema)
+    if got is not None:
+        return got
     # lineage-cut, not persisted: joined against once per depth, and an
     # RDD-leaf adjacency keeps every depth's analyzed plan shallow (see
     # connected_components / bounded_cycles)
     adj = cut(raw.distinct(), eager=False)
-    from ..session import local_df
-
     visited = local_df(spark, [(start_id, 0)], seed_schema)
     frontier = visited
     n_adj = adj.count()  # materializes the lazy cut; sizes the loop
@@ -409,14 +398,14 @@ def _cap_frontier_driver(
 
 def _driver_bounded_cycles(
     pairs: list, max_len: int, cap: int | None, log_dropped: bool = True
-) -> set | None:
+) -> list | None:
     """Driver-side mirror of the bounded_cycles level loop over collected
     trimmed edges: same canonical-rotation filter, same per-pivot cap with
     the same (pivot='last', order='nodes') deterministic ordering, so the
     two paths emit IDENTICAL (start, len) sets — including when the cap
-    drops paths. Returns None if the frontier exceeds a hard memory bound
-    (dense graph): the caller then runs the distributed loop instead."""
-    FRONTIER_BOUND = 2_000_000
+    drops paths. Returns the sorted (start, len) rows, or None if the
+    frontier exceeds ``adaptive.FRONTIER_ROWS`` (dense graph): the caller
+    then runs the distributed loop instead."""
     adj: dict = {}
     eset = set()
     for a, b in pairs:
@@ -437,10 +426,10 @@ def _driver_bounded_cycles(
             for b in adj.get(last, ()):
                 if b > s and b not in nodes:
                     nxt.append((s, b, nodes + (b,)))
-            if len(nxt) > FRONTIER_BOUND:
+            if len(nxt) > adaptive.FRONTIER_ROWS:
                 return None
         frontier = nxt
-    return out
+    return sorted(out)
 
 
 def bounded_cycles(
@@ -449,7 +438,6 @@ def bounded_cycles(
     max_paths_per_pivot: int | None = 100_000,
     log_dropped: bool = True,
     checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = 250_000,
 ) -> DataFrame:
     """A11: directed simple cycles of length 2..max_len as
     (cycle_start, cycle_len), canonicalized so cycle_start = min node id in
@@ -493,31 +481,18 @@ def bounded_cycles(
         eager=False,
     )
     # adaptive cutover (same shape as connected_components/bfs_distances):
-    # the trimmed-edge count materializes the cut; under the threshold the
-    # whole level loop runs on the driver with IDENTICAL close/cap/extend
-    # semantics (falls back to the loop if a dense graph blows the
-    # frontier bound). Cycle enumeration at bench scale was paying one
-    # join-job + one cap aggregate per level on a few-thousand-edge graph.
-    if small_graph_threshold is not None:
-        n_e = e.count()
-        if n_e <= small_graph_threshold:
-            got = _driver_bounded_cycles(
-                [(p.a, p.b) for p in e.collect()], max_len,
-                max_paths_per_pivot, log_dropped,
-            )
-            if got is not None:
-                spark = edges.sparkSession
-                from pyspark.sql import types as T
-
-                schema = T.StructType([
-                    T.StructField("cycle_start", e.schema[0].dataType),
-                    T.StructField("cycle_len", T.IntegerType()),
-                ])
-                # Arrow-backed local frame (see connected_components /
-                # session.local_df)
-                from ..session import local_df
-
-                return local_df(spark, sorted(got), schema)
+    # within the budget the whole level loop runs on the driver with
+    # IDENTICAL close/cap/extend semantics. Cycle enumeration at bench
+    # scale was paying one join-job + one cap aggregate per level on a
+    # few-thousand-edge graph.
+    got = adaptive.cutover(
+        e, adaptive.GRAPH_ROWS,
+        lambda rows: _driver_bounded_cycles(
+            rows, max_len, max_paths_per_pivot, log_dropped),
+        f"cycle_start {e.schema[0].dataType.simpleString()}, cycle_len int",
+    )
+    if got is not None:
+        return got
     frontier = e.where(F.col("b") > F.col("a")).select(
         F.col("a").alias("start"), F.col("b").alias("last"),
         F.array("a", "b").alias("nodes"),

@@ -7,6 +7,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
+from . import adaptive
+
 
 # ------------------------------------------------------------- F1-F3 query
 
@@ -139,7 +142,7 @@ def merge_graphs(
 
 def _driver_all_paths(
     pairs: list,
-    start_id: str,
+    start_id,
     targets: set,
     max_depth: int,
     cap: int | None,
@@ -149,16 +152,17 @@ def _driver_all_paths(
     op: str = "all_paths",
 ) -> list | None:
     """Driver-side mirror of the all_paths / all_paths_multi level loop
-    over a collected distinct adjacency: identical cap-then-extend order,
-    identical per-pivot (node, path-order) capping, identical early-exit
-    and stop-at-target semantics, so both execution paths emit the same
-    rows. Returns None when a dense graph blows the frontier bound — the
-    caller falls back to the distributed loop."""
+    over the collected raw (src, dst) pairs, deduplicated here as the loop
+    deduplicates its adjacency: identical cap-then-extend order, identical
+    per-pivot (node, path-order) capping, identical early-exit and
+    stop-at-target semantics, so both execution paths emit the same rows —
+    (path, depth), or (target, path, depth) when ``multi``. Returns None
+    when a dense graph blows ``adaptive.FRONTIER_ROWS`` — the caller falls
+    back to the distributed loop."""
     from .components import _cap_frontier_driver
 
-    FRONTIER_BOUND = 2_000_000
     adj: dict = {}
-    for a, b in pairs:
+    for a, b in dict.fromkeys(pairs):
         # null semantics must mirror the loop exactly: a null dst is
         # dropped by the loop's ~array_contains(path, dst) (null-valued
         # predicate filters the row), and a null src never equi-joins —
@@ -178,7 +182,7 @@ def _driver_all_paths(
             for dst in adj.get(node, ()):
                 if dst not in path:
                     stepped.append((dst, path + (dst,)))
-            if len(stepped) > FRONTIER_BOUND:
+            if len(stepped) > adaptive.FRONTIER_ROWS:
                 return None
         hits = [t for t in stepped if t[0] in targets]
         found.extend(hits)
@@ -186,9 +190,11 @@ def _driver_all_paths(
             frontier = stepped
         else:
             if stop_at_first_hit and (hits or len(stepped) == len(hits)):
-                return found
+                break
             frontier = [t for t in stepped if t[0] not in targets]
-    return found
+    if multi:
+        return [(node, list(path), len(path) - 1) for node, path in found]
+    return [(list(path), len(path) - 1) for _, path in found]
 
 
 def all_paths(
@@ -201,7 +207,6 @@ def all_paths(
     log_dropped: bool = True,
     checkpoint_dir: str | None = None,
     stop_at_first_hit: bool = False,
-    small_graph_threshold: int | None = 250_000,
 ) -> DataFrame:
     """A10 (graph_path_finder.py:105-155): every simple directed path
     start->end up to max_depth, as (path array, depth). Bounded self-join
@@ -212,7 +217,9 @@ def all_paths(
     pivot is capped at ``max_paths_per_pivot`` paths per node — a hub
     within max_depth hops of the start otherwise contributes P×D rows per
     level. The cap's one shallow aggregate both materializes the cut
-    frontier and yields the emptiness break: ONE job per level.
+    frontier and yields the emptiness break: ONE job per level. Within
+    the ``adaptive.cutover`` budget the level loop runs on the driver
+    instead (``_driver_all_paths``).
 
     ``stop_at_first_hit``: return after the first depth where ``end_id``
     is reached (the reference BFS stops there — utils.py:150-193); the
@@ -221,36 +228,21 @@ def all_paths(
     saves every level past the hit — shortest_path uses this."""
     from .components import _cap_frontier_pivot, lineage_cutter
 
-    adj = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst")).distinct()
+    raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
+    id_t = edges.schema["head_id"].dataType.simpleString()
+    got = adaptive.cutover(
+        raw, adaptive.GRAPH_ROWS,
+        lambda rows: _driver_all_paths(
+            rows, start_id, {end_id}, max_depth, max_paths_per_pivot,
+            stop_at_first_hit, False, log_dropped, "all_paths"),
+        f"path array<{id_t}>, depth int",
+    )
+    if got is not None:
+        return got
+    adj = raw.distinct()
     cut = lineage_cutter(edges, checkpoint_dir)
     spark = edges.sparkSession
-    # adaptive cutover (same family as components.py): under the edge
-    # threshold the level loop runs on the driver with identical
-    # cap/extend/early-exit semantics (dense-graph frontier bound falls
-    # back to the distributed loop). The size probe is ONE truncated
-    # collect (CollectLimit stops scanning at threshold+1 rows at scale),
-    # not a full count whose result the big-graph path would discard.
-    if small_graph_threshold is not None:
-        a_rows = adj.limit(small_graph_threshold + 1).collect()
-        if len(a_rows) <= small_graph_threshold:
-            got = _driver_all_paths(
-                [(p.src, p.dst) for p in a_rows], start_id, {end_id},
-                max_depth, max_paths_per_pivot, stop_at_first_hit, False,
-                log_dropped, "all_paths",
-            )
-            if got is not None:
-                # Arrow-backed local frame (r6/r6b, session.local_df): the
-                # plain-list path runs python-worker conversion tasks
-                # exposed to multi-second worker stalls, and an empty
-                # pandas result silently falls back to the same path
-                from ..session import local_df
-
-                return local_df(
-                    spark, [(list(path), len(path) - 1) for _, path in got],
-                    "path array<string>, depth int")
-    from ..session import local_df
-
-    frontier = local_df(spark, [(start_id, [start_id])], "node string, path array<string>")
+    frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
     found = None
     for _ in range(max_depth):
         capped, n_live = _cap_frontier_pivot(
@@ -280,7 +272,7 @@ def all_paths(
                 return found
         frontier = stepped.where(F.col("node") != end_id)
     if found is None:
-        return local_df(spark, [], "path array<string>, depth int")
+        return local_df(spark, [], f"path array<{id_t}>, depth int")
     return found
 
 
@@ -293,7 +285,6 @@ def all_paths_multi(
     max_paths_per_pivot: int | None = 100_000,
     log_dropped: bool = True,
     checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = 250_000,
 ) -> DataFrame:
     """A10 set-target variant: every simple path start -> ANY node of
     ``targets`` (a one-column DataFrame of ids) up to max_depth, as
@@ -301,37 +292,28 @@ def all_paths_multi(
     rather than a scalar-collected id, proving the operator over a target
     SET; paths keep expanding THROUGH target nodes, so the output equals
     the union of per-target all_paths runs. Same hot-pivot cap + lazy
-    lineage-cut one-job-per-level shape as all_paths."""
+    lineage-cut one-job-per-level shape and driver cutover as all_paths;
+    the target set must fit the budget too (caller-supplied frame)."""
     from .components import _cap_frontier_pivot, lineage_cutter
 
-    adj = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst")).distinct()
+    raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
+    tgt = targets.select(F.col(targets.columns[0]).alias("node"))
+    id_t = edges.schema["head_id"].dataType.simpleString()
+    schema = f"target {id_t}, path array<{id_t}>, depth int"
+    got = adaptive.cutover(
+        (raw, tgt), adaptive.GRAPH_ROWS,
+        lambda rows, t_rows: _driver_all_paths(
+            rows, start_id, {r.node for r in t_rows}, max_depth,
+            max_paths_per_pivot, False, True, log_dropped, "all_paths_multi"),
+        schema,
+    )
+    if got is not None:
+        return got
+    adj = raw.distinct()
+    tgt = tgt.distinct()
     cut = lineage_cutter(edges, checkpoint_dir)
     spark = edges.sparkSession
-    tgt = targets.select(F.col(targets.columns[0]).alias("node")).distinct()
-    if small_graph_threshold is not None:
-        a_rows = adj.limit(small_graph_threshold + 1).collect()
-        # bound the target collect too (caller-supplied frame): a target
-        # set larger than the threshold keeps the distributed path
-        t_rows = tgt.limit(small_graph_threshold + 1).collect()
-        if (len(a_rows) <= small_graph_threshold
-                and len(t_rows) <= small_graph_threshold):
-            got = _driver_all_paths(
-                [(p.src, p.dst) for p in a_rows], start_id,
-                {r.node for r in t_rows},
-                max_depth, max_paths_per_pivot, False, True,
-                log_dropped, "all_paths_multi",
-            )
-            if got is not None:
-                # Arrow-backed local frame (r6/r6b, see all_paths)
-                from ..session import local_df
-
-                return local_df(
-                    spark,
-                    [(node, list(path), len(path) - 1) for node, path in got],
-                    "target string, path array<string>, depth int")
-    from ..session import local_df
-
-    frontier = local_df(spark, [(start_id, [start_id])], "node string, path array<string>")
+    frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
     found = None
     for _ in range(max_depth):
         capped, n_live = _cap_frontier_pivot(
@@ -352,7 +334,7 @@ def all_paths_multi(
         found = hits if found is None else found.unionByName(hits)
         frontier = stepped
     if found is None:
-        return local_df(spark, [], "target string, path array<string>, depth int")
+        return local_df(spark, [], schema)
     return found
 
 

@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import connected_components
+from . import adaptive
+from .components import connected_components, driver_union_find
 
 NameSimilarity = tuple[float, str]
 
@@ -59,7 +60,6 @@ def lsh_candidate_pairs(
     max_name_len: int = 32,
     max_name_words: int = 4,
     log_excluded: bool = False,
-    small_universe_threshold: int | None = 100_000,
 ) -> DataFrame:
     """D3 blocking via MinHash-LSH over name character 3-gram sets,
     restricted to same entity_type. Returns (id_a, id_b, name_a, name_b,
@@ -86,18 +86,17 @@ def lsh_candidate_pairs(
     nodes -> grams -> TF twice. Measured 8.9-11.8 s -> 6.3-6.8 s at
     sf0.1 with an identical pair set.
 
-    Adaptive execution (same cutover family as canonical_mapping /
-    connected_components): the linkable universe is bounded by DISTINCT
-    surface forms, not corpus size (849 rows at bench scale, 222 mappings
-    flat from 3k to 300k conversations), so the common case is a tiny
-    feature table where the distributed explode-join-distinct pays ~2 s of
-    pure scheduling. Under ``small_universe_threshold`` rows the banding
-    join runs on the driver over the COLLECTED model.transform output —
-    Spark's own hash values and feature indices, so no hash function is
-    reimplemented; the driver applies the identical candidate rule (any
-    shared (table, hash) bucket, strict keyDistance < threshold, same-type,
-    id_a < id_b). Equivalence is pytest-gated on forced both paths. Above
-    the threshold — the 100 TB path — the distributed join runs unchanged.
+    Adaptive execution (``adaptive.cutover``): the linkable universe is
+    bounded by DISTINCT surface forms, not corpus size (849 rows at bench
+    scale, 222 mappings flat from 3k to 300k conversations), so the common
+    case is a tiny feature table where the distributed explode-join-
+    distinct pays ~2 s of pure scheduling. Within the row budget the
+    banding join runs on the driver (``_driver_lsh_pairs``) over the
+    COLLECTED model.transform output — Spark's own hash values and
+    feature indices, so no hash function is reimplemented. The mirror
+    declines a universe whose buckets would enumerate more than
+    ``adaptive.LSH_PAIRS`` pairs; that universe, like one above the row
+    budget — the 100 TB path — takes the distributed join.
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
@@ -137,17 +136,15 @@ def lsh_candidate_pairs(
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
     model = lsh.fit(feat)
     hashed = model.transform(feat)
-    if small_universe_threshold is not None:
-        # count, not limit(n+1).collect(): CollectLimit's incremental
-        # partition scaling pays 3-4 sequential job rounds on a small
-        # cached frame (measured +1-2 s), while count materializes the
-        # cache in ONE fully-parallel job and the collect then reads it
-        n_feat = feat.count()
-        if n_feat <= small_universe_threshold:
-            rows = hashed.collect()
-            return _driver_lsh_pairs(
-                nodes.sparkSession, rows, max_jaccard_distance,
-                id_type=nodes.schema["entity_id"].dataType)
+    id_t = nodes.schema["entity_id"].dataType.simpleString()
+    got = adaptive.cutover(
+        hashed, adaptive.LINK_ROWS,
+        lambda rows: _driver_lsh_pairs(rows, max_jaccard_distance),
+        f"id_a {id_t}, id_b {id_t}, name_a string, name_b string, "
+        "type_a string, type_b string, lsh_distance double",
+    )
+    if got is not None:
+        return got.coalesce(1)
     joined = model.approxSimilarityJoin(hashed, hashed, max_jaccard_distance, distCol="lsh_distance")
     return (
         joined.where(
@@ -166,9 +163,7 @@ def lsh_candidate_pairs(
     )
 
 
-def _driver_lsh_pairs(
-    spark, rows, max_jaccard_distance: float, id_type
-) -> DataFrame:
+def _driver_lsh_pairs(rows, max_jaccard_distance: float) -> list | None:
     """Driver-side mirror of the approxSimilarityJoin candidate rule over
     collected ``model.transform`` rows: two rows are candidates iff they
     share at least one (hash-table index, hash value) bucket, and survive
@@ -177,23 +172,30 @@ def _driver_lsh_pairs(
     dropped by the Scala join). Same-type and id_a < id_b filters match
     the distributed projection. All inputs (hash values, feature indices)
     come from the fitted Spark model itself, so no hash function is
-    reimplemented and the two paths cannot drift."""
-    from pyspark.sql import types as T
+    reimplemented and the two paths cannot drift.
 
+    Enumerating every in-bucket pair costs the sum of C(|bucket|, 2),
+    which a collision-heavy universe makes quadratic in its row count
+    (5,000 md5-hex names gave 285k pairs). That sum is counted from the
+    bucket sizes before any pair is built; above ``adaptive.LSH_PAIRS``
+    the mirror returns None and the distributed join runs instead."""
     # hoist per-row fields out of the pair loops: Row attribute access and
     # per-pair set(features.indices) construction dominated the banding on
     # collision-heavy corpora (285k bucket pairs from 5000 random-hex names
     # measured 5.4 s; precomputed, under 1 s — r6b)
     from itertools import combinations
 
-    ids = [r.entity_id for r in rows]
-    types = [r.entity_type for r in rows]
-    names = [r.name_norm for r in rows]
-    idx_sets = [frozenset(r.features.indices) for r in rows]
     buckets: dict = {}
     for i, r in enumerate(rows):
         for t, hv in enumerate(r.hashes):
             buckets.setdefault((t, hv[0]), []).append(i)
+    n_pairs = sum(len(m) * (len(m) - 1) // 2 for m in buckets.values())
+    if n_pairs > adaptive.LSH_PAIRS:
+        return None
+    ids = [r.entity_id for r in rows]
+    types = [r.entity_type for r in rows]
+    names = [r.name_norm for r in rows]
+    idx_sets = [frozenset(r.features.indices) for r in rows]
     cand: set = set()
     for members in buckets.values():
         if len(members) < 2:
@@ -211,24 +213,7 @@ def _driver_lsh_pairs(
         if dist < max_jaccard_distance:
             out.append((ids[i], ids[j], names[i], names[j],
                         types[i], types[j], dist))
-    schema = T.StructType([
-        T.StructField("id_a", id_type),
-        T.StructField("id_b", id_type),
-        T.StructField("name_a", T.StringType()),
-        T.StructField("name_b", T.StringType()),
-        T.StructField("type_a", T.StringType()),
-        T.StructField("type_b", T.StringType()),
-        T.StructField("lsh_distance", T.DoubleType()),
-    ])
-    # Arrow-backed local frame (session.local_df): the plain list path
-    # parallelizes 32 pickled slices that every downstream consumer pays to
-    # unpickle JVM-side — measured 6.6 s in a single CollectLimit task at
-    # bench scale; local_df also keeps the EMPTY-pair case on the
-    # LocalTableScan path (PySpark silently falls back to the pickled-RDD
-    # path for an empty pandas input — the q_d7_chain 11 s outlier, r6b)
-    from ..session import local_df
-
-    return local_df(spark, out, schema).coalesce(1)
+    return out
 
 
 def name_similarity_col() -> F.Column:
@@ -315,53 +300,30 @@ def verify_pairs_batched(
     return pairs.mapInPandas(kernel, schema=schema)
 
 
-def canonical_mapping(
-    confirmed_pairs: DataFrame,
-    small_graph_threshold: int | None = 100_000,
-) -> DataFrame:
+def canonical_mapping(confirmed_pairs: DataFrame) -> DataFrame:
     """D5: connected components over confirmed duplicate pairs; canonical id
     = min entity_id per component. Output (entity_id, canonical_id) only for
     ids whose canonical differs.
 
-    Adaptive execution (the broadcast-join-threshold analog): confirmed
-    pairs are bounded by the distinct linkable surface forms, not corpus
-    size (PLANS.md 150k-conv run: 947k turns -> 2,362 candidates), so the
-    common case is a TINY pair graph where the iterative distributed CC
-    pays multiple jobs of pure scheduling overhead — measured 4.7 s for
-    437 pairs at bench scale. A bounded collect (at most threshold+1
-    rows, ~10 MB at the default) probes the size; under the threshold the
-    component labels come from a driver-side union-find (milliseconds,
-    same min-id semantics, pytest-checked equal), above it — or with
-    threshold=None — the iterative hash-min + pointer-jumping path runs
-    unchanged: that is the 100 TB path when someone links without a
-    candidate bound. Pairs with a null id are skipped (a null is never a
-    mergeable entity id)."""
-    from pyspark.sql import types as T
-
-    from .components import driver_union_find
-
-    spark = confirmed_pairs.sparkSession
-    if small_graph_threshold is not None:
-        pairs = confirmed_pairs.limit(small_graph_threshold + 1).collect()
-        if len(pairs) <= small_graph_threshold:
-            touched = driver_union_find((p.id_a, p.id_b) for p in pairs)
-            mapping = [(x, c) for x, c in touched.items() if x != c]
-            # id type derived from the input (ADVICE r5: the string-only
-            # schema broke non-string ids on this path only); Arrow-backed
-            # local frame (session.local_df): the plain-list path runs
-            # python-worker conversion tasks that are exposed to
-            # multi-second worker stalls (r6 event-log audit), the Arrow
-            # path converts driver-side with zero python tasks — and
-            # local_df keeps the EMPTY-mapping case off the pickled-RDD
-            # fallback too (r6b)
-            from ..session import local_df
-
-            id_type = confirmed_pairs.schema["id_a"].dataType
-            schema = T.StructType([
-                T.StructField("entity_id", id_type),
-                T.StructField("canonical_id", id_type),
-            ])
-            return local_df(spark, mapping, schema).coalesce(1)
+    Adaptive execution (``adaptive.cutover``): confirmed pairs are bounded
+    by the distinct linkable surface forms, not corpus size (PLANS.md
+    150k-conv run: 947k turns -> 2,362 candidates), so the common case is
+    a TINY pair graph where the iterative distributed CC pays multiple
+    jobs of pure scheduling overhead — measured 4.7 s for 437 pairs at
+    bench scale. Within the budget the labels come from a driver-side
+    union-find (milliseconds, same min-id semantics; it returns only
+    non-root ids, which are exactly the ids whose canonical differs).
+    Above it the iterative hash-min + pointer-jumping path runs: that is
+    the 100 TB path when someone links without a candidate bound. Pairs
+    with a null id are skipped (a null is never a mergeable entity id)."""
+    id_t = confirmed_pairs.schema["id_a"].dataType.simpleString()
+    got = adaptive.cutover(
+        confirmed_pairs.select("id_a", "id_b"), adaptive.LINK_ROWS,
+        lambda rows: list(driver_union_find(rows).items()),
+        f"entity_id {id_t}, canonical_id {id_t}",
+    )
+    if got is not None:
+        return got.coalesce(1)
     labels = connected_components(confirmed_pairs, src="id_a", dst="id_b")
     return labels.select(
         "entity_id", F.col("component").alias("canonical_id")

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,29 @@ def spark():
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def forced_path():
+    """Force every adaptive cutover (agraph_spark/operators/adaptive.py)
+    onto one path inside a with-block::
+
+        with forced_path("distributed"):
+            ...
+
+    "driver" lifts every budget, "distributed" sets every budget below
+    any probe count, and "default" keeps the shipped budgets."""
+    from agraph_spark.operators import adaptive
+
+    budgets = ("GRAPH_ROWS", "LINK_ROWS", "PAGERANK_ROWS", "LSH_PAIRS", "FRONTIER_ROWS")
+
+    @contextlib.contextmanager
+    def force(path: str):
+        value = {"driver": 10**9, "distributed": -1, "default": None}[path]
+        with pytest.MonkeyPatch.context() as mp:
+            if value is not None:
+                for name in budgets:
+                    mp.setattr(adaptive, name, value)
+            yield
+
+    return force

@@ -55,7 +55,7 @@ def py_bfs(nodes, edges, start, max_depth):
 
 
 @pytest.mark.parametrize("n,m,seed", [(50, 40, 1), (300, 500, 2), (100, 30, 3)])
-def test_components_vs_unionfind(spark, n, m, seed):
+def test_components_vs_unionfind(spark, forced_path, n, m, seed):
     nodes, edges = random_graph(n, m, seed)
     ndf = spark.createDataFrame([(x,) for x in nodes], "entity_id string")
     edf = spark.createDataFrame(edges, "head_id string, tail_id string")
@@ -67,21 +67,16 @@ def test_components_vs_unionfind(spark, n, m, seed):
     assert got == want
     # the adaptive small-graph cutover (round 5) and the distributed
     # hash-min loop must label identically — force the loop and compare
-    dist = {
-        r.entity_id: r.component
-        for r in connected_components(edf, ndf, small_graph_threshold=None).collect()
-    }
+    with forced_path("distributed"):
+        dist = {
+            r.entity_id: r.component
+            for r in connected_components(edf, ndf).collect()
+        }
     assert dist == want
-    # threshold below the sym count also forces the loop
-    forced = {
-        r.entity_id: r.component
-        for r in connected_components(edf, ndf, small_graph_threshold=1).collect()
-    }
-    assert forced == want
 
 
 @pytest.mark.parametrize("seed", [5, 6])
-def test_bfs_vs_python(spark, seed):
+def test_bfs_vs_python(spark, forced_path, seed):
     nodes, edges = random_graph(120, 200, seed)
     edf = spark.createDataFrame(edges, "head_id string, tail_id string")
     start = nodes[0]
@@ -89,9 +84,9 @@ def test_bfs_vs_python(spark, seed):
     want = py_bfs(nodes, edges, start, 5)
     assert got == want
     # adaptive cutover (round 5) vs the distributed frontier loop
-    forced = {r.entity_id: r.dist for r in
-              bfs_distances(edf, start, max_depth=5,
-                            small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        forced = {r.entity_id: r.dist for r in
+                  bfs_distances(edf, start, max_depth=5).collect()}
     assert forced == want
 
 
@@ -109,7 +104,7 @@ def test_degree_and_isolated(spark):
     assert iso == ["d"]
 
 
-def test_reliable_checkpoint_dir(spark, tmp_path):
+def test_reliable_checkpoint_dir(spark, forced_path, tmp_path):
     """checkpoint_dir switches the per-iteration lineage cut from
     executor-memory localCheckpoint to reliable checkpoints (survives
     executor loss on a real cluster); results are identical."""
@@ -124,19 +119,19 @@ def test_reliable_checkpoint_dir(spark, tmp_path):
     local = {(r.entity_id, r.component) for r in connected_components(edges).collect()}
     # r6: the small-graph driver path no longer checkpoints at all, so the
     # reliable-checkpoint machinery is exercised on the LOOP path
-    # (threshold disabled) — which also makes this a cross-path
+    # (forced distributed) — which also makes this a cross-path
     # equivalence check
-    reliable = {(r.entity_id, r.component)
-                for r in connected_components(
-                    edges, checkpoint_dir=ckpt,
-                    small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        reliable = {(r.entity_id, r.component)
+                    for r in connected_components(
+                        edges, checkpoint_dir=ckpt).collect()}
     assert local == reliable
     # the reliable run actually wrote checkpoint files
     assert any(files for _, _, files in os.walk(ckpt))
     b1 = {(r.entity_id, r.dist) for r in bfs_distances(edges, "a").collect()}
-    b2 = {(r.entity_id, r.dist)
-          for r in bfs_distances(edges, "a", checkpoint_dir=ckpt,
-                                 small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        b2 = {(r.entity_id, r.dist)
+              for r in bfs_distances(edges, "a", checkpoint_dir=ckpt).collect()}
     assert b1 == b2
 
 
@@ -214,7 +209,7 @@ def py_cycles(edges, max_len):
     return out
 
 
-def test_bounded_cycles_matches_bruteforce(spark):
+def test_bounded_cycles_matches_bruteforce(spark, forced_path):
     """Lengths 2..5 on a seeded random digraph equal the Python oracle —
     the reference's find_cycles depth (graph_path_finder.py:224)."""
     from agraph_spark.operators.components import bounded_cycles
@@ -227,12 +222,13 @@ def test_bounded_cycles_matches_bruteforce(spark):
     got = {(r.cycle_start, r.cycle_len) for r in bounded_cycles(edf).collect()}
     assert got == want
     # adaptive cutover (round 5) vs the forced distributed level loop
-    forced = {(r.cycle_start, r.cycle_len) for r in
-              bounded_cycles(edf, small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        forced = {(r.cycle_start, r.cycle_len) for r in
+                  bounded_cycles(edf).collect()}
     assert forced == want
 
 
-def test_bounded_cycles_hub_cap(spark, caplog):
+def test_bounded_cycles_hub_cap(spark, forced_path, caplog):
     """A hot pivot (hub with many in-paths x many out-edges) is capped:
     paths through it are bounded, the drop is logged, and cycles NOT
     through the hub are unaffected."""
@@ -261,40 +257,42 @@ def test_bounded_cycles_hub_cap(spark, caplog):
     assert ("a1", 3) in capped
     assert any("dropping" in r.message for r in caplog.records)
     # capping must be deterministic AND identical on both execution paths
-    forced_capped = {(r.cycle_start, r.cycle_len) for r in
-                     bounded_cycles(edf, max_paths_per_pivot=5,
-                                    small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        forced_capped = {(r.cycle_start, r.cycle_len) for r in
+                         bounded_cycles(edf, max_paths_per_pivot=5).collect()}
     assert forced_capped == capped
 
 
-def test_cutover_null_and_type_edges(spark):
+def test_cutover_null_and_type_edges(spark, forced_path):
     """Round-5 review fixes: (1) BFS must not traverse THROUGH a null id
     on either path (null can be reached, never expanded); (2) the CC
     cutover must preserve non-string id types like the loop does."""
     edf = spark.createDataFrame(
         [("x", None), (None, "y")], "head_id string, tail_id string")
-    for thr in (250_000, None):
-        got = {r.entity_id: r.dist for r in
-               bfs_distances(edf, "x", max_depth=4,
-                             small_graph_threshold=thr).collect()}
-        assert got == {"x": 0, None: 1}, (thr, got)
+    for path in ("default", "distributed"):
+        with forced_path(path):
+            got = {r.entity_id: r.dist for r in
+                   bfs_distances(edf, "x", max_depth=4).collect()}
+        assert got == {"x": 0, None: 1}, (path, got)
 
     ints = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
     small = connected_components(ints, src="id_a", dst="id_b")
     assert dict(small.dtypes)["component"] == "bigint"
     got_s = {r.entity_id: r.component for r in small.collect()}
-    got_d = {r.entity_id: r.component for r in
-             connected_components(ints, src="id_a", dst="id_b",
-                                  small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        got_d = {r.entity_id: r.component for r in
+                 connected_components(ints, src="id_a", dst="id_b").collect()}
     assert got_s == got_d == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 
 
-def test_adaptive_cutovers_actually_engage(spark, monkeypatch):
+def test_adaptive_cutovers_actually_engage(spark, monkeypatch, forced_path):
     """CLAUDE.md standing rule: pair every fallback with a test that the
-    PRIMARY path engages. The parity tests above stay green even if a
-    cutover never fires (both sides would run the loop), so spy on each
-    driver mirror: it must be invoked on the default path and must NOT be
-    invoked when the threshold is disabled."""
+    PRIMARY path engages. The parity tests stay green even if a cutover
+    never fires (both sides would run the loop), so spy on the driver
+    mirror of every adaptive.cutover site: each must run under the
+    default budgets and none may run when the distributed path is
+    forced."""
+    from agraph_spark.operators import analytics as A
     from agraph_spark.operators import components as C
     from agraph_spark.operators import graph_queries as GQ
     from agraph_spark.operators import linking as L
@@ -302,44 +300,47 @@ def test_adaptive_cutovers_actually_engage(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
         "head_id string, tail_id string")
+    nodes = spark.createDataFrame(
+        [(x, x, x, "t") for x in ("a", "b", "c", "d")],
+        "entity_id string, name string, name_norm string, entity_type string")
     pairs = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
     calls: list = []
 
-    real_uf = C.driver_union_find
-    real_cy = C._driver_bounded_cycles
-    real_ap = GQ._driver_all_paths
+    def spy(module, name, tag):
+        real = getattr(module, name)
+        monkeypatch.setattr(module, name,
+                            lambda *a, **k: calls.append(tag) or real(*a, **k))
 
-    monkeypatch.setattr(C, "driver_union_find",
-                        lambda *a, **k: calls.append("uf") or real_uf(*a, **k))
-    monkeypatch.setattr(L, "canonical_mapping", L.canonical_mapping)  # no-op pin
-    monkeypatch.setattr(C, "_driver_bounded_cycles",
-                        lambda *a, **k: calls.append("cy") or real_cy(*a, **k))
-    monkeypatch.setattr(GQ, "_driver_all_paths",
-                        lambda *a, **k: calls.append("ap") or real_ap(*a, **k))
+    spy(C, "driver_union_find", "uf")  # connected_components
+    spy(L, "driver_union_find", "canon")  # canonical_mapping
+    spy(C, "_driver_bfs", "bfs")
+    spy(C, "_driver_bounded_cycles", "cy")
+    spy(GQ, "_driver_all_paths", "ap")
+    spy(L, "_driver_lsh_pairs", "lsh")
+    spy(A, "_driver_pagerank_fixed", "pr")
+    targets = spark.createDataFrame([("d",)], "node string")
 
-    C.connected_components(edges).collect()
-    assert "uf" in calls
-    C.bounded_cycles(edges).collect()
-    assert "cy" in calls
-    GQ.all_paths(edges, "a", "d").collect()
-    GQ.all_paths_multi(edges, "a",
-                       spark.createDataFrame([("d",)], "node string")).collect()
-    assert calls.count("ap") == 2
-    L.canonical_mapping(pairs).collect()  # uses the shared union-find
-    assert calls.count("uf") >= 2
+    def run_all():
+        C.connected_components(edges).collect()
+        C.bfs_distances(edges, "a").collect()
+        A.k_hop_neighbors(edges, "a", k=2).collect()
+        C.bounded_cycles(edges).collect()
+        GQ.all_paths(edges, "a", "d").collect()
+        GQ.all_paths_multi(edges, "a", targets).collect()
+        L.canonical_mapping(pairs).collect()
+        L.lsh_candidate_pairs(nodes).collect()
+        A.pagerank(nodes, edges, fixed_point=True).collect()
 
-    # threshold disabled -> mirrors must NOT run. (canonical_mapping is
-    # excluded here: with ITS threshold off it delegates to
-    # connected_components, whose own default adaptive decision may
-    # legitimately engage — layered adaptivity, not a leak.)
+    run_all()
+    assert sorted(calls) == sorted(
+        ["uf", "bfs", "bfs", "cy", "ap", "ap", "canon", "lsh", "pr"]), calls
     calls.clear()
-    C.connected_components(edges, small_graph_threshold=None).collect()
-    C.bounded_cycles(edges, small_graph_threshold=None).collect()
-    GQ.all_paths(edges, "a", "d", small_graph_threshold=None).collect()
+    with forced_path("distributed"):
+        run_all()
     assert calls == []
 
 
-def test_bfs_null_reachable_at_multiple_depths(spark):
+def test_bfs_null_reachable_at_multiple_depths(spark, forced_path):
     """ADVICE r6: a null dst reachable at several depths must be recorded
     ONCE (first depth) on BOTH paths — the plain left_anti never matched
     the null key, so the distributed loop used to emit one (null, d) row
@@ -348,15 +349,15 @@ def test_bfs_null_reachable_at_multiple_depths(spark):
         [("x", None), ("x", "y"), ("y", None), ("y", "z"), ("z", None)],
         "head_id string, tail_id string")
     want = {"x": 0, "y": 1, None: 1, "z": 2}
-    for thr in (250_000, None):
-        rows = bfs_distances(edf, "x", max_depth=5, undirected=False,
-                             small_graph_threshold=thr).collect()
+    for path in ("default", "distributed"):
+        with forced_path(path):
+            rows = bfs_distances(edf, "x", max_depth=5, undirected=False).collect()
         got = {r.entity_id: r.dist for r in rows}
-        assert got == want, (thr, got)
-        assert len(rows) == len(want), (thr, rows)  # no duplicate null rows
+        assert got == want, (path, got)
+        assert len(rows) == len(want), (path, rows)  # no duplicate null rows
 
 
-def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark):
+def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark, forced_path):
     """r6c: the fixed-point driver mirror must equal the distributed loop
     on a fixture with parallel edges, dangling head/tail ids not in nodes,
     an isolated node, a null tail, and NON-STRING ids (schema preserved)."""
@@ -367,10 +368,10 @@ def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark):
         "head_id int, tail_id int")
     nodes = spark.createDataFrame([(1,), (2,), (3,), (4,)], "entity_id int")
     fast = pagerank(nodes, edges, iterations=10, fixed_point=True)
-    slow = pagerank(nodes, edges, iterations=10, fixed_point=True,
-                    small_graph_threshold=None)
+    with forced_path("distributed"):
+        slow = pagerank(nodes, edges, iterations=10, fixed_point=True)
+        s = {r.entity_id: r.rank for r in slow.collect()}
     f = {r.entity_id: r.rank for r in fast.collect()}
-    s = {r.entity_id: r.rank for r in slow.collect()}
     assert f == s and len(f) == 4
     assert f[4] == 150_000_000  # isolated node -> floor rank on both paths
     # int ids preserved by the mirror (nullability may differ: the mirror's
@@ -380,13 +381,13 @@ def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark):
     # zero-iteration edge: both paths return the seed for every node
     f0 = {r.entity_id: r.rank for r in
           pagerank(nodes, edges, iterations=0, fixed_point=True).collect()}
-    s0 = {r.entity_id: r.rank for r in
-          pagerank(nodes, edges, iterations=0, fixed_point=True,
-                   small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        s0 = {r.entity_id: r.rank for r in
+              pagerank(nodes, edges, iterations=0, fixed_point=True).collect()}
     assert f0 == s0 == {i: 1_000_000_000 for i in (1, 2, 3, 4)}
 
 
-def test_k_hop_delegates_to_bfs_and_matches_reference_walk(spark):
+def test_k_hop_delegates_to_bfs_and_matches_reference_walk(spark, forced_path):
     """r6c: k_hop_neighbors == a hand-rolled hop-labelled walk (first
     depth wins, undirected, start excluded), on both execution paths."""
     from agraph_spark.operators.analytics import k_hop_neighbors
@@ -407,12 +408,8 @@ def test_k_hop_delegates_to_bfs_and_matches_reference_walk(spark):
     got = {r.entity_id: r.hop for r in k_hop_neighbors(edges, "s", k=2).collect()}
     # c stays outside the k=2 bound; x/y are in another component
     assert got == expect == {"a": 1, "b": 2}
-    # distributed path (threshold forced off via a large graph is covered by
-    # the bfs forced-path tests; here force it through the bfs kwarg default
-    # by comparing against bfs_distances directly)
-    from agraph_spark.operators.components import bfs_distances
-
-    bfs = {r.entity_id: r.dist for r in
-           bfs_distances(edges, "s", max_depth=2,
-                         small_graph_threshold=None).collect()}
-    assert {k: v for k, v in bfs.items() if v > 0} == got
+    # the distributed path gives the same hops
+    with forced_path("distributed"):
+        dist = {r.entity_id: r.hop for r in
+                k_hop_neighbors(edges, "s", k=2).collect()}
+    assert dist == got

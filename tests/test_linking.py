@@ -94,23 +94,23 @@ def test_alias_dict_path(spark):
     assert m.get("e1") == "e0"
 
 
-def test_canonical_mapping_transitive_chain(spark):
+def test_canonical_mapping_transitive_chain(spark, forced_path):
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")], "id_a string, id_b string"
     )
     m = {r.entity_id: r.canonical_id for r in canonical_mapping(pairs).collect()}
     assert m == {"b": "a", "c": "a", "d": "a", "y": "x"}
     # the small-graph driver path and the distributed CC path must agree
-    m_dist = {r.entity_id: r.canonical_id
-              for r in canonical_mapping(pairs, small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        m_dist = {r.entity_id: r.canonical_id
+                  for r in canonical_mapping(pairs).collect()}
     assert m_dist == m
 
 
-def test_canonical_mapping_small_path_equals_distributed(spark):
+def test_canonical_mapping_small_path_equals_distributed(spark, forced_path):
     """Round 5: canonical_mapping's adaptive small-graph cutover (driver
-    union-find under the pair threshold) must be row-identical to the
-    iterative distributed CC on a random pair soup, including when the
-    threshold forces the distributed path."""
+    union-find under the pair budget) must be row-identical to the
+    iterative distributed CC on a random pair soup."""
     import random
 
     rng = random.Random(99)
@@ -120,13 +120,10 @@ def test_canonical_mapping_small_path_equals_distributed(spark):
     df = spark.createDataFrame(pairs, "id_a string, id_b string")
     small = {(r.entity_id, r.canonical_id)
              for r in canonical_mapping(df).collect()}
-    dist = {(r.entity_id, r.canonical_id)
-            for r in canonical_mapping(df, small_graph_threshold=None).collect()}
+    with forced_path("distributed"):
+        dist = {(r.entity_id, r.canonical_id)
+                for r in canonical_mapping(df).collect()}
     assert small == dist and len(small) > 0
-    # threshold smaller than the pair count -> falls through to distributed
-    forced = {(r.entity_id, r.canonical_id)
-              for r in canonical_mapping(df, small_graph_threshold=10).collect()}
-    assert forced == dist
     # empty input -> empty mapping, correct schema
     empty = canonical_mapping(
         spark.createDataFrame([], "id_a string, id_b string"))
@@ -211,7 +208,7 @@ def test_name_similarity_matches_reference_hypothesis(spark):
     check()
 
 
-def test_lsh_pairs_driver_cutover_equals_distributed(spark):
+def test_lsh_pairs_driver_cutover_equals_distributed(spark, forced_path):
     """Round 6: lsh_candidate_pairs' adaptive small-universe cutover (driver
     banding over collected model.transform rows) must be row-identical —
     including the lsh_distance doubles — to the distributed
@@ -228,7 +225,8 @@ def test_lsh_pairs_driver_cutover_equals_distributed(spark):
     ]
     nodes = _nodes(spark, rows)
     drv = lsh_candidate_pairs(nodes)
-    dist = lsh_candidate_pairs(nodes, small_universe_threshold=None)
+    with forced_path("distributed"):
+        dist = lsh_candidate_pairs(nodes)
     key = lambda r: (r.id_a, r.id_b)
     got_d = {key(r): r for r in drv.collect()}
     got_x = {key(r): r for r in dist.collect()}
@@ -241,9 +239,6 @@ def test_lsh_pairs_driver_cutover_equals_distributed(spark):
     # carry no result content)
     assert [(f.name, f.dataType) for f in drv.schema.fields] == [
         (f.name, f.dataType) for f in dist.schema.fields]
-    # a threshold below the universe size forces the distributed path
-    forced = lsh_candidate_pairs(nodes, small_universe_threshold=2)
-    assert {key(r) for r in forced.collect()} == set(got_x)
     # full chain agrees too
     m_drv = {(r.entity_id, r.canonical_id) for r in link_entities(nodes).collect()}
     from agraph_spark.operators.linking import score_candidates as _sc  # noqa: F401
@@ -254,3 +249,35 @@ def test_lsh_pairs_driver_cutover_equals_distributed(spark):
     m_dist = {(r.entity_id, r.canonical_id)
               for r in L.canonical_mapping(verified.select("id_a", "id_b")).collect()}
     assert m_drv == m_dist
+
+
+def test_collision_heavy_lsh_universe_takes_distributed_path(spark, monkeypatch, forced_path):
+    """A universe far under the LSH row budget whose buckets would make the
+    driver mirror enumerate more than adaptive.LSH_PAIRS pairs must take
+    the distributed join without building a single pair, with the same
+    pair set as the mirror. 720 copies of one name (each its own type, so
+    the copies are never candidates of each other) share a bucket in all
+    4 hash tables: 4 * C(720, 2) = 1,035,360 in-bucket pairs."""
+    import itertools
+
+    import agraph_spark.operators.linking as L
+    from agraph_spark.operators import adaptive
+
+    rows = [("acme corp", f"type{i}") for i in range(720)] + [
+        ("globex inc", "org"), ("globex inc.", "org"), ("globex", "org")]
+    nodes = _nodes(spark, rows)
+    assert len(rows) <= adaptive.LINK_ROWS
+    loops, declined = [], []
+    real_comb, real_mirror = itertools.combinations, L._driver_lsh_pairs
+    monkeypatch.setattr(itertools, "combinations",
+                        lambda *a: loops.append(1) or real_comb(*a))
+    monkeypatch.setattr(L, "_driver_lsh_pairs",
+                        lambda *a: declined.append(real_mirror(*a) is None) or None)
+    got = {(r.id_a, r.id_b, r.lsh_distance) for r in lsh_candidate_pairs(nodes).collect()}
+    assert declined == [True] and loops == []
+    monkeypatch.setattr(L, "_driver_lsh_pairs", real_mirror)
+    with forced_path("driver"):
+        want = {(r.id_a, r.id_b, r.lsh_distance)
+                for r in lsh_candidate_pairs(nodes).collect()}
+    assert loops  # the forced mirror did enumerate the pairs
+    assert got == want and len(want) >= 2

@@ -80,7 +80,7 @@ def test_graph_mirrors_return_arrow_local_tables(spark, entrymod):
     assert "LocalTableScan" in p_cc and "applySchemaToPythonRDD" not in p_cc
 
 
-def test_lsh_join_input_is_slim_and_cached(spark):
+def test_lsh_join_input_is_slim_and_cached(spark, forced_path):
     """The distributed LSH candidate join must consume a PERSISTED feature
     table projected to exactly the join's columns — padded/grams must not
     flow into the self-join (they doubled the pair-distinct exchange)."""
@@ -91,7 +91,8 @@ def test_lsh_join_input_is_slim_and_cached(spark):
         [(f"e{i}", f"name {i}", f"name {i}", "t", 0.9) for i in range(30)],
         "entity_id string, name string, name_norm string, entity_type string,"
         " confidence double")
-    p = plan_of(lsh_candidate_pairs(nodes, small_universe_threshold=None))
+    with forced_path("distributed"):
+        p = plan_of(lsh_candidate_pairs(nodes))
     release_caches(spark)
     assert "InMemoryRelation" in p  # cached: both sides scan one build
     tree = p.split("\n\n")[0]
