@@ -1636,11 +1636,11 @@ def q_g_shortest_path(spark, sf_dir):
 
 
 def q_g_pagerank(spark, sf_dir):
-    """Fixed-iteration PageRank over the TPC-H graph, fixed-point mode:
-    integer ppb arithmetic is order-independent, so the recursive-CTE
+    """Fixed-iteration PageRank over the TPC-H graph in integer ppb:
+    fixed-point arithmetic is order-independent, so the recursive-CTE
     oracle matches bit-exactly at any partitioning."""
     nodes, edges = _g(spark, sf_dir)
-    return A.pagerank(nodes, edges, iterations=10, fixed_point=True)
+    return A.pagerank(nodes, edges, iterations=10)
 
 
 def q_ev_sliding(spark, sf_dir):
@@ -2218,7 +2218,7 @@ def oracle_sql() -> dict[str, str]:
                      length(text) AS n_chars,
                      len(regexp_extract_all(text, '[.,;:!?]')) AS n_punct,
                      len(regexp_extract_all(text, '[A-Z]')) AS n_upper,
-                     CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
+                     CASE WHEN length(regexp_replace(text, '^\\s+|\\s+$', '', 'g')) = 0 THEN 0
                           ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
               FROM documents
             ),

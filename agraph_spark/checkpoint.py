@@ -104,56 +104,12 @@ def run_checkpointed(
     return results
 
 
-def run_checkpointed_parallel(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    n_batches: int = 16,
-    max_concurrent: int = 4,
-) -> list[BatchResult]:
-    """Concurrent variant: batches are independent jobs submitted from a
-    driver thread pool (Spark FAIR scheduling keeps all cores busy across
-    the per-batch stage barriers — the same way a production cluster
-    pipelines thousands of partitions). Results and manifest records are
-    identical to the sequential runner; completed batches are skipped on
-    resume."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark.sparkContext.setLocalProperty("spark.scheduler.mode", "FAIR")
-    manifest = CheckpointManifest(out_dir)
-    done = manifest.completed("triples")
-    transcripts = track(transcripts.withColumn("batch_id", batch_col(n_batches)))
-    transcripts.count()
-
-    def work(b: int) -> BatchResult:
-        if b in done:
-            return BatchResult(b, -1, -1, 0.0, skipped=True)
-        t0 = time.time()
-        sub = transcripts.where(F.col("batch_id") == b).drop("batch_id")
-        build = build_kg(sub, cache_documents=False)
-        triples = build.triples.withColumn("lineage", F.lit(f"batch={b}"))
-        triples.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "triples", f"batch={b}")
-        )
-        n_trip = spark.read.parquet(os.path.join(out_dir, "triples", f"batch={b}")).count()
-        dt = time.time() - t0
-        return BatchResult(b, n_trip, -1, dt, skipped=False)
-
-    with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        results = list(pool.map(work, range(n_batches)))
-    for r in results:
-        if not r.skipped:
-            manifest.record("triples", r.batch_id, n_triples=r.n_triples,
-                            seconds=round(r.seconds, 3))
-    return results
-
-
 def read_all_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Union of all completed batches; global dedup of (subj, pred, obj)
-    across batch boundaries (a conversation lives in exactly one batch, but
-    the same triple text can occur in many conversations)."""
-    df = spark.read.parquet(os.path.join(out_dir, "triples"))
-    return df
+    """Union of all completed batches, one row per (conversation, triple).
+    No dedup here: the same triple text can occur in conversations of
+    different batches, and ``materialize.build_edges``' groupBy merges
+    those rows into one edge."""
+    return spark.read.parquet(os.path.join(out_dir, "triples"))
 
 
 def finalize_graph(spark: SparkSession, out_dir: str, alias_dict=None, link=True):

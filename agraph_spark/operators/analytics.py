@@ -124,13 +124,11 @@ def _driver_pagerank_fixed(
     nodes: DataFrame, adj: DataFrame, rows: list, iterations: int,
     d_num: int, seed_v: int, base_v: int,
 ) -> list:
-    """Driver mirror of the FIXED-POINT pagerank loop over the collected
+    """Driver mirror of the fixed-point pagerank loop over the collected
     (head_id, tail_id, outd) adjacency rows, returning (entity_id, rank)
-    for every node the adjacency touches. Safe ONLY in fixed-point mode:
-    integer ppb arithmetic is order-independent, so the mirror is
-    bit-identical to the distributed loop by construction (the float
-    mode's pre-round per-partition sum order is not reproducible and
-    keeps the distributed-only path). Mirrors the loop's exact join
+    for every node the adjacency touches. Integer ppb arithmetic is
+    order-independent, so the mirror is bit-identical to the distributed
+    loop by construction. Mirrors the loop's exact join
     semantics: contributions only from heads that are NODES (the rank
     join), null tails accumulate but never match a node (Spark equi-join
     null semantics); un-touched nodes take the closed-form floor rank in
@@ -165,30 +163,26 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     checkpoint_dir: str | None = None,
-    fixed_point: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank (unnormalized variant: seed 1.0,
-    r' = (1-d) + d * sum_in(r/outdeg); parallel edges each carry mass).
+    r' = (1-d) + d * sum_in(r/outdeg); parallel edges each carry mass),
+    returned as ``rank`` in integer parts-per-billion.
 
     Beyond the reference's degree-based importance (A7) — the standard
     importance upgrade for a KG at scale. Same loop machinery as connected
     components: cached adjacency, loop-sized shuffle partitions, per-round
-    lineage cuts (reliable with checkpoint_dir). In fixed-point mode,
-    graphs within ``adaptive.PAGERANK_ROWS`` adjacency rows take the
-    driver mirror (``_driver_pagerank_fixed``), which integer arithmetic
-    makes bit-identical; the distributed loop runs above the budget and
-    always in float mode.
+    lineage cuts (reliable with checkpoint_dir). Graphs within
+    ``adaptive.PAGERANK_ROWS`` adjacency rows take the driver mirror
+    (``_driver_pagerank_fixed``); the distributed loop runs above the
+    budget.
 
-    ``fixed_point=True`` runs the whole iteration in integer
-    parts-per-billion (floor division per edge, exact BIGINT sums, damping
-    as *85 div 100): addition is order-INDEPENDENT, so ranks are
-    bit-identical across partitionings, reruns, and engines — the
-    reproducibility mode (and the DuckDB-oracle mode; float sums round-
-    flaked at 1e-9 under partition nondeterminism). Float mode (default)
-    rounds to 9 decimals per round. Fixed-point overflow bound: a node's
-    recv is < max_in_degree * 1e9, so BIGINT is safe up to ~9e9 in-edges
-    per node — beyond any real graph's hottest node (and the float mode
-    has no such bound)."""
+    The whole iteration runs in integer ppb (floor division per edge,
+    exact BIGINT sums, damping as *85 div 100): addition is
+    order-INDEPENDENT, so ranks are bit-identical across partitionings,
+    reruns, engines (the DuckDB oracle) and the driver mirror; float sums
+    round-flaked at 1e-9 under partition nondeterminism. Overflow bound: a
+    node's recv is < max_in_degree * 1e9, so BIGINT is safe up to ~9e9
+    in-edges per node — beyond any real graph's hottest node."""
     from .components import lineage_cutter, loop_shuffle_partitions
 
     cut = lineage_cutter(edges, checkpoint_dir)
@@ -197,46 +191,30 @@ def pagerank(
     # RDD-leaf adjacency keeps each round's analyzed plan shallow
     # (measured on CC/cycles — PLANS.md round 3)
     adj = cut(edges.select("head_id", "tail_id").join(deg, "head_id"), eager=False)
-    if fixed_point:
-        d_num = int(round(damping * 100))
-        seed_v, base_v = 1_000_000_000, (100 - d_num) * 10_000_000
-        id_t = nodes.schema["entity_id"].dataType.simpleString()
-        mapping = adaptive.cutover(
-            adj, adaptive.PAGERANK_ROWS,
-            lambda rows: _driver_pagerank_fixed(
-                nodes, adj, rows, iterations, d_num, seed_v, base_v),
-            f"entity_id {id_t}, rank bigint",
-        )
-        if mapping is not None:
-            fill = F.lit(seed_v if iterations == 0 else base_v).cast("long")
-            return nodes.select("entity_id").join(mapping, "entity_id", "left").select(
-                "entity_id", F.coalesce("rank", fill).alias("rank"))
-        seed = F.lit(seed_v).cast("long")
-        base = F.lit(base_v).cast("long")
-        ranks = nodes.select("entity_id", seed.alias("rank"))
-    else:
-        ranks = nodes.select("entity_id", F.lit(1.0).alias("rank"))
+    d_num = int(round(damping * 100))
+    seed_v, base_v = 1_000_000_000, (100 - d_num) * 10_000_000
+    id_t = nodes.schema["entity_id"].dataType.simpleString()
+    mapping = adaptive.cutover(
+        adj, adaptive.PAGERANK_ROWS,
+        lambda rows: _driver_pagerank_fixed(
+            nodes, adj, rows, iterations, d_num, seed_v, base_v),
+        f"entity_id {id_t}, rank bigint",
+    )
+    if mapping is not None:
+        fill = F.lit(seed_v if iterations == 0 else base_v).cast("long")
+        return nodes.select("entity_id").join(mapping, "entity_id", "left").select(
+            "entity_id", F.coalesce("rank", fill).alias("rank"))
+    base = F.lit(base_v).cast("long")
+    ranks = nodes.select("entity_id", F.lit(seed_v).cast("long").alias("rank"))
     n_adj = adj.count()  # sizes the loop
     with loop_shuffle_partitions(nodes.sparkSession, n_adj):
         ranks = cut(ranks)
         for _ in range(iterations):
             j = adj.join(ranks.withColumnRenamed("entity_id", "head_id"), "head_id")
-            if fixed_point:
-                recv = j.groupBy(F.col("tail_id").alias("entity_id")).agg(
-                    F.sum(F.expr("rank div outd")).alias("recv")
-                )
-                new_rank = base + F.expr(
-                    f"(coalesce(recv, 0L) * {d_num}) div 100"
-                )
-            else:
-                recv = j.groupBy(F.col("tail_id").alias("entity_id")).agg(
-                    F.sum(F.col("rank") / F.col("outd")).alias("recv")
-                )
-                new_rank = F.round(
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("recv", F.lit(0.0)),
-                    9,
-                )
+            recv = j.groupBy(F.col("tail_id").alias("entity_id")).agg(
+                F.sum(F.expr("rank div outd")).alias("recv")
+            )
+            new_rank = base + F.expr(f"(coalesce(recv, 0L) * {d_num}) div 100")
             ranks = cut(
                 nodes.select("entity_id")
                 .join(recv, "entity_id", "left")

@@ -1,5 +1,5 @@
-"""Fused per-document extraction kernel: E1 + E2 + E3 + D1, and in the
-document kernel also E5 + E6 + E7 + E9 + D11, in ONE mapInPandas pass.
+"""Fused per-document extraction kernel: E1 + E2 + E3 + D1 + E5 + E6 + E7
++ E9 + D11 in ONE mapInPandas pass.
 
 Why fused: mention detection, confidence scoring, keyword extraction,
 first-seen-wins dedup, endpoint resolution, sentence co-occurrence,
@@ -14,9 +14,9 @@ Entity and candidate extraction is vectorized pandas (str.extractall per
 pattern per batch, groupby aggregations); the relation steps loop per
 conversation, as the reference does per document. Semantics are identical
 to the modular operators in extraction.py and relations.py (same reference
-citations); tests/test_parity_reference.py holds both paths to exact
-reference parity and tests/test_kernel_equivalence.py holds them to each
-other.
+citations); tests/test_parity_reference.py holds the kernel and the
+modular operators to exact reference parity and
+tests/test_kernel_equivalence.py holds them to each other.
 """
 
 from __future__ import annotations
@@ -28,10 +28,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import patterns as P
-from ..schemas import ENTITIES
 
 _ENT_COLS = ["conv_id", "name", "name_norm", "entity_type", "confidence", "entity_order"]
 
@@ -157,20 +155,6 @@ def extract_entities_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         entity_order=("seq", "min"),
     ).reset_index()
     return out[_ENT_COLS]
-
-
-def _entities_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = extract_entities_batch(pdf)
-        if len(out):
-            yield out
-
-
-def extract_entities_fused(documents: DataFrame) -> DataFrame:
-    """(conv_id, text) -> per-conversation entity set, one kernel pass."""
-    return documents.select("conv_id", "text").mapInPandas(
-        _entities_kernel, schema=ENTITIES
-    )
 
 
 # --------------------------------------------------------------------------
@@ -349,50 +333,3 @@ def extract_documents_fused(documents: DataFrame) -> DataFrame:
         _doc_extract_kernel, schema=_DOC_EXTRACT_SCHEMA
     )
 
-
-def _grouped_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas body for one conv_id hash bucket: pandas reassembly
-    (same (turn_idx, ts, text) struct order as reassemble_conversations'
-    array_sort) followed by the extraction batch — raw turns reach Python
-    once and the per-document intermediates never exist JVM-side."""
-    # Null semantics must match reassemble_conversations exactly:
-    # array_sort compares struct fields NULLS FIRST (pandas default is
-    # NaN-last), and concat_ws SKIPS null elements (no separator emitted),
-    # so null-text turns contribute nothing — dropna, never fillna("").
-    # Spark's groupBy also keeps a null conv_id group (dropna=False).
-    pdf = pdf.sort_values(
-        ["conv_id", "turn_idx", "ts", "text"], kind="stable", na_position="first"
-    )
-    docs = (
-        pdf.groupby("conv_id", sort=False, dropna=False)["text"]
-        .agg(lambda s: "\n".join(s.dropna()))
-        .reset_index()
-    )
-    return _doc_extract_batch(docs)
-
-
-def extract_documents_fused_grouped(
-    transcripts: DataFrame, n_buckets: int | None = None
-) -> DataFrame:
-    """Reassembly + extraction fused into ONE exchange: shuffle raw turns on
-    a conv_id hash bucket, then a single applyInPandas does pandas
-    reassembly and extraction per bucket.
-
-    Candidate alternative to reassemble_conversations -> mapInPandas (which
-    pays a JVM collect_list/array_sort/concat_ws aggregation before the
-    Arrow transfer). Grouping by pmod(xxhash64(conv_id), n_buckets) rather
-    than conv_id keeps applyInPandas calls to one per TASK-sized bucket
-    instead of one tiny pandas frame per conversation. Exact-parity-tested
-    against the default path; see PLANS.md for the measured comparison."""
-    spark = transcripts.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bucketed = transcripts.select("conv_id", "turn_idx", "ts", "text").withColumn(
-        "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
-    return (
-        bucketed.groupBy("_bucket")
-        .applyInPandas(
-            lambda _key, pdf: _grouped_kernel(pdf), schema=_DOC_EXTRACT_SCHEMA
-        )
-    )

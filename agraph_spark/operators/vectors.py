@@ -2,8 +2,10 @@
 scale-path ANN variants a 100 TB training-data pipeline needs.
 
 All similarity math is JVM-side column expressions over ``array<float>``
-(``zip_with`` + ``aggregate``) — whole-stage-codegen'd, no Python in the hot
-path. Reference: brute force over a dict of np arrays
+(``zip_with`` + ``aggregate``) — no Python in the hot path. The folds are
+higher-order functions, which run interpreted (CodegenFallback), so
+pairwise operators hoist per-vector work out of the pair expression
+(``cosine_hoisted``). Reference: brute force over a dict of np arrays
 (/root/reference/agraph/storage/vector_storage.py:310-353).
 """
 

@@ -179,8 +179,3 @@ def compiled_relation_patterns() -> list[tuple[str, "re.Pattern[str]", "re.Patte
             out.append((pred, re.compile(pat, re.IGNORECASE), anchor))
     return out
 
-
-def mention_seq(type_idx: int, pattern_idx: int, match_idx: int) -> int:
-    """Total-order key reproducing reference emission order
-    (type -> pattern -> match position)."""
-    return (type_idx * 100 + pattern_idx) * 1_000_000 + match_idx

@@ -67,9 +67,9 @@ def _triple_lists(triples) -> list[list[str]]:
 
 def capture_triples(live: bool) -> None:
     from test_parity_fuzz import fuzz_docs
-    from test_parity_reference import golden_triples
+    from test_parity_reference import build_triples, golden_triples
 
-    from agraph_spark.pipeline import build_kg, build_triples_from_texts
+    from agraph_spark.pipeline import build_triples_from_texts
     from agraph_spark.session import get_spark
     from agraph_spark.synth import make_transcripts, transcripts_df
 
@@ -80,10 +80,10 @@ def capture_triples(live: bool) -> None:
             got = golden_triples(make_transcripts(n_convs=n_convs, seed=seed))
         else:
             tdf = transcripts_df(spark, n_convs=n_convs, seed=seed)
-            sets = [{(r.subj, r.pred, r.obj) for r in build_kg(tdf, mode=m).triples.collect()}
-                    for m in ("fused", "modular", "grouped")]
-            assert sets[0] == sets[1] == sets[2], f"modes disagree at seed {seed}"
-            got = sets[0]
+            fused, modular = [{(r.subj, r.pred, r.obj) for r in build_triples(tdf, p).collect()}
+                              for p in ("fused", "modular")]
+            assert fused == modular, f"kernel and modular oracle disagree at seed {seed}"
+            got = fused
         parity[f"{seed}-{n_convs}"] = _triple_lists(got)
     _dump("parity_triples", parity)
 

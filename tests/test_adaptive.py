@@ -48,7 +48,7 @@ def _operators(spark, id_t, edges, names):
         "all_paths_multi": lambda: GQ.all_paths_multi(edf, start, targets, max_depth=3),
         "canonical_mapping": lambda: L.canonical_mapping(pairs),
         "lsh_candidate_pairs": lambda: L.lsh_candidate_pairs(nodes),
-        "pagerank": lambda: A.pagerank(nodes, edf, iterations=3, fixed_point=True),
+        "pagerank": lambda: A.pagerank(nodes, edf, iterations=3),
     }
 
 

@@ -135,51 +135,59 @@ def test_reliable_checkpoint_dir(spark, forced_path, tmp_path):
     assert b1 == b2
 
 
-def test_pagerank_matches_power_iteration(spark):
-    """Distributed PageRank == a driver-side power iteration with the same
-    formula, on a small multigraph (parallel edges carry mass twice)."""
-    from agraph_spark.operators.analytics import pagerank
+PR_EDGES = [("a", "b"), ("b", "c"), ("b", "a"), ("c", "a"), ("c", "a")]
 
-    edge_rows = [("a", "b"), ("b", "c"), ("b", "a"), ("c", "a"), ("c", "a")]
-    nodes = spark.createDataFrame([("a",), ("b",), ("c",), ("iso",)], "entity_id string")
-    edges = spark.createDataFrame(edge_rows, "head_id string, tail_id string")
-    got = {r.entity_id: r.rank for r in pagerank(nodes, edges, iterations=10).collect()}
 
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def round_half_up(x, nd=9):  # Spark/DuckDB ROUND; python round() is half-even
-        return float(Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), rounding=ROUND_HALF_UP))
-
-    ranks = {n: 1.0 for n in ["a", "b", "c", "iso"]}
+def py_pagerank(nodes, edge_rows, iterations=10, integer=True):
+    """Driver-side power iteration with the same formula: r' = 0.15 +
+    0.85 * sum_in(r/outdeg), in integer ppb (floor division per edge,
+    damping as *85 div 100) or in floats."""
     outd = {}
     for h, _ in edge_rows:
         outd[h] = outd.get(h, 0) + 1
-    for _ in range(10):
-        recv = {n: 0.0 for n in ranks}
+    ranks = {n: 1_000_000_000 if integer else 1.0 for n in nodes}
+    for _ in range(iterations):
+        recv = {n: 0 for n in ranks}
         for h, t in edge_rows:
-            recv[t] += ranks[h] / outd[h]
-        ranks = {n: round_half_up(0.15 + 0.85 * recv[n]) for n in ranks}
-    assert got == ranks
-    assert got["iso"] == 0.15  # no in-edges -> floor rank
+            recv[t] += ranks[h] // outd[h] if integer else ranks[h] / outd[h]
+        ranks = {n: 150_000_000 + recv[n] * 85 // 100 if integer
+                 else 0.15 + 0.85 * recv[n] for n in ranks}
+    return ranks
 
 
-def test_pagerank_fixed_point_tracks_float(spark):
-    """Fixed-point (integer ppb) ranks match float ranks to ~1e-6 and are
-    identical across repartitionings (order-independent sums)."""
+def test_pagerank_matches_power_iteration(spark, forced_path):
+    """PageRank == a driver-side integer power iteration with the same
+    formula on a small multigraph (parallel edges carry mass twice), on
+    both forced paths."""
     from agraph_spark.operators.analytics import pagerank
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("b", "a"), ("c", "a"), ("c", "a")],
-        "head_id string, tail_id string")
+    names = ["a", "b", "c", "iso"]
+    nodes = spark.createDataFrame([(n,) for n in names], "entity_id string")
+    edges = spark.createDataFrame(PR_EDGES, "head_id string, tail_id string")
+    want = py_pagerank(names, PR_EDGES)
+    for path in ("driver", "distributed"):
+        with forced_path(path):
+            got = {r.entity_id: r.rank for r in pagerank(nodes, edges, iterations=10).collect()}
+        assert got == want, path
+    assert want["iso"] == 150_000_000  # no in-edges -> floor rank
+
+
+def test_pagerank_fixed_point_tracks_float(spark, forced_path):
+    """Fixed-point (integer ppb) ranks match a float power iteration to
+    ~1e-6 and are identical across repartitionings (order-independent
+    sums)."""
+    from agraph_spark.operators.analytics import pagerank
+
+    edges = spark.createDataFrame(PR_EDGES, "head_id string, tail_id string")
     nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "entity_id string")
-    fl = {r.entity_id: r.rank for r in pagerank(nodes, edges, iterations=10).collect()}
-    fp = {r.entity_id: r.rank for r in
-          pagerank(nodes, edges, iterations=10, fixed_point=True).collect()}
+    fl = py_pagerank(["a", "b", "c"], PR_EDGES, integer=False)
+    fp = {r.entity_id: r.rank for r in pagerank(nodes, edges, iterations=10).collect()}
     for n in fl:
         assert abs(fl[n] - fp[n] / 1e9) < 1e-5, (n, fl[n], fp[n])
-    fp2 = {r.entity_id: r.rank for r in
-           pagerank(nodes.repartition(7), edges.repartition(5),
-                    iterations=10, fixed_point=True).collect()}
+    with forced_path("distributed"):
+        fp2 = {r.entity_id: r.rank for r in
+               pagerank(nodes.repartition(7), edges.repartition(5),
+                        iterations=10).collect()}
     assert fp == fp2
 
 
@@ -329,7 +337,7 @@ def test_adaptive_cutovers_actually_engage(spark, monkeypatch, forced_path):
         GQ.all_paths_multi(edges, "a", targets).collect()
         L.canonical_mapping(pairs).collect()
         L.lsh_candidate_pairs(nodes).collect()
-        A.pagerank(nodes, edges, fixed_point=True).collect()
+        A.pagerank(nodes, edges).collect()
 
     run_all()
     assert sorted(calls) == sorted(
@@ -367,9 +375,9 @@ def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark, forced_pa
         [(1, 2), (2, 3), (2, 1), (3, 1), (3, 1), (9, 1), (2, 77), (1, None)],
         "head_id int, tail_id int")
     nodes = spark.createDataFrame([(1,), (2,), (3,), (4,)], "entity_id int")
-    fast = pagerank(nodes, edges, iterations=10, fixed_point=True)
+    fast = pagerank(nodes, edges, iterations=10)
     with forced_path("distributed"):
-        slow = pagerank(nodes, edges, iterations=10, fixed_point=True)
+        slow = pagerank(nodes, edges, iterations=10)
         s = {r.entity_id: r.rank for r in slow.collect()}
     f = {r.entity_id: r.rank for r in fast.collect()}
     assert f == s and len(f) == 4
@@ -380,10 +388,10 @@ def test_pagerank_fixed_point_driver_cutover_equals_distributed(spark, forced_pa
         [(x.name, x.dataType) for x in slow.schema]
     # zero-iteration edge: both paths return the seed for every node
     f0 = {r.entity_id: r.rank for r in
-          pagerank(nodes, edges, iterations=0, fixed_point=True).collect()}
+          pagerank(nodes, edges, iterations=0).collect()}
     with forced_path("distributed"):
         s0 = {r.entity_id: r.rank for r in
-              pagerank(nodes, edges, iterations=0, fixed_point=True).collect()}
+              pagerank(nodes, edges, iterations=0).collect()}
     assert f0 == s0 == {i: 1_000_000_000 for i in (1, 2, 3, 4)}
 
 

@@ -1,6 +1,6 @@
 """The fused document kernel computes endpoint resolution (E7), sentence
 co-occurrence (E6), validation (E9) and the triple dedup (D11) per
-conversation; "modular" mode computes them as conv_id joins
+conversation; the modular operators compute them as conv_id joins
 (operators/relations.py). Both must give the same triples, conf included,
 on the inputs where the two forms could part ways.
 
@@ -22,7 +22,8 @@ import pytest
 
 from agraph_spark.caching import release_caches
 from agraph_spark.operators.fused import conversation_triples
-from agraph_spark.pipeline import build_kg, build_triples_from_texts
+from agraph_spark.pipeline import build_triples_from_texts
+from test_parity_reference import build_triples, modular_triples
 
 TRANSCRIPT_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 
@@ -65,10 +66,10 @@ def _rows(df) -> set[tuple]:
     return {tuple(r) for r in df.select("conv_id", "subj", "pred", "obj", "conf").collect()}
 
 
-def _by_mode(tdf) -> dict[str, set[tuple]]:
+def _by_path(tdf) -> dict[str, set[tuple]]:
     out = {}
-    for mode in ("modular", "fused", "grouped"):
-        out[mode] = _rows(build_kg(tdf, mode=mode).triples)
+    for path in ("modular", "fused"):
+        out[path] = _rows(build_triples(tdf, path))
         release_caches(tdf.sparkSession)
     return out
 
@@ -76,9 +77,8 @@ def _by_mode(tdf) -> dict[str, set[tuple]]:
 @pytest.mark.parametrize("corpus", ["edge_cases", "monster"])
 def test_kernel_triples_match_joins(spark, corpus):
     tdf = _transcripts(spark, CONVERSATIONS) if corpus == "edge_cases" else _monster(spark)
-    got = _by_mode(tdf)
+    got = _by_path(tdf)
     assert got["fused"] == got["modular"]
-    assert got["grouped"] == got["modular"]
     by_conv = {}
     for row in got["modular"]:
         by_conv.setdefault(row[0], set()).add(row[1:])
@@ -100,7 +100,7 @@ def test_documents_kernel_matches_joins(spark):
         [(cid, None if turns == [None, None] else "\n".join(turns))
          for cid, turns in CONVERSATIONS.items()],
         "conv_id string, text string")
-    modular = _rows(build_triples_from_texts(docs, mode="modular"))
+    modular = _rows(modular_triples(docs))
     release_caches(spark)
     assert _rows(build_triples_from_texts(docs)) == modular and modular
 

@@ -12,7 +12,10 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from agraph_spark.operators.reassemble import TURN_SEPARATOR
+from agraph_spark.caching import track
+from agraph_spark.operators.extraction import extract_entities
+from agraph_spark.operators.reassemble import TURN_SEPARATOR, reassemble_conversations
+from agraph_spark.operators.relations import extract_relations, to_triples
 from agraph_spark.pipeline import build_kg
 from agraph_spark.refload import golden, reference_available, reference_triples
 from agraph_spark.synth import make_transcripts, transcripts_df
@@ -28,17 +31,30 @@ def golden_triples(pdf: pd.DataFrame) -> set[tuple[str, str, str]]:
     return out
 
 
+def modular_triples(documents):
+    """The kernel's independent oracle: (conv_id, text) documents through
+    the modular operators, per-stage Spark joins instead of one kernel."""
+    documents = track(documents)
+    return to_triples(extract_relations(documents, track(extract_entities(documents))))
+
+
+def build_triples(tdf, path: str):
+    """Triples of a transcripts table by the kernel ("fused") or by the
+    modular oracle over the same reassembled documents ("modular")."""
+    if path == "modular":
+        return modular_triples(reassemble_conversations(tdf))
+    return build_kg(tdf).triples
+
+
 @pytest.mark.parametrize(
-    "seed,n_convs,mode",
-    [(7, 25, "fused"), (42, 40, "fused"), (7, 25, "modular"), (42, 40, "modular"),
-     (7, 25, "grouped"), (42, 40, "grouped")],
+    "seed,n_convs,path",
+    [(7, 25, "fused"), (42, 40, "fused"), (7, 25, "modular"), (42, 40, "modular")],
 )
-def test_triple_parity(spark, seed, n_convs, mode):
+def test_triple_parity(spark, seed, n_convs, path):
     tdf = transcripts_df(spark, n_convs=n_convs, seed=seed)
-    build = build_kg(tdf, mode=mode)
     got = {
         (r.subj, r.pred, r.obj)
-        for r in build.triples.select("subj", "pred", "obj").distinct().collect()
+        for r in build_triples(tdf, path).select("subj", "pred", "obj").distinct().collect()
     }
     if reference_available():
         want = golden_triples(make_transcripts(n_convs=n_convs, seed=seed))
@@ -68,15 +84,14 @@ def test_partition_invariance(spark):
     assert t2 == t16 and len(t2) > 0
 
 
-def test_grouped_null_turn_parity(spark):
-    """ADVICE r3: the grouped kernel must match reassemble_conversations on
-    NULLABLE turns — concat_ws SKIPS null texts (no separator emitted) and
-    array_sort orders null struct fields FIRST (pandas default is NaN-last).
-    c1 exercises the null-text skip, c2 the null-ts NULLS FIRST tiebreak."""
+def test_reassembly_null_turns(spark):
+    """ADVICE r3: reassembly on NULLABLE turns — concat_ws SKIPS null
+    texts (no separator emitted) and array_sort orders null struct fields
+    FIRST. c1 exercises the null-text skip, c2 the null-ts NULLS FIRST
+    tiebreak. build_kg's documents carry exactly these texts, and the
+    kernel and the modular oracle agree on their triples."""
     import datetime as dt
 
-    from agraph_spark.operators.fused import extract_documents_fused_grouped
-    from agraph_spark.operators.reassemble import reassemble_conversations
     from agraph_spark.schemas import TRANSCRIPTS
 
     t0 = dt.datetime(2020, 1, 1)
@@ -91,18 +106,15 @@ def test_grouped_null_turn_parity(spark):
     tdf = spark.createDataFrame(rows, TRANSCRIPTS).repartition(4)
 
     want = {r.conv_id: r.text for r in reassemble_conversations(tdf).collect()}
-    got = {r.conv_id: r.text for r in extract_documents_fused_grouped(tdf).collect()}
-    assert got == want
     assert want["c1"] == "Alice works at Acme.\nBob lives in Paris."
     assert want["c2"] == "late-null-ts sorts first\nearly-real-ts sorts second"
+    build = build_kg(tdf)
+    assert {r.conv_id: r.text for r in build.documents.collect()} == want
 
-    fused = {
-        (r.subj, r.pred, r.obj) for r in build_kg(tdf, mode="fused").triples.collect()
-    }
-    grouped = {
-        (r.subj, r.pred, r.obj) for r in build_kg(tdf, mode="grouped").triples.collect()
-    }
-    assert fused == grouped
+    def spo(df):
+        return {(r.subj, r.pred, r.obj) for r in df.collect()}
+
+    assert spo(build.triples) == spo(build_triples(tdf, "modular"))
 
 
 def test_per_turn_text_equality(spark):
@@ -110,8 +122,6 @@ def test_per_turn_text_equality(spark):
     in stable turn order."""
     pdf = make_transcripts(n_convs=8, seed=11)
     tdf = transcripts_df(spark, n_convs=8, seed=11)
-    from agraph_spark.operators.reassemble import reassemble_conversations
-
     docs = {r.conv_id: r.text for r in reassemble_conversations(tdf).collect()}
     for conv_id, grp in pdf.sort_values(["conv_id", "turn_idx"]).groupby("conv_id"):
         expected = TURN_SEPARATOR.join(grp["text"].tolist())

@@ -16,6 +16,7 @@ from agraph_spark.io import (
     read_documents,
     read_graph,
     write_graph,
+    write_graph_json,
 )
 from agraph_spark.operators.db_schema import (
     catalog_from_dict,
@@ -128,6 +129,24 @@ def test_graph_store_and_exports(spark):
     assert len(cy["elements"]) == 3
     d3 = json.loads(export_d3(nodes, edges))
     assert len(d3["nodes"]) == 2 and d3["links"][0]["type"] == "belongs_to"
+
+
+def test_write_graph_json_round_trip(spark, tmp_path):
+    """S8: the JSON-lines tables read back as the same rows, with quotes,
+    newlines, non-ASCII text and nulls intact."""
+    nodes = spark.createDataFrame(
+        [("e1", 'Acme "&" Co', "organization", 0.9), ("e2", "Zürich\nHQ", None, 0.8),
+         ("e3", "东京", "location", None)],
+        "entity_id string, name string, entity_type string, confidence double",
+    )
+    edges = spark.createDataFrame(
+        [("x1", "e1", "e2", "belongs_to", 0.7), ("x2", "e2", "e3", "related_to", None)],
+        "edge_id string, head_id string, tail_id string, pred string, confidence double",
+    )
+    write_graph_json(nodes, edges, str(tmp_path))
+    for name, df in (("nodes_json", nodes), ("edges_json", edges)):
+        back = spark.read.schema(df.schema).json(str(tmp_path / name))
+        assert sorted(back.collect()) == sorted(df.collect()), name
 
 
 def test_read_documents_dispatch(spark, tmp_path):
