@@ -170,9 +170,10 @@ def _driver_lsh_pairs(rows, max_jaccard_distance: float) -> list | None:
     iff keyDistance = 1 - |A∩B|/|A∪B| over the feature indices is STRICTLY
     below the threshold (measured: a pair at exactly the threshold is
     dropped by the Scala join). Same-type and id_a < id_b filters match
-    the distributed projection. All inputs (hash values, feature indices)
-    come from the fitted Spark model itself, so no hash function is
-    reimplemented and the two paths cannot drift.
+    the distributed projection, null rejection included: a row with a
+    null id or type pairs with nothing. All inputs (hash values, feature
+    indices) come from the fitted Spark model itself, so no hash function
+    is reimplemented and the two paths cannot drift.
 
     Enumerating every in-bucket pair costs the sum of C(|bucket|, 2),
     which a collision-heavy universe makes quadratic in its row count
@@ -185,6 +186,7 @@ def _driver_lsh_pairs(rows, max_jaccard_distance: float) -> list | None:
     # measured 5.4 s; precomputed, under 1 s — r6b)
     from itertools import combinations
 
+    rows = [r for r in rows if r.entity_id is not None and r.entity_type is not None]
     buckets: dict = {}
     for i, r in enumerate(rows):
         for t, hv in enumerate(r.hashes):

@@ -11,45 +11,42 @@ query, network-bound) — out of engine scope (SURVEY.md V10).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .vectors import cosine_hoisted, norm
+from .vectors import cosine_scores, topk_similar
 
 
-def _scored(df: DataFrame, query: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    # r6c: norms hoisted out of the per-row expression (HOF folds run
-    # interpreted; cosine()'s when-guard evaluated each norm twice) —
-    # the query norm is computed once in the broadcast frame, the row
-    # norm once per row: 5 folds/row -> 2. Bitwise-identical scores
-    # (vectors.cosine_hoisted; pinned in test_properties).
-    q = query.withColumn("_nq", norm(F.col("query_vec").cast("array<double>")))
-    return (
-        df.withColumn("_na", norm(F.col(vec_col).cast("array<double>")))
-        .crossJoin(F.broadcast(q))
-        .withColumn(
-            "score",
-            cosine_hoisted(
-                F.col(vec_col).cast("array<double>"),
-                F.col("query_vec").cast("array<double>"),
-                F.col("_na"),
-                F.col("_nq"),
-            ),
+def _namespaces(
+    nodes: DataFrame, edges_rendered: DataFrame, chunks: DataFrame, *cols: F.Column
+) -> DataFrame:
+    """The three retrieval namespaces as one union table:
+    (item_id, namespace, *cols, embedding)."""
+
+    def ns(df: DataFrame, id_col: str, name: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("item_id"), F.lit(name).alias("namespace"), *cols, "embedding"
         )
-        .drop("query_vec", "_na", "_nq")
+
+    return (
+        ns(nodes, "entity_id", "entity")
+        .unionByName(ns(edges_rendered, "edge_id", "relation"))
+        .unionByName(ns(chunks, "chunk_id", "text_chunk"))
     )
 
 
-def search_namespace(
-    df: DataFrame, query: DataFrame, k: int, threshold: float, id_col: str
+def _namespace_topk(
+    union: DataFrame, query: DataFrame, threshold: float, k: int | F.Column
 ) -> DataFrame:
-    """V4/V5: score-all, threshold, top-k with id tiebreak
-    (vector_storage.py:310-332 + filter variants json_storage.py:716-748)."""
+    """Per-namespace top-k over a ``_namespaces`` table: score, keep
+    score >= threshold, rank each namespace by (score desc, item_id asc)
+    into ``rk`` and keep rk <= k (an int, or a Column over namespace)."""
+    w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
     return (
-        _scored(df, query)
+        cosine_scores(union, query)
         .where(F.col("score") >= threshold)
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
     )
 
 
@@ -65,16 +62,8 @@ def search_knowledge(
     input carries (item_id, namespace, embedding); per-namespace top-k via a
     window (the reference's three asyncio-parallel scans,
     knowledge_retriever.py:264-313, become one scan of a union)."""
-    from pyspark.sql import Window
-
-    u = (
-        nodes.select(F.col("entity_id").alias("item_id"), F.lit("entity").alias("namespace"), "embedding")
-        .unionByName(edges_rendered.select(F.col("edge_id").alias("item_id"), F.lit("relation").alias("namespace"), "embedding"))
-        .unionByName(chunks.select(F.col("chunk_id").alias("item_id"), F.lit("text_chunk").alias("namespace"), "embedding"))
-    )
-    scored = _scored(u, query).where(F.col("score") >= threshold)
-    w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k).drop("rk")
+    u = _namespaces(nodes, edges_rendered, chunks)
+    return _namespace_topk(u, query, threshold, k).drop("rk")
 
 
 def hybrid_search_chunks(
@@ -102,10 +91,10 @@ def hybrid_search_chunks(
     )
     tw = text_weight / (text_weight + vector_weight)
     vw = vector_weight / (text_weight + vector_weight)
-    scored = (
-        _scored(chunks, query)
-        .withColumn("text_score", text_score)
-        .withColumn("hybrid_score", F.round(tw * text_score + vw * F.col("score"), 9))
+    scored = cosine_scores(chunks, query).select(
+        "*",
+        text_score.alias("text_score"),
+        F.round(tw * text_score + vw * F.col("score"), 9).alias("hybrid_score"),
     )
     if k is None:
         return scored
@@ -170,16 +159,8 @@ def search_graph_modes(
     out_cols = ["item_id", "namespace", "score", "origin"]
 
     def _topk(df: DataFrame, id_col: str, ns: str) -> DataFrame:
-        return (
-            _scored(df, query)
-            .where(F.col("score") >= threshold)
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-            .select(
-                F.col(id_col).alias("item_id"),
-                F.lit(ns).alias("namespace"),
-                F.col("score"),
-            )
+        return topk_similar(df, query, k, threshold, id_col).select(
+            F.col(id_col).alias("item_id"), F.lit(ns).alias("namespace"), "score"
         )
 
     def _linked_chunks(seed_entities: DataFrame, origin: str) -> DataFrame:
@@ -392,43 +373,14 @@ def chat_context_hits(
     connected-chunk expansion, and the reference's rendered 文本片段 line
     for text_chunk hits. Exposed so the oracle gate can certify the
     assembly row-by-row (v10_chat_ctx_md5) without the JSON wrapper."""
-    from pyspark.sql import Window
-
-    u = (
-        nodes.select(
-            F.col("entity_id").alias("item_id"),
-            F.lit("entity").alias("namespace"),
-            F.col(content_col).alias("content"),
-            "embedding",
-        )
-        .unionByName(
-            edges_rendered.select(
-                F.col("edge_id").alias("item_id"),
-                F.lit("relation").alias("namespace"),
-                F.col(content_col).alias("content"),
-                "embedding",
-            )
-        )
-        .unionByName(
-            chunks.select(
-                F.col("chunk_id").alias("item_id"),
-                F.lit("text_chunk").alias("namespace"),
-                F.col(content_col).alias("content"),
-                "embedding",
-            )
-        )
-    )
-    scored = _scored(u, query).where(F.col("score") >= threshold)
-    w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
+    u = _namespaces(nodes, edges_rendered, chunks, F.col(content_col).alias("content"))
     k_map = F.create_map(
         F.lit("entity"), F.lit(k_entities),
         F.lit("relation"), F.lit(k_relations),
         F.lit("text_chunk"), F.lit(k_chunks),
     )
-    hits = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k_map[F.col("namespace")])
-        .select("item_id", "namespace", "content", "score", "rk")
+    hits = _namespace_topk(u, query, threshold, k_map[F.col("namespace")]).select(
+        "item_id", "namespace", "content", "score", "rk"
     )
     if chunk_entity_links is not None:
         connected = expand_connected_chunks(hits, chunk_entity_links, k_connected)

@@ -28,7 +28,10 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    """V3: dot/(|a||b|), 0.0 on zero norm (vector_storage.py:334-353)."""
+    """V3: dot/(|a||b|), 0.0 on zero norm (vector_storage.py:334-353).
+    Kept as the inline reference that test_properties holds
+    ``cosine_hoisted`` to, bit for bit; operators score through
+    ``cosine_scores``."""
     na, nb = norm(a), norm(b)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
@@ -52,9 +55,11 @@ def cosine_scores(
     query_col: str = "query_vec",
 ) -> DataFrame:
     """Score every row against a single query vector (1-row DataFrame,
-    broadcast by Catalyst). V4 minus the top-k cut. r6c: norms hoisted
-    (see cosine_hoisted) — query norm once in the broadcast frame, row
-    norm once per row; scores bitwise-identical to the inline cosine."""
+    broadcast by Catalyst). V4 minus the top-k cut, and the one scorer
+    behind every single-query search (topk_similar, the ANN reranks,
+    retrieval.py). r6c: norms hoisted (see cosine_hoisted) — query norm
+    once in the broadcast frame, row norm once per row; scores
+    bitwise-identical to the inline cosine."""
     q = F.broadcast(
         query.withColumn("_nq", norm(F.col(query_col).cast("array<double>")))
     )
@@ -121,13 +126,9 @@ def ann_topk_lsh(
     At 100 TB the bucket column is a partition/cluster key so the scan
     prunes to 1/2^p of the data; here it is computed on the fly."""
     bucketed = embeddings.withColumn("bucket", hyperplane_lsh_bucket(F.col("embedding"), planes))
-    qb = query.withColumn("bucket", hyperplane_lsh_bucket(F.col("query_vec"), planes))
-    cand = bucketed.join(F.broadcast(qb.select("bucket", "query_vec")), "bucket")
-    scored = cand.withColumn(
-        "score",
-        cosine(F.col("embedding").cast("array<double>"), F.col("query_vec").cast("array<double>")),
-    ).drop("query_vec")
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    qb = query.select(hyperplane_lsh_bucket(F.col("query_vec"), planes).alias("bucket"))
+    cand = bucketed.join(F.broadcast(qb), "bucket")
+    return cosine_scores(cand, query).orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
 def ivf_index(
@@ -142,7 +143,7 @@ def ivf_index(
     probes 1-few partitions instead of the corpus. Returns (assigned_df
     with 'centroid' column, centroid list)."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     feat = embeddings.withColumn("_v", array_to_vector(F.col(vec_col).cast("array<double>")))
     km = KMeans(k=n_centroids, seed=seed, featuresCol="_v", predictionCol="centroid")
@@ -152,7 +153,6 @@ def ivf_index(
         (c.toArray() if hasattr(c, "toArray") else c).tolist()
         for c in model.clusterCenters()
     ]
-    _ = vector_to_array  # imported for parity with the write path
     return assigned, centroids
 
 
@@ -219,9 +219,7 @@ def ivf_topk(
 
     qdf = local_df(spark, [(query_vec,)], "query_vec array<double>")
     cand = assigned.where(F.col("centroid").isin(probes))
-    scored = cand.crossJoin(F.broadcast(qdf)).withColumn(
-        "score", cosine(F.col(vec_col).cast("array<double>"), F.col("query_vec"))
-    ).drop("query_vec")
+    scored = cosine_scores(cand, qdf, vec_col=vec_col)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 

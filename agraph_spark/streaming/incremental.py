@@ -8,8 +8,9 @@ reusing the EXACT batch pipeline per micro-batch, then an idempotent merge
 into the triple store:
 
 - content-hash ids (materialize.py) make merges idempotent: re-processing a
-  conversation yields the same rows, so "merge" degrades to
-  append + downstream dropDuplicates on content keys;
+  conversation yields the same rows, which ``merge_triples_into_store``
+  combines on the content key, so a re-sent conversation leaves the store
+  unchanged;
 - per-batch lineage column = the micro-batch id (F6's doc_id registry
   becomes a plain column; removing a conversation = DELETE WHERE conv_id,
   which parquet expresses as partition rewrite and Iceberg as DELETE).
@@ -43,21 +44,6 @@ def _store_exists(spark: SparkSession, store_dir: str) -> bool:
         return bool(fs.exists(hpath))
     except Exception:
         return os.path.exists(store_dir)
-
-
-def process_microbatch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
-    """foreachBatch body: run the batch pipeline on the micro-batch and
-    append triples with lineage = micro-batch id."""
-    if batch_df.isEmpty():
-        return
-    build = build_kg(batch_df, cache_documents=True)
-    (
-        build.triples.withColumn("lineage", F.lit(f"stream_batch={batch_id}"))
-        .write.mode("append")
-        .parquet(os.path.join(out_dir, "triples_stream"))
-    )
-    build.documents.unpersist()
-    build.entities.unpersist()
 
 
 def merge_triples_into_store(
@@ -124,17 +110,12 @@ def process_microbatch_merge(
     (f6_stream_merge_md5) — the regex pipeline itself is not."""
     if batch_df.isEmpty():
         return
-    if triples_fn is not None:
-        new = triples_fn(batch_df).withColumn(
-            "lineage", F.lit(f"stream_batch={batch_id}")
-        )
-        merge_triples_into_store(batch_df.sparkSession, new, store_dir, n_buckets)
-        return
-    build = build_kg(batch_df, cache_documents=True)
-    new = build.triples.withColumn("lineage", F.lit(f"stream_batch={batch_id}"))
+    build = build_kg(batch_df, cache_documents=True) if triples_fn is None else None
+    new = (build.triples if build is not None else triples_fn(batch_df)).withColumn(
+        "lineage", F.lit(f"stream_batch={batch_id}"))
     merge_triples_into_store(batch_df.sparkSession, new, store_dir, n_buckets)
-    build.documents.unpersist()
-    build.entities.unpersist()
+    if build is not None:
+        build.documents.unpersist()
 
 
 def start_transcript_merge_stream(
@@ -167,38 +148,3 @@ def start_transcript_merge_stream(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def start_transcript_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    trigger_once: bool = True,
-):
-    """File-source stream over transcript parquet appends -> foreachBatch
-    incremental extraction. ``trigger_once`` drains available input and
-    stops (the testing/backfill mode); continuous mode just drops the
-    trigger."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_microbatch(df, bid, out_dir)
-        )
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streamed_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Global view over all streamed micro-batches, deduplicated on the
-    content key (D8/D11 semantics: same triple from any batch collapses)."""
-    df = spark.read.parquet(os.path.join(out_dir, "triples_stream"))
-    return df.groupBy("conv_id", "subj", "pred", "obj").agg(
-        F.max("conf").alias("conf"), F.min("lineage").alias("lineage")
-    )

@@ -1,7 +1,7 @@
 """Forced-path equivalence of every adaptive cutover site
 (agraph_spark/operators/adaptive.py): on small random graphs with
-duplicate edges, self-loops, null heads and tails, empty input, and
-string and long ids, the driver mirror and the distributed loop must
+duplicate edges, self-loops, null heads and tails, null entity types,
+empty input, and string and long ids, the driver mirror and the distributed loop must
 return the same rows with the same column types."""
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ def graphs(draw):
     pool = POOLS[id_t]
     endpoint = st.sampled_from(pool + [None])
     edges = draw(st.lists(st.tuples(endpoint, endpoint), max_size=14))
-    names = draw(st.lists(st.tuples(st.sampled_from(NAMES), st.sampled_from(["org", "loc"])),
+    names = draw(st.lists(st.tuples(st.sampled_from(NAMES), st.sampled_from(["org", "loc", None])),
                           min_size=len(pool), max_size=len(pool)))
     return id_t, edges, names
 
@@ -64,6 +64,8 @@ def _result(df):
 @example(("bigint", [(1, 2), (2, 2), (2, 3), (3, 1), (3, 1), (None, 4), (4, None), (3, 4)],
           [("acme corp", "org"), ("acme corp.", "org"), (None, "org"),
            ("globex", "loc"), ("globex inc", "loc")]))
+@example(("string", [("a", "b")], [("acme corp", None), ("acme corp.", None), ("acme", None),
+                                   ("globex inc", "org"), ("globex", "org")]))
 def test_forced_driver_equals_forced_distributed(spark, forced_path, graph):
     ops = _operators(spark, *graph)
     for name, op in ops.items():

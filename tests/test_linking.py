@@ -281,3 +281,23 @@ def test_collision_heavy_lsh_universe_takes_distributed_path(spark, monkeypatch,
                 for r in lsh_candidate_pairs(nodes).collect()}
     assert loops  # the forced mirror did enumerate the pairs
     assert got == want and len(want) >= 2
+
+
+def test_lsh_null_id_and_type_rows_pair_with_nothing(spark, forced_path):
+    """The distributed join's id_a < id_b and type_a == type_b reject
+    nulls, so a row with a null entity_id or entity_type is never a
+    candidate; the driver mirror must drop the same rows (it used to pair
+    two null-typed names and to raise on a null id)."""
+    nodes = spark.createDataFrame(
+        [("a", "acme corp", None), ("b", "acme corp.", None),
+         ("c", "globex inc", "org"), ("d", "globex inc.", "org"),
+         (None, "globex inc", "org"), ("e", None, "org")],
+        "entity_id string, name_norm string, entity_type string")
+    got = {}
+    for path in ("driver", "distributed"):
+        with forced_path(path):
+            pairs = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(nodes).collect()}
+            mapping = {(r.entity_id, r.canonical_id)
+                       for r in link_entities(nodes).collect()}
+        got[path] = (pairs, mapping)
+    assert got["driver"] == got["distributed"] == ({("c", "d")}, {("d", "c")})

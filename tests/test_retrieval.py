@@ -7,12 +7,12 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from agraph_spark.operators.retrieval import (
+    chat_context_hits,
     expand_connected_chunks,
     hybrid_search_chunks,
     search_knowledge,
-    search_namespace,
 )
-from agraph_spark.operators.vectors import embed_hash_stub, topk_similar
+from agraph_spark.operators.vectors import ann_topk_lsh, embed_hash_stub, topk_similar
 
 
 def test_topk_vs_numpy(spark):
@@ -87,8 +87,55 @@ def test_search_namespace_threshold(spark):
         "vec_id long, embedding array<float>",
     )
     q = spark.createDataFrame([([1.0, 0.0],)], "query_vec array<float>")
-    got = [r.vec_id for r in search_namespace(df, q, k=10, threshold=0.5, id_col="vec_id").collect()]
+    got = [r.vec_id for r in topk_similar(df, q, k=10, threshold=0.5, id_col="vec_id").collect()]
     assert got == [1, 3]
+
+
+def test_ann_topk_lsh_vs_numpy(spark):
+    """LSH ANN: the candidates are exactly the rows whose sign bucket
+    (one bit per plane, dot >= 0) equals the query's, reranked by cosine
+    with an id tiebreak and no threshold."""
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((300, 16)).astype("float32")
+    planes = rng.standard_normal((3, 16))
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    v64 = vecs.astype("float64")
+    bucket = ((v64 @ planes.T >= 0) * (1 << np.arange(3))).sum(axis=1)
+    for qi in (4, 123):
+        q = spark.createDataFrame([(vecs[qi].tolist(),)], "query_vec array<float>")
+        cand = np.flatnonzero(bucket == bucket[qi])
+        sims = (v64[cand] @ v64[qi]) / (np.linalg.norm(v64[cand], axis=1) * np.linalg.norm(v64[qi]))
+        want = sorted(zip(cand.tolist(), sims.tolist()), key=lambda t: (-t[1], t[0]))
+        for k in (5, len(vecs)):
+            got = [(r.vec_id, r.score) for r in ann_topk_lsh(df, q, planes.tolist(), k=k).collect()]
+            assert [g[0] for g in got] == [w[0] for w in want[:k]]
+            assert all(abs(g[1] - w[1]) < 1e-9 for g, w in zip(got, want))
+        # negative scores stay in: the rerank applies no threshold
+        assert len(got) == len(cand) and min(g[1] for g in got) < 0
+
+
+def test_search_knowledge_equals_chat_context_hits(spark):
+    """The two union-table searches share one scorer and one per-namespace
+    top-k: with equal k's they return the same (namespace, item_id, score)
+    set."""
+    def ns(id_col, prefix, n):
+        return embed_hash_stub(spark.createDataFrame(
+            [(f"{prefix}{i}", f"{prefix} text {i}") for i in range(n)],
+            f"{id_col} string, render_text string"))
+
+    nodes, edges, chunks = ns("entity_id", "e", 7), ns("edge_id", "r", 5), ns("chunk_id", "c", 6)
+    q = embed_hash_stub(
+        spark.createDataFrame([("e text 3",)], "render_text string")
+    ).select(F.col("embedding").alias("query_vec"))
+    for k, threshold in ((3, -1.0), (4, 0.0), (10, 0.2)):
+        sk = {(r.namespace, r.item_id, r.score)
+              for r in search_knowledge(nodes, edges, chunks, q, k=k, threshold=threshold).collect()}
+        hits = chat_context_hits(nodes, edges, chunks, q, k_entities=k, k_relations=k,
+                                 k_chunks=k, threshold=threshold)
+        assert sk == {(r.namespace, r.item_id, r.score) for r in hits.collect()}
+        assert sk
 
 
 def test_chat_context_assembly(spark):

@@ -9,7 +9,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from agraph_spark.pipeline import build_kg
-from agraph_spark.streaming.incremental import start_transcript_stream, streamed_triples
+from agraph_spark.streaming.incremental import start_transcript_merge_stream
 from agraph_spark.synth import transcripts_df
 
 
@@ -26,14 +26,14 @@ def test_stream_equals_batch(spark):
         out = os.path.join(d, "out")
         # two separate appends (files) -> multiple micro-batches
         tdf.where("conv_id < 'conv000008'").write.mode("append").parquet(inp)
-        q = start_transcript_stream(spark, inp, out)
+        q = start_transcript_merge_stream(spark, inp, out)
         q.awaitTermination(120)
 
         tdf.where("conv_id >= 'conv000008'").write.mode("append").parquet(inp)
-        q2 = start_transcript_stream(spark, inp, out)
+        q2 = start_transcript_merge_stream(spark, inp, out)
         q2.awaitTermination(120)
 
-        got = triple_set(streamed_triples(spark, out))
+        got = triple_set(spark.read.parquet(os.path.join(out, "triples_store")))
         assert got == want
 
 
@@ -105,8 +105,6 @@ def test_merge_stream_equals_batch_and_is_idempotent(spark):
     bucket-partitioned store equals the batch pipeline's triples WITHOUT
     read-time dedup, and re-sending a conversation's transcripts in a later
     micro-batch leaves the store unchanged (content-key idempotency)."""
-    from agraph_spark.streaming.incremental import start_transcript_merge_stream
-
     tdf = transcripts_df(spark, n_convs=12, seed=21).persist()
     want = triple_set(build_kg(tdf).triples)
 
