@@ -25,6 +25,9 @@ import xml.sax.saxutils as sx
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Rows per table that the display exporters collect to the driver
+EXPORT_ROWS = 100_000
+
 
 # ------------------------------------------------------------- graph store
 
@@ -133,10 +136,10 @@ def write_graph_json(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
 
 # ------------------------------------------------------- display exporters
 
-def export_graphml(nodes: DataFrame, edges: DataFrame, max_rows: int = 100_000) -> str:
+def export_graphml(nodes: DataFrame, edges: DataFrame) -> str:
     """S7: GraphML document (lightrag_builder.py:589-697 key layout d0..)."""
-    n = nodes.limit(max_rows).collect()
-    e = edges.limit(max_rows).collect()
+    n = nodes.limit(EXPORT_ROWS).collect()
+    e = edges.limit(EXPORT_ROWS).collect()
     parts = [
         '<?xml version="1.0" encoding="UTF-8"?>',
         '<graphml xmlns="http://graphml.graphdrawing.org/xmlns">',
@@ -219,30 +222,30 @@ def import_graphml(spark: SparkSession, xml_text: str) -> tuple[DataFrame, DataF
     return ndf, edf
 
 
-def export_cytoscape(nodes: DataFrame, edges: DataFrame, max_rows: int = 100_000) -> str:
+def export_cytoscape(nodes: DataFrame, edges: DataFrame) -> str:
     """S7: Cytoscape.js elements JSON (utils.py:79-114)."""
     elements = [
         {"data": {"id": r.entity_id, "label": r.name, "type": r.entity_type}}
-        for r in nodes.limit(max_rows).collect()
+        for r in nodes.limit(EXPORT_ROWS).collect()
     ] + [
         {"data": {"source": r.head_id, "target": r.tail_id, "label": r.pred}}
-        for r in edges.limit(max_rows).collect()
+        for r in edges.limit(EXPORT_ROWS).collect()
     ]
     return json.dumps({"elements": elements})
 
 
-def export_d3(nodes: DataFrame, edges: DataFrame, max_rows: int = 100_000) -> str:
+def export_d3(nodes: DataFrame, edges: DataFrame) -> str:
     """S7: D3 force-layout JSON (utils.py:117-147)."""
     return json.dumps(
         {
             "nodes": [
                 {"id": r.entity_id, "name": r.name, "group": r.entity_type}
-                for r in nodes.limit(max_rows).collect()
+                for r in nodes.limit(EXPORT_ROWS).collect()
             ],
             "links": [
                 {"source": r.head_id, "target": r.tail_id, "type": r.pred,
                  "value": r.confidence}
-                for r in edges.limit(max_rows).collect()
+                for r in edges.limit(EXPORT_ROWS).collect()
             ],
         }
     )

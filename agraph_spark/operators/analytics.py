@@ -249,6 +249,7 @@ def graph_metrics(
     'central_degree:<entity_id>', and is_connected is 0/1.
     """
     from .components import connected_components
+    from .integrity import enforce_referential_integrity
 
     def rows(df: DataFrame) -> DataFrame:
         return df.select(F.col("metric"), F.col("value").cast("double").alias("value"))
@@ -311,12 +312,9 @@ def graph_metrics(
                 F.col("d").cast("double").alias("value"))
     )
 
-    valid = (
-        edges.join(nodes.select(F.col("entity_id").alias("head_id")), "head_id", "left_semi")
-        .join(nodes.select(F.col("entity_id").alias("tail_id")), "tail_id", "left_semi")
-    )
     labels = connected_components(
-        valid, nodes=nodes, checkpoint_dir=checkpoint_dir)
+        enforce_referential_integrity(nodes, edges), nodes=nodes,
+        checkpoint_dir=checkpoint_dir)
     conn = (
         labels.groupBy("component").count()
         .agg(F.count("*").alias("nc"), F.max("count").cast("double").alias("largest"))

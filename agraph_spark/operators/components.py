@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 from ..session import local_df
 from . import adaptive
 
+# Loop bounds, read when each plan is built
+PATHS_PER_PIVOT = 100_000  # paths kept per pivot node before each extension
+CC_ROUNDS = 25  # label-propagation rounds of the distributed CC loop
+
 
 class loop_shuffle_partitions:
     """Scale spark.sql.shuffle.partitions to the LOOP's data size for the
@@ -69,7 +73,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     src: str = "head_id",
     dst: str = "tail_id",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Undirected connected components: (entity_id, component) where
@@ -120,7 +123,7 @@ def connected_components(
     sym = cut(raw.distinct(), eager=False)
     n_sym = sym.count()  # materializes the lazy cut; sizes the loop
     with loop_shuffle_partitions(edges.sparkSession, n_sym):
-        labels = _cc_loop(sym, node_ids(sym), cut, max_iter)
+        labels = _cc_loop(sym, node_ids(sym), cut)
     return labels
 
 
@@ -152,11 +155,11 @@ def driver_union_find(pairs) -> dict:
     return {x: find(x) for x in list(parent)}
 
 
-def _cc_loop(sym: DataFrame, ids: DataFrame, cut, max_iter: int) -> DataFrame:
+def _cc_loop(sym: DataFrame, ids: DataFrame, cut) -> DataFrame:
     labels = ids.select("entity_id", F.col("entity_id").alias("component"))
     labels = cut(labels)
 
-    for _ in range(max_iter):
+    for _ in range(CC_ROUNDS):
         # hash-min: each node adopts min(own label, neighbors' labels)
         nb_min = (
             sym.join(labels.withColumnRenamed("entity_id", "b"), "b")
@@ -302,31 +305,37 @@ def bfs_distances(
     return visited
 
 
+def _log_pivot_drops(op: str, n_drop: int) -> None:
+    import logging
+
+    logging.getLogger(__name__).warning(
+        "%s: dropping %d paths above cap %d per pivot "
+        "(paths through capped hubs may be missed)", op, n_drop, PATHS_PER_PIVOT,
+    )
+
+
 def _cap_frontier_pivot(
     frontier: DataFrame,
-    cap: int | None,
-    log_dropped: bool,
     pivot_col: str = "last",
     order_col: str = "nodes",
     op: str = "bounded_cycles",
-) -> tuple[DataFrame, int | None]:
+) -> tuple[DataFrame, int]:
     """Bound the paths-per-pivot fan-in before a frontier⋈edges extension.
 
     The extension joins frontier.<pivot_col> = edges.src, so a hub node
     with P incoming paths and out-degree D contributes P×D rows — the
     quadratic wedge blowup round 2's verdict flagged. Keeping at most
-    ``cap`` paths per pivot (deterministically: smallest ``order_col``
-    arrays first, so repeated runs and the SQL oracle agree whenever
-    nothing is dropped) bounds every extension to cap×D. Same window-count
-    pattern as dedup_docs._cap_buckets: one shuffle on the SAME key the
-    join uses, so the exchange is reused.
+    ``PATHS_PER_PIVOT`` paths per pivot (deterministically: smallest
+    ``order_col`` arrays first, so repeated runs and the SQL oracle agree
+    whenever nothing is dropped) bounds every extension to cap×D, and the
+    exact drop count is logged. Same window-count pattern as
+    dedup_docs._cap_buckets: one shuffle on the SAME key the join uses, so
+    the exchange is reused.
 
-    Returns ``(capped_frontier, n_live)`` — n_live is the frontier's row
-    count, free from the same aggregate, so iterative callers get their
-    emptiness break without a second job (None when cap is None and no
-    aggregate ran)."""
-    if cap is None:
-        return frontier, None
+    Returns ``(capped_frontier, n_live)`` — n_live is the capped
+    frontier's row count, free from the same aggregate, so iterative
+    callers get their emptiness break without a second job."""
+    cap = PATHS_PER_PIVOT
     # frontier is a lazily lineage-cut checkpoint; this partial-aggregated
     # count pass is the job that materializes it (one job per level). The
     # common (cold) case then skips the row_number window shuffle entirely,
@@ -349,13 +358,7 @@ def _cap_frontier_pivot(
     n_live = int(stats["total"]) if stats is not None and stats["total"] is not None else 0
     if stats is None or stats.mx is None or stats.mx <= cap:
         return frontier, n_live
-    if log_dropped:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "%s: dropping %d paths above cap %d per pivot "
-            "(paths through capped hubs may be missed)", op, stats.n_drop, cap
-        )
+    _log_pivot_drops(op, stats.n_drop)
     from pyspark.sql import Window
 
     w = Window.partitionBy(pivot_col).orderBy(order_col)
@@ -366,39 +369,28 @@ def _cap_frontier_pivot(
     ), n_live - int(stats.n_drop)
 
 
-def _cap_frontier_driver(
-    frontier: list, pivot_ix: int, order_ix: int, cap: int | None,
-    op: str, log_dropped: bool,
-) -> list:
-    """Driver-side twin of _cap_frontier_pivot: keep at most ``cap``
-    tuples per pivot value, smallest order key first, logging the exact
-    drop count with the same message. ONE implementation shared by every
-    driver mirror so cap semantics cannot diverge between them."""
-    if cap is None:
-        return frontier
+def _cap_frontier_driver(frontier: list, pivot_ix: int, order_ix: int, op: str) -> list:
+    """Driver-side twin of _cap_frontier_pivot: keep at most
+    ``PATHS_PER_PIVOT`` tuples per pivot value, smallest order key first,
+    logging the exact drop count with the same message. ONE implementation
+    shared by every driver mirror so cap semantics cannot diverge between
+    them."""
     by_pivot: dict = {}
     for t in frontier:
         by_pivot.setdefault(t[pivot_ix], []).append(t)
     out: list = []
     n_drop = 0
     for lst in by_pivot.values():
-        if len(lst) > cap:
-            n_drop += len(lst) - cap
-            lst = sorted(lst, key=lambda t: t[order_ix])[:cap]
+        if len(lst) > PATHS_PER_PIVOT:
+            n_drop += len(lst) - PATHS_PER_PIVOT
+            lst = sorted(lst, key=lambda t: t[order_ix])[:PATHS_PER_PIVOT]
         out.extend(lst)
-    if n_drop and log_dropped:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "%s: dropping %d paths above cap %d per pivot "
-            "(paths through capped hubs may be missed)", op, n_drop, cap,
-        )
+    if n_drop:
+        _log_pivot_drops(op, n_drop)
     return out
 
 
-def _driver_bounded_cycles(
-    pairs: list, max_len: int, cap: int | None, log_dropped: bool = True
-) -> list | None:
+def _driver_bounded_cycles(pairs: list, max_len: int) -> list | None:
     """Driver-side mirror of the bounded_cycles level loop over collected
     trimmed edges: same canonical-rotation filter, same per-pivot cap with
     the same (pivot='last', order='nodes') deterministic ordering, so the
@@ -419,8 +411,7 @@ def _driver_bounded_cycles(
                 out.add((s, length))
         if length == max_len:
             break
-        frontier = _cap_frontier_driver(
-            frontier, 1, 2, cap, "bounded_cycles", log_dropped)
+        frontier = _cap_frontier_driver(frontier, 1, 2, "bounded_cycles")
         nxt = []
         for s, last, nodes in frontier:
             for b in adj.get(last, ()):
@@ -435,8 +426,6 @@ def _driver_bounded_cycles(
 def bounded_cycles(
     edges: DataFrame,
     max_len: int = 5,
-    max_paths_per_pivot: int | None = 100_000,
-    log_dropped: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A11: directed simple cycles of length 2..max_len as
@@ -453,7 +442,7 @@ def bounded_cycles(
     - semantics-preserving trim: a node on a directed cycle must have BOTH
       in- and out-edges, so edges touching source-only/sink-only nodes are
       semi-joined away up front (most KG leaf entities vanish here);
-    - hot-pivot cap (``max_paths_per_pivot``): bounds the per-node path
+    - hot-pivot cap (``PATHS_PER_PIVOT``): bounds the per-node path
       fan-in before each extension join (see _cap_frontier_pivot). Capping
       drops cycles only through hubs hotter than the cap, and logs the
       exact drop count (one shallow aggregate over the cut frontier).
@@ -487,8 +476,7 @@ def bounded_cycles(
     # few-thousand-edge graph.
     got = adaptive.cutover(
         e, adaptive.GRAPH_ROWS,
-        lambda rows: _driver_bounded_cycles(
-            rows, max_len, max_paths_per_pivot, log_dropped),
+        lambda rows: _driver_bounded_cycles(rows, max_len),
         f"cycle_start {e.schema[0].dataType.simpleString()}, cycle_len int",
     )
     if got is not None:
@@ -515,7 +503,7 @@ def bounded_cycles(
         out = closed if out is None else out.unionByName(closed)
         if length == max_len:
             break
-        capped, _ = _cap_frontier_pivot(frontier, max_paths_per_pivot, log_dropped)
+        capped, _ = _cap_frontier_pivot(frontier)
         frontier = (
             capped.alias("p")
             .join(e.alias("x"), F.col("p.last") == F.col("x.a"))

@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 from ..caching import track
 from .textstats import fingerprint
 
+# Skew caps, read when each plan is built
+SHINGLE_DOCS = 200  # ngram_jaccard_pairs drops shingles in more docs than this
+BUCKET_DOCS = 5000  # LSH band buckets above this many docs are dropped
+
 
 def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Groups of byte-identical (whitespace-normalized) documents."""
@@ -76,12 +80,11 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_docs: int = 200,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold.
 
     Inverted-index join: pairs only share-a-shingle docs are compared.
-    ``max_shingle_docs`` drops shingles present in more than that many docs
+    ``SHINGLE_DOCS`` drops shingles present in more than that many docs
     (hot-key/skew guard; such shingles are boilerplate and only inflate the
     candidate pair space quadratically)."""
     # Round-6 note: this operator is intentionally UNCHANGED from round 5.
@@ -99,7 +102,7 @@ def ngram_jaccard_pairs(
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     hot = (
         sh.groupBy("shingle").agg(F.count("*").alias("df_cnt"))
-        .where(F.col("df_cnt") > max_shingle_docs)
+        .where(F.col("df_cnt") > SHINGLE_DOCS)
         .select("shingle")
     )
     filtered = sh.join(hot, "shingle", "left_anti")
@@ -167,31 +170,26 @@ def minhash_signatures(
     return sig.select("doc", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
-def _cap_buckets(
-    band_rows: DataFrame, keys: list[str], max_bucket_size: int | None, log_dropped: bool
-) -> DataFrame:
-    """Drop LSH buckets larger than ``max_bucket_size`` before the
+def _cap_buckets(band_rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Drop LSH buckets larger than ``BUCKET_DOCS`` before the
     within-bucket self-join. A boilerplate-heavy corpus (the normal case for
     web/training data) puts millions of near-identical docs in one band
     bucket; the self-join then explodes quadratically on a single shuffle
     key. Same skew guard as ngram_jaccard_pairs' hot-shingle cap. Dropped
     buckets mean dropped candidates only when a pair collides in NO other
-    band — the standard LSH recall/cost trade, made explicit and loggable."""
-    if max_bucket_size is None:
-        return band_rows
-    if log_dropped:
-        import logging
+    band — the standard LSH recall/cost trade, made explicit and logged."""
+    import logging
 
-        n_hot = (
-            band_rows.groupBy(*keys)
-            .agg(F.count("*").alias("bucket_size"))
-            .where(F.col("bucket_size") > max_bucket_size)
-            .count()
+    n_hot = (
+        band_rows.groupBy(*keys)
+        .agg(F.count("*").alias("bucket_size"))
+        .where(F.col("bucket_size") > BUCKET_DOCS)
+        .count()
+    )
+    if n_hot:
+        logging.getLogger(__name__).warning(
+            "LSH: dropping %d band buckets larger than %d docs", n_hot, BUCKET_DOCS
         )
-        if n_hot:
-            logging.getLogger(__name__).warning(
-                "LSH: dropping %d band buckets larger than %d docs", n_hot, max_bucket_size
-            )
     # window, not groupBy+anti-join: one shuffle on the SAME keys the
     # downstream self-join uses (exchange reuse), and no second subtree
     # racing to materialize the signature cache
@@ -200,7 +198,7 @@ def _cap_buckets(
     w = Window.partitionBy(*[F.col(k) for k in keys])
     return (
         band_rows.withColumn("_bucket_size", F.count("*").over(w))
-        .where(F.col("_bucket_size") <= max_bucket_size)
+        .where(F.col("_bucket_size") <= BUCKET_DOCS)
         .drop("_bucket_size")
     )
 
@@ -213,8 +211,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket_size: int | None = 5000,
-    log_dropped: bool = True,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates verified by estimated Jaccard.
@@ -223,7 +219,7 @@ def minhash_lsh_pairs(
     pairs come from within-bucket joins (shuffle keyed by (band, bucket
     hash) — bounded by bucket sizes, not corpus size). Estimated Jaccard =
     fraction of agreeing minhash components. Buckets above
-    ``max_bucket_size`` are dropped before the self-join (skew guard; see
+    ``BUCKET_DOCS`` are dropped before the self-join (skew guard; see
     _cap_buckets) — exact-duplicate floods should be removed first by the
     cheaper exact_dup_groups pass.
 
@@ -247,9 +243,7 @@ def minhash_lsh_pairs(
     # persist the capped band rows: the self-join below consumes them twice,
     # and uncached each side re-ran the explode + window-cap subtree (one
     # extra exchange + sort per side, plan-audited r6)
-    band_rows = track(
-        _cap_buckets(band_rows, ["band", "bucket"], max_bucket_size, log_dropped)
-    )
+    band_rows = track(_cap_buckets(band_rows, ["band", "bucket"]))
     # eager materialization (see ngram_jaccard_pairs): builds the signature
     # and capped-band caches ONCE before the self-join + verify branches
     # would race them; measured 5.7 -> 3.5 s cold at sf0.1
@@ -337,13 +331,11 @@ def simhash_near_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     band_bits: int = 16,
-    max_bucket_size: int | None = 5000,
-    log_dropped: bool = True,
     **kw,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, blocked on 16-bit bands
     (a pair within Hamming<=3 of 64 bits must agree on >=1 of 4 bands).
-    Band buckets above ``max_bucket_size`` are dropped before the self-join
+    Band buckets above ``BUCKET_DOCS`` are dropped before the self-join
     (skew guard, see _cap_buckets)."""
     sim = track(simhash64(df, **kw))
     bands = sim.select(
@@ -360,7 +352,7 @@ def simhash_near_pairs(
     )
     # persist the capped band rows (consumed by both self-join sides; see
     # minhash_lsh_pairs)
-    bands = track(_cap_buckets(bands, ["band", "key"], max_bucket_size, log_dropped))
+    bands = track(_cap_buckets(bands, ["band", "key"]))
     # eager materialization (see minhash_lsh_pairs)
     bands.count()
     a, b = bands.alias("a"), bands.alias("b")

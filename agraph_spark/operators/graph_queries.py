@@ -10,6 +10,10 @@ from pyspark.sql import functions as F
 from ..session import local_df
 from . import adaptive
 
+# chunk_similarity's skew cap, read when the plan is built: entities linked
+# to more chunks than this are dropped from candidate generation
+ENTITY_CHUNKS = 10_000
+
 
 # ------------------------------------------------------------- F1-F3 query
 
@@ -115,13 +119,19 @@ def merge_graphs(
 ) -> tuple[DataFrame, DataFrame]:
     """D10 (mixins.py:42-96): concat N graphs, align entities by normalized
     name, repoint edge FKs to the surviving id, drop edges whose endpoints
-    vanished."""
+    vanished. Edges that collapse onto one (head_id, tail_id, pred) keep
+    the row of the earliest graph in ``edges_list``, ties on the smaller
+    edge_id — first-seen wins, whatever the partitioning."""
     from functools import reduce
 
     from .integrity import enforce_referential_integrity
+    from .linking import merge_nodes, repoint_edges
 
     nodes = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), nodes_list)
-    edges = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), edges_list)
+    edges = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [e.withColumn("_graph", F.lit(i)) for i, e in enumerate(edges_list)],
+    )
     # survivor per name_norm = min entity_id (deterministic)
     survivor = nodes.groupBy("name_norm").agg(F.min("entity_id").alias("canonical_id"))
     mapping = (
@@ -129,36 +139,29 @@ def merge_graphs(
         .where(F.col("entity_id") != F.col("canonical_id"))
         .select("entity_id", "canonical_id")
     )
-    from .linking import merge_nodes, repoint_edges
-
     merged_nodes = merge_nodes(nodes, mapping)
-    merged_edges = repoint_edges(edges, mapping).dropDuplicates(
-        ["head_id", "tail_id", "pred"]
+    cols = [c for c in edges.columns if c != "_graph"]
+    merged_edges = (
+        repoint_edges(edges, mapping)
+        .groupBy("head_id", "tail_id", "pred")
+        .agg(F.min_by(F.struct(*cols), F.struct("_graph", "edge_id")).alias("keep"))
+        .select(*[F.col(f"keep.{c}").alias(c) for c in cols])
     )
     return merged_nodes, enforce_referential_integrity(merged_nodes, merged_edges)
 
 
 # -------------------------------------------------------------- A10 paths
 
-def _driver_all_paths(
-    pairs: list,
-    start_id,
-    targets: set,
-    max_depth: int,
-    cap: int | None,
-    stop_at_first_hit: bool,
-    multi: bool,
-    log_dropped: bool = True,
-    op: str = "all_paths",
-) -> list | None:
-    """Driver-side mirror of the all_paths / all_paths_multi level loop
-    over the collected raw (src, dst) pairs, deduplicated here as the loop
-    deduplicates its adjacency: identical cap-then-extend order, identical
-    per-pivot (node, path-order) capping, identical early-exit and
-    stop-at-target semantics, so both execution paths emit the same rows —
-    (path, depth), or (target, path, depth) when ``multi``. Returns None
-    when a dense graph blows ``adaptive.FRONTIER_ROWS`` — the caller falls
-    back to the distributed loop."""
+def _driver_all_paths(pairs: list, start_id, targets: set, max_depth: int,
+                      stop_at_first_hit: bool, multi: bool, op: str) -> list | None:
+    """Driver-side mirror of ``_walk_paths`` over the collected raw
+    (src, dst) pairs, deduplicated here as the loop deduplicates its
+    adjacency: identical cap-then-extend order, identical per-pivot
+    (node, path-order) capping, identical early-exit and stop-at-target
+    semantics, so both execution paths emit the same rows — (path, depth),
+    or (target, path, depth) when ``multi``. Returns None when a dense
+    graph blows ``adaptive.FRONTIER_ROWS`` — the caller falls back to the
+    distributed loop."""
     from .components import _cap_frontier_driver
 
     adj: dict = {}
@@ -170,11 +173,11 @@ def _driver_all_paths(
         if a is None or b is None:
             continue
         adj.setdefault(a, []).append(b)
-    targets = {t for t in targets if t is not None}  # left_semi never matches null
+    targets = {t for t in targets if t is not None}  # a null key never joins
     frontier = [(start_id, (start_id,))]
     found: list = []
     for _ in range(max_depth):
-        frontier = _cap_frontier_driver(frontier, 0, 1, cap, op, log_dropped)
+        frontier = _cap_frontier_driver(frontier, 0, 1, op)
         if not frontier:
             break
         stepped = []
@@ -197,83 +200,94 @@ def _driver_all_paths(
     return [(list(path), len(path) - 1) for _, path in found]
 
 
+def _walk_paths(raw: DataFrame, start_id, tgt: DataFrame, id_t: str, max_depth: int,
+                checkpoint_dir: str | None, multi: bool, stop_at_first_hit: bool,
+                op: str) -> DataFrame:
+    """Distributed level loop of all_paths and all_paths_multi over raw
+    (src, dst) pairs. Hits come from a left join against ``tgt``, a
+    distinct one-column (node) frame. With ``multi`` paths keep expanding
+    THROUGH targets and rows are (target, path, depth); without it a path
+    ends at its target and rows are (path, depth). The per-pivot cap's one
+    shallow aggregate materializes the lazily cut frontier and gives the
+    emptiness break: ONE job per level."""
+    from .components import _cap_frontier_pivot, lineage_cutter
+
+    adj = raw.distinct()
+    flag = tgt.withColumn("_hit", F.lit(True))
+    cut = lineage_cutter(raw, checkpoint_dir)
+    spark = raw.sparkSession
+    frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
+    schema = f"path array<{id_t}>, depth int"
+    out = ["path", (F.size("path") - 1).alias("depth")]
+    if multi:
+        schema, out = f"target {id_t}, {schema}", [F.col("node").alias("target"), *out]
+    found = None
+    for _ in range(max_depth):
+        capped, n_live = _cap_frontier_pivot(
+            frontier, pivot_col="node", order_col="path", op=op)
+        if n_live == 0:
+            break
+        stepped = (
+            capped.join(adj, capped["node"] == adj["src"])
+            .where(~F.array_contains("path", F.col("dst")))
+            .select(F.col("dst").alias("node"), F.concat("path", F.array("dst")).alias("path"))
+            .join(flag, "node", "left")
+        )
+        stepped = cut(stepped, eager=False)
+        hits = stepped.where(F.col("_hit").isNotNull()).select(*out)
+        found = hits if found is None else found.unionByName(hits)
+        if multi:
+            frontier = stepped
+            continue
+        if stop_at_first_hit:
+            # One shallow aggregate materializes the cut frontier and
+            # answers both "did we hit?" and "is anything still live?".
+            st = stepped.agg(
+                F.count("_hit").alias("nh"), F.count(F.lit(1)).alias("nt")).first()
+            if st["nh"] > 0 or st["nt"] == st["nh"]:
+                return found
+        frontier = stepped.where(F.col("_hit").isNull())
+    return local_df(spark, [], schema) if found is None else found
+
+
 def all_paths(
     edges: DataFrame,
     start_id: str,
     end_id: str,
     max_depth: int = 3,
     *,
-    max_paths_per_pivot: int | None = 100_000,
-    log_dropped: bool = True,
     checkpoint_dir: str | None = None,
     stop_at_first_hit: bool = False,
 ) -> DataFrame:
     """A10 (graph_path_finder.py:105-155): every simple directed path
     start->end up to max_depth, as (path array, depth). Bounded self-join
-    expansion with an array-membership cycle guard.
+    expansion with an array-membership cycle guard (``_walk_paths``).
 
     Scale guards (VERDICT r3 #2, same shape as bounded_cycles): per-level
-    frontiers are lineage-cut (lazy localCheckpoint), and the extension
-    pivot is capped at ``max_paths_per_pivot`` paths per node — a hub
-    within max_depth hops of the start otherwise contributes P×D rows per
-    level. The cap's one shallow aggregate both materializes the cut
-    frontier and yields the emptiness break: ONE job per level. Within
-    the ``adaptive.cutover`` budget the level loop runs on the driver
-    instead (``_driver_all_paths``).
+    frontiers are lineage-cut, and the extension pivot is capped at
+    ``components.PATHS_PER_PIVOT`` paths per node — a hub within max_depth
+    hops of the start otherwise contributes P×D rows per level. Within the
+    ``adaptive.cutover`` budget the level loop runs on the driver instead
+    (``_driver_all_paths``), with no target frame built.
 
     ``stop_at_first_hit``: return after the first depth where ``end_id``
     is reached (the reference BFS stops there — utils.py:150-193); the
     result then holds only minimal-depth paths. Costs one extra shallow
     aggregate per level (over the already-materialized checkpoint) and
     saves every level past the hit — shortest_path uses this."""
-    from .components import _cap_frontier_pivot, lineage_cutter
-
     raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
     id_t = edges.schema["head_id"].dataType.simpleString()
     got = adaptive.cutover(
         raw, adaptive.GRAPH_ROWS,
         lambda rows: _driver_all_paths(
-            rows, start_id, {end_id}, max_depth, max_paths_per_pivot,
-            stop_at_first_hit, False, log_dropped, "all_paths"),
+            rows, start_id, {end_id}, max_depth, stop_at_first_hit, False, "all_paths"),
         f"path array<{id_t}>, depth int",
     )
     if got is not None:
         return got
-    adj = raw.distinct()
-    cut = lineage_cutter(edges, checkpoint_dir)
-    spark = edges.sparkSession
-    frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
-    found = None
-    for _ in range(max_depth):
-        capped, n_live = _cap_frontier_pivot(
-            frontier, max_paths_per_pivot, log_dropped,
-            pivot_col="node", order_col="path", op="all_paths",
-        )
-        if n_live == 0 or (n_live is None and frontier.limit(1).count() == 0):
-            break
-        stepped = (
-            capped.join(adj, capped["node"] == adj["src"])
-            .where(~F.array_contains("path", F.col("dst")))
-            .select(F.col("dst").alias("node"), F.concat("path", F.array("dst")).alias("path"))
-        )
-        stepped = cut(stepped, eager=False)
-        hits = stepped.where(F.col("node") == end_id).select(
-            "path", (F.size("path") - 1).alias("depth")
-        )
-        found = hits if found is None else found.unionByName(hits)
-        if stop_at_first_hit:
-            # One shallow aggregate materializes the cut frontier and
-            # answers both "did we hit?" and "is anything still live?".
-            st = stepped.agg(
-                F.sum(F.when(F.col("node") == end_id, 1).otherwise(0)).alias("nh"),
-                F.count(F.lit(1)).alias("nt"),
-            ).first()
-            if st is None or (st["nh"] or 0) > 0 or st["nt"] == (st["nh"] or 0):
-                return found
-        frontier = stepped.where(F.col("node") != end_id)
-    if found is None:
-        return local_df(spark, [], f"path array<{id_t}>, depth int")
-    return found
+    tgt = local_df(edges.sparkSession, [(end_id,)], f"node {id_t}")
+    return _walk_paths(raw, start_id, tgt, id_t, max_depth, checkpoint_dir,
+                       False, stop_at_first_hit, "all_paths")
 
 
 def all_paths_multi(
@@ -282,60 +296,28 @@ def all_paths_multi(
     targets: DataFrame,
     max_depth: int = 3,
     *,
-    max_paths_per_pivot: int | None = 100_000,
-    log_dropped: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A10 set-target variant: every simple path start -> ANY node of
     ``targets`` (a one-column DataFrame of ids) up to max_depth, as
-    (target, path, depth). Hits come from a semi-join per frontier level
-    rather than a scalar-collected id, proving the operator over a target
-    SET; paths keep expanding THROUGH target nodes, so the output equals
-    the union of per-target all_paths runs. Same hot-pivot cap + lazy
-    lineage-cut one-job-per-level shape and driver cutover as all_paths;
-    the target set must fit the budget too (caller-supplied frame)."""
-    from .components import _cap_frontier_pivot, lineage_cutter
-
+    (target, path, depth). Paths keep expanding THROUGH target nodes, so
+    the output equals the union of per-target all_paths runs. Same level
+    loop (``_walk_paths``) and driver cutover as all_paths; the target
+    set must fit the budget too."""
     raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
     tgt = targets.select(F.col(targets.columns[0]).alias("node"))
     id_t = edges.schema["head_id"].dataType.simpleString()
-    schema = f"target {id_t}, path array<{id_t}>, depth int"
     got = adaptive.cutover(
         (raw, tgt), adaptive.GRAPH_ROWS,
         lambda rows, t_rows: _driver_all_paths(
-            rows, start_id, {r.node for r in t_rows}, max_depth,
-            max_paths_per_pivot, False, True, log_dropped, "all_paths_multi"),
-        schema,
+            rows, start_id, {r.node for r in t_rows}, max_depth, False, True,
+            "all_paths_multi"),
+        f"target {id_t}, path array<{id_t}>, depth int",
     )
     if got is not None:
         return got
-    adj = raw.distinct()
-    tgt = tgt.distinct()
-    cut = lineage_cutter(edges, checkpoint_dir)
-    spark = edges.sparkSession
-    frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
-    found = None
-    for _ in range(max_depth):
-        capped, n_live = _cap_frontier_pivot(
-            frontier, max_paths_per_pivot, log_dropped,
-            pivot_col="node", order_col="path", op="all_paths_multi",
-        )
-        if n_live == 0 or (n_live is None and frontier.limit(1).count() == 0):
-            break
-        stepped = (
-            capped.join(adj, capped["node"] == adj["src"])
-            .where(~F.array_contains("path", F.col("dst")))
-            .select(F.col("dst").alias("node"), F.concat("path", F.array("dst")).alias("path"))
-        )
-        stepped = cut(stepped, eager=False)
-        hits = stepped.join(tgt, "node", "left_semi").select(
-            F.col("node").alias("target"), "path", (F.size("path") - 1).alias("depth")
-        )
-        found = hits if found is None else found.unionByName(hits)
-        frontier = stepped
-    if found is None:
-        return local_df(spark, [], schema)
-    return found
+    return _walk_paths(raw, start_id, tgt.distinct(), id_t, max_depth, checkpoint_dir,
+                       True, False, "all_paths_multi")
 
 
 def paths_with_relation_type(
@@ -351,8 +333,8 @@ def paths_with_relation_type(
     Compositional: the pred filter lands BEFORE the walk, so Catalyst
     pushes it into the edge scan — with edges partitioned or bucketed by
     pred at scale this is partition pruning, and every per-level frontier
-    join touches only the typed adjacency. Same caps/lineage-cut/early-
-    exit knobs as all_paths."""
+    join touches only the typed adjacency. Same cap, lineage cut and
+    early exit as all_paths."""
     return all_paths(
         edges.where(F.col("pred") == pred), start_id, end_id, max_depth, **kwargs
     )
@@ -360,16 +342,14 @@ def paths_with_relation_type(
 
 # -------------------------------------------------- A13/A14/G8 reports etc
 
-def chunk_similarity(
-    chunks_links: DataFrame, max_entity_chunks: int | None = 10_000
-) -> DataFrame:
+def chunk_similarity(chunks_links: DataFrame) -> DataFrame:
     """A14 (text.py:277-297): 0.6*entity-Jaccard + 0.4*relation-Jaccard of
     linked-id sets per chunk pair, for pairs sharing >= 1 entity.
 
     Plan: inverted-index equi-join, never all-pairs — explode entity_ids,
     self-join on entity_id (pairs only materialize for chunks that actually
     share an entity), then fetch both link arrays to compute the Jaccards.
-    Same shape as dedup_docs.ngram_jaccard_pairs; ``max_entity_chunks``
+    Same shape as dedup_docs.ngram_jaccard_pairs; ``ENTITY_CHUNKS``
     mirrors its hot-shingle cap (an entity linked to more chunks than the
     cap is boilerplate — it would produce a quadratic pair explosion on one
     key while contributing ~0 to any Jaccard)."""
@@ -379,14 +359,13 @@ def chunk_similarity(
         F.array_distinct("relation_ids").alias("relation_ids"),
     )
     inv = links.select("chunk_id", F.explode("entity_ids").alias("entity_id"))
-    if max_entity_chunks is not None:
-        hot = (
-            inv.groupBy("entity_id")
-            .agg(F.count("*").alias("n_chunks"))
-            .where(F.col("n_chunks") > max_entity_chunks)
-            .select("entity_id")
-        )
-        inv = inv.join(hot, "entity_id", "left_anti")
+    hot = (
+        inv.groupBy("entity_id")
+        .agg(F.count("*").alias("n_chunks"))
+        .where(F.col("n_chunks") > ENTITY_CHUNKS)
+        .select("entity_id")
+    )
+    inv = inv.join(hot, "entity_id", "left_anti")
     a, b = inv.alias("a"), inv.alias("b")
     cand = (
         a.join(b, "entity_id")

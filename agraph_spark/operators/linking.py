@@ -34,6 +34,11 @@ from .components import connected_components, driver_union_find
 
 NameSimilarity = tuple[float, str]
 
+# The linkable universe, read when the plan is built: names longer than
+# NAME_CHARS characters or NAME_WORDS words are never merge candidates
+NAME_CHARS = 32
+NAME_WORDS = 4
+
 
 def alias_link(nodes: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """(entity name_norm -> canonical_name) pairs via the broadcast alias
@@ -57,8 +62,6 @@ def lsh_candidate_pairs(
     max_jaccard_distance: float = 0.6,
     ngram: int = 3,
     vocab_features: int = 1 << 18,
-    max_name_len: int = 32,
-    max_name_words: int = 4,
     log_excluded: bool = False,
 ) -> DataFrame:
     """D3 blocking via MinHash-LSH over name character 3-gram sets,
@@ -71,7 +74,7 @@ def lsh_candidate_pairs(
     AQE skew-join splitting is on in the session defaults.
 
     The linkable universe is bounded to plausible entity surface forms
-    (<= max_name_len chars, <= max_name_words words): extraction debris
+    (<= NAME_CHARS chars, <= NAME_WORDS words): extraction debris
     (whole captured clauses) shares sentence structure, floods LSH buckets
     quadratically, and is never a meaningful merge target. Measured: an
     unbounded self-join over a 150k-conversation node set ran minutes-to-
@@ -102,8 +105,8 @@ def lsh_candidate_pairs(
 
     from ..caching import track
 
-    linkable = (F.length("name_norm") <= max_name_len) & (
-        F.size(F.split(F.col("name_norm"), r"\s+")) <= max_name_words
+    linkable = (F.length("name_norm") <= NAME_CHARS) & (
+        F.size(F.split(F.col("name_norm"), r"\s+")) <= NAME_WORDS
     )
     if log_excluded:
         import logging
@@ -114,7 +117,7 @@ def lsh_candidate_pairs(
                 "entity linking: %d entities excluded from the linkable universe "
                 "(name_norm > %d chars or > %d words); they keep their identity "
                 "and are never merge candidates",
-                n_excluded, max_name_len, max_name_words,
+                n_excluded, NAME_CHARS, NAME_WORDS,
             )
     prepared = nodes.where(linkable).select(
         "entity_id", "name_norm", "entity_type",
@@ -382,8 +385,6 @@ def link_entities(
     lsh_tables: int = 4,
     name_sim_threshold: float = 0.7,
     model: Callable[[pd.DataFrame], pd.Series] = stub_verify_model,
-    max_name_len: int = 32,
-    max_name_words: int = 4,
     log_excluded: bool = False,
 ) -> DataFrame:
     """Full D3->D4->D5 chain: returns the (entity_id, canonical_id) mapping.
@@ -391,14 +392,12 @@ def link_entities(
     Alias-dictionary hits are injected as extra confirmed pairs: every
     entity pair sharing a canonical alias target is a duplicate pair.
 
-    ``max_name_len`` / ``max_name_words`` bound the linkable universe (the
+    ``NAME_CHARS`` / ``NAME_WORDS`` bound the linkable universe (the
     LSH skew guard — extraction debris floods buckets quadratically);
     entities beyond the bound are never merged and, with ``log_excluded``,
     their count is logged so the recall trade is visible."""
     pairs = score_candidates(
         lsh_candidate_pairs(nodes, num_hash_tables=lsh_tables,
-                            max_name_len=max_name_len,
-                            max_name_words=max_name_words,
                             log_excluded=log_excluded),
         name_sim_threshold)
     verified = verify_pairs_batched(pairs, model).where(F.col("is_duplicate"))

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -74,3 +75,31 @@ def test_forced_driver_equals_forced_distributed(spark, forced_path, graph):
         with forced_path("distributed"):
             dist = _result(op())
         assert drv == dist, (name, graph)
+
+
+CAPPED = ("bounded_cycles", "all_paths", "all_paths_multi")
+# two paths into e and into d, so a one-path cap drops paths in all three
+DIAMOND = ("string", [("a", "b"), ("a", "c"), ("b", "e"), ("c", "e"), ("b", "d"),
+                      ("c", "d"), ("e", "d"), ("d", "a")], [("acme", "org")] * 5)
+
+
+@settings(max_examples=3, deadline=None, derandomize=True)
+@given(graphs())
+@example(DIAMOND)
+def test_forced_paths_equal_with_cap_engaged(spark, forced_path, graph):
+    """With one path kept per pivot the cycle and path caps drop rows on
+    any graph with two paths into one node; the driver mirrors must still
+    keep exactly the rows their loops keep."""
+    ops = _operators(spark, *graph)
+    dropped = set()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(C, "PATHS_PER_PIVOT", 1)
+        mp.setattr(C, "_log_pivot_drops", lambda op, n_drop: dropped.add(op))
+        for name in CAPPED:
+            with forced_path("driver"):
+                drv = _result(ops[name]())
+            with forced_path("distributed"):
+                dist = _result(ops[name]())
+            assert drv == dist, (name, graph)
+    if graph == DIAMOND:
+        assert dropped == set(CAPPED)

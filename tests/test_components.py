@@ -236,12 +236,13 @@ def test_bounded_cycles_matches_bruteforce(spark, forced_path):
     assert forced == want
 
 
-def test_bounded_cycles_hub_cap(spark, forced_path, caplog):
+def test_bounded_cycles_hub_cap(spark, forced_path, caplog, monkeypatch):
     """A hot pivot (hub with many in-paths x many out-edges) is capped:
     paths through it are bounded, the drop is logged, and cycles NOT
     through the hub are unaffected."""
     import logging
 
+    from agraph_spark.operators import components
     from agraph_spark.operators.components import bounded_cycles
 
     edges = (
@@ -253,21 +254,21 @@ def test_bounded_cycles_hub_cap(spark, forced_path, caplog):
     edf = spark.createDataFrame(edges, "head_id string, tail_id string")
     want = py_cycles(edges, 5)
     # uncapped (cap high enough): exact
-    got = {(r.cycle_start, r.cycle_len)
-           for r in bounded_cycles(edf, max_paths_per_pivot=100_000).collect()}
+    got = {(r.cycle_start, r.cycle_len) for r in bounded_cycles(edf).collect()}
     assert got == want
     # tight cap: subset of truth, planted hub-free cycle survives, drop logged
+    monkeypatch.setattr(components, "PATHS_PER_PIVOT", 5)
     with caplog.at_level(logging.WARNING,
                          logger="agraph_spark.operators.components"):
         capped = {(r.cycle_start, r.cycle_len)
-                  for r in bounded_cycles(edf, max_paths_per_pivot=5).collect()}
+                  for r in bounded_cycles(edf).collect()}
     assert capped <= want
     assert ("a1", 3) in capped
     assert any("dropping" in r.message for r in caplog.records)
     # capping must be deterministic AND identical on both execution paths
     with forced_path("distributed"):
         forced_capped = {(r.cycle_start, r.cycle_len) for r in
-                         bounded_cycles(edf, max_paths_per_pivot=5).collect()}
+                         bounded_cycles(edf).collect()}
     assert forced_capped == capped
 
 

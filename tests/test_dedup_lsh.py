@@ -95,7 +95,7 @@ def test_simhash_planted_recall(spark):
     (DD.minhash_lsh_pairs, {"threshold": 0.3}),
     (DD.simhash_near_pairs, {"max_hamming": 3}),
 ])
-def test_lsh_bucket_cap_drops_flood(spark, fn, kw):
+def test_lsh_bucket_cap_drops_flood(spark, monkeypatch, fn, kw):
     """100 identical docs flood every band bucket; with a cap below 100 the
     flood contributes no candidate pairs, while an uncrowded planted pair
     elsewhere is still found."""
@@ -108,9 +108,11 @@ def test_lsh_bucket_cap_drops_flood(spark, fn, kw):
     docs = [(i, flood_text) for i in range(100)]
     docs += [(500, uniq), (501, uniq)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    capped = {(r.doc_a, r.doc_b) for r in fn(df, max_bucket_size=50, **kw).collect()}
+    monkeypatch.setattr(DD, "BUCKET_DOCS", 50)
+    capped = {(r.doc_a, r.doc_b) for r in fn(df, **kw).collect()}
     assert capped == {(500, 501)}
-    uncapped = {(r.doc_a, r.doc_b) for r in fn(df, max_bucket_size=None, **kw).collect()}
+    monkeypatch.setattr(DD, "BUCKET_DOCS", 10**9)
+    uncapped = {(r.doc_a, r.doc_b) for r in fn(df, **kw).collect()}
     assert len(uncapped) == 100 * 99 // 2 + 1
 
 

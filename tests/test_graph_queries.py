@@ -6,6 +6,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from agraph_spark.operators import components as C
+from agraph_spark.operators import graph_queries as GQ
 from agraph_spark.operators.graph_queries import (
     all_paths,
     chunk_similarity,
@@ -73,6 +75,29 @@ def test_merge_graphs_repoints_and_drops_dangling(spark):
     assert (rows[0].head_id, rows[0].tail_id) == ("a1", "b2")  # repointed to survivor a1
 
 
+def test_merge_graphs_edge_dedup_is_partition_invariant(spark):
+    """Edges that collapse onto one (head_id, tail_id, pred) keep the row
+    of the earliest graph, ties on the smaller edge_id, however the inputs
+    are partitioned (an arbitrary-row dropDuplicates kept a mix)."""
+    names = [f"n{i:02d}" for i in range(40)]
+    n1 = _nodes(spark, [(f"a{i:02d}", n, n, "concept", 0.5, [], 1) for i, n in enumerate(names)])
+    n2 = _nodes(spark, [(f"b{i:02d}", n, n, "concept", 0.5, [], 1) for i, n in enumerate(names)])
+    schema = "edge_id string, head_id string, tail_id string, pred string, confidence double"
+    # graph 1's edge ids sort after graph 2's, so graph order must decide;
+    # its extra z00 twin "zz00" must lose the tie on edge_id
+    e1 = spark.createDataFrame(
+        [(f"z{i:02d}", f"a{i:02d}", f"a{i + 1:02d}", "related_to", 0.1) for i in range(39)]
+        + [("zz00", "a00", "a01", "related_to", 0.3)], schema)
+    e2 = spark.createDataFrame(
+        [(f"y{i:02d}", f"b{i:02d}", f"b{i + 1:02d}", "related_to", 0.9) for i in range(39)],
+        schema)
+    want = {(f"z{i:02d}", f"a{i:02d}", f"a{i + 1:02d}", 0.1) for i in range(39)}
+    for n_parts in (1, 2, 3, 5, 8, 13):
+        _, edges = merge_graphs([n1, n2], [e1.repartition(n_parts), e2.repartition(n_parts)])
+        got = {(r.edge_id, r.head_id, r.tail_id, r.confidence) for r in edges.collect()}
+        assert got == want, n_parts
+
+
 def test_all_paths_bounded(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "a")],
@@ -81,7 +106,7 @@ def test_all_paths_bounded(spark):
     assert paths == {("a", "c"), ("a", "b", "c")}
 
 
-def test_all_paths_hub_skew_completes_bounded(spark, forced_path):
+def test_all_paths_hub_skew_completes_bounded(spark, forced_path, monkeypatch):
     """VERDICT r3 #2: a hub with 10k in/out edges one hop from the start
     must not explode the frontier — the per-pivot cap bounds each
     extension to cap×D, so the run completes (and still finds the paths
@@ -91,9 +116,8 @@ def test_all_paths_hub_skew_completes_bounded(spark, forced_path):
     edges = spark.createDataFrame(
         hub_in + hub_out, "head_id string, tail_id string"
     )
-    got = {tuple(r.path) for r in
-           all_paths(edges, "a", "z", max_depth=3,
-                     max_paths_per_pivot=50, log_dropped=False).collect()}
+    monkeypatch.setattr(C, "PATHS_PER_PIVOT", 50)
+    got = {tuple(r.path) for r in all_paths(edges, "a", "z", max_depth=3).collect()}
     assert got == {("a", "hub", "z")}
 
     # capping drops paths only ABOVE the cap: with 3 distinct start->hub
@@ -102,16 +126,13 @@ def test_all_paths_hub_skew_completes_bounded(spark, forced_path):
         [("a", "m1"), ("a", "m2"), ("a", "m3"),
          ("m1", "hub"), ("m2", "hub"), ("m3", "hub"), ("hub", "z")],
         "head_id string, tail_id string")
-    got = {tuple(r.path) for r in
-           all_paths(tri, "a", "z", max_depth=3,
-                     max_paths_per_pivot=2, log_dropped=False).collect()}
+    monkeypatch.setattr(C, "PATHS_PER_PIVOT", 2)
+    got = {tuple(r.path) for r in all_paths(tri, "a", "z", max_depth=3).collect()}
     assert len(got) == 2 and all(p[0] == "a" and p[-1] == "z" for p in got)
     # the adaptive driver path and the forced distributed loop must emit
     # identical rows, INCLUDING which 2 paths survive the cap
     with forced_path("distributed"):
-        forced = {tuple(r.path) for r in
-                  all_paths(tri, "a", "z", max_depth=3, max_paths_per_pivot=2,
-                            log_dropped=False).collect()}
+        forced = {tuple(r.path) for r in all_paths(tri, "a", "z", max_depth=3).collect()}
     assert forced == got
 
 
@@ -212,16 +233,18 @@ def test_chunk_similarity_plan_is_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_chunk_similarity_hot_entity_cap(spark):
+def test_chunk_similarity_hot_entity_cap(spark, monkeypatch):
     """An entity linked to more chunks than the cap is dropped from
     candidate generation (skew guard); rare-entity pairs survive."""
     rows = [(f"h{i:03d}", ["boiler", f"rare{i % 2}"], []) for i in range(20)]
     links = spark.createDataFrame(
         rows, "chunk_id string, entity_ids array<string>, relation_ids array<string>")
-    capped = chunk_similarity(links, max_entity_chunks=10).collect()
+    monkeypatch.setattr(GQ, "ENTITY_CHUNKS", 10)
+    capped = chunk_similarity(links).collect()
     # 'boiler' (20 chunks > cap) is dropped; rare0/rare1 (10 chunks each) survive -> C(10,2)*2 pairs
     assert len(capped) == 2 * 45
-    uncapped = chunk_similarity(links, max_entity_chunks=None).collect()
+    monkeypatch.setattr(GQ, "ENTITY_CHUNKS", 10**9)
+    uncapped = chunk_similarity(links).collect()
     assert len(uncapped) == 190  # C(20,2): every pair shares 'boiler'
 
 

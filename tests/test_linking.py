@@ -130,12 +130,13 @@ def test_canonical_mapping_small_path_equals_distributed(spark, forced_path):
     assert empty.count() == 0 and empty.columns == ["entity_id", "canonical_id"]
 
 
-def test_linkable_universe_bound_is_visible(spark, caplog):
-    """Entities with names beyond max_name_len/max_name_words are
+def test_linkable_universe_bound_is_visible(spark, caplog, monkeypatch):
+    """Entities with names beyond NAME_CHARS/NAME_WORDS are
     INTENTIONALLY never merge candidates (LSH bucket-flood guard); the
-    exclusion is parameterized and logged, not silent."""
+    exclusion is a named bound and logged, not silent."""
     import logging
 
+    from agraph_spark.operators import linking
     from agraph_spark.operators.linking import link_entities
 
     long_name = "the quick brown fox jumps over the lazy dog entirely"
@@ -152,7 +153,9 @@ def test_linkable_universe_bound_is_visible(spark, caplog):
     assert got == {("e2", "e1")}
     assert any("excluded from the linkable universe" in r.message for r in caplog.records)
     # widening the bound brings them back into scope
-    wide = link_entities(nodes, max_name_len=64, max_name_words=12)
+    monkeypatch.setattr(linking, "NAME_CHARS", 64)
+    monkeypatch.setattr(linking, "NAME_WORDS", 12)
+    wide = link_entities(nodes)
     got_wide = {(r.entity_id, r.canonical_id) for r in wide.collect()}
     assert ("e4", "e3") in got_wide
 
