@@ -162,7 +162,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank (unnormalized variant: seed 1.0,
     r' = (1-d) + d * sum_in(r/outdeg); parallel edges each carry mass),
@@ -170,8 +169,8 @@ def pagerank(
 
     Beyond the reference's degree-based importance (A7) — the standard
     importance upgrade for a KG at scale. Same loop machinery as connected
-    components: cached adjacency, loop-sized shuffle partitions, per-round
-    lineage cuts (reliable with checkpoint_dir). Graphs within
+    components: a lineage-cut adjacency and a lineage cut per round
+    (``components.lineage_cut``). Graphs within
     ``adaptive.PAGERANK_ROWS`` adjacency rows take the driver mirror
     (``_driver_pagerank_fixed``); the distributed loop runs above the
     budget.
@@ -183,14 +182,13 @@ def pagerank(
     round-flaked at 1e-9 under partition nondeterminism. Overflow bound: a
     node's recv is < max_in_degree * 1e9, so BIGINT is safe up to ~9e9
     in-edges per node — beyond any real graph's hottest node."""
-    from .components import lineage_cutter, loop_shuffle_partitions
+    from .components import lineage_cut
 
-    cut = lineage_cutter(edges, checkpoint_dir)
     deg = edges.groupBy("head_id").agg(F.count("*").alias("outd"))
     # lineage-cut, not persisted: joined against every iteration; an
     # RDD-leaf adjacency keeps each round's analyzed plan shallow
     # (measured on CC/cycles — PLANS.md round 3)
-    adj = cut(edges.select("head_id", "tail_id").join(deg, "head_id"), eager=False)
+    adj = lineage_cut(edges.select("head_id", "tail_id").join(deg, "head_id"), eager=False)
     d_num = int(round(damping * 100))
     seed_v, base_v = 1_000_000_000, (100 - d_num) * 10_000_000
     id_t = nodes.schema["entity_id"].dataType.simpleString()
@@ -206,26 +204,22 @@ def pagerank(
             "entity_id", F.coalesce("rank", fill).alias("rank"))
     base = F.lit(base_v).cast("long")
     ranks = nodes.select("entity_id", F.lit(seed_v).cast("long").alias("rank"))
-    n_adj = adj.count()  # sizes the loop
-    with loop_shuffle_partitions(nodes.sparkSession, n_adj):
-        ranks = cut(ranks)
-        for _ in range(iterations):
-            j = adj.join(ranks.withColumnRenamed("entity_id", "head_id"), "head_id")
-            recv = j.groupBy(F.col("tail_id").alias("entity_id")).agg(
-                F.sum(F.expr("rank div outd")).alias("recv")
-            )
-            new_rank = base + F.expr(f"(coalesce(recv, 0L) * {d_num}) div 100")
-            ranks = cut(
-                nodes.select("entity_id")
-                .join(recv, "entity_id", "left")
-                .select("entity_id", new_rank.alias("rank"))
-            )
+    ranks = lineage_cut(ranks)
+    for _ in range(iterations):
+        j = adj.join(ranks.withColumnRenamed("entity_id", "head_id"), "head_id")
+        recv = j.groupBy(F.col("tail_id").alias("entity_id")).agg(
+            F.sum(F.expr("rank div outd")).alias("recv")
+        )
+        new_rank = base + F.expr(f"(coalesce(recv, 0L) * {d_num}) div 100")
+        ranks = lineage_cut(
+            nodes.select("entity_id")
+            .join(recv, "entity_id", "left")
+            .select("entity_id", new_rank.alias("rank"))
+        )
     return ranks
 
 
-def graph_metrics(
-    nodes: DataFrame, edges: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
+def graph_metrics(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """The reference's composite network-metrics report
     (calculate_graph_metrics, utils.py:196-268) as one (metric, value)
     frame — basic stats, degree statistics, top-central nodes,
@@ -313,8 +307,7 @@ def graph_metrics(
     )
 
     labels = connected_components(
-        enforce_referential_integrity(nodes, edges), nodes=nodes,
-        checkpoint_dir=checkpoint_dir)
+        enforce_referential_integrity(nodes, edges), nodes=nodes)
     conn = (
         labels.groupBy("component").count()
         .agg(F.count("*").alias("nc"), F.max("count").cast("double").alias("largest"))

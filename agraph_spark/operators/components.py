@@ -3,7 +3,12 @@
 The reference does DFS/union-find over in-memory dicts
 (/root/reference/agraph/services/graph_analyzer.py:173-204,
 agraph/builders/llm_builders.py:513-551). Here: driver-controlled loops of
-joins with ``localCheckpoint`` per iteration to cut lineage.
+joins that cut lineage every round with ``lineage_cut``. The cut is a
+``localCheckpoint`` unless the context has a checkpoint directory; set
+``spark.checkpoint.dir`` (``spark-submit --conf spark.checkpoint.dir=...``
+or ``get_spark(extra_conf=...)``) to make every loop write reliable
+checkpoints that survive executor loss. Loop shuffles take the session's
+partition count, which AQE coalesces to the loop's data.
 
 ``connected_components`` uses hash-min label propagation accelerated with
 pointer jumping (labels chase their own component's label each round), so
@@ -26,46 +31,18 @@ PATHS_PER_PIVOT = 100_000  # paths kept per pivot node before each extension
 CC_ROUNDS = 25  # label-propagation rounds of the distributed CC loop
 
 
-class loop_shuffle_partitions:
-    """Scale spark.sql.shuffle.partitions to the LOOP's data size for the
-    duration of an iterative algorithm, then restore.
+def lineage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage for one round of a driver-controlled loop.
 
-    Iterative graph ops run many small stages; on a modest graph the
-    session-wide partition count (sized for the big extraction shuffles)
-    makes every round pay 32 near-empty tasks x ~5 shuffles. Sizing to
-    ~50k rows/partition cut CC 5.5s -> 4.5s (cold 9.2s -> 4.5s) at sf0.1.
-    At scale the row count keeps the default, so this only ever shrinks
-    overhead, never parallelism that matters. (Session-global conf: the
-    override lasts only for the driver-side loop and is try/finally
-    restored; the engine's driver contract runs queries sequentially.)"""
-
-    def __init__(self, spark, n_rows: int, rows_per_partition: int = 50_000):
-        self.spark = spark
-        self.saved = spark.conf.get("spark.sql.shuffle.partitions")
-        want = max(4, -(-n_rows // rows_per_partition))
-        self.target = min(int(self.saved), want)
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.target))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
-        return False
-
-
-def lineage_cutter(df_like: DataFrame, checkpoint_dir: str | None):
-    """Per-iteration lineage cut for driver-controlled loops.
-
-    ``localCheckpoint`` (default) stores blocks in executor memory/disk —
-    fastest, but an executor loss aborts a half-converged loop because the
-    truncated lineage cannot recompute. For long-running jobs on a real
-    cluster pass ``checkpoint_dir`` (an HDFS/S3-visible path): iterations
-    then write reliable checkpoints that survive executor loss."""
-    if checkpoint_dir is None:
-        return lambda df, eager=True: df.localCheckpoint(eager=eager)
-    df_like.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    return lambda df, eager=True: df.checkpoint(eager=eager)
+    With a checkpoint directory on the context (``spark.checkpoint.dir``
+    at session start, or ``setCheckpointDir``) this is a reliable
+    ``checkpoint``: the blocks survive executor loss, for long jobs on a
+    real cluster. Otherwise it is ``localCheckpoint``, in executor
+    memory/disk: fastest, but an executor loss aborts a half-converged
+    loop because the truncated lineage cannot recompute."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)
 
 
 def connected_components(
@@ -73,7 +50,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     src: str = "head_id",
     dst: str = "tail_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Undirected connected components: (entity_id, component) where
     component = min entity_id in the component.
@@ -92,7 +68,6 @@ def connected_components(
     WITHOUT collecting the node set (a left join). Larger graphs — the
     100 TB path — build the deduplicated, lineage-cut adjacency and run
     the unchanged hash-min + pointer-jumping loop."""
-    cut = lineage_cutter(edges, checkpoint_dir)
     raw = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -120,11 +95,9 @@ def connected_components(
     # analyzed plan (cache substitution happens at physical planning) —
     # measured 5.5 -> 3.6 s warm at sf0.1 switching to an RDD-leaf cut,
     # same lesson as bounded_cycles (PLANS.md round 3)
-    sym = cut(raw.distinct(), eager=False)
-    n_sym = sym.count()  # materializes the lazy cut; sizes the loop
-    with loop_shuffle_partitions(edges.sparkSession, n_sym):
-        labels = _cc_loop(sym, node_ids(sym), cut)
-    return labels
+    sym = lineage_cut(raw.distinct(), eager=False)
+    sym.count()  # materializes the lazy cut
+    return _cc_loop(sym, node_ids(sym))
 
 
 def driver_union_find(pairs) -> dict:
@@ -155,9 +128,9 @@ def driver_union_find(pairs) -> dict:
     return {x: find(x) for x in list(parent)}
 
 
-def _cc_loop(sym: DataFrame, ids: DataFrame, cut) -> DataFrame:
+def _cc_loop(sym: DataFrame, ids: DataFrame) -> DataFrame:
     labels = ids.select("entity_id", F.col("entity_id").alias("component"))
-    labels = cut(labels)
+    labels = lineage_cut(labels)
 
     for _ in range(CC_ROUNDS):
         # hash-min: each node adopts min(own label, neighbors' labels)
@@ -191,7 +164,7 @@ def _cc_loop(sym: DataFrame, ids: DataFrame, cut) -> DataFrame:
         # FULL count (no limit-1 short-circuit): every partition of
         # new_labels must be computed in this job or the checkpoint stays
         # partial and lineage keeps growing across rounds.
-        new_labels = cut(new_labels, eager=False)
+        new_labels = lineage_cut(new_labels, eager=False)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "entity_id")
@@ -240,7 +213,6 @@ def bfs_distances(
     start_id: str,
     max_depth: int = 5,
     undirected: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A9: unweighted BFS distance from start to all nodes within max_depth
     (graph_path_finder.py:44-103). Frontier-expansion joins with a visited
@@ -253,8 +225,6 @@ def bfs_distances(
     deduplicated lineage-cut adjacency and run the unchanged frontier
     loop."""
     spark = edges.sparkSession
-    cut = lineage_cutter(edges, checkpoint_dir)
-
     raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
     if undirected:
         raw = raw.unionByName(
@@ -271,37 +241,36 @@ def bfs_distances(
     # lineage-cut, not persisted: joined against once per depth, and an
     # RDD-leaf adjacency keeps every depth's analyzed plan shallow (see
     # connected_components / bounded_cycles)
-    adj = cut(raw.distinct(), eager=False)
+    adj = lineage_cut(raw.distinct(), eager=False)
     visited = local_df(spark, [(start_id, 0)], seed_schema)
     frontier = visited
-    n_adj = adj.count()  # materializes the lazy cut; sizes the loop
-    with loop_shuffle_partitions(spark, n_adj):
-        for d in range(1, max_depth + 1):
-            nxt = (
-                adj.join(
-                    frontier.select(F.col("entity_id").alias("src")), "src"
-                )
-                .select(F.col("dst").alias("entity_id"))
-                .distinct()
-                # null-safe anti-join (ADVICE r6): a plain left_anti never
-                # matches a null key, so a null dst reachable at several
-                # depths re-entered the frontier and emitted one (null, d)
-                # row per depth, while the driver mirror records null once.
-                # eqNullSafe dedupes null exactly like any other id.
-                .alias("n")
-                .join(visited.select("entity_id").alias("v"),
-                      F.col("n.entity_id").eqNullSafe(F.col("v.entity_id")),
-                      "left_anti")
-                .withColumn("dist", F.lit(d))
+    adj.count()  # materializes the lazy cut
+    for d in range(1, max_depth + 1):
+        nxt = (
+            adj.join(
+                frontier.select(F.col("entity_id").alias("src")), "src"
             )
-            # lazy cut + full count: the emptiness check IS the job that
-            # materializes the checkpoint — one job per depth, not two
-            # (same shape as _cc_loop's convergence check)
-            nxt = cut(nxt, eager=False)
-            if nxt.count() == 0:
-                break
-            visited = cut(visited.unionByName(nxt), eager=False)
-            frontier = nxt
+            .select(F.col("dst").alias("entity_id"))
+            .distinct()
+            # null-safe anti-join (ADVICE r6): a plain left_anti never
+            # matches a null key, so a null dst reachable at several
+            # depths re-entered the frontier and emitted one (null, d)
+            # row per depth, while the driver mirror records null once.
+            # eqNullSafe dedupes null exactly like any other id.
+            .alias("n")
+            .join(visited.select("entity_id").alias("v"),
+                  F.col("n.entity_id").eqNullSafe(F.col("v.entity_id")),
+                  "left_anti")
+            .withColumn("dist", F.lit(d))
+        )
+        # lazy cut + full count: the emptiness check IS the job that
+        # materializes the checkpoint — one job per depth, not two
+        # (same shape as _cc_loop's convergence check)
+        nxt = lineage_cut(nxt, eager=False)
+        if nxt.count() == 0:
+            break
+        visited = lineage_cut(visited.unionByName(nxt), eager=False)
+        frontier = nxt
     return visited
 
 
@@ -426,7 +395,6 @@ def _driver_bounded_cycles(pairs: list, max_len: int) -> list | None:
 def bounded_cycles(
     edges: DataFrame,
     max_len: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A11: directed simple cycles of length 2..max_len as
     (cycle_start, cycle_len), canonicalized so cycle_start = min node id in
@@ -447,15 +415,12 @@ def bounded_cycles(
       drops cycles only through hubs hotter than the cap, and logs the
       exact drop count (one shallow aggregate over the cut frontier).
 
-    Per-level frontiers are lineage-cut (localCheckpoint, or reliable
-    ``checkpoint_dir`` on a real cluster), not persisted: with persist the
-    logical plan still carries the full per-level subtree and measured 3x
-    slower than an RDD-leaf cut (cache-substituted plan re-analysis + AQE
-    over a tree that doubles per level); without either, the plan
-    recomputes exponentially (measured 135 s vs 4 s at sf0.01).
+    Per-level frontiers are lineage-cut (``lineage_cut``), not persisted:
+    with persist the logical plan still carries the full per-level subtree
+    and measured 3x slower than an RDD-leaf cut (cache-substituted plan
+    re-analysis + AQE over a tree that doubles per level); without either,
+    the plan recomputes exponentially (measured 135 s vs 4 s at sf0.01).
     """
-    cut = lineage_cutter(edges, checkpoint_dir)
-
     e = edges.select(F.col("head_id").alias("a"), F.col("tail_id").alias("b")).distinct()
     # trim to nodes with both in- and out-edges (cycle membership requires both)
     both = (
@@ -463,7 +428,7 @@ def bounded_cycles(
         .join(e.select(F.col("b").alias("n")), "n", "left_semi")
         .distinct()
     )
-    e = cut(
+    e = lineage_cut(
         e.join(both.select(F.col("n").alias("a")), "a", "left_semi")
         .join(both.select(F.col("n").alias("b")), "b", "left_semi")
         .select("a", "b"),
@@ -491,7 +456,7 @@ def bounded_cycles(
         # in the SAME job — one job per level, not two (same shape as
         # _cc_loop's convergence check); the last level has no cap check
         # and materializes in the caller's final action
-        frontier = cut(frontier, eager=False)
+        frontier = lineage_cut(frontier, eager=False)
         closed = (
             frontier.alias("p")
             .join(

@@ -177,30 +177,27 @@ def _cap_buckets(band_rows: DataFrame, keys: list[str]) -> DataFrame:
     bucket; the self-join then explodes quadratically on a single shuffle
     key. Same skew guard as ngram_jaccard_pairs' hot-shingle cap. Dropped
     buckets mean dropped candidates only when a pair collides in NO other
-    band — the standard LSH recall/cost trade, made explicit and logged."""
+    band — the standard LSH recall/cost trade, made explicit and logged.
+
+    The rows are persisted with their bucket size, and the one aggregate
+    that counts the hot buckets for the log line is the job that builds
+    that cache (and the upstream signature cache) ONCE, before the
+    self-join's two sides and the verify branch would race them."""
     import logging
 
-    n_hot = (
-        band_rows.groupBy(*keys)
-        .agg(F.count("*").alias("bucket_size"))
-        .where(F.col("bucket_size") > BUCKET_DOCS)
-        .count()
-    )
+    from pyspark.sql import Window
+
+    # window, not groupBy+anti-join: one shuffle on the SAME keys the
+    # downstream self-join uses (exchange reuse)
+    w = Window.partitionBy(*[F.col(k) for k in keys])
+    sized = track(band_rows.withColumn("_bucket_size", F.count("*").over(w)))
+    hot = F.when(F.col("_bucket_size") > BUCKET_DOCS, F.struct(*keys))
+    n_hot = sized.agg(F.count_distinct(hot)).first()[0]
     if n_hot:
         logging.getLogger(__name__).warning(
             "LSH: dropping %d band buckets larger than %d docs", n_hot, BUCKET_DOCS
         )
-    # window, not groupBy+anti-join: one shuffle on the SAME keys the
-    # downstream self-join uses (exchange reuse), and no second subtree
-    # racing to materialize the signature cache
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*[F.col(k) for k in keys])
-    return (
-        band_rows.withColumn("_bucket_size", F.count("*").over(w))
-        .where(F.col("_bucket_size") <= BUCKET_DOCS)
-        .drop("_bucket_size")
-    )
+    return sized.where(F.col("_bucket_size") <= BUCKET_DOCS).drop("_bucket_size")
 
 
 def minhash_lsh_pairs(
@@ -240,14 +237,11 @@ def minhash_lsh_pairs(
     band_rows = sig.select(
         "doc", F.posexplode(F.array(*band_vals)).alias("band", "bucket")
     )
-    # persist the capped band rows: the self-join below consumes them twice,
-    # and uncached each side re-ran the explode + window-cap subtree (one
-    # extra exchange + sort per side, plan-audited r6)
-    band_rows = track(_cap_buckets(band_rows, ["band", "bucket"]))
-    # eager materialization (see ngram_jaccard_pairs): builds the signature
-    # and capped-band caches ONCE before the self-join + verify branches
-    # would race them; measured 5.7 -> 3.5 s cold at sf0.1
-    band_rows.count()
+    # capped rows come from a cache built eagerly (see ngram_jaccard_pairs):
+    # uncached, each self-join side re-ran the explode + window-cap subtree
+    # (one extra exchange + sort per side, plan-audited r6), and the lazy
+    # caches raced the verify branch (measured 5.7 -> 3.5 s cold at sf0.1)
+    band_rows = _cap_buckets(band_rows, ["band", "bucket"])
     a = band_rows.alias("a")
     b = band_rows.alias("b")
     cand = (
@@ -350,11 +344,8 @@ def simhash_near_pairs(
             )
         ).alias("band", "key"),
     )
-    # persist the capped band rows (consumed by both self-join sides; see
-    # minhash_lsh_pairs)
-    bands = track(_cap_buckets(bands, ["band", "key"]))
-    # eager materialization (see minhash_lsh_pairs)
-    bands.count()
+    # capped rows from an eagerly built cache (see minhash_lsh_pairs)
+    bands = _cap_buckets(bands, ["band", "key"])
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, ["band", "key"])

@@ -201,8 +201,7 @@ def _driver_all_paths(pairs: list, start_id, targets: set, max_depth: int,
 
 
 def _walk_paths(raw: DataFrame, start_id, tgt: DataFrame, id_t: str, max_depth: int,
-                checkpoint_dir: str | None, multi: bool, stop_at_first_hit: bool,
-                op: str) -> DataFrame:
+                multi: bool, stop_at_first_hit: bool, op: str) -> DataFrame:
     """Distributed level loop of all_paths and all_paths_multi over raw
     (src, dst) pairs. Hits come from a left join against ``tgt``, a
     distinct one-column (node) frame. With ``multi`` paths keep expanding
@@ -210,11 +209,10 @@ def _walk_paths(raw: DataFrame, start_id, tgt: DataFrame, id_t: str, max_depth: 
     ends at its target and rows are (path, depth). The per-pivot cap's one
     shallow aggregate materializes the lazily cut frontier and gives the
     emptiness break: ONE job per level."""
-    from .components import _cap_frontier_pivot, lineage_cutter
+    from .components import _cap_frontier_pivot, lineage_cut
 
     adj = raw.distinct()
     flag = tgt.withColumn("_hit", F.lit(True))
-    cut = lineage_cutter(raw, checkpoint_dir)
     spark = raw.sparkSession
     frontier = local_df(spark, [(start_id, [start_id])], f"node {id_t}, path array<{id_t}>")
     schema = f"path array<{id_t}>, depth int"
@@ -233,7 +231,7 @@ def _walk_paths(raw: DataFrame, start_id, tgt: DataFrame, id_t: str, max_depth: 
             .select(F.col("dst").alias("node"), F.concat("path", F.array("dst")).alias("path"))
             .join(flag, "node", "left")
         )
-        stepped = cut(stepped, eager=False)
+        stepped = lineage_cut(stepped, eager=False)
         hits = stepped.where(F.col("_hit").isNotNull()).select(*out)
         found = hits if found is None else found.unionByName(hits)
         if multi:
@@ -256,7 +254,6 @@ def all_paths(
     end_id: str,
     max_depth: int = 3,
     *,
-    checkpoint_dir: str | None = None,
     stop_at_first_hit: bool = False,
 ) -> DataFrame:
     """A10 (graph_path_finder.py:105-155): every simple directed path
@@ -286,7 +283,7 @@ def all_paths(
     if got is not None:
         return got
     tgt = local_df(edges.sparkSession, [(end_id,)], f"node {id_t}")
-    return _walk_paths(raw, start_id, tgt, id_t, max_depth, checkpoint_dir,
+    return _walk_paths(raw, start_id, tgt, id_t, max_depth,
                        False, stop_at_first_hit, "all_paths")
 
 
@@ -295,8 +292,6 @@ def all_paths_multi(
     start_id: str,
     targets: DataFrame,
     max_depth: int = 3,
-    *,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """A10 set-target variant: every simple path start -> ANY node of
     ``targets`` (a one-column DataFrame of ids) up to max_depth, as
@@ -316,7 +311,7 @@ def all_paths_multi(
     )
     if got is not None:
         return got
-    return _walk_paths(raw, start_id, tgt.distinct(), id_t, max_depth, checkpoint_dir,
+    return _walk_paths(raw, start_id, tgt.distinct(), id_t, max_depth,
                        True, False, "all_paths_multi")
 
 
@@ -326,18 +321,15 @@ def paths_with_relation_type(
     end_id: str,
     pred: str,
     max_depth: int = 3,
-    **kwargs,
 ) -> DataFrame:
     """find_paths_with_relation_type (graph_path_finder.py:157-222): the
     bounded path walk restricted to edges of ONE relation type.
     Compositional: the pred filter lands BEFORE the walk, so Catalyst
     pushes it into the edge scan — with edges partitioned or bucketed by
     pred at scale this is partition pruning, and every per-level frontier
-    join touches only the typed adjacency. Same cap, lineage cut and
-    early exit as all_paths."""
-    return all_paths(
-        edges.where(F.col("pred") == pred), start_id, end_id, max_depth, **kwargs
-    )
+    join touches only the typed adjacency. Same cap and lineage cut as
+    all_paths."""
+    return all_paths(edges.where(F.col("pred") == pred), start_id, end_id, max_depth)
 
 
 # -------------------------------------------------- A13/A14/G8 reports etc
@@ -511,7 +503,6 @@ def shortest_path(
     start_id: str,
     end_id: str,
     max_depth: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """find_shortest_path (utils.py:150-193): the single BFS-shortest path
     start->end (ties broken lexicographically on the path), as one row
@@ -519,8 +510,7 @@ def shortest_path(
     ``stop_at_first_hit`` — the walk ends at the first depth where the
     target appears (the reference BFS stops there too), so deep graphs
     don't pay max_depth levels for a depth-1 answer."""
-    found = all_paths(edges, start_id, end_id, max_depth,
-                      checkpoint_dir=checkpoint_dir, stop_at_first_hit=True)
+    found = all_paths(edges, start_id, end_id, max_depth, stop_at_first_hit=True)
     return (
         found.orderBy(F.asc("depth"), F.asc(F.concat_ws("->", "path")))
         .limit(1)

@@ -118,7 +118,7 @@ def local_df(spark: SparkSession, data, schema):
     return spark.createDataFrame(table, schema)
 
 
-def spread(df, min_partitions: int | None = None):
+def spread(df):
     """Guarantee enough input partitions before a CPU-heavy narrow stage.
 
     Small parquet inputs arrive as ONE partition (a 5k-doc corpus is one
@@ -129,8 +129,7 @@ def spread(df, min_partitions: int | None = None):
     magnitude more partitions than cores and this is a no-op (the guard
     checks, never blindly shuffles).
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -105,34 +105,52 @@ def test_degree_and_isolated(spark):
 
 
 def test_reliable_checkpoint_dir(spark, forced_path, tmp_path):
-    """checkpoint_dir switches the per-iteration lineage cut from
-    executor-memory localCheckpoint to reliable checkpoints (survives
-    executor loss on a real cluster); results are identical."""
+    """A checkpoint directory on the context switches every distributed
+    loop's lineage cut from executor-memory localCheckpoint to reliable
+    checkpoints (they survive executor loss on a real cluster); results
+    are identical to the default path. The directory is unset afterwards,
+    or every later loop in the session would checkpoint into a deleted
+    pytest dir."""
     import os
 
-    from agraph_spark.operators.components import bfs_distances, connected_components
+    from agraph_spark.operators.analytics import pagerank
+    from agraph_spark.operators.components import bounded_cycles
+    from agraph_spark.operators.graph_queries import all_paths, all_paths_multi
 
     edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("x", "x")],
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"), ("x", "x")],
         "head_id string, tail_id string")
-    ckpt = str(tmp_path / "ckpt")
-    local = {(r.entity_id, r.component) for r in connected_components(edges).collect()}
-    # r6: the small-graph driver path no longer checkpoints at all, so the
-    # reliable-checkpoint machinery is exercised on the LOOP path
-    # (forced distributed) — which also makes this a cross-path
-    # equivalence check
-    with forced_path("distributed"):
-        reliable = {(r.entity_id, r.component)
-                    for r in connected_components(
-                        edges, checkpoint_dir=ckpt).collect()}
-    assert local == reliable
-    # the reliable run actually wrote checkpoint files
-    assert any(files for _, _, files in os.walk(ckpt))
-    b1 = {(r.entity_id, r.dist) for r in bfs_distances(edges, "a").collect()}
-    with forced_path("distributed"):
-        b2 = {(r.entity_id, r.dist)
-              for r in bfs_distances(edges, "a", checkpoint_dir=ckpt).collect()}
-    assert b1 == b2
+    nodes = spark.createDataFrame([(x,) for x in "abcdex"], "entity_id string")
+    targets = spark.createDataFrame([("b",), ("c",)], "node string")
+    ops = {
+        "connected_components": lambda: connected_components(edges),
+        "bfs_distances": lambda: bfs_distances(edges, "a"),
+        "bounded_cycles": lambda: bounded_cycles(edges, max_len=4),
+        "all_paths": lambda: all_paths(edges, "a", "c", max_depth=3),
+        "all_paths_multi": lambda: all_paths_multi(edges, "a", targets, max_depth=3),
+        "pagerank": lambda: pagerank(nodes, edges, iterations=3),
+    }
+
+    def rows(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                      for r in df.collect())
+
+    want = {name: rows(op()) for name, op in ops.items()}
+    sc = spark.sparkContext
+    try:
+        for name, op in ops.items():
+            ckpt = tmp_path / name
+            sc.setCheckpointDir(str(ckpt))
+            # the small-graph driver path does not checkpoint at all, so
+            # the reliable cut is exercised on the LOOP path (forced
+            # distributed), which also makes this a cross-path check
+            with forced_path("distributed"):
+                assert rows(op()) == want[name], name
+            # the reliable run actually wrote checkpoint files
+            assert any(files for _, _, files in os.walk(ckpt)), name
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None
 
 
 PR_EDGES = [("a", "b"), ("b", "c"), ("b", "a"), ("c", "a"), ("c", "a")]

@@ -95,10 +95,13 @@ def test_simhash_planted_recall(spark):
     (DD.minhash_lsh_pairs, {"threshold": 0.3}),
     (DD.simhash_near_pairs, {"max_hamming": 3}),
 ])
-def test_lsh_bucket_cap_drops_flood(spark, monkeypatch, fn, kw):
+def test_lsh_bucket_cap_drops_flood(spark, monkeypatch, caplog, fn, kw):
     """100 identical docs flood every band bucket; with a cap below 100 the
     flood contributes no candidate pairs, while an uncrowded planted pair
-    elsewhere is still found."""
+    elsewhere is still found. The log names one dropped bucket per band
+    (8 MinHash bands, 4 SimHash bands)."""
+    import logging
+
     rng = random.Random(7)
     vocab = [f"v{i}" for i in range(300)]
     flood_text = " ".join(rng.choice(vocab) for _ in range(60))
@@ -109,8 +112,11 @@ def test_lsh_bucket_cap_drops_flood(spark, monkeypatch, fn, kw):
     docs += [(500, uniq), (501, uniq)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     monkeypatch.setattr(DD, "BUCKET_DOCS", 50)
-    capped = {(r.doc_a, r.doc_b) for r in fn(df, **kw).collect()}
+    with caplog.at_level(logging.WARNING, logger=DD.__name__):
+        capped = {(r.doc_a, r.doc_b) for r in fn(df, **kw).collect()}
     assert capped == {(500, 501)}
+    n_bands = 8 if fn is DD.minhash_lsh_pairs else 4
+    assert f"dropping {n_bands} band buckets larger than 50 docs" in caplog.text
     monkeypatch.setattr(DD, "BUCKET_DOCS", 10**9)
     uncapped = {(r.doc_a, r.doc_b) for r in fn(df, **kw).collect()}
     assert len(uncapped) == 100 * 99 // 2 + 1
