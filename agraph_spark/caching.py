@@ -22,9 +22,10 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: dict[int, list[DataFrame]] = {}
 
 
-def track(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """Persist ``df`` and register it for a later ``release_caches``."""
-    df = df.persist(level)
+def track(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (memory and disk) and register it for a later
+    ``release_caches``."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     key = id(df.sparkSession.sparkContext)
     _TRACKED.setdefault(key, []).append(df)
     return df

@@ -1,17 +1,20 @@
 """Sources & sinks (SURVEY.md §2.1).
 
-- S5/S8: graph store — nodes/edges/chunks/triples as parquet directories
-  (one table each, the layout Iceberg would use; writers take an optional
+- S5/S8: graph store — nodes/edges as parquet directories (one table
+  each, the layout Iceberg would use; writers take an optional
   ``fmt="iceberg"`` that engages ``saveAsTable`` when an Iceberg catalog is
   configured — this container has none, so parquet is the tested path and
-  the layout is identical).
+  the layout is identical). Paths may be URIs (``file://``, ``hdfs://``,
+  ``s3a://``): existence is checked through the Hadoop FileSystem.
 - S7: GraphML / Cytoscape.js / D3 exports — display-format serializers,
   driver-side over collected rows BY DESIGN (visualization output is
   human-scale; anything big enough to need distribution shouldn't be
   rendered). Reference: mixins.py:187-283, utils.py:32-147.
 - S2: document-file sources — extension-dispatched readers; text-family
-  formats use native Spark readers; PDF/Word/image-OCR require codec
-  libraries absent here and raise NotImplementedError with the dispatch
+  formats use native Spark readers; HTML/XLSX/Word/PDF parse inside one
+  binaryFile kernel, and files its parser rejects are quarantined as
+  text=NULL rows and always counted in a warning; image-OCR requires codec
+  libraries absent here and raises NotImplementedError with the dispatch
   plumbing in place (factory semantics of processer/factory.py:24-157).
 """
 
@@ -25,21 +28,31 @@ import xml.sax.saxutils as sx
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .caching import track
+
 # Rows per table that the display exporters collect to the driver
 EXPORT_ROWS = 100_000
 
 
 # ------------------------------------------------------------- graph store
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop FileSystem, so a ``file://``,
+    ``hdfs://`` or ``s3a://`` path resolves as Spark's readers resolve it
+    (os.path only sees the driver's local disk)."""
+    fs, hpath = _hadoop_path(spark, path)
+    return bool(fs.exists(hpath))
+
+
 def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
-                triples: DataFrame | None = None, chunks: DataFrame | None = None,
                 fmt: str = "parquet") -> None:
-    tables = {"nodes": nodes, "edges": edges}
-    if triples is not None:
-        tables["triples"] = triples
-    if chunks is not None:
-        tables["chunks"] = chunks
-    for name, df in tables.items():
+    for name, df in (("nodes", nodes), ("edges", edges)):
         if fmt == "iceberg":
             df.writeTo(f"{out_dir}.{name}").createOrReplace()
         else:
@@ -48,9 +61,9 @@ def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
 
 def read_graph(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     out = {}
-    for name in ("nodes", "edges", "triples", "chunks"):
+    for name in ("nodes", "edges"):
         path = os.path.join(out_dir, name)
-        if os.path.exists(path):
+        if path_exists(spark, path):
             out[name] = spark.read.parquet(path)
     return out
 
@@ -91,9 +104,7 @@ def write_graph_bucketed(
         # LOCATION_ALREADY_EXISTS forever after. Remove the orphan dir via
         # the Hadoop FS API (works for HDFS/S3 warehouses too).
         wh = spark.conf.get("spark.sql.warehouse.dir")
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(f"{wh}/{db}.db/{table}")
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hp = _hadoop_path(spark, f"{wh}/{db}.db/{table}")
         fs.delete(hp, True)
 
     def _write(df: DataFrame, table: str, key: str) -> None:
@@ -253,14 +264,10 @@ def export_d3(nodes: DataFrame, edges: DataFrame) -> str:
 
 # ---------------------------------------------------- document-file source
 
-TEXT_EXTS = {".txt", ".md", ".markdown", ".log"}
 JSON_EXTS = {".json", ".jsonl"}
 CSV_EXTS = {".csv", ".tsv"}
 STUB_EXTS = {".png": "image-ocr", ".jpg": "image-ocr", ".jpeg": "image-ocr"}
 HTML_EXTS = {".html", ".htm"}
-
-# single outstanding quarantine-audit cache (see read_documents)
-_QUARANTINE_CACHE: dict[str, DataFrame] = {}
 XLSX_EXTS = {".xlsx", ".xlsm"}
 DOCX_EXTS = {".docx"}
 DOC_EXTS = {".doc"}
@@ -272,7 +279,6 @@ def read_documents(
     path: str,
     skip_corrupt: bool = True,
     with_errors: bool = False,
-    log_quarantined: bool = True,
 ) -> DataFrame:
     """S2: extension-dispatched document reader -> (conv_id, text).
 
@@ -286,11 +292,11 @@ def read_documents(
     For the binary formats, ``skip_corrupt`` (default) quarantines files
     the parser rejects as text=NULL rows instead of aborting the scan;
     ``with_errors=True`` keeps the per-file ``parse_error`` column for
-    auditing the rejects. When the column is dropped, ``log_quarantined``
-    (default) runs a driver-side count of rejects and WARNs if any exist,
-    so corrupt inputs never vanish silently (the count re-runs the parse
-    kernel once — at very large scale pass ``with_errors=True`` and audit
-    inline instead, or disable the flag)."""
+    auditing the rejects. When the column is dropped, the rejects are
+    always counted on the driver and WARNed if any exist, so corrupt inputs
+    never vanish silently: the parsed frame is ``caching.track``ed, so the
+    count and the returned frame share one scan, and ``release_caches``
+    frees it with every other operator's cache."""
     ext = os.path.splitext(path)[1].lower()
     binary_parsers = {**{e: _html_to_text for e in HTML_EXTS},
                       **{e: _xlsx_to_text for e in XLSX_EXTS},
@@ -303,24 +309,8 @@ def read_documents(
         )
         if with_errors:
             return out
-        if skip_corrupt and log_quarantined:
-            # Pay the binaryFile scan + parse kernel ONCE: track() the
-            # parsed frame so the audit count materializes the cache and
-            # the returned frame reads from it (the r4 default re-ran the
-            # whole scan just to produce this log line). At most ONE such
-            # cache stays outstanding per process — the previous read's is
-            # unpersisted here, and the session owner's release_caches
-            # sweep frees the last one.
-            from agraph_spark import caching
-
-            prev = _QUARANTINE_CACHE.pop("df", None)
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass
-            out = caching.track(out)
-            _QUARANTINE_CACHE["df"] = out
+        if skip_corrupt:
+            out = track(out)
             n_bad = out.agg(F.count("parse_error")).first()[0]
             if n_bad:
                 logging.getLogger(__name__).warning(

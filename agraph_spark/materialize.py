@@ -22,7 +22,7 @@ def entity_id_col(name_norm: str = "name_norm") -> F.Column:
     return F.md5(F.concat(F.lit("entity|"), F.col(name_norm)))
 
 
-def build_nodes(entities: DataFrame, lineage: str = "") -> DataFrame:
+def build_nodes(entities: DataFrame) -> DataFrame:
     """Per-conversation entities -> global nodes keyed by md5(name_norm).
 
     The shuffle key is name_norm — hot entities ("acme corp" in 30% of
@@ -47,25 +47,25 @@ def build_nodes(entities: DataFrame, lineage: str = "") -> DataFrame:
             "confidence",
             F.lit("text_extraction").alias("source"),
             "n_mentions",
-            F.lit(lineage).alias("lineage"),
+            F.lit("").alias("lineage"),
         )
     )
 
 
-def build_edges(triples: DataFrame, lineage: str = "") -> DataFrame:
+def build_edges(triples: DataFrame) -> DataFrame:
     """Triples -> global edges with content-hash ids and FK columns."""
     return (
         triples.groupBy("subj", "pred", "obj")
         .agg(F.max("conf").alias("confidence"), F.count("*").alias("n_support"))
         .select(
             F.md5(F.concat_ws("|", "subj", "pred", "obj")).alias("edge_id"),
-            F.md5(F.concat(F.lit("entity|"), F.col("subj"))).alias("head_id"),
-            F.md5(F.concat(F.lit("entity|"), F.col("obj"))).alias("tail_id"),
+            entity_id_col("subj").alias("head_id"),
+            entity_id_col("obj").alias("tail_id"),
             "pred",
             "confidence",
             F.lit("text_extraction").alias("source"),
             "n_support",
-            F.lit(lineage).alias("lineage"),
+            F.lit("").alias("lineage"),
         )
     )
 

@@ -85,18 +85,13 @@ def chunk_documents(
     return out
 
 
-def link_chunks_to_entities(
-    chunks: DataFrame, entities: DataFrame, n_salts: int | None = None
-) -> DataFrame:
+def link_chunks_to_entities(chunks: DataFrame, entities: DataFrame) -> DataFrame:
     """G3: chunk links to an entity when the entity name (or alias) is a
     substring of lower(content) (llm_builders.py:770-812). Per-conversation
-    equi-join + containment predicate; ``n_salts`` applies the same
-    monster-conversation guard as the E6/E7 joins (relations._conv_join)."""
-    from .relations import _conv_join
-
+    equi-join + containment predicate."""
     big = chunks.select("chunk_id", "conv_id", F.lower(F.col("content")).alias("content_l"))
     return (
-        _conv_join(big, entities.select("conv_id", "name_norm"), n_salts)
+        big.join(entities.select("conv_id", "name_norm"), "conv_id")
         .where(F.instr(F.col("content_l"), F.col("name_norm")) > 0)
         .select("chunk_id", "conv_id", "name_norm")
     )

@@ -66,12 +66,11 @@ def clean_table_name(col: F.Column) -> F.Column:
     """Strip the FIRST matching prefix — the reference breaks after one hit
     (entity_extractor.py:545-563)."""
     low = F.lower(col)
-    return (
-        F.when(low.startswith("tbl_"), F.substring(low, 5, 0x0FFFFFFF))
-        .when(low.startswith("tb_"), F.substring(low, 4, 0x0FFFFFFF))
-        .when(low.startswith("t_"), F.substring(low, 3, 0x0FFFFFFF))
-        .otherwise(low)
-    )
+    chain = F  # F.when opens the chain, Column.when extends it
+    for prefix in TABLE_PREFIXES:
+        chain = chain.when(low.startswith(prefix),
+                           F.substring(low, len(prefix) + 1, 0x0FFFFFFF))
+    return chain.otherwise(low)
 
 
 def extract_db_entities(catalog: DataFrame) -> DataFrame:

@@ -5,13 +5,13 @@ llm_builders.py:417-435, is the part we must re-architect for scale):
 
 1. broadcast alias-dictionary join — mentions whose surface form is a known
    alias map straight to a canonical name (FIXTURES.md §2);
-2. MinHash-LSH blocking on name 3-gram character shingles, same-type only
-   (pyspark.ml.feature.MinHashLSH approxSimilarityJoin) — candidate pairs
-   come from LSH buckets, bounded by bucket sizes, not corpus size;
+2. MinHash-LSH blocking on name ``NGRAM``-character shingles, same-type
+   only (pyspark.ml.feature.MinHashLSH approxSimilarityJoin) — candidate
+   pairs come from LSH buckets, bounded by bucket sizes, not corpus size;
 3. survivors scored with the reference's exact rules: name similarity
    (exact 1.0 / substring 0.8 / Levenshtein ratio, llm_builders.py:437-469)
-   and the D2 weighted similarity (0.4 name-Jaccard + 0.2 type + 0.2 alias
-   + 0.2 props, entity_merger.py:193-293);
+   above ``NAME_SIM`` and the D2 weighted similarity (0.4 name-Jaccard +
+   0.2 type + 0.2 alias + 0.2 props, entity_merger.py:193-293);
 4. pair verification via a pluggable BATCHED model (one call per Arrow
    record batch — mapInPandas); tests use the deterministic stub;
 5. confirmed pairs -> iterative connected components (components.py);
@@ -19,6 +19,9 @@ llm_builders.py:417-435, is the part we must re-architect for scale):
    llm_builders.py:513-551);
 6. edge repoint: join edges against the old->canonical mapping on both FK
    columns (EntityMerger.merge_entity semantics, entity_merger.py:51-147).
+
+The link policy is the block of module constants below; a test that needs
+another setting monkeypatches the constant.
 """
 
 from __future__ import annotations
@@ -32,12 +35,21 @@ from pyspark.sql import functions as F
 from . import adaptive
 from .components import connected_components, driver_union_find
 
-NameSimilarity = tuple[float, str]
-
-# The linkable universe, read when the plan is built: names longer than
-# NAME_CHARS characters or NAME_WORDS words are never merge candidates
+# Link policy, read when the plan is built. The linkable universe: names
+# longer than NAME_CHARS characters or NAME_WORDS words are never merge
+# candidates. Blocking: NGRAM-character shingles hashed into FEATURES
+# binary features, LSH_TABLES MinHash tables, and a pair survives strictly
+# below Jaccard distance MAX_DISTANCE (also read by _driver_lsh_pairs when
+# it runs). Scoring keeps pairs with name similarity strictly above
+# NAME_SIM. LSH_TABLES and NAME_SIM are the defaults of the two arguments
+# that perfbench passes.
 NAME_CHARS = 32
 NAME_WORDS = 4
+NGRAM = 3
+FEATURES = 1 << 18
+LSH_TABLES = 4
+MAX_DISTANCE = 0.6
+NAME_SIM = 0.7
 
 
 def alias_link(nodes: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -58,20 +70,18 @@ def alias_link(nodes: DataFrame, alias_dict: DataFrame) -> DataFrame:
 
 def lsh_candidate_pairs(
     nodes: DataFrame,
-    num_hash_tables: int = 4,
-    max_jaccard_distance: float = 0.6,
-    ngram: int = 3,
-    vocab_features: int = 1 << 18,
+    num_hash_tables: int = LSH_TABLES,
     log_excluded: bool = False,
 ) -> DataFrame:
-    """D3 blocking via MinHash-LSH over name character 3-gram sets,
+    """D3 blocking via MinHash-LSH over name character ``NGRAM`` sets,
     restricted to same entity_type. Returns (id_a, id_b, name_a, name_b,
-    type_a/b, lsh_distance) with id_a < id_b.
+    type_a/b, lsh_distance) with id_a < id_b and lsh_distance below
+    ``MAX_DISTANCE``.
 
-    Uses pyspark.ml MinHashLSH: names -> char 3-gram tokens -> binary
-    HashingTF vectors -> approxSimilarityJoin. The join shuffles on LSH
-    bucket keys — hot buckets (very common name shapes) are the skew risk;
-    AQE skew-join splitting is on in the session defaults.
+    Uses pyspark.ml MinHashLSH: names -> char n-gram tokens -> binary
+    HashingTF vectors (``FEATURES`` wide) -> approxSimilarityJoin. The join
+    shuffles on LSH bucket keys — hot buckets (very common name shapes) are
+    the skew risk; AQE skew-join splitting is on in the session defaults.
 
     The linkable universe is bounded to plausible entity surface forms
     (<= NAME_CHARS chars, <= NAME_WORDS words): extraction debris
@@ -127,13 +137,13 @@ def lsh_candidate_pairs(
         "grams",
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length("padded") - (ngram - 1), F.lit(1))),
-                lambda i: F.col("padded").substr(i, F.lit(ngram)),
+                F.sequence(F.lit(1), F.greatest(F.length("padded") - (NGRAM - 1), F.lit(1))),
+                lambda i: F.col("padded").substr(i, F.lit(NGRAM)),
             )
         ),
     ).where(F.size("grams") > 0)
 
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=vocab_features, binary=True)
+    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=FEATURES, binary=True)
     feat = track(tf.transform(prepared).select(
         "entity_id", "name_norm", "entity_type", "features"))
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
@@ -142,13 +152,13 @@ def lsh_candidate_pairs(
     id_t = nodes.schema["entity_id"].dataType.simpleString()
     got = adaptive.cutover(
         hashed, adaptive.LINK_ROWS,
-        lambda rows: _driver_lsh_pairs(rows, max_jaccard_distance),
+        _driver_lsh_pairs,
         f"id_a {id_t}, id_b {id_t}, name_a string, name_b string, "
         "type_a string, type_b string, lsh_distance double",
     )
     if got is not None:
         return got.coalesce(1)
-    joined = model.approxSimilarityJoin(hashed, hashed, max_jaccard_distance, distCol="lsh_distance")
+    joined = model.approxSimilarityJoin(hashed, hashed, MAX_DISTANCE, distCol="lsh_distance")
     return (
         joined.where(
             (F.col("datasetA.entity_id") < F.col("datasetB.entity_id"))
@@ -166,12 +176,12 @@ def lsh_candidate_pairs(
     )
 
 
-def _driver_lsh_pairs(rows, max_jaccard_distance: float) -> list | None:
+def _driver_lsh_pairs(rows) -> list | None:
     """Driver-side mirror of the approxSimilarityJoin candidate rule over
     collected ``model.transform`` rows: two rows are candidates iff they
     share at least one (hash-table index, hash value) bucket, and survive
     iff keyDistance = 1 - |A∩B|/|A∪B| over the feature indices is STRICTLY
-    below the threshold (measured: a pair at exactly the threshold is
+    below ``MAX_DISTANCE`` (measured: a pair at exactly the threshold is
     dropped by the Scala join). Same-type and id_a < id_b filters match
     the distributed projection, null rejection included: a row with a
     null id or type pairs with nothing. All inputs (hash values, feature
@@ -215,7 +225,7 @@ def _driver_lsh_pairs(rows, max_jaccard_distance: float) -> list | None:
         inter = len(ia & ib)
         union = len(ia) + len(ib) - inter
         dist = 1.0 - (inter / union) if union else 1.0
-        if dist < max_jaccard_distance:
+        if dist < MAX_DISTANCE:
             out.append((ids[i], ids[j], names[i], names[j],
                         types[i], types[j], dist))
     return out
@@ -264,7 +274,7 @@ def weighted_similarity_col() -> F.Column:
     return F.round(0.4 * name_j + 0.2 * type_eq + 0.2 * alias_j + 0.2 * prop_j, 6)
 
 
-def score_candidates(pairs: DataFrame, name_sim_threshold: float = 0.7) -> DataFrame:
+def score_candidates(pairs: DataFrame, name_sim_threshold: float = NAME_SIM) -> DataFrame:
     """D3 scoring on blocked survivors only."""
     return (
         pairs.withColumn("name_sim", F.round(name_similarity_col(), 6))
@@ -382,8 +392,6 @@ def merge_nodes(nodes: DataFrame, mapping: DataFrame) -> DataFrame:
 def link_entities(
     nodes: DataFrame,
     alias_dict: DataFrame | None = None,
-    lsh_tables: int = 4,
-    name_sim_threshold: float = 0.7,
     model: Callable[[pd.DataFrame], pd.Series] = stub_verify_model,
     log_excluded: bool = False,
 ) -> DataFrame:
@@ -396,10 +404,7 @@ def link_entities(
     LSH skew guard — extraction debris floods buckets quadratically);
     entities beyond the bound are never merged and, with ``log_excluded``,
     their count is logged so the recall trade is visible."""
-    pairs = score_candidates(
-        lsh_candidate_pairs(nodes, num_hash_tables=lsh_tables,
-                            log_excluded=log_excluded),
-        name_sim_threshold)
+    pairs = score_candidates(lsh_candidate_pairs(nodes, log_excluded=log_excluded))
     verified = verify_pairs_batched(pairs, model).where(F.col("is_duplicate"))
     confirmed = verified.select("id_a", "id_b")
     if alias_dict is not None:

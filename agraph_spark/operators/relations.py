@@ -244,12 +244,10 @@ def validate_relations(relations: DataFrame) -> DataFrame:
     )
 
 
-def extract_relations(
-    documents: DataFrame, entities: DataFrame, n_salts=None
-) -> DataFrame:
+def extract_relations(documents: DataFrame, entities: DataFrame) -> DataFrame:
     """E5+E6+E9 composed: validated relation rows."""
-    pat = pattern_relations(extract_relation_candidates(documents), entities, n_salts)
-    coo = cooccurrence_relations(documents, entities, n_salts)
+    pat = pattern_relations(extract_relation_candidates(documents), entities)
+    coo = cooccurrence_relations(documents, entities)
     return validate_relations(pat.unionByName(coo))
 
 

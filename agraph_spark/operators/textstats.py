@@ -21,7 +21,6 @@ def pystrip(col: Column) -> Column:
     return F.regexp_replace(col, _PYSTRIP, "")
 _CJK = r"[一-鿿]"
 _LATIN_WORD = r"[A-Za-z]+(?:'[A-Za-z]+)?"
-_PUNCT = r"[\\.,;:!\\?\\(\\)\\[\\]\\{\\}\"'`~@#$%^&*_+=<>/\\\\|-]"
 
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "but", "in", "on", "at", "to", "for",

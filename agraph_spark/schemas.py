@@ -1,11 +1,10 @@
-"""Canonical StructTypes for every table the engine reads or writes.
+"""StructTypes of the engine's input and of its extraction kernels' outputs.
 
-Spark mapping of the reference data model (SURVEY.md §1.2):
-  Entity   -> nodes   (reference: agraph/entities.py:13-42)
-  Relation -> edges   (FK form of agraph/relations.py:164-187)
-  triple   -> triples ((head.name, relation_type, tail.name) parity surface)
-  TextChunk-> chunks  (agraph/text.py:17-57)
-Input is the transcripts table from BASELINE.json input_hint.
+TRANSCRIPTS is the input table (BASELINE.json input_hint); MENTIONS and
+REL_CANDIDATES are the mapInPandas kernel schemas. The output tables
+(nodes, edges, triples, chunks) take their schema from the operators that
+build them (materialize.py, relations.to_triples, chunking), so there is
+no second copy here to drift.
 """
 
 from __future__ import annotations
@@ -20,14 +19,6 @@ TRANSCRIPTS = T.StructType(
         T.StructField("text", T.StringType(), True),
         T.StructField("tool", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("n_turns", T.IntegerType(), True),
     ]
 )
 
@@ -46,19 +37,6 @@ MENTIONS = T.StructType(
     ]
 )
 
-# deduplicated per-conversation entities (reference deduplicate_entities,
-# agraph/extractors/entity_extractor.py:93-125)
-ENTITIES = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("name_norm", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-        T.StructField("entity_order", T.LongType(), False),
-    ]
-)
-
 # raw (head_text, pred, tail_text) capture-group candidates (E5)
 REL_CANDIDATES = T.StructType(
     [
@@ -69,52 +47,3 @@ REL_CANDIDATES = T.StructType(
     ]
 )
 
-TRIPLES = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("conf", T.DoubleType(), False),
-    ]
-)
-
-CHUNKS = T.StructType(
-    [
-        T.StructField("chunk_id", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("chunk_idx", T.IntegerType(), False),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("chunk_type", T.StringType(), True),
-        T.StructField("start_index", T.IntegerType(), True),
-        T.StructField("end_index", T.IntegerType(), True),
-        T.StructField("token_count", T.IntegerType(), True),
-    ]
-)
-
-NODES = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("name_norm", T.StringType(), False),
-        T.StructField("entity_type", T.StringType(), False),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("aliases", T.ArrayType(T.StringType()), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_mentions", T.LongType(), True),
-        T.StructField("lineage", T.StringType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("edge_id", T.StringType(), False),
-        T.StructField("head_id", T.StringType(), False),
-        T.StructField("tail_id", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("lineage", T.StringType(), True),
-    ]
-)

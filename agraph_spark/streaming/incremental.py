@@ -29,21 +29,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import path_exists
 from ..pipeline import build_kg
 from ..schemas import TRANSCRIPTS
-
-
-def _store_exists(spark: SparkSession, store_dir: str) -> bool:
-    """Store-existence via the Hadoop FileSystem API so HDFS/S3 paths work
-    (os.path.exists only sees the driver-local filesystem); falls back to
-    os.path for sessions without a JVM (e.g. Spark Connect)."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(store_dir)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(hpath))
-    except Exception:
-        return os.path.exists(store_dir)
 
 
 def merge_triples_into_store(
@@ -65,7 +53,7 @@ def merge_triples_into_store(
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     new = new_triples.withColumn("bucket", bucket)
     merged = new
-    if _store_exists(spark, store_dir):
+    if path_exists(spark, store_dir):
         affected = [r.bucket for r in new.select("bucket").distinct().collect()]
         cur = spark.read.parquet(store_dir).where(F.col("bucket").isin(affected))
         merged = cur.unionByName(new.where(F.col("bucket").isin(affected)))

@@ -2,10 +2,11 @@
 and DeprecationWarning raised as errors. An invalid escape such as '\\s'
 in a non-raw string is a warning in Python 3.11 and an error in later
 versions, so it must never reach the tree. Library code leaves the
-session's global state alone."""
+session's global state alone and declares nothing that nothing loads."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import warnings
@@ -13,11 +14,16 @@ import warnings
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_tracked_python_compiles_without_warnings():
+def _tracked_python() -> list[str]:
     files = subprocess.run(
         ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
     ).stdout.split()
     assert files
+    return files
+
+
+def test_tracked_python_compiles_without_warnings():
+    files = _tracked_python()
     bad = []
     for name in files:
         with open(os.path.join(ROOT, name), encoding="utf-8") as fh:
@@ -50,3 +56,41 @@ def test_library_leaves_session_state_alone():
                     if "setCheckpointDir(" in line or ".conf.set(" in line:
                         bad.append(f"{os.path.relpath(path, ROOT)}:{n}: {line.strip()}")
     assert not bad, "\n".join(bad)
+
+
+def test_every_library_name_is_loaded():
+    """Every top-level def, class and assignment in agraph_spark/ is read
+    somewhere in a tracked .py file (a bare name, an attribute or a
+    from-import). A declaration nothing loads is dead weight that drifts
+    from the code it once described."""
+    declared: dict[str, list[str]] = {}
+    loaded: set[str] = set()
+    for name in _tracked_python():
+        with open(os.path.join(ROOT, name), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), name)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                loaded.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                loaded.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                loaded.update(alias.name for alias in node.names)
+        if not name.startswith("agraph_spark/"):
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                targets = [stmt.name]
+            elif isinstance(stmt, ast.Assign):
+                targets = [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+            elif isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+                targets = [stmt.target.id]
+            else:
+                continue
+            for target in targets:
+                declared.setdefault(target, []).append(f"{name}:{stmt.lineno}")
+    unused = sorted(
+        f"{where} {target}"
+        for target, places in declared.items() if target not in loaded
+        for where in places
+    )
+    assert not unused, "\n".join(unused)

@@ -28,7 +28,10 @@ def _nodes(spark, rows):
     )
 
 
-def test_lsh_blocking_finds_near_duplicates(spark):
+def test_lsh_blocking_finds_near_duplicates(spark, monkeypatch):
+    from agraph_spark.operators import linking
+
+    monkeypatch.setattr(linking, "MAX_DISTANCE", 0.7)
     nodes = _nodes(
         spark,
         [
@@ -41,7 +44,7 @@ def test_lsh_blocking_finds_near_duplicates(spark):
             ("zebra", "concept"),
         ],
     )
-    pairs = lsh_candidate_pairs(nodes, max_jaccard_distance=0.7)
+    pairs = lsh_candidate_pairs(nodes)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert ("e0", "e1") in got  # Acme Corp ~ Acme Corp.
     assert ("e0", "e2") in got  # Acme Corp ~ Acme Corporation

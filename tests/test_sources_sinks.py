@@ -131,6 +131,20 @@ def test_graph_store_and_exports(spark):
     assert len(d3["nodes"]) == 2 and d3["links"][0]["type"] == "belongs_to"
 
 
+def test_read_graph_through_filesystem_uri(spark, tmp_path):
+    """A store written at a file:// URI reads back through the same URI:
+    read_graph checks existence through the Hadoop FileSystem, as Spark's
+    own readers resolve the path, not with the driver's os.path."""
+    nodes = spark.createDataFrame([("e1", "Acme")], "entity_id string, name string")
+    edges = spark.createDataFrame([("x1", "e1", "e1", "self")],
+                                  "edge_id string, head_id string, tail_id string, pred string")
+    uri = "file://" + str(tmp_path / "store")
+    write_graph(nodes, edges, uri)
+    back = read_graph(spark, uri)
+    assert set(back) == {"nodes", "edges"}
+    assert back["nodes"].count() == 1 and back["edges"].count() == 1
+
+
 def test_write_graph_json_round_trip(spark, tmp_path):
     """S8: the JSON-lines tables read back as the same rows, with quotes,
     newlines, non-ASCII text and nulls intact."""
