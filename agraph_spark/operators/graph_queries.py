@@ -305,7 +305,7 @@ def all_paths_multi(
     got = adaptive.cutover(
         (raw, tgt), adaptive.GRAPH_ROWS,
         lambda rows, t_rows: _driver_all_paths(
-            rows, start_id, {r.node for r in t_rows}, max_depth, False, True,
+            rows, start_id, {t for (t,) in t_rows}, max_depth, False, True,
             "all_paths_multi"),
         f"target {id_t}, path array<{id_t}>, depth int",
     )

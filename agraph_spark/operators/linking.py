@@ -193,24 +193,25 @@ def _driver_lsh_pairs(rows) -> list | None:
     (5,000 md5-hex names gave 285k pairs). That sum is counted from the
     bucket sizes before any pair is built; above ``adaptive.LSH_PAIRS``
     the mirror returns None and the distributed join runs instead."""
-    # hoist per-row fields out of the pair loops: Row attribute access and
+    # hoist per-row fields out of the pair loops: per-row field access and
     # per-pair set(features.indices) construction dominated the banding on
     # collision-heavy corpora (285k bucket pairs from 5000 random-hex names
     # measured 5.4 s; precomputed, under 1 s — r6b)
     from itertools import combinations
 
-    rows = [r for r in rows if r.entity_id is not None and r.entity_type is not None]
+    # rows: (entity_id, name_norm, entity_type, features, hashes)
+    rows = [r for r in rows if r[0] is not None and r[2] is not None]
     buckets: dict = {}
     for i, r in enumerate(rows):
-        for t, hv in enumerate(r.hashes):
+        for t, hv in enumerate(r[4]):
             buckets.setdefault((t, hv[0]), []).append(i)
     n_pairs = sum(len(m) * (len(m) - 1) // 2 for m in buckets.values())
     if n_pairs > adaptive.LSH_PAIRS:
         return None
-    ids = [r.entity_id for r in rows]
-    types = [r.entity_type for r in rows]
-    names = [r.name_norm for r in rows]
-    idx_sets = [frozenset(r.features.indices) for r in rows]
+    ids = [r[0] for r in rows]
+    types = [r[2] for r in rows]
+    names = [r[1] for r in rows]
+    idx_sets = [frozenset(r[3].indices) for r in rows]
     cand: set = set()
     for members in buckets.values():
         if len(members) < 2:

@@ -38,15 +38,20 @@ def _namespaces(
 def _namespace_topk(
     union: DataFrame, query: DataFrame, threshold: float, k: int | F.Column
 ) -> DataFrame:
-    """Per-namespace top-k over a ``_namespaces`` table: score, keep
-    score >= threshold, rank each namespace by (score desc, item_id asc)
-    into ``rk`` and keep rk <= k (an int, or a Column over namespace)."""
+    """Per-namespace top-k over a ``_namespaces`` table: score, rank each
+    namespace by (score desc, item_id asc) into ``rk``, keep rk <= k (an
+    int, or a Column over namespace) and score >= threshold.
+
+    The threshold applies after the rank: it keeps a prefix of that order
+    (NaN sorts first and passes, null sorts last and fails), so the rows
+    and their ``rk`` are those of filtering first. Before the rank,
+    Catalyst pushed it into the nested-loop join condition and the
+    interpreted cosine ran twice per row."""
     w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
     return (
         cosine_scores(union, query)
-        .where(F.col("score") >= threshold)
         .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where((F.col("rk") <= k) & (F.col("score") >= threshold))
     )
 
 

@@ -253,3 +253,53 @@ def test_word_arrays_are_projected_before_the_lambdas(spark):
         for body in bodies:
             assert "split(" not in body and "regexp_replace(" not in body, (name, body)
             assert re.search(r"slice\(words#\d+", body), (name, body)
+
+
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_memoized_probe_runs_no_job(spark, tmp_path):
+    """adaptive.cutover keeps the rows of a probe over cached data: the
+    second k-hop query on a persisted edge table collects nothing, so it
+    runs no Spark job at all (its result is a local table)."""
+    from agraph_spark.operators.components import bfs_distances
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
+                          "head_id string, tail_id string").write.parquet(path)
+    edges = spark.read.parquet(path).persist()
+    try:
+        assert _jobs(spark, "memo_first", lambda: bfs_distances(edges, "a")) >= 1
+        assert _jobs(spark, "memo_second", lambda: bfs_distances(edges, "b")) == 0
+        edges.unpersist()
+        assert _jobs(spark, "memo_unpersisted", lambda: bfs_distances(edges, "a")) >= 1
+    finally:
+        edges.unpersist()
+
+
+def test_chat_context_scores_each_row_once(spark):
+    """The score threshold applies after the per-namespace rank, so
+    Catalyst cannot push it into the nested-loop join that scores the
+    union: the join has no condition and the interpreted cosine fold runs
+    once per row."""
+    from agraph_spark.operators.retrieval import chat_context
+    from agraph_spark.operators.vectors import embed_hash_stub
+
+    def table(id_col, n):
+        return embed_hash_stub(spark.createDataFrame(
+            [(f"{id_col}{i}", f"text {i}") for i in range(n)],
+            f"{id_col} string, render_text string"))
+
+    q = embed_hash_stub(spark.createDataFrame([("apple",)], "render_text string"))
+    out = chat_context(table("entity_id", 5), table("edge_id", 4), table("chunk_id", 3),
+                       q.select(F.col("embedding").alias("query_vec")), threshold=0.1)
+    details = [d for d in plan_of(out).split("\n\n") if "BroadcastNestedLoopJoin\n" in d]
+    assert len(details) == 1 and "Join condition: None" in details[0], details

@@ -4,15 +4,24 @@ expansion, cosine top-k vs NumPy."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from agraph_spark.operators.retrieval import (
+    _namespace_topk,
+    _namespaces,
     chat_context_hits,
     expand_connected_chunks,
     hybrid_search_chunks,
     search_knowledge,
 )
-from agraph_spark.operators.vectors import ann_topk_lsh, embed_hash_stub, topk_similar
+from agraph_spark.operators.vectors import (
+    ann_topk_lsh,
+    cosine_scores,
+    embed_hash_stub,
+    topk_similar,
+)
 
 
 def test_topk_vs_numpy(spark):
@@ -295,3 +304,54 @@ def test_search_graph_modes(spark):
     import pytest as _pt
     with _pt.raises(ValueError):
         search_graph_modes(nodes, edges, chunks, q, mode="bogus")
+
+
+@pytest.mark.parametrize("dim", [8, 16])
+@pytest.mark.parametrize("text_col", ["render_text", "query text-1"])
+def test_embed_hash_stub_expr_equals_column_build(spark, dim, text_col):
+    """The one-expression build gives the per-component Column build's
+    floats bit for bit, with the same schema, on null, empty and
+    non-ASCII text and on a column name that needs quoting."""
+    texts = [None, "", "apple", "naïve café — 東京 🚀", "a" * 300, "#3"]
+    df = spark.createDataFrame(list(enumerate(texts)), f"id int, `{text_col}` string")
+    comps = [
+        ((F.pmod(F.xxhash64(F.concat(F.col(text_col), F.lit(f"#{i}"))), F.lit(2000)) - 1000)
+         / 1000.0).cast("float")
+        for i in range(dim)
+    ]
+    want = df.withColumn("embedding", F.array(*comps))
+    got = embed_hash_stub(df, text_col=text_col, dim=dim)
+    assert got.schema == want.schema
+
+    def bits(frame):
+        return [(r.id, None if r.embedding is None else
+                 np.array(r.embedding, dtype="float32").tobytes())
+                for r in frame.orderBy("id").collect()]
+    assert bits(got) == bits(want)
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.0, 0.5, 1.1])
+def test_threshold_after_rank_equals_filter_first(spark, threshold):
+    """Filtering score >= threshold after the rank (or after the top-k
+    limit) keeps the rows and ranks of filtering first: tied scores, a
+    zero vector, a NaN score (sorts first, passes) and a null embedding
+    (null score: sorts last, fails) included. Rows compare by repr, as
+    NaN != NaN."""
+    vecs = [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0], [0.6, 0.8, 0.0], [0.0, 1.0, 0.0],
+            [-1.0, 0.0, 0.0], [0.0, 0.0, 0.0], None, [0.6, 0.8, 0.0],
+            [float("nan"), 0.0, 0.0]]
+    rows = [(f"i{j}", v) for j, v in enumerate(vecs)]
+    frame = spark.createDataFrame(rows, "id string, embedding array<float>")
+    query = spark.createDataFrame([([1.0, 0.5, 0.0],)], "query_vec array<float>")
+    tables = [frame.withColumnRenamed("id", c) for c in ("entity_id", "edge_id", "chunk_id")]
+    union = _namespaces(*tables)
+    w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
+    for k in (1, 3, 10):
+        want = (cosine_scores(union, query).where(F.col("score") >= threshold)
+                .withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k))
+        got = _namespace_topk(union, query, threshold, k)
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect())), k
+        want = (cosine_scores(frame, query).where(F.col("score") >= threshold)
+                .orderBy(F.desc("score"), F.asc("id")).limit(k))
+        got = topk_similar(frame, query, k, threshold, "id")
+        assert list(map(repr, got.collect())) == list(map(repr, want.collect())), k
