@@ -16,6 +16,9 @@ measured a wash against the loop, 17k rows won 2.4x). ``LSH_PAIRS``
 bounds the in-bucket pairs the LSH mirror enumerates, which grow with
 the square of bucket size (the same 1M visits as a full rank mirror);
 ``FRONTIER_ROWS`` bounds one level of the cycle and path mirrors.
+``VECTOR_VALUES`` bounds the values (rows x dim) the single-query vector
+top-k mirror (``vectors.driver_topk``) folds; its row budget is
+``VECTOR_VALUES // dim``.
 
 The probe is one bounded collect, ``df.limit(budget + 1).collect()``:
 at most budget + 1 rows reach the driver, and the rows that decide feed
@@ -51,15 +54,27 @@ the cached blocks it was read from: ``unpersist``, ``clearCache`` and
 RDD id and misses. Only complete row sets (at most ``budget`` rows) are
 stored; a hit still applies the caller's budget. Rows are kept and
 handed to every mirror as plain tuples, so mirrors read fields by
-position and must not mutate them. Tuples, not ``Row`` objects: in a
-prototype a memo of Rows raised graph_serving's peak driver RSS by
-~7 MB, and the tuple memo left it at 170.9 MB (median of 10 pairs, both
-sides). Not an Arrow probe either: ``toArrow()`` raised
-transcripts_batch's peak driver RSS by ~2.4 MB.
+position and must not mutate them; their strings are interned, one
+``str`` per distinct value. Tuples, not ``Row`` objects: in a prototype
+a memo of Rows raised graph_serving's peak driver RSS by ~7 MB, and the
+tuple memo left it at 170.9 MB (median of 10 pairs, both sides). Not an
+Arrow probe either: ``toArrow()`` raised transcripts_batch's peak driver
+RSS by ~2.4 MB.
+
+The one exception is the vector top-k probe (``arrow=True``), which
+reads the embedding tables: ~18k rows of 16 floats plus their text on
+graph_serving. It is collected with ``toArrow()`` and the memo keeps the
+pyarrow Table as collected, one chunk per Arrow batch; the mirror reads
+each chunk's values through zero-copy (rows, dim) views. Measured on
+graph_serving's peak driver RSS, parent -> prototype: a memo of tuples
+171 -> 193 MB, the Table after ``combine_chunks()`` 171 -> 177.5 MB,
+the uncombined Table with per-chunk views and interned tuple strings
+170.7 -> 175.5 MB.
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -71,6 +86,7 @@ LINK_ROWS = 100_000
 PAGERANK_ROWS = 100_000
 LSH_PAIRS = 1_000_000
 FRONTIER_ROWS = 2_000_000
+VECTOR_VALUES = 1_000_000
 
 
 def cutover(
@@ -78,17 +94,19 @@ def cutover(
     budget: int,
     mirror: Callable[..., list | None],
     schema,
+    arrow: bool = False,
 ) -> DataFrame | None:
     """Run ``mirror`` on the driver when every ``probe`` frame has at most
-    ``budget`` rows; ``mirror`` gets one list of row tuples per frame
-    and returns the result rows, or None to decline. Returns the rows as a
-    local frame with ``schema`` (a StructType or DDL string), or None when
-    the caller must run its distributed loop."""
+    ``budget`` rows; ``mirror`` gets one list of row tuples per frame (one
+    pyarrow Table per frame with ``arrow``) and returns the result rows,
+    or None to decline. Returns the rows as a local frame with ``schema``
+    (a StructType or DDL string), or None when the caller must run its
+    distributed loop."""
     frames = probe if isinstance(probe, tuple) else (probe,)
     _prune(frames[0].sparkSession.sparkContext)
     collected = []
     for df in frames:
-        rows = _collect(df, budget)
+        rows = _collect(df, budget, arrow)
         if len(rows) > budget:
             return None
         collected.append(rows)
@@ -98,27 +116,35 @@ def cutover(
     return local_df(frames[0].sparkSession, out, schema)
 
 
-# (application id, semantic hash, cached RDD ids) -> [(probe, rows)]
-_MEMO: dict[tuple, list[tuple[DataFrame, list[tuple]]]] = {}
+# (application id, semantic hash, cached RDD ids, arrow) -> [(probe, rows)],
+# rows a list of tuples or, with arrow, a pyarrow Table
+_MEMO: dict[tuple, list[tuple[DataFrame, object]]] = {}
 
 
-def _collect(df: DataFrame, budget: int) -> list[tuple]:
-    """At most budget + 1 rows of ``df``, from the memo when it holds them.
-    Only a probe over loaded caches can hit: a stored probe loaded them.
-    Asking an unbuilt cache for its RDD builds it outside the probe's
-    query, which cost transcripts_batch's LSH probe ~0.2 s wall and
-    ~0.8 s CPU, so a miss reads the RDD ids after its collect."""
+def _collect(df: DataFrame, budget: int, arrow: bool = False):
+    """At most budget + 1 rows of ``df`` (tuples, or one pyarrow Table with
+    ``arrow``), from the memo when it holds them. Only a probe over loaded
+    caches can hit: a stored probe loaded them. Asking an unbuilt cache
+    for its RDD builds it outside the probe's query, which cost
+    transcripts_batch's LSH probe ~0.2 s wall and ~0.8 s CPU, so a miss
+    reads the RDD ids after its collect. Tuple strings are interned: the
+    k-hop adjacency repeats 2,145 ids over 31,358 rows."""
     leaves = _cached_leaves(df)
     key = None
     if leaves is not None and all(
             leaf.cacheBuilder().isCachedColumnBuffersLoaded() for leaf in leaves):
-        key = _memo_key(df, leaves)
+        key = _memo_key(df, leaves, arrow)
         for seen, rows in _MEMO.get(key, ()):
             if seen.sameSemantics(df):
                 return rows
-    rows = [tuple(r) for r in df.limit(budget + 1).collect()]
+    if arrow:
+        rows = df.limit(budget + 1).toArrow()
+    else:
+        rows = df.limit(budget + 1).collect()
+        for i, row in enumerate(rows):  # in place: no second list of Rows
+            rows[i] = tuple([sys.intern(v) if type(v) is str else v for v in row])
     if leaves is not None and len(rows) <= budget:
-        _MEMO.setdefault(key or _memo_key(df, leaves), []).append((df, rows))
+        _MEMO.setdefault(key or _memo_key(df, leaves, arrow), []).append((df, rows))
     return rows
 
 
@@ -139,12 +165,12 @@ def _cached_leaves(df: DataFrame) -> list | None:
     return leaves
 
 
-def _memo_key(df: DataFrame, leaves: list) -> tuple:
-    """(application id, semantic hash, cached RDD ids) of a probe whose
-    ``_cached_leaves`` are ``leaves``."""
+def _memo_key(df: DataFrame, leaves: list, arrow: bool) -> tuple:
+    """(application id, semantic hash, cached RDD ids, arrow) of a probe
+    whose ``_cached_leaves`` are ``leaves``."""
     rdd_ids = {leaf.cacheBuilder().cachedColumnBuffers().id() for leaf in leaves}
     app = df.sparkSession.sparkContext.applicationId
-    return app, df.semanticHash(), tuple(sorted(rdd_ids))
+    return app, df.semanticHash(), tuple(sorted(rdd_ids)), arrow
 
 
 def _prune(sc) -> None:

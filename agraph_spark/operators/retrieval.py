@@ -5,6 +5,8 @@ knowledge_retriever.py) runs three parallel brute-force vector searches
 (entities/relations/chunks) and optionally expands to connected chunks.
 Spark restatement: one scored scan per namespace (or a single union-table
 pass), window top-k, and the expansion as a join over chunk link arrays.
+A top-k within ``adaptive.VECTOR_VALUES`` runs as the reference's scan
+does, on the driver (``vectors.driver_topk``).
 The final RAG answer-generation call stays driver-side by design (single
 query, network-bound) — out of engine scope (SURVEY.md V10).
 """
@@ -14,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .vectors import cosine_scores, topk_similar
+from .vectors import cosine_scores, driver_topk, topk_similar
 
 
 def _namespaces(
@@ -36,17 +38,24 @@ def _namespaces(
 
 
 def _namespace_topk(
-    union: DataFrame, query: DataFrame, threshold: float, k: int | F.Column
+    union: DataFrame, query: DataFrame, threshold: float, k: int | dict[str, int]
 ) -> DataFrame:
     """Per-namespace top-k over a ``_namespaces`` table: score, rank each
     namespace by (score desc, item_id asc) into ``rk``, keep rk <= k (an
-    int, or a Column over namespace) and score >= threshold.
+    int, or a dict namespace -> k; a namespace it lacks keeps nothing) and
+    score >= threshold. ``vectors.driver_topk`` serves it when it can
+    reproduce the window plan's rows.
 
     The threshold applies after the rank: it keeps a prefix of that order
     (NaN sorts first and passes, null sorts last and fails), so the rows
     and their ``rk`` are those of filtering first. Before the rank,
     Catalyst pushed it into the nested-loop join condition and the
     interpreted cosine ran twice per row."""
+    local = driver_topk(union, query, k, threshold, "item_id", group_col="namespace")
+    if local is not None:
+        return local
+    if isinstance(k, dict):
+        k = F.create_map(*[F.lit(x) for item in k.items() for x in item])[F.col("namespace")]
     w = Window.partitionBy("namespace").orderBy(F.desc("score"), F.asc("item_id"))
     return (
         cosine_scores(union, query)
@@ -307,8 +316,11 @@ def chat_context(
     entities (V9 expansion) join the text_chunk set — relevance-scored,
     deduplicated against the direct hits, ranked after them.
 
-    All assembly is distributed: one scored union pass, window top-k,
-    to_json over collected structs — no driver-side loops."""
+    The per-namespace top-k runs on the driver when ``vectors.driver_topk``
+    can reproduce it (one numpy pass over the memoized union, at most k
+    rows per namespace back as a local frame), else as one scored union
+    pass with a window top-k; the JSON is assembled in Spark, to_json
+    over collected structs."""
     hits = chat_context_hits(
         nodes, edges_rendered, chunks, query,
         k_entities=k_entities, k_relations=k_relations, k_chunks=k_chunks,
@@ -372,19 +384,15 @@ def chat_context_hits(
     chunk_entity_links: DataFrame | None = None,
     k_connected: int = 5,
 ) -> DataFrame:
-    """The distributed hit table chat_context assembles its JSON from:
+    """The hit table chat_context assembles its JSON from:
     (item_id, namespace, content, score, rk, line) — per-namespace
     DISTINCT top-k (the k_map window), threshold filter, optional enhanced
     connected-chunk expansion, and the reference's rendered 文本片段 line
     for text_chunk hits. Exposed so the oracle gate can certify the
     assembly row-by-row (v10_chat_ctx_md5) without the JSON wrapper."""
     u = _namespaces(nodes, edges_rendered, chunks, F.col(content_col).alias("content"))
-    k_map = F.create_map(
-        F.lit("entity"), F.lit(k_entities),
-        F.lit("relation"), F.lit(k_relations),
-        F.lit("text_chunk"), F.lit(k_chunks),
-    )
-    hits = _namespace_topk(u, query, threshold, k_map[F.col("namespace")]).select(
+    k_map = {"entity": k_entities, "relation": k_relations, "text_chunk": k_chunks}
+    hits = _namespace_topk(u, query, threshold, k_map).select(
         "item_id", "namespace", "content", "score", "rk"
     )
     if chunk_entity_links is not None:

@@ -1,18 +1,27 @@
 """Embedding / vector retrieval operators (SURVEY.md §2.8, V1-V7) plus the
 scale-path ANN variants a 100 TB training-data pipeline needs.
 
-All similarity math is JVM-side column expressions over ``array<float>``
-(``zip_with`` + ``aggregate``) — no Python in the hot path. The folds are
+Distributed similarity math is JVM-side column expressions over
+``array<float>`` (``zip_with`` + ``aggregate``). The folds are
 higher-order functions, which run interpreted (CodegenFallback), so
 pairwise operators hoist per-vector work out of the pair expression
-(``cosine_hoisted``). Reference: brute force over a dict of np arrays
+(``cosine_hoisted``). A single-query top-k over at most
+``adaptive.VECTOR_VALUES`` values (rows x dim) runs on the driver instead
+(``driver_topk``): numpy folds the same cosine column by column, as the
+reference scans a dict of np arrays
 (/root/reference/agraph/storage/vector_storage.py:310-353).
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from . import adaptive
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -56,10 +65,11 @@ def cosine_scores(
 ) -> DataFrame:
     """Score every row against a single query vector (1-row DataFrame,
     broadcast by Catalyst). V4 minus the top-k cut, and the one scorer
-    behind every single-query search (topk_similar, the ANN reranks,
-    retrieval.py). r6c: norms hoisted (see cosine_hoisted) — query norm
-    once in the broadcast frame, row norm once per row; scores
-    bitwise-identical to the inline cosine."""
+    in every single-query search's Spark plan (topk_similar, the ANN
+    reranks, retrieval.py); ``driver_topk`` reproduces its floats. r6c:
+    norms hoisted (see cosine_hoisted) — query norm once in the broadcast
+    frame, row norm once per row; scores bitwise-identical to the inline
+    cosine."""
     q = F.broadcast(
         query.withColumn("_nq", norm(F.col(query_col).cast("array<double>")))
     )
@@ -91,13 +101,139 @@ def topk_similar(
     small sort — the right plan for a single query at any scale. The
     threshold keeps a prefix of the order, so filtering after the limit
     gives the rows of filtering first without scoring each row twice
-    (see retrieval._namespace_topk)."""
+    (see retrieval._namespace_topk). Served by ``driver_topk`` when it
+    can reproduce the plan's rows."""
+    local = driver_topk(embeddings, query, k, threshold, id_col)
+    if local is not None:
+        return local
     scored = cosine_scores(embeddings, query)
     return (
         scored.orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
         .where(F.col("score") >= threshold)
     )
+
+
+def driver_topk(
+    frame: DataFrame,
+    query: DataFrame,
+    k: int | dict,
+    threshold: float,
+    id_col: str,
+    group_col: str | None = None,
+) -> DataFrame | None:
+    """The rows of ``cosine_scores(frame, query)`` ranked by (score desc,
+    id asc), cut to the top ``k`` and then to score >= threshold, as a
+    local frame in rank order, or None when the caller must run its plan.
+    With ``group_col`` the cut is per group, ``k`` may map group -> k (a
+    group it lacks keeps nothing) and each row carries its 1-based rank
+    ``rk``, the window plan's row_number.
+
+    ``frame`` is collected by ``adaptive.cutover`` as a pyarrow Table
+    under ``adaptive.VECTOR_VALUES // dim`` rows, once per cache over
+    persisted data. The cosine folds the columns left to right in double,
+    as ``cosine_hoisted``'s aggregate does, so the scores are bitwise
+    equal. Declines, keeping Spark's three-valued nulls, zip_with padding
+    and NaN-first order, unless ``query`` is one row of one non-empty
+    float array (its only column, ``query_vec``), every ``embedding`` is
+    a non-null float array of that length and every score is finite."""
+    cols = set(frame.columns)
+    ks = list(k.values()) if isinstance(k, dict) else [k]
+    if (min(ks, default=0) < 0 or query.columns != ["query_vec"]
+            or not {"embedding", id_col, group_col or id_col} <= cols
+            or cols & {"score", "rk", "_na", "_nq", "query_vec"}):
+        return None
+    got = query.select("query_vec").limit(2).collect()
+    if len(got) != 1 or not got[0][0] or any(type(x) is not float for x in got[0][0]):
+        return None
+    q = list(got[0][0])
+    fields = [*frame.schema.fields, StructField("score", DoubleType(), True)]
+    if group_col is not None:
+        fields.append(StructField("rk", IntegerType(), False))
+    return adaptive.cutover(
+        frame, adaptive.VECTOR_VALUES // len(q),
+        lambda table: _topk_rows(table, q, k, threshold, id_col, group_col),
+        StructType(fields), arrow=True,
+    )
+
+
+def _topk_rows(table, q, k, threshold, id_col, group_col) -> list | None:
+    """``driver_topk``'s mirror over the collected pyarrow ``table``. It
+    reads the few rows it returns one value at a time: ``take`` on a
+    chunked table copies every chunk first (~2 MB of peak RSS at the
+    first chat query)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = table.column(id_col)
+    if not (pa.types.is_string(ids.type) or pa.types.is_integer(ids.type)):
+        return None  # Python orders these as Spark does
+    scores = _cosine_fold(table.column("embedding"), q)
+    if scores is None:
+        return None
+    if group_col is None:
+        groups = [(None, np.arange(len(scores)))]
+    else:
+        g = table.column(group_col)
+        if g.null_count:
+            return None
+        groups = [(v, np.flatnonzero(pc.equal(g, v).to_numpy()))
+                  for v in pc.unique(g).to_pylist()]
+    picked = []
+    for v, idx in groups:
+        kv = k.get(v) if isinstance(k, dict) else k
+        if not kv or not len(idx):
+            continue
+        s = scores[idx]
+        cut = len(s) - min(kv, len(s))
+        cand = idx[s >= np.partition(s, cut)[cut]].tolist()  # the top kv and ties at the cut
+        key = {i: (-scores[i], ids[i].is_valid, ids[i].as_py()) for i in cand}  # nulls first
+        top = sorted(cand, key=key.__getitem__)[:kv]
+        # the threshold keeps a prefix, as the scores descend
+        picked += [(i, rk) for rk, i in enumerate(top, 1) if scores[i] >= threshold]
+    rows = [(*(c[i].as_py() for c in table.columns), float(scores[i]), rk) for i, rk in picked]
+    return rows if group_col is not None else [row[:-1] for row in rows]
+
+
+def _cosine_fold(vectors, q: list[float]) -> np.ndarray | None:
+    """``cosine_hoisted`` of each row of ``vectors`` (a pyarrow list
+    column) against ``q``, bit for bit: both norms and the dot fold from
+    0.0 left to right in double, one column at a time over zero-copy
+    (rows, dim) views of each chunk. None on a null, ragged or
+    non-float row and on a non-finite or negative-zero score."""
+    import pyarrow as pa
+
+    t = vectors.type
+    if not ((pa.types.is_list(t) or pa.types.is_large_list(t))
+            and pa.types.is_floating(t.value_type) and not pa.types.is_float16(t.value_type)):
+        return None
+    dim = len(q)
+    nq = 0.0
+    for x in q:
+        nq = nq + x * x
+    nq = math.sqrt(nq)
+    parts = []
+    for chunk in vectors.chunks:
+        m = len(chunk)
+        offsets = chunk.offsets.to_numpy()
+        if chunk.null_count or (np.diff(offsets) != dim).any():
+            return None
+        values = chunk.values.slice(int(offsets[0]), m * dim)
+        if values.null_count:
+            return None
+        rows = values.to_numpy().reshape(m, dim)
+        dot, sq = np.zeros(m), np.zeros(m)
+        for i in range(dim):
+            x = rows[:, i].astype(np.float64)
+            dot = dot + x * q[i]
+            sq = sq + x * x
+        na = np.sqrt(sq)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            parts.append(np.where((na == 0) | (nq == 0), 0.0, dot / (na * nq)))
+    scores = np.concatenate(parts) if parts else np.zeros(0)
+    if not np.isfinite(scores).all() or np.signbit(scores[scores == 0]).any():
+        return None
+    return scores
 
 
 def hyperplane_lsh_bucket(

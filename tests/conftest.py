@@ -31,10 +31,12 @@ def forced_path():
             ...
 
     "driver" lifts every budget, "distributed" sets every budget below
-    any probe count, and "default" keeps the shipped budgets."""
+    any probe count, and "default" keeps the shipped budgets. The budgets
+    are adaptive's upper-case int constants."""
     from agraph_spark.operators import adaptive
 
-    budgets = ("GRAPH_ROWS", "LINK_ROWS", "PAGERANK_ROWS", "LSH_PAIRS", "FRONTIER_ROWS")
+    budgets = [name for name, value in vars(adaptive).items()
+               if name.isupper() and type(value) is int]
 
     @contextlib.contextmanager
     def force(path: str):

@@ -120,7 +120,7 @@ def test_forced_paths_equal_with_cap_engaged(spark, forced_path, graph):
 
 def _key(df):
     leaves = adaptive._cached_leaves(df)
-    return None if leaves is None else adaptive._memo_key(df, leaves)
+    return None if leaves is None else adaptive._memo_key(df, leaves, False)
 
 
 def _entries(df):
@@ -164,8 +164,8 @@ def test_memoized_driver_call_equals_forced_distributed(spark, forced_path, grap
     real = adaptive._collect
     try:
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(adaptive, "_collect", lambda df, budget: probes.append(
-                _hit(df)) or real(df, budget))
+            mp.setattr(adaptive, "_collect", lambda df, budget, arrow=False: probes.append(
+                _hit(df)) or real(df, budget, arrow))
             for name, op in ops.items():
                 with forced_path("driver"):
                     first = _result(op())
@@ -196,6 +196,27 @@ def test_unpersisted_source_misses_memo(spark, tmp_path):
     assert _key(edges)[2] != key[2] and not _hit(edges)
     assert _bfs(edges) == want and _entries(edges)
     edges.unpersist()
+
+
+def test_memoized_adjacency_shares_one_str_per_id(spark, forced_path, tmp_path):
+    """Memoized tuple rows hold one interned ``str`` per distinct value:
+    equal ids in the k-hop adjacency are the same object, and the k-hop
+    rows equal those of the distributed loop."""
+    pairs = [(f"node-{i % 7}", f"node-{i * 3 % 11}") for i in range(40)]
+    edges = _edge_store(spark, str(tmp_path / "e"), pairs)
+    try:
+        with forced_path("driver"):
+            got = _result(A.k_hop_neighbors(edges, "node-0", k=2))
+        (key,) = _entries(edges)
+        ((_, rows),) = adaptive._MEMO[key]
+        first = {}
+        for value in (v for row in rows for v in row):
+            assert first.setdefault(value, value) is value
+        assert len(first) < 2 * len(rows)
+        with forced_path("distributed"):
+            assert _result(A.k_hop_neighbors(edges, "node-0", k=2)) == got
+    finally:
+        edges.unpersist()
 
 
 def test_overwritten_and_repersisted_source_gives_new_rows(spark, tmp_path):

@@ -94,3 +94,24 @@ def test_every_library_name_is_loaded():
         for where in places
     )
     assert not unused, "\n".join(unused)
+
+
+def test_forced_path_covers_every_cutover_budget(forced_path):
+    """Every upper-case int constant assigned in adaptive.py is a cutover
+    budget, and the forced_path fixture (tests/conftest.py) forces each
+    of them: a budget it missed would keep its shipped value and leave
+    that site's forced-path tests on the default path."""
+    from agraph_spark.operators import adaptive
+
+    path = os.path.join(ROOT, "agraph_spark", "operators", "adaptive.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    budgets = {target.id for stmt in tree.body if isinstance(stmt, ast.Assign)
+               and isinstance(stmt.value, ast.Constant) and type(stmt.value.value) is int
+               for target in stmt.targets
+               if isinstance(target, ast.Name) and target.id.isupper()}
+    assert "VECTOR_VALUES" in budgets and "GRAPH_ROWS" in budgets
+    for side, want in (("driver", 10**9), ("distributed", -1)):
+        with forced_path(side):
+            assert {name: getattr(adaptive, name) for name in budgets} == dict.fromkeys(
+                budgets, want), side

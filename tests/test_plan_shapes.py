@@ -285,11 +285,11 @@ def test_memoized_probe_runs_no_job(spark, tmp_path):
         edges.unpersist()
 
 
-def test_chat_context_scores_each_row_once(spark):
-    """The score threshold applies after the per-namespace rank, so
-    Catalyst cannot push it into the nested-loop join that scores the
-    union: the join has no condition and the interpreted cosine fold runs
-    once per row."""
+def test_chat_context_scores_each_row_once(spark, forced_path):
+    """On the distributed path the score threshold applies after the
+    per-namespace rank, so Catalyst cannot push it into the nested-loop
+    join that scores the union: the join has no condition and the
+    interpreted cosine fold runs once per row."""
     from agraph_spark.operators.retrieval import chat_context
     from agraph_spark.operators.vectors import embed_hash_stub
 
@@ -299,7 +299,41 @@ def test_chat_context_scores_each_row_once(spark):
             f"{id_col} string, render_text string"))
 
     q = embed_hash_stub(spark.createDataFrame([("apple",)], "render_text string"))
-    out = chat_context(table("entity_id", 5), table("edge_id", 4), table("chunk_id", 3),
-                       q.select(F.col("embedding").alias("query_vec")), threshold=0.1)
+    with forced_path("distributed"):
+        out = chat_context(table("entity_id", 5), table("edge_id", 4), table("chunk_id", 3),
+                           q.select(F.col("embedding").alias("query_vec")), threshold=0.1)
     details = [d for d in plan_of(out).split("\n\n") if "BroadcastNestedLoopJoin\n" in d]
     assert len(details) == 1 and "Join condition: None" in details[0], details
+
+
+def test_second_chat_context_runs_only_the_assembly(spark):
+    """vectors.driver_topk collects the persisted embedding tables once, as
+    an Arrow table the cutover memo keeps: a second chat_context builds
+    without a Spark job, and its plan reads only the local top-k rows, so
+    no job of its collect scans an embedding cache."""
+    from agraph_spark.operators.retrieval import chat_context
+    from agraph_spark.operators.vectors import embed_hash_stub
+    from agraph_spark.session import local_df
+
+    def table(id_col, n):
+        return embed_hash_stub(spark.createDataFrame(
+            [(f"{id_col}{i}", f"text {i}") for i in range(n)],
+            f"{id_col} string, render_text string")).persist()
+
+    def query(text):
+        q = embed_hash_stub(local_df(spark, [(text,)], "render_text string"))
+        return q.select(F.col("embedding").alias("query_vec"))
+
+    tables = (table("entity_id", 6), table("edge_id", 5), table("chunk_id", 4))
+    try:
+        first = _jobs(spark, "chat_first",
+                      lambda: chat_context(*tables, query("apple"), threshold=-1.0).collect())
+        out = []
+        assert _jobs(spark, "chat_second_build", lambda: out.append(
+            chat_context(*tables, query("pear"), threshold=-1.0))) == 0
+        assert "InMemory" not in plan_of(out[0])
+        second = _jobs(spark, "chat_second_collect", out[0].collect)
+        assert 1 <= second < first, (first, second)
+    finally:
+        for t in tables:
+            t.unpersist()

@@ -7,15 +7,19 @@ import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField
 
 from agraph_spark.operators.retrieval import (
     _namespace_topk,
     _namespaces,
+    chat_context,
     chat_context_hits,
     expand_connected_chunks,
     hybrid_search_chunks,
+    search_graph_modes,
     search_knowledge,
 )
+from agraph_spark.session import local_df
 from agraph_spark.operators.vectors import (
     ann_topk_lsh,
     cosine_scores,
@@ -330,16 +334,34 @@ def test_embed_hash_stub_expr_equals_column_build(spark, dim, text_col):
     assert bits(got) == bits(want)
 
 
+VECS = [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0], [0.6, 0.8, 0.0], [0.0, 1.0, 0.0],
+        [-1.0, 0.0, 0.0], [0.0, 0.0, 0.0], [0.6, 0.8, 0.0], [-0.5, -0.5, 0.1],
+        [0.3, -0.2, 0.9]]
+
+
+def _local(df) -> bool:
+    """Whether ``df`` is the driver mirror's local frame."""
+    return "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 @pytest.mark.parametrize("threshold", [-1.0, 0.0, 0.5, 1.1])
 def test_threshold_after_rank_equals_filter_first(spark, threshold):
     """Filtering score >= threshold after the rank (or after the top-k
     limit) keeps the rows and ranks of filtering first: tied scores, a
     zero vector, a NaN score (sorts first, passes) and a null embedding
     (null score: sorts last, fails) included. Rows compare by repr, as
-    NaN != NaN."""
-    vecs = [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0], [0.6, 0.8, 0.0], [0.0, 1.0, 0.0],
-            [-1.0, 0.0, 0.0], [0.0, 0.0, 0.0], None, [0.6, 0.8, 0.0],
-            [float("nan"), 0.0, 0.0]]
+    NaN != NaN. The null and NaN rows make the driver mirror decline."""
+    vecs = VECS[:6] + [None, VECS[6], [float("nan"), 0.0, 0.0]]
+    _threshold_after_rank(spark, threshold, vecs, served=False)
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.0, 0.5, 1.1])
+def test_threshold_after_rank_equals_filter_first_null_free(spark, threshold):
+    """The same on null-free rows, which the driver mirror serves."""
+    _threshold_after_rank(spark, threshold, VECS, served=True)
+
+
+def _threshold_after_rank(spark, threshold, vecs, served):
     rows = [(f"i{j}", v) for j, v in enumerate(vecs)]
     frame = spark.createDataFrame(rows, "id string, embedding array<float>")
     query = spark.createDataFrame([([1.0, 0.5, 0.0],)], "query_vec array<float>")
@@ -350,8 +372,156 @@ def test_threshold_after_rank_equals_filter_first(spark, threshold):
         want = (cosine_scores(union, query).where(F.col("score") >= threshold)
                 .withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k))
         got = _namespace_topk(union, query, threshold, k)
+        assert _local(got) == served
         assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect())), k
         want = (cosine_scores(frame, query).where(F.col("score") >= threshold)
                 .orderBy(F.desc("score"), F.asc("id")).limit(k))
         got = topk_similar(frame, query, k, threshold, "id")
+        assert _local(got) == served
         assert list(map(repr, got.collect())) == list(map(repr, want.collect())), k
+
+
+def _serving_tables(spark, id_type, vec_type, vecs=VECS):
+    """nodes, edges (with head_id/tail_id), chunks and chunk-entity links
+    over ``vecs``: tied rows, a zero vector and negative scores, 9/7/4
+    rows per namespace, long ids (40-char strings or ids past 2^40)."""
+    def ident(prefix, j):
+        return (f"{prefix}-{'x' * 38}{j}" if id_type == "string"
+                else {"e": 1 << 40, "r": 1 << 41, "c": 1 << 42}[prefix] - 7 * j)
+
+    def table(prefix, id_col, n, extra=lambda j: ()):
+        return local_df(
+            spark,
+            [(ident(prefix, j), *extra(j), f"{prefix} text {j}", vecs[(j * 4) % len(vecs)])
+             for j in range(n)],
+            f"{id_col} {id_type}, " + "".join(f"{c} {id_type}, " for c in (
+                ["head_id", "tail_id"] if id_col == "edge_id" else []))
+            + f"render_text string, embedding array<{vec_type}>")
+
+    nodes = table("e", "entity_id", len(vecs))
+    edges = table("r", "edge_id", 7, lambda j: (ident("e", j), ident("e", (j * 2 + 1) % 9)))
+    chunks = table("c", "chunk_id", 4)
+    links = local_df(
+        spark, [(ident("c", j % 4), ident("e", j)) for j in range(9)],
+        f"chunk_id {id_type}, entity_id {id_type}")
+    return nodes, edges, chunks, links
+
+
+def _vector_sites(tables, query, k, threshold, modes=("naive", "local", "global", "hybrid")):
+    """Every single-query top-k caller, as name -> (build, ordered)."""
+    nodes, edges, chunks, links = tables
+    union = _namespaces(nodes, edges, chunks, F.col("render_text").alias("content"))
+    sites = {
+        "namespace_topk": (lambda: _namespace_topk(union, query, threshold, k), False),
+        "topk_similar": (lambda: topk_similar(edges, query, k, threshold, "edge_id"), True),
+        "search_knowledge": (lambda: search_knowledge(
+            nodes, edges, chunks, query, k=k, threshold=threshold), False),
+        "chat_context": (lambda: chat_context(
+            nodes, edges, chunks, query, k_entities=k, k_relations=2, k_chunks=k + 1,
+            threshold=threshold, chunk_entity_links=links), True),
+    }
+    for mode in modes:
+        sites[mode] = (lambda mode=mode: search_graph_modes(
+            nodes, edges, chunks, query, mode=mode, k=k,
+            chunk_entity_links=links, threshold=threshold), False)
+    return sites
+
+
+def _outcomes(sites, names=None):
+    """name -> (schema, rows as repr), rows sorted unless ordered."""
+    out = {}
+    for name, (build, ordered) in sites.items():
+        if names is None or name in names:
+            df = build()
+            rows = list(map(repr, df.collect()))
+            out[name] = df.schema, rows if ordered else sorted(rows)
+    return out
+
+
+@pytest.mark.parametrize("id_type,vec_type", [("string", "float"), ("bigint", "double")])
+def test_forced_driver_topk_equals_forced_distributed(spark, forced_path, id_type, vec_type):
+    """vectors.driver_topk gives the window/limit plan's schema (``rk`` a
+    non-null int) and rows, in topk_similar's order and, for
+    chat_context, the same JSON string, at every site that calls it:
+    ties, a zero vector, negative scores, k above a namespace's size and
+    thresholds below, at and above the scores. The graph modes run at
+    two of the four settings."""
+    from agraph_spark.operators import vectors
+
+    tables = _serving_tables(spark, id_type, vec_type)
+    query = local_df(spark, [([1.0, 0.5, 0.0],)], f"query_vec array<{vec_type}>")
+    served = []
+    real = vectors._topk_rows
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(vectors, "_topk_rows", lambda *a: served.append(real(*a)) or served[-1])
+        for threshold, k, modes in ((-1.0, 10, ("naive", "local", "global", "hybrid")),
+                                    (0.0, 3, ()), (0.5, 1, ("local", "hybrid")), (1.1, 3, ())):
+            sites = _vector_sites(tables, query, k, threshold, modes)
+            with forced_path("driver"):
+                driver = _outcomes(sites)
+            assert served and all(rows is not None for rows in served)
+            del served[:]
+            with forced_path("distributed"):
+                dist = _outcomes(sites)
+            assert not served
+            assert driver == dist, (threshold, k)
+            assert [f for f in driver["namespace_topk"][0] if f.name == "rk"] == [
+                StructField("rk", IntegerType(), False)]
+    json_rows = driver["chat_context"][1]
+    assert len(json_rows) == 1 and '"text_chunks"' in json_rows[0]
+
+
+@pytest.mark.parametrize("vec_type", ["float", "double"])
+def test_driver_scores_bitwise_equal_distributed(spark, forced_path, vec_type):
+    """The driver fold gives every score of the JVM fold bit for bit on
+    random 16-dim vectors, where a reordered sum (a BLAS dot, a pairwise
+    sum) moves the last bits."""
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((300, 16)).astype({"float": "float32", "double": "float64"}[vec_type])
+    df = local_df(spark, [(i, v.tolist()) for i, v in enumerate(vecs)],
+                  f"vec_id long, embedding array<{vec_type}>")
+    q = local_df(spark, [(rng.standard_normal(16).tolist(),)], "query_vec array<double>")
+    with forced_path("driver"):
+        driver = topk_similar(df, q, k=300, threshold=-1.0)
+        assert _local(driver)
+        driver = [(r.vec_id, r.score.hex()) for r in driver.collect()]
+    with forced_path("distributed"):
+        dist = [(r.vec_id, r.score.hex()) for r in topk_similar(df, q, k=300, threshold=-1.0).collect()]
+    assert driver == dist
+
+
+@pytest.mark.parametrize("bad", ["null", "ragged", "nan", "null-element"])
+def test_driver_topk_declines_what_it_cannot_reproduce(spark, forced_path, bad):
+    """A null, ragged, NaN-scored or null-element row makes the mirror
+    decline, and the window/limit plan answers."""
+    from agraph_spark.operators import vectors
+
+    row = {"null": None, "ragged": [1.0, 0.5], "nan": [float("nan"), 0.0, 0.0],
+           "null-element": [1.0, None, 0.0]}[bad]
+    tables = _serving_tables(spark, "string", "float", VECS[:4] + [row] + VECS[5:])
+    query = local_df(spark, [([1.0, 0.5, 0.0],)], "query_vec array<float>")
+    served = []
+    real = vectors._topk_rows
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(vectors, "_topk_rows", lambda *a: served.append(real(*a)) or served[-1])
+        sites = _vector_sites(tables, query, 3, -1.0, modes=("naive",))
+        with forced_path("driver"):
+            driver = _outcomes(sites, ("namespace_topk", "naive"))
+    assert served and all(rows is None for rows in served)
+    with forced_path("distributed"):
+        assert driver == _outcomes(sites, ("namespace_topk", "naive"))
+
+
+def test_driver_topk_declines_a_query_it_cannot_reproduce(spark, forced_path):
+    """A query of two rows, with an extra column or with a null element
+    runs the window/limit plan."""
+    from agraph_spark.operators.vectors import driver_topk
+
+    nodes = _serving_tables(spark, "string", "float")[0]
+    for query in (
+        spark.createDataFrame([([1.0, 0.0, 0.0],), ([0.0, 1.0, 0.0],)], "query_vec array<float>"),
+        spark.createDataFrame([("q", [1.0, 0.0, 0.0])], "qid string, query_vec array<float>"),
+        spark.createDataFrame([([1.0, None, 0.0],)], "query_vec array<float>"),
+    ):
+        with forced_path("driver"):
+            assert driver_topk(nodes, query, 3, 0.0, "entity_id") is None
