@@ -114,11 +114,11 @@ def read_all_triples(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def finalize_graph(spark: SparkSession, out_dir: str, alias_dict=None, link=True):
     """Batches -> global nodes/edges written next to the triples."""
+    from .io import write_graph
     from .materialize import materialize_graph
 
     triples = read_all_triples(spark, out_dir)
     entities = spark.read.parquet(os.path.join(out_dir, "entities"))
     nodes, edges = materialize_graph(entities, triples, alias_dict=alias_dict, link=link)
-    nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
-    edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
+    write_graph(nodes, edges, out_dir)
     return nodes, edges

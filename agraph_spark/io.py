@@ -1,11 +1,9 @@
 """Sources & sinks (SURVEY.md §2.1).
 
 - S5/S8: graph store — nodes/edges as parquet directories (one table
-  each, the layout Iceberg would use; writers take an optional
-  ``fmt="iceberg"`` that engages ``saveAsTable`` when an Iceberg catalog is
-  configured — this container has none, so parquet is the tested path and
-  the layout is identical). Paths may be URIs (``file://``, ``hdfs://``,
-  ``s3a://``): existence is checked through the Hadoop FileSystem.
+  each, the layout an Iceberg table would use). Paths may be URIs
+  (``file://``, ``hdfs://``, ``s3a://``): existence is checked through
+  the Hadoop FileSystem.
 - S7: GraphML / Cytoscape.js / D3 exports — display-format serializers,
   driver-side over collected rows BY DESIGN (visualization output is
   human-scale; anything big enough to need distribution shouldn't be
@@ -50,13 +48,10 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str,
-                fmt: str = "parquet") -> None:
+def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
+    """Parquet graph store: ``out_dir/nodes`` and ``out_dir/edges``."""
     for name, df in (("nodes", nodes), ("edges", edges)):
-        if fmt == "iceberg":
-            df.writeTo(f"{out_dir}.{name}").createOrReplace()
-        else:
-            df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
 
 
 def read_graph(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

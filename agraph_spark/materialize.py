@@ -1,5 +1,5 @@
 """Global graph materialization: per-conversation extraction -> deduplicated
-nodes/edges tables with content-hash ids and lineage.
+nodes/edges tables with content-hash ids.
 
 Reference semantics: the LLM path derives idempotent ids from content
 hashes (entity id = "entity_" + md5(name)[:8],
@@ -47,7 +47,6 @@ def build_nodes(entities: DataFrame) -> DataFrame:
             "confidence",
             F.lit("text_extraction").alias("source"),
             "n_mentions",
-            F.lit("").alias("lineage"),
         )
     )
 
@@ -65,7 +64,6 @@ def build_edges(triples: DataFrame) -> DataFrame:
             "confidence",
             F.lit("text_extraction").alias("source"),
             "n_support",
-            F.lit("").alias("lineage"),
         )
     )
 

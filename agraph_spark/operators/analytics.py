@@ -103,7 +103,7 @@ def top_central(nodes: DataFrame, edges: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def k_hop_neighbors(edges: DataFrame, start_id: str, k: int = 2, undirected: bool = True) -> DataFrame:
+def k_hop_neighbors(edges: DataFrame, start_id: str, k: int = 2) -> DataFrame:
     """A12: hop-labelled neighborhood of one node
     (knowledge_retriever.py:611-665). The hop label IS the BFS distance
     (first depth each node is reached), so this delegates to
@@ -114,7 +114,7 @@ def k_hop_neighbors(edges: DataFrame, start_id: str, k: int = 2, undirected: boo
     (2.9-3.6 s warm at bench scale vs ~1 s via the mirror, r6c)."""
     from .components import bfs_distances
 
-    bfs = bfs_distances(edges, start_id, max_depth=k, undirected=undirected)
+    bfs = bfs_distances(edges, start_id, max_depth=k)
     return bfs.where(F.col("dist") > 0).select(
         "entity_id", F.col("dist").alias("hop")
     )

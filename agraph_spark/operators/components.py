@@ -208,15 +208,11 @@ def _driver_bfs(pairs: list, start_id, max_depth: int) -> list:
     return list(dist.items())
 
 
-def bfs_distances(
-    edges: DataFrame,
-    start_id: str,
-    max_depth: int = 5,
-    undirected: bool = True,
-) -> DataFrame:
+def bfs_distances(edges: DataFrame, start_id: str, max_depth: int = 5) -> DataFrame:
     """A9: unweighted BFS distance from start to all nodes within max_depth
-    (graph_path_finder.py:44-103). Frontier-expansion joins with a visited
-    anti-join; at most max_depth iterations.
+    over the edges in both directions (graph_path_finder.py:44-103).
+    Frontier-expansion joins with a visited anti-join; at most max_depth
+    iterations.
 
     Same adaptive cutover as connected_components: the probe is the RAW
     (pre-distinct) adjacency, so within the budget the walk runs as a
@@ -226,10 +222,9 @@ def bfs_distances(
     loop."""
     spark = edges.sparkSession
     raw = edges.select(F.col("head_id").alias("src"), F.col("tail_id").alias("dst"))
-    if undirected:
-        raw = raw.unionByName(
-            edges.select(F.col("tail_id").alias("src"), F.col("head_id").alias("dst"))
-        )
+    raw = raw.unionByName(
+        edges.select(F.col("tail_id").alias("src"), F.col("head_id").alias("dst"))
+    )
     # id type derived from the edge schema (ADVICE r5: the hardcoded string
     # schema broke non-string ids on this path only)
     seed_schema = f"entity_id {edges.schema['head_id'].dataType.simpleString()}, dist int"

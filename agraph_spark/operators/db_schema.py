@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 TABLE_PREFIXES = ["tbl_", "tb_", "t_"]  # entity_extractor.py:364
 COMMON_COLUMNS = ["id", "created_at", "updated_at", "deleted_at"]  # :365
+SIMILAR_JACCARD = 0.6  # table-name token Jaccard above this is SIMILAR_TO
 
 # entity_extractor.py:578-590
 BUSINESS_CONCEPTS = [
@@ -122,7 +123,7 @@ def extract_db_entities(catalog: DataFrame) -> DataFrame:
     return db.unionByName(tables).unionByName(columns).unionByName(concepts)
 
 
-def extract_db_relations(catalog: DataFrame, jaccard_threshold: float = 0.6) -> DataFrame:
+def extract_db_relations(catalog: DataFrame) -> DataFrame:
     """E11: containment + FK + table-name-similarity relations. Output
     (head_name, pred, tail_name, confidence)."""
     db_table = (
@@ -164,7 +165,7 @@ def extract_db_relations(catalog: DataFrame, jaccard_threshold: float = 0.6) -> 
             F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
             / F.size(F.array_union(F.col("a.toks"), F.col("b.toks"))),
         )
-        .where(F.col("jac") > jaccard_threshold)
+        .where(F.col("jac") > SIMILAR_JACCARD)
         .select(
             F.col("a.table_name").alias("head_name"),
             F.lit("similar_to").alias("pred"),

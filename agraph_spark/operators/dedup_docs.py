@@ -27,12 +27,13 @@ SHINGLE_DOCS = 200  # ngram_jaccard_pairs drops shingles in more docs than this
 BUCKET_DOCS = 5000  # LSH band buckets above this many docs are dropped
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical (whitespace-normalized) documents."""
+def exact_dup_groups(df: DataFrame) -> DataFrame:
+    """Groups of byte-identical (whitespace-normalized) documents
+    (``doc_id``, ``text``)."""
     return (
-        df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        df.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
-        .agg(F.count("*").alias("cnt"), F.min(id_col).alias("keeper_id"))
+        .agg(F.count("*").alias("cnt"), F.min("doc_id").alias("keeper_id"))
         .where(F.col("cnt") > 1)
     )
 
@@ -56,31 +57,24 @@ def word_shingles(words: F.Column, n: int = 3) -> F.Column:
     )
 
 
-def shingle_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(doc, shingle) rows over the words of str.strip()-ed, lower-cased
-    text split on unicode whitespace. The word array is projected once per
-    document before the explode (Catalyst keeps it a separate projection
-    because it is referenced more than once and is not cheap)."""
+def shingle_table(df: DataFrame, n: int = 3) -> DataFrame:
+    """(doc, shingle) rows over the words of ``doc_id``'s str.strip()-ed,
+    lower-cased ``text`` split on unicode whitespace. The word array is
+    projected once per document before the explode (Catalyst keeps it a
+    separate projection because it is referenced more than once and is not
+    cheap)."""
     from ..session import spread
     from .textstats import pystrip
 
-    words = F.split(F.lower(pystrip(F.col(text_col))), r"(?U)\s+")
+    words = F.split(F.lower(pystrip(F.col("text"))), r"(?U)\s+")
     return (
         spread(df)
-        .select(F.col(id_col).alias("doc"), words.alias("words"))
+        .select(F.col("doc_id").alias("doc"), words.alias("words"))
         .select("doc", F.explode(word_shingles(F.col("words"), n)).alias("shingle"))
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5, n: int = 3) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold.
 
     Inverted-index join: pairs only share-a-shingle docs are compared.
@@ -98,7 +92,7 @@ def ngram_jaccard_pairs(
     # buying nothing at sf0.1 — the duplicated aggregate subtrees are
     # cheap partial aggregations, and the inverted-index self-join
     # dominates at every scale.
-    sh = track(shingle_table(df, id_col, text_col, n))
+    sh = track(shingle_table(df, n))
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     hot = (
         sh.groupBy("shingle").agg(F.count("*").alias("df_cnt"))
@@ -138,15 +132,10 @@ def md5_hash60(col: F.Column, seed: int) -> F.Column:
 
 
 def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 32,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_mode: str = "xxhash64",
+    df: DataFrame, num_hashes: int = 32, hash_mode: str = "xxhash64"
 ) -> DataFrame:
     """(doc, sig: array<bigint>) — k seeded-hash min values over the
-    shingle set. One explode + one groupBy; no UDF.
+    word-3-gram shingle set. One explode + one groupBy; no UDF.
 
     hash_mode "xxhash64" (default): each shingle string is hashed ONCE
     (variable-length input); the k per-permutation hashes re-hash that
@@ -154,7 +143,7 @@ def minhash_signatures(
     k string hashes (measured ~2x on the signature stage).
     hash_mode "md5": md5-derived 60-bit hashes a SQL oracle can reproduce
     exactly (DuckDB has no xxhash64) — the correctness-twin mode."""
-    sh = shingle_table(df, id_col, text_col, n)
+    sh = shingle_table(df)
     if hash_mode == "md5":
         mins = [
             F.min(md5_hash60(F.col("shingle"), i)).alias(f"h{i}")
@@ -204,10 +193,7 @@ def minhash_lsh_pairs(
     df: DataFrame,
     num_hashes: int = 32,
     bands: int = 8,
-    n: int = 3,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates verified by estimated Jaccard.
@@ -225,7 +211,7 @@ def minhash_lsh_pairs(
     so a DuckDB oracle can match the output bit-for-bit
     (__spark_entry__ dd_minhash_md5)."""
     rows = num_hashes // bands
-    sig = track(minhash_signatures(df, num_hashes, n, id_col, text_col, hash_mode))
+    sig = track(minhash_signatures(df, num_hashes, hash_mode))
     band_vals = [
         F.concat_ws(",", *[F.element_at("sig", b * rows + r + 1).cast("string") for r in range(rows)])
         for b in range(bands)
@@ -271,12 +257,7 @@ def minhash_lsh_pairs(
     return est
 
 
-def simhash64(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def simhash64(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """SimHash over word tokens: per-bit majority of token hashes.
 
     Explode tokens, hash each, aggregate per-bit +1/-1 sums, assemble bits
@@ -286,8 +267,8 @@ def simhash64(
     from ..session import spread
 
     toks = spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\w+"), 0)).alias("tok"),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\w+"), 0)).alias("tok"),
     )
     if hash_mode == "md5":
         # SQL-reproducible: 60-bit md5-derived token hash (md5_hash60, seed
@@ -325,13 +306,13 @@ def simhash_near_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     band_bits: int = 16,
-    **kw,
+    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, blocked on 16-bit bands
     (a pair within Hamming<=3 of 64 bits must agree on >=1 of 4 bands).
     Band buckets above ``BUCKET_DOCS`` are dropped before the self-join
     (skew guard, see _cap_buckets)."""
-    sim = track(simhash64(df, **kw))
+    sim = track(simhash64(df, hash_mode))
     bands = sim.select(
         "doc",
         "simhash",

@@ -87,14 +87,11 @@ def empty_names(nodes: DataFrame) -> DataFrame:
     return nodes.where(F.trim(F.col("name")) == "")
 
 
-def basic_statistics(nodes: DataFrame, edges: DataFrame, chunks: DataFrame | None = None) -> DataFrame:
-    """A1: entity/relation/chunk counts (graph.py:406-418)."""
+def basic_statistics(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """A1: entity/relation counts (graph.py:406-418)."""
     n = nodes.agg(F.count("*").alias("entity_count"))
     e = edges.agg(F.count("*").alias("relation_count"))
-    out = n.crossJoin(e)
-    if chunks is not None:
-        out = out.crossJoin(chunks.agg(F.count("*").alias("chunk_count")))
-    return out
+    return n.crossJoin(e)
 
 
 def consistency_issues(nodes: DataFrame, edges: DataFrame) -> DataFrame:

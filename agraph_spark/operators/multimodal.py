@@ -42,6 +42,8 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
+FRAME_MS = 1000  # sample_video_frames keeps one frame per this many ms
+
 Decoder = Callable[[bytes], np.ndarray]
 
 
@@ -341,19 +343,17 @@ def extract_media_features(
     return media.select("media_id", "content").mapInPandas(kernel, schema=schema)
 
 
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Frame-sampling plan: one row per sampled timestamp, bytes untouched
-    until the decode kernel. Pure column expressions — the expensive decode
+def sample_video_frames(media: DataFrame) -> DataFrame:
+    """Frame-sampling plan: one row per ``FRAME_MS`` of video, bytes
+    untouched until the decode kernel. Pure column expressions — the expensive decode
     only ever sees the sampled frames."""
-    n_frames = F.greatest((F.col("duration_ms") / every_ms).cast("int"), F.lit(1))
+    n_frames = F.greatest((F.col("duration_ms") / FRAME_MS).cast("int"), F.lit(1))
     return media.where(F.col("mime").startswith("video/")).select(
         "media_id",
         "content",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), n_frames - 1), lambda i: i * every_ms
+                F.sequence(F.lit(0), n_frames - 1), lambda i: i * FRAME_MS
             )
         ).alias("frame_ts_ms"),
     )

@@ -81,29 +81,7 @@ def extract_relation_candidates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _conv_join(big: DataFrame, entities: DataFrame, n_salts) -> DataFrame:
-    """conv_id equi-join with optional explicit salting for monster
-    conversations: AQE skew-join splitting (on by default) is the first
-    resort; ``n_salts`` replicates the entity side R ways and spreads the
-    big side by row identity so one 10M-turn conversation can never pin the
-    join to a single task even when AQE is off or mid-stage.
-
-    ``n_salts`` may be an int, None, "auto", or a salting.AutoSalt policy:
-    auto measures the big side's per-conv_id counts (salting.decide_salts)
-    and salts only when one conversation would pin a task."""
-    from .salting import AutoSalt, decide_salts, salted_join_hint
-
-    if n_salts == "auto" or isinstance(n_salts, AutoSalt):
-        cfg = n_salts if isinstance(n_salts, AutoSalt) else None
-        n_salts = decide_salts(big, "conv_id", cfg)
-    if not n_salts:
-        return big.join(entities, "conv_id")
-    return salted_join_hint(big, entities, "conv_id", n_salts)
-
-
-def resolve_mentions(
-    mention_texts: DataFrame, entities: DataFrame, n_salts=None
-) -> DataFrame:
+def resolve_mentions(mention_texts: DataFrame, entities: DataFrame) -> DataFrame:
     """E7: map (conv_id, text) -> winning entity.
 
     Reference semantics (relation_extractor.py:420-445): exact dict lookup on
@@ -112,7 +90,7 @@ def resolve_mentions(
     matches the first entity). Returns
     (conv_id, text, ent_norm, ent_type, ent_order).
     """
-    j = _conv_join(mention_texts, entities, n_salts)
+    j = mention_texts.join(entities, "conv_id")
     text, name = F.col("text"), F.col("name_norm")
     is_exact = text == name
     is_fuzzy = (
@@ -137,9 +115,7 @@ def resolve_mentions(
     )
 
 
-def pattern_relations(
-    candidates: DataFrame, entities: DataFrame, n_salts=None
-) -> DataFrame:
+def pattern_relations(candidates: DataFrame, entities: DataFrame) -> DataFrame:
     """E5+E7: resolve both endpoints; drop candidates with an unresolved side
     (relation_extractor.py:400). conf fixed 0.7."""
     texts = (
@@ -150,7 +126,7 @@ def pattern_relations(
     # consumed twice (head + tail joins): persist so the fuzzy-containment
     # cartesian join runs once, not once per side; eager count so the two
     # join branches don't RACE to build the same cached partitions (r6)
-    res = track(resolve_mentions(texts, entities, n_salts))
+    res = track(resolve_mentions(texts, entities))
     res.count()
     h = res.select(
         "conv_id",
@@ -195,15 +171,13 @@ def split_sentences(documents: DataFrame) -> DataFrame:
     )
 
 
-def cooccurrence_relations(
-    documents: DataFrame, entities: DataFrame, n_salts=None
-) -> DataFrame:
+def cooccurrence_relations(documents: DataFrame, entities: DataFrame) -> DataFrame:
     """E6: entities co-occurring in a sentence -> RELATED_TO pairs, ordered by
     emission order (i < j), conf 0.5 (relation_extractor.py:447-487)."""
     sents = split_sentences(documents)
     # persist: the self-join below would otherwise evaluate the
     # sentence x entity containment join once per side
-    hits = _conv_join(sents, entities, n_salts).where(
+    hits = sents.join(entities, "conv_id").where(
         F.instr(F.col("sent"), F.col("name_norm")) > 0
     ).select("conv_id", "sent_idx", "name_norm", "entity_type", "entity_order")
     hits = track(hits)

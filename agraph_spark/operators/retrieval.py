@@ -300,7 +300,6 @@ def chat_context(
     k_relations: int = 5,
     k_chunks: int = 5,
     threshold: float = 0.0,
-    content_col: str = "render_text",
     chunk_entity_links: DataFrame | None = None,
     k_connected: int = 5,
 ) -> DataFrame:
@@ -324,8 +323,8 @@ def chat_context(
     hits = chat_context_hits(
         nodes, edges_rendered, chunks, query,
         k_entities=k_entities, k_relations=k_relations, k_chunks=k_chunks,
-        threshold=threshold, content_col=content_col,
-        chunk_entity_links=chunk_entity_links, k_connected=k_connected,
+        threshold=threshold, chunk_entity_links=chunk_entity_links,
+        k_connected=k_connected,
     )
 
     def _ns_json(ns: str) -> F.Column:
@@ -380,7 +379,6 @@ def chat_context_hits(
     k_relations: int = 5,
     k_chunks: int = 5,
     threshold: float = 0.0,
-    content_col: str = "render_text",
     chunk_entity_links: DataFrame | None = None,
     k_connected: int = 5,
 ) -> DataFrame:
@@ -390,7 +388,7 @@ def chat_context_hits(
     connected-chunk expansion, and the reference's rendered 文本片段 line
     for text_chunk hits. Exposed so the oracle gate can certify the
     assembly row-by-row (v10_chat_ctx_md5) without the JSON wrapper."""
-    u = _namespaces(nodes, edges_rendered, chunks, F.col(content_col).alias("content"))
+    u = _namespaces(nodes, edges_rendered, chunks, F.col("render_text").alias("content"))
     k_map = {"entity": k_entities, "relation": k_relations, "text_chunk": k_chunks}
     hits = _namespace_topk(u, query, threshold, k_map).select(
         "item_id", "namespace", "content", "score", "rk"
@@ -403,7 +401,7 @@ def chat_context_hits(
             connected.join(direct_ids, "chunk_id", "left_anti")
             .join(
                 chunks.select(
-                    F.col("chunk_id"), F.col(content_col).alias("content")),
+                    F.col("chunk_id"), F.col("render_text").alias("content")),
                 "chunk_id",
             )
             .withColumn(

@@ -1,90 +1,34 @@
-"""Hot-key salting utilities (north_rule: "salted repartitioning and AQE
-skew-join hints").
+"""Hot-key salting utilities for high-cardinality aggregation states
+(north_rule: "salted repartitioning and AQE skew-join hints").
 
 Spark's partial (map-side) aggregation already absorbs most groupBy skew,
 and AQE skew-join splitting (enabled in session.py) handles join-side skew
-at runtime. Salting is the explicit tool for the cases those can't cover:
-high-cardinality aggregation states (collect_list/collect_set on a hot key
-concentrates one partition) and deterministic-layout writes. The pattern:
+at runtime. Salting is the explicit tool for what those can't cover:
+collect_list/collect_set on a hot key concentrates one partition. The
+pattern:
 
-  stage 1: group by (key, salt = pmod(xxhash64(row-identity), S)) — S-way
-           spread of the hot key's rows;
-  stage 2: group by key — merges S partial states per key.
+  stage 1: group by (key, salt = pmod(xxhash64(row-identity), SALTS)) —
+           a SALTS-way spread of the hot key's rows;
+  stage 2: group by key — merges SALTS partial states per key.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-@dataclass(frozen=True)
-class AutoSalt:
-    """Skew-detection policy for auto-chosen ``n_salts`` (the string "auto"
-    means AutoSalt() defaults). At 10^12-turn scale nobody hand-sets
-    n_salts, so the join helpers can measure the key distribution and
-    decide.
-
-    Thresholds: salting is worth its R-fold replication of the entity side
-    only when one key would otherwise pin a task, so we require BOTH
-    (a) the hottest key to hold >= ``min_rows`` rows — below that even a
-    fully pinned task finishes in milliseconds, and (b) the hot/median
-    ratio to exceed ``ratio_k`` — below that AQE skew-splitting already
-    balances it. The salt count then targets hot-key slices of about
-    ``ratio_k`` x median rows: n = ceil(ratio / ratio_k), capped at
-    ``max_salts`` (each salt replicates the small side once).
-    ``sample_fraction`` trades exactness for cost: at 100 TB pass ~0.001
-    and counts are scaled back up by 1/fraction."""
-
-    ratio_k: float = 20.0
-    min_rows: int = 100_000
-    max_salts: int = 32
-    sample_fraction: float | None = None
+SALTS = 16  # partial states per key in the two-phase aggregations
 
 
-def decide_salts(big: DataFrame, key: str = "conv_id", cfg: AutoSalt | None = None) -> int | None:
-    """Measure the key distribution of ``big`` and return an n_salts for
-    salted_join_hint, or None when plain join + AQE suffices. One
-    partial-aggregated count shuffle over (key) — tiny output — plus a
-    global max/median agg."""
-    cfg = cfg or AutoSalt()
-    sampled = big
-    scale = 1.0
-    if cfg.sample_fraction:
-        sampled = big.sample(fraction=cfg.sample_fraction, seed=7)
-        scale = 1.0 / cfg.sample_fraction
-    row = (
-        sampled.groupBy(key)
-        .count()
-        .agg(
-            F.max("count").alias("mx"),
-            F.expr("percentile_approx(count, 0.5)").alias("md"),
-        )
-        .first()
-    )
-    if row is None or row.mx is None:
-        return None
-    mx = row.mx * scale
-    md = max((row.md or 1) * scale, 1.0)
-    if mx < cfg.min_rows or mx / md <= cfg.ratio_k:
-        return None
-    n = int(math.ceil(mx / md / cfg.ratio_k))
-    return max(2, min(cfg.max_salts, n))
+def salt_col(identity_col: str) -> Column:
+    return F.pmod(F.xxhash64(F.col(identity_col)), F.lit(SALTS)).cast("int")
 
 
-def salt_col(identity_col: str | Column, n_salts: int = 16) -> Column:
-    c = F.col(identity_col) if isinstance(identity_col, str) else identity_col
-    return F.pmod(F.xxhash64(c), F.lit(n_salts)).cast("int")
-
-
-def salted_count(df: DataFrame, key: str, identity_col: str, n_salts: int = 16) -> DataFrame:
+def salted_count(df: DataFrame, key: str, identity_col: str) -> DataFrame:
     """Two-phase count per key: immune to single-key partition blowup even
     when one key owns most of the input."""
     partial = (
-        df.withColumn("_salt", salt_col(identity_col, n_salts))
+        df.withColumn("_salt", salt_col(identity_col))
         .groupBy(key, "_salt")
         .agg(F.count("*").alias("_partial"))
     )
@@ -92,28 +36,15 @@ def salted_count(df: DataFrame, key: str, identity_col: str, n_salts: int = 16) 
 
 
 def salted_collect_set(
-    df: DataFrame, key: str, value_col: str, identity_col: str, n_salts: int = 16
+    df: DataFrame, key: str, value_col: str, identity_col: str
 ) -> DataFrame:
     """Two-phase collect_set: per-salt sets are bounded, the final merge
-    combines at most n_salts arrays per key."""
+    combines at most SALTS arrays per key."""
     partial = (
-        df.withColumn("_salt", salt_col(identity_col, n_salts))
+        df.withColumn("_salt", salt_col(identity_col))
         .groupBy(key, "_salt")
         .agg(F.collect_set(value_col).alias("_vals"))
     )
     return partial.groupBy(key).agg(
         F.array_distinct(F.flatten(F.collect_list("_vals"))).alias("values")
     )
-
-
-def salted_join_hint(big: DataFrame, small_hot: DataFrame, key: str, n_salts: int = 8):
-    """Replicate-and-salt join for a skewed key against a small-ish side:
-    the big side gets a random-ish salt from its row identity, the small
-    side is exploded n_salts times. Used when the small side is too big to
-    broadcast but the key distribution is pathological; AQE skew-join is
-    the first resort, this is the explicit fallback."""
-    big_s = big.withColumn("_salt", salt_col(F.concat_ws("\x00", *big.columns), n_salts))
-    small_s = small_hot.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")

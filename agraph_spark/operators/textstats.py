@@ -67,10 +67,10 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features: length, token count, punct ratio,
-    stopword ratio, mean word length, uppercase ratio."""
-    t = F.col(text_col)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Per-document quality features of ``text``: length, token count,
+    punct ratio, stopword ratio, mean word length, uppercase ratio."""
+    t = F.col("text")
     words = F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+"), 0)
     n_words = F.size(words)
     n_stop = F.size(F.filter(words, lambda w: w.isin(EN_STOPWORDS)))
@@ -92,11 +92,11 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite 0-1 quality score from the features: rewards sentence-like
     punctuation, stopword presence, moderate word length; penalizes
     shouting. Deterministic weighted sum, SQL-expressible."""
-    feats = quality_features(df, text_col)
+    feats = quality_features(df)
     score = (
         F.lit(0.25) * F.least(F.col("n_tokens") / 50.0, F.lit(1.0))
         + F.lit(0.25) * F.least(F.col("stopword_ratio") * 4.0, F.lit(1.0))

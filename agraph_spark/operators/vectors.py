@@ -57,35 +57,31 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
 
-def cosine_scores(
-    embeddings: DataFrame,
-    query: DataFrame,
-    vec_col: str = "embedding",
-    query_col: str = "query_vec",
-) -> DataFrame:
-    """Score every row against a single query vector (1-row DataFrame,
-    broadcast by Catalyst). V4 minus the top-k cut, and the one scorer
-    in every single-query search's Spark plan (topk_similar, the ANN
-    reranks, retrieval.py); ``driver_topk`` reproduces its floats. r6c:
+def cosine_scores(embeddings: DataFrame, query: DataFrame) -> DataFrame:
+    """Score every row's ``embedding`` against a single query vector (a
+    1-row DataFrame of ``query_vec``, broadcast by Catalyst). V4 minus the
+    top-k cut, and the one scorer in every single-query search's Spark plan
+    (topk_similar, the ANN reranks, retrieval.py); ``driver_topk``
+    reproduces its floats. r6c:
     norms hoisted (see cosine_hoisted) — query norm once in the broadcast
     frame, row norm once per row; scores bitwise-identical to the inline
     cosine."""
     q = F.broadcast(
-        query.withColumn("_nq", norm(F.col(query_col).cast("array<double>")))
+        query.withColumn("_nq", norm(F.col("query_vec").cast("array<double>")))
     )
     return (
-        embeddings.withColumn("_na", norm(F.col(vec_col).cast("array<double>")))
+        embeddings.withColumn("_na", norm(F.col("embedding").cast("array<double>")))
         .crossJoin(q)
         .withColumn(
             "score",
             cosine_hoisted(
-                F.col(vec_col).cast("array<double>"),
-                F.col(query_col).cast("array<double>"),
+                F.col("embedding").cast("array<double>"),
+                F.col("query_vec").cast("array<double>"),
                 F.col("_na"),
                 F.col("_nq"),
             ),
         )
-        .drop(query_col, "_na", "_nq")
+        .drop("query_vec", "_na", "_nq")
     )
 
 
@@ -259,7 +255,6 @@ def ann_topk_lsh(
     query: DataFrame,
     planes: list[list[float]],
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ANN: restrict the exact rerank to the query's LSH bucket.
     At 100 TB the bucket column is a partition/cluster key so the scan
@@ -267,14 +262,11 @@ def ann_topk_lsh(
     bucketed = embeddings.withColumn("bucket", hyperplane_lsh_bucket(F.col("embedding"), planes))
     qb = query.select(hyperplane_lsh_bucket(F.col("query_vec"), planes).alias("bucket"))
     cand = bucketed.join(F.broadcast(qb), "bucket")
-    return cosine_scores(cand, query).orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    return cosine_scores(cand, query).orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
 
 def ivf_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
+    embeddings: DataFrame, n_centroids: int = 16
 ) -> tuple[DataFrame, list[list[float]]]:
     """IVF scale path: coarse k-means centroids (fit on the data via
     pyspark.ml, sample-friendly), every vector assigned to its nearest
@@ -284,8 +276,8 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feat = embeddings.withColumn("_v", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_centroids, seed=seed, featuresCol="_v", predictionCol="centroid")
+    feat = embeddings.withColumn("_v", array_to_vector(F.col("embedding").cast("array<double>")))
+    km = KMeans(k=n_centroids, seed=42, featuresCol="_v", predictionCol="centroid")
     model = km.fit(feat)
     assigned = model.transform(feat).drop("_v")
     centroids = [
@@ -295,11 +287,7 @@ def ivf_index(
     return assigned, centroids
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Assignment-only IVF: nearest centroid (squared L2, lowest index on
     ties) as pure column expressions — the deterministic, oracle-
     certifiable half of the IVF path (v_ann_ivf/v_ann_ivf_hist twin it in
@@ -314,7 +302,7 @@ def ivf_assign(
         )
         for i, c in enumerate(centroids)
     ])
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
 
     def d2(c):
         return F.aggregate(
@@ -339,8 +327,6 @@ def ivf_topk(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the n_probe nearest centroids' partitions, exact cosine rerank
     inside them. Driver picks probe ids (centroid count is tiny); the scan
@@ -358,8 +344,8 @@ def ivf_topk(
 
     qdf = local_df(spark, [(query_vec,)], "query_vec array<double>")
     cand = assigned.where(F.col("centroid").isin(probes))
-    scored = cosine_scores(cand, qdf, vec_col=vec_col)
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    scored = cosine_scores(cand, qdf)
+    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
 
 def render_entity_text(nodes: DataFrame) -> DataFrame:
@@ -463,15 +449,16 @@ def embed_hash_stub(df: DataFrame, text_col: str = "render_text", dim: int = 16)
     return df.withColumn("embedding", F.expr(f"array({comps})"))
 
 
-def embed_md5_stub(df: DataFrame, text_col: str = "render_text", dim: int = 8) -> DataFrame:
-    """embed_hash_stub's oracle-twinnable sibling: components are
-    md5-derived doubles ((md5_hash60 % 2000 - 1000)/1000) that a DuckDB
-    oracle reproduces bit-for-bit (__spark_entry__ kg_search_multi_md5).
-    Costs dim string md5s per row — the xxhash64 stub stays the default."""
+def embed_md5_stub(df: DataFrame) -> DataFrame:
+    """embed_hash_stub's oracle-twinnable sibling: 8 components of
+    ``render_text``, md5-derived doubles ((md5_hash60 % 2000 - 1000)/1000)
+    that a DuckDB oracle reproduces bit-for-bit (__spark_entry__
+    kg_search_multi_md5). Costs 8 string md5s per row — the xxhash64 stub
+    stays the default."""
     from .dedup_docs import md5_hash60
 
     comps = [
-        ((F.pmod(md5_hash60(F.col(text_col), i), F.lit(2000)) - 1000) / 1000.0).cast("double")
-        for i in range(dim)
+        ((F.pmod(md5_hash60(F.col("render_text"), i), F.lit(2000)) - 1000) / 1000.0).cast("double")
+        for i in range(8)
     ]
     return df.withColumn("embedding", F.array(*comps))

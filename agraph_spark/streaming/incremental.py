@@ -110,7 +110,6 @@ def start_transcript_merge_stream(
     spark: SparkSession,
     input_dir: str,
     out_dir: str,
-    trigger_once: bool = True,
     n_buckets: int = 64,
     triples_fn=None,
 ):
@@ -125,14 +124,13 @@ def start_transcript_merge_stream(
         .parquet(input_dir)
     )
     store = os.path.join(out_dir, "triples_store")
-    writer = (
+    return (
         stream.writeStream.foreachBatch(
             lambda df, bid: process_microbatch_merge(
                 df, bid, store, n_buckets, triples_fn=triples_fn
             )
         )
         .option("checkpointLocation", os.path.join(out_dir, "_merge_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

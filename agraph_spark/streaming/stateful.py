@@ -10,7 +10,7 @@ Arrow batch at a time (never per-row Python).
 
 Reference counterpart: the incremental builder's seen-set
 (/root/reference/agraph/builders/llm_builders.py:616-649 upsert semantics);
-here the set is per-key distributed state, bounded by ``max_state`` per key
+here the set is per-key distributed state, bounded by ``MAX_STATE`` per key
 (a monster conversation cannot grow one executor's state without limit —
 beyond the cap new values are emitted at most once per micro-batch with
 ``truncated=true``; consumers must dedup truncated rows across batches)."""
@@ -19,21 +19,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+MAX_STATE = 100_000  # values remembered per key, read when the plan is built
 
-def stateful_first_seen(
-    grouped_stream: DataFrame,
-    key_col: str = "conv_id",
-    value_col: str = "name_norm",
-    max_state: int = 100_000,
-) -> DataFrame:
-    """(key, value) rows -> only first-ever occurrence of each value per
-    key, across micro-batches. State: the per-key seen-set (array<string>),
-    checkpoint-recovered on restart."""
+
+def stateful_first_seen(grouped_stream: DataFrame) -> DataFrame:
+    """(conv_id, name_norm) rows -> only the first-ever occurrence of each
+    name_norm per conv_id, across micro-batches. State: the per-key
+    seen-set (array<string>), checkpoint-recovered on restart."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = f"{key_col} string, {value_col} string, truncated boolean"
+    out_schema = "conv_id string, name_norm string, truncated boolean"
     state_schema = "seen array<string>"
+    cap = MAX_STATE  # read on the driver; the closure ships it to the workers
 
     def fn(key, pdfs, state: GroupState):
         seen = set(state.get[0]) if state.exists else set()
@@ -48,10 +46,10 @@ def stateful_first_seen(
         new_vals: list[str] = []
         flags: list[bool] = []  # per-ROW: only overflow rows carry true
         for pdf in pdfs:
-            for v in pdf[value_col].dropna():
+            for v in pdf["name_norm"].dropna():
                 if v in seen or v in batch_seen:
                     continue
-                if len(seen) >= max_state:
+                if len(seen) >= cap:
                     batch_seen.add(v)
                     new_vals.append(v)
                     flags.append(True)
@@ -62,10 +60,10 @@ def stateful_first_seen(
         state.update((sorted(seen),))
         if new_vals:
             yield pd.DataFrame(
-                {key_col: key[0], value_col: new_vals, "truncated": flags}
+                {"conv_id": key[0], "name_norm": new_vals, "truncated": flags}
             )
 
-    return grouped_stream.groupBy(key_col).applyInPandasWithState(
+    return grouped_stream.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -74,20 +72,12 @@ def stateful_first_seen(
     )
 
 
-def start_first_seen_stream(
-    spark,
-    input_dir: str,
-    out_dir: str,
-    schema: str = "conv_id string, name_norm string",
-    key_col: str = "conv_id",
-    value_col: str = "name_norm",
-    max_state: int = 100_000,
-):
+def start_first_seen_stream(spark, input_dir: str, out_dir: str):
     """File-source wiring: appends under input_dir -> first-seen rows
     appended to out_dir/rows, state under out_dir/_checkpoint (restart
     resumes the seen-sets from the checkpoint)."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    deduped = stateful_first_seen(stream, key_col, value_col, max_state)
+    stream = spark.readStream.schema("conv_id string, name_norm string").parquet(input_dir)
+    deduped = stateful_first_seen(stream)
     return (
         deduped.writeStream.outputMode("append")
         .format("parquet")

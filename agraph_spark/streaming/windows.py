@@ -3,8 +3,8 @@
 The reference has no late-data semantics (SURVEY.md §2.10) — this is the
 Spark-native extension point for turn-level trickle ingestion: turns
 arrive as an append stream, a watermark bounds state, and a session window
-per conversation closes once no turn has arrived for ``gap`` of event
-time; closed sessions are emitted as reassembled conversation documents
+per conversation closes once no turn has arrived for ``SESSION_GAP`` of
+event time; closed sessions are emitted as reassembled conversation documents
 ready for the extraction kernel.
 
 State/scale: state per open conversation is one aggregation buffer;
@@ -20,12 +20,10 @@ from pyspark.sql import functions as F
 
 from ..schemas import TRANSCRIPTS
 
+SESSION_GAP = "30 minutes"  # event-time silence that closes a session
 
-def sessionized_conversations(
-    turn_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+
+def sessionized_conversations(turn_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming aggregation: turns -> one row per (conv_id, session
     window) with turns assembled in stable (turn_idx, ts) order.
 
@@ -35,7 +33,7 @@ def sessionized_conversations(
     as the batch reassembler."""
     return (
         turn_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("conv_id"))
+        .groupBy(F.session_window("ts", SESSION_GAP), F.col("conv_id"))
         .agg(
             F.concat_ws(
                 "\n",
@@ -60,7 +58,6 @@ def start_sessionized_stream(
     spark,
     input_dir: str,
     out_dir: str,
-    gap: str = "30 minutes",
     watermark: str = "1 hour",
 ):
     """File-source demo wiring: turn appends -> watermarked session windows
@@ -68,7 +65,7 @@ def start_sessionized_stream(
     import os
 
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    sessions = sessionized_conversations(stream, gap=gap, watermark=watermark)
+    sessions = sessionized_conversations(stream, watermark=watermark)
     return (
         sessions.writeStream.outputMode("append")
         .format("parquet")

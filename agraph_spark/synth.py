@@ -25,6 +25,7 @@ ORGS = ["Acme Corp", "Globex Inc", "Initech Ltd", "Umbrella Company", "Stark Org
         "Wayne Inc", "Hooli Corp", "Vandelay Inc", "Wonka Ltd", "Cyberdyne Corp"]
 # hot entities: appear in a large fraction of conversations (skew driver)
 HOT_ORGS = ["Acme Corp", "Globex Inc"]
+HOT_RATE = 0.3  # share of organization mentions drawn from HOT_ORGS (key skew)
 PRODUCTS = ["iPhone", "iPad", "Django", "Flask", "Python", "TensorFlow", "PyTorch", "macOS"]
 CITIES = ["Paris", "London", "Berlin", "Madrid", "Oslo", "Dublin", "Vienna", "Prague"]
 KEYWORDS = ["pipeline", "dataset", "cluster", "shuffle", "partition", "lineage", "checkpoint",
@@ -41,16 +42,16 @@ def _person(rng) -> str:
     return f"{FIRST[rng.integers(len(FIRST))]} {LAST[rng.integers(len(LAST))]}"
 
 
-def _org(rng, hot_rate: float) -> str:
-    if rng.random() < hot_rate:
+def _org(rng) -> str:
+    if rng.random() < HOT_RATE:
         return HOT_ORGS[rng.integers(len(HOT_ORGS))]
     return ORGS[rng.integers(len(ORGS))]
 
 
-def _sentence(rng, hot_rate: float) -> str:
+def _sentence(rng) -> str:
     """One seeded sentence drawn from template families keyed to reference patterns."""
     kind = rng.integers(10)
-    p, o = _person(rng), _org(rng, hot_rate)
+    p, o = _person(rng), _org(rng)
     prod = PRODUCTS[rng.integers(len(PRODUCTS))]
     city = CITIES[rng.integers(len(CITIES))]
     kw = KEYWORDS[rng.integers(len(KEYWORDS))]
@@ -82,7 +83,6 @@ def _sentence(rng, hot_rate: float) -> str:
 def make_transcripts(
     n_convs: int = 50,
     seed: int = 42,
-    hot_rate: float = 0.3,
     mean_turns: int = 6,
     long_tail: bool = True,
 ) -> pd.DataFrame:
@@ -97,7 +97,7 @@ def make_transcripts(
         t0 = EPOCH + dt.timedelta(seconds=int(rng.integers(0, 10_000_000)))
         for t in range(n_turns):
             n_sent = int(rng.integers(1, 4))
-            text = " ".join(_sentence(rng, hot_rate) for _ in range(n_sent))
+            text = " ".join(_sentence(rng) for _ in range(n_sent))
             role = ROLES[int(rng.integers(len(ROLES)))]
             tool = TOOLS[int(rng.integers(len(TOOLS)))] if role == "tool" else ""
             rows.append(
@@ -108,12 +108,12 @@ def make_transcripts(
     return pdf
 
 
-def transcripts_df(spark, n_convs: int = 50, seed: int = 42, **kw):
+def transcripts_df(spark, n_convs: int = 50, seed: int = 42):
     """Transcripts as a Spark DataFrame with the canonical schema, shuffled
     row order (so nothing accidentally relies on input order)."""
     from .schemas import TRANSCRIPTS
 
-    pdf = make_transcripts(n_convs=n_convs, seed=seed, **kw)
+    pdf = make_transcripts(n_convs=n_convs, seed=seed)
     # deterministic shuffle to destroy insertion order
     rng = np.random.default_rng(seed + 1)
     pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)

@@ -378,7 +378,7 @@ def test_bfs_null_reachable_at_multiple_depths(spark, forced_path):
     want = {"x": 0, "y": 1, None: 1, "z": 2}
     for path in ("default", "distributed"):
         with forced_path(path):
-            rows = bfs_distances(edf, "x", max_depth=5, undirected=False).collect()
+            rows = bfs_distances(edf, "x", max_depth=5).collect()
         got = {r.entity_id: r.dist for r in rows}
         assert got == want, (path, got)
         assert len(rows) == len(want), (path, rows)  # no duplicate null rows

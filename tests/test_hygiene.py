@@ -2,7 +2,8 @@
 and DeprecationWarning raised as errors. An invalid escape such as '\\s'
 in a non-raw string is a warning in Python 3.11 and an error in later
 versions, so it must never reach the tree. Library code leaves the
-session's global state alone and declares nothing that nothing loads."""
+session's global state alone, declares nothing that nothing loads and
+offers no option that no caller sets."""
 
 from __future__ import annotations
 
@@ -115,3 +116,124 @@ def test_forced_path_covers_every_cutover_budget(forced_path):
         with forced_path(side):
             assert {name: getattr(adaptive, name) for name in budgets} == dict.fromkeys(
                 budgets, want), side
+
+
+# Code outside tests/ whose calls count as setting an option.
+CALLERS = ("agraph_spark/", "perfbench/", "tools/", "scripts/",
+           "__spark_entry__.py", "bench.py", "bench_extra.py")
+
+# Options no caller outside tests/ sets that stay anyway, each with its reason.
+KEPT_OPTIONS = {
+    "checkpoint.run_checkpointed(fail_after)":
+        "fault hook: raises after k batches for the kill-and-resume tests",
+    "io.read_documents(skip_corrupt)":
+        "outside-input policy: what a file the parser rejects becomes",
+    "io.read_documents(with_errors)":
+        "outside-input policy: whether rejected files come back as rows",
+    "io.write_graph_bucketed(location)":
+        "deployment setting: where the store's tables live",
+    "io.write_graph_bucketed(edges_by_tail)":
+        "deployment setting: a tail-bucketed edge copy for tail-keyed joins",
+    "operators.analytics.pagerank(damping)":
+        "reference's signature: the damping factor of its pagerank",
+    "operators.graph_queries.query_relations(tail_id)":
+        "reference's signature: a query_relations filter",
+    "operators.graph_queries.query_chunks(source)":
+        "reference's signature: a query_chunks filter",
+    "operators.linking.link_entities(model)": "seam: the duplicate-verify model",
+    "operators.linking.link_entities(log_excluded)":
+        "deployment setting: logs the entities the link bound excludes",
+    "operators.model_extract.extract_entities_model(model)": "seam: the entity model",
+    "operators.model_extract.extract_relations_model(model)": "seam: the relation model",
+    "operators.multimodal.extract_media_features(decoder)": "seam: the media decoder",
+    "operators.multimodal.extract_media_features(skip_corrupt)":
+        "outside-input policy: what undecodable media becomes",
+    "operators.retrieval.chat_context(chunk_entity_links)":
+        "reference's signature: achat_enhanced's connected chunks, through chat(**k)",
+    "operators.retrieval.chat_context(k_connected)":
+        "reference's signature: achat_enhanced's connected chunks, through chat(**k)",
+    "operators.retrieval.render_rag_prompt(response_type)":
+        "reference's signature: chat_llm's response type",
+    "operators.retrieval.chat(model)": "seam: the chat model",
+    "operators.retrieval.chat(history_messages)": "reference's signature: chat's history",
+    "operators.retrieval.chat(**k)": "reference's signature: chat's retrieval settings",
+    "operators.vectors.ivf_index(n_centroids)":
+        "deployment setting: the IVF index is sized to the corpus",
+    "operators.vectors.embed_hash_stub(text_col)": "seam: the stand-in encoder's input",
+    "operators.vectors.embed_hash_stub(dim)": "seam: the stand-in encoder's width",
+    "streaming.windows.start_sessionized_stream(watermark)":
+        "outside-input policy: how late a turn may arrive",
+}
+
+
+def _options(tree: ast.Module, module: str):
+    """(label, callee name, positional index or None, parameter) for every
+    defaulted parameter and ``**`` parameter of the module's public
+    functions and public classes' methods, and every defaulted field of
+    its public dataclasses. A constructor's callee is its class."""
+    scopes = [(fn, fn.name, f"{module}.{fn.name}", 0) for fn in tree.body
+              if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")]
+    for cls in tree.body:
+        if not isinstance(cls, ast.ClassDef) or cls.name.startswith("_"):
+            continue
+        for m in cls.body:
+            if isinstance(m, ast.FunctionDef) and m.name == "__init__":
+                scopes.append((m, cls.name, f"{module}.{cls.name}", 1))
+            elif isinstance(m, ast.FunctionDef) and not m.name.startswith("_"):
+                scopes.append((m, m.name, f"{module}.{cls.name}.{m.name}", 1))
+        if any("dataclass" in ast.unparse(d) for d in cls.decorator_list):
+            fields = [s for s in cls.body if isinstance(s, ast.AnnAssign)]
+            for i, field in enumerate(fields):
+                if field.value is not None:
+                    yield f"{module}.{cls.name}({field.target.id})", cls.name, i, field.target.id
+    for fn, callee, label, skip in scopes:
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        for p in positional[len(positional) - len(a.defaults):]:
+            yield f"{label}({p.arg})", callee, positional.index(p) - skip, p.arg
+        for p, d in zip(a.kwonlyargs, a.kw_defaults):
+            if d is not None:
+                yield f"{label}({p.arg})", callee, None, p.arg
+        if a.kwarg:
+            named = {p.arg for p in positional + a.kwonlyargs}
+            yield f"{label}(**{a.kwarg.arg})", callee, None, named
+
+
+def _unset_options() -> set[str]:
+    """Labels of the options no call outside tests/ sets: by keyword or by
+    position, and a ``**`` parameter by a keyword it does not name."""
+    options, calls = [], {}
+    for name in _tracked_python():
+        with open(os.path.join(ROOT, name), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), name)
+        if name.startswith("agraph_spark/"):
+            module = name[len("agraph_spark/"):-len(".py")].replace("/", ".")
+            options += _options(tree, module)
+        if name.startswith(CALLERS):
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    calls.setdefault(callee, []).append(node)
+
+    def is_set(callee, index, param) -> bool:
+        for call in calls.get(callee, ()):
+            keywords = {k.arg for k in call.keywords if k.arg is not None}
+            if isinstance(param, set):
+                if keywords - param:
+                    return True
+            elif param in keywords or (index is not None and len(call.args) > index):
+                return True
+        return False
+
+    return {label for label, *spec in options if not is_set(*spec)}
+
+
+def test_every_option_is_set_by_a_caller():
+    """Every defaulted parameter of a public agraph_spark function is set
+    by some call outside tests/, or is in KEPT_OPTIONS with its reason.
+    An option only tests set always takes its default in use: it is a
+    branch nothing runs."""
+    unset = _unset_options()
+    assert unset <= set(KEPT_OPTIONS), "\n".join(sorted(unset - set(KEPT_OPTIONS)))
+    assert set(KEPT_OPTIONS) <= unset, "\n".join(sorted(set(KEPT_OPTIONS) - unset))

@@ -52,13 +52,13 @@ def _transcripts(spark, convs: dict):
 
 
 def _monster(spark):
-    """test_skew_salting's monster conversation, one sentence per turn,
-    next to its 40 small conversations."""
-    from test_skew_salting import _skewed_corpus
-
-    docs, _ = _skewed_corpus(spark)
-    convs = {r.conv_id: r.text.split(". ") for r in docs.collect()}
-    assert len(convs["giant"]) == 1500
+    """A monster conversation of 1500 one-sentence turns over six
+    entities, next to 40 one-turn conversations."""
+    ents = ["spark", "table", "query", "join", "index", "column"]
+    convs = {"giant": [f"the {ents[i % 6]} meets the {ents[(i + 1) % 6]} number {i}"
+                       for i in range(1500)]}
+    convs.update({f"c{i}": [f"the {ents[i % 6]} meets the {ents[(i + 2) % 6]}."]
+                  for i in range(40)})
     return _transcripts(spark, convs)
 
 

@@ -99,7 +99,7 @@ def test_multimodal_features_and_sampling(spark):
     with pytest.raises(NotImplementedError):
         decode_image(b"x")
 
-    frames = sample_video_frames(media, every_ms=1000).collect()
+    frames = sample_video_frames(media).collect()
     assert [r.frame_ts_ms for r in frames] == [0, 1000, 2000]
     stats = {r.mime: r.n for r in media_stats(media).collect()}
     assert stats == {"image/png": 2, "video/mp4": 1}

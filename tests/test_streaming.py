@@ -67,12 +67,14 @@ def test_stateful_first_seen_across_batches_and_restart(spark):
         assert n == 4  # no re-emission of repeats
 
 
-def test_stateful_first_seen_state_bound(spark):
-    """Beyond max_state the seen-set stops growing: overflow values pass
+def test_stateful_first_seen_state_bound(spark, monkeypatch):
+    """Beyond MAX_STATE the seen-set stops growing: overflow values pass
     through flagged truncated=True and are NOT remembered (documented
     recall trade — state per key stays bounded on monster conversations)."""
+    from agraph_spark.streaming import stateful
     from agraph_spark.streaming.stateful import start_first_seen_stream
 
+    monkeypatch.setattr(stateful, "MAX_STATE", 2)
     with tempfile.TemporaryDirectory() as d:
         inp, out = os.path.join(d, "in"), os.path.join(d, "out")
         # v3 repeated within the first batch: overflow values are emitted at
@@ -81,7 +83,7 @@ def test_stateful_first_seen_state_bound(spark):
             [("c1", f"v{i}") for i in range(4)] + [("c1", "v3")],
             "conv_id string, name_norm string"
         ).coalesce(1).write.mode("append").parquet(inp)  # one file: row order deterministic
-        q = start_first_seen_stream(spark, inp, out, max_state=2)
+        q = start_first_seen_stream(spark, inp, out)
         q.awaitTermination(120)
         rows = spark.read.parquet(f"{out}/rows").collect()
         assert len(rows) == 4  # 2 remembered + 2 overflow, batch-deduped
@@ -92,7 +94,7 @@ def test_stateful_first_seen_state_bound(spark):
         spark.createDataFrame(
             [("c1", "v3"), ("c1", "v0")],
             "conv_id string, name_norm string").coalesce(1).write.mode("append").parquet(inp)
-        q2 = start_first_seen_stream(spark, inp, out, max_state=2)
+        q2 = start_first_seen_stream(spark, inp, out)
         q2.awaitTermination(120)
         rows = spark.read.parquet(f"{out}/rows").collect()
         vals = sorted((r.name_norm, bool(r.truncated)) for r in rows)

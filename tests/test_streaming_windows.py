@@ -28,13 +28,13 @@ def test_session_windows_split_on_gap(spark):
     with tempfile.TemporaryDirectory() as d:
         inp, out = os.path.join(d, "in"), os.path.join(d, "out")
         tdf.write.parquet(inp)
-        q = start_sessionized_stream(spark, inp, out, gap="30 minutes", watermark="10 minutes")
+        q = start_sessionized_stream(spark, inp, out, watermark="10 minutes")
         q.awaitTermination(120)
         # second drain with a far-future heartbeat turn advances the
         # watermark so every real session finalizes
         hb = [("ZZ", 0, "user", "hb", "", base + dt.timedelta(days=2))]
         spark.createDataFrame(hb, tdf.schema).write.mode("append").parquet(inp)
-        q2 = start_sessionized_stream(spark, inp, out, gap="30 minutes", watermark="10 minutes")
+        q2 = start_sessionized_stream(spark, inp, out, watermark="10 minutes")
         q2.awaitTermination(120)
 
         got = {
