@@ -27,14 +27,10 @@ from agraph_spark.operators import inference as I
 from agraph_spark.operators import integrity as G
 from agraph_spark.operators import textstats as TS
 from agraph_spark.operators import vectors as V
-from agraph_spark.operators.extraction import (
-    entity_confidence_col,
-    extract_entities,
-    keyword_counts,
-)
+from agraph_spark.operators.extraction import entity_confidence_col, keyword_counts
 from agraph_spark.operators.relations import split_sentences
 from agraph_spark.session import local_df as _local_df
-from agraph_spark.pipeline import build_triples_from_texts
+from agraph_spark.pipeline import build_kg_from_texts
 from agraph_spark.tpch_graph import GRAPH_SQL_CTE, build_graph
 
 _SW = ", ".join(f"'{w}'" for w in P.STOPWORDS)
@@ -85,7 +81,7 @@ def entry(spark: SparkSession) -> DataFrame:
     by predicate."""
     _ensure_workers(spark)
     docs = _docs(spark, "/root/testdata/sf0.001").select("conv_id", "text")
-    triples = build_triples_from_texts(docs)
+    triples = build_kg_from_texts(docs).triples
     return triples.groupBy("pred").agg(
         F.count("*").alias("n_triples"),
         F.countDistinct("subj").alias("n_subjects"),
@@ -349,12 +345,13 @@ def q_kg_triples_docs(spark, sf_dir):
     """Full extraction pipeline on documents (non-SQL: mapInPandas kernels;
     parity gate is tests/test_parity_reference.py)."""
     d = _docs(spark, sf_dir).select("conv_id", "text")
-    return build_triples_from_texts(d)
+    return build_kg_from_texts(d).triples
 
 
 def q_kg_entities_docs(spark, sf_dir):
+    """Per-document deduplicated entities, from the same fused kernel."""
     d = _docs(spark, sf_dir).select("conv_id", "text")
-    return extract_entities(d)
+    return build_kg_from_texts(d).entities
 
 
 # ------------------------------------------------------------ text hygiene

@@ -1,65 +1,24 @@
-"""Mention detection + keyword concepts + per-conversation entity dedup.
+"""Entity confidence and keyword concepts as Spark column expressions.
 
-Spark restatement of the reference extraction operators (SURVEY.md §2.3):
+The library extracts entities in one place, the fused kernel
+(operators/fused.py: E1 mentions, E2 confidence, E3 keywords and the D1
+dedup per Arrow batch). The two stages here restate E2 and E3 in Spark
+SQL for the queries that read them on their own (kg_confidence,
+kg_keywords) and for the tests' join-form oracle
+(tests/test_parity_reference.py), where the DuckDB oracle and the
+reference hold them to the kernel's numbers:
 
-- E1 pattern mentions: ``mapInPandas`` kernel, pandas ``str.extractall`` per
-  pattern over each Arrow batch (vectorized — one regex pass per pattern per
-  batch, never per-row Python). Reference: TextEntityExtractor.extract_from_text
-  (/root/reference/agraph/extractors/entity_extractor.py:202-257).
 - E2 confidence: pure column expression (entity_extractor.py:127-154).
 - E3 keyword concepts: built-in regexp_extract_all + posexplode + groupBy +
   window top-k (entity_extractor.py:328-351).
-- D1 exact-name dedup: first-seen-wins groupBy with ``min_by`` over the
-  materialized emission-order key (entity_extractor.py:93-125). Spark
-  shuffles destroy Python-dict insertion order, so the order is an explicit
-  column (``seq``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import patterns as P
-from ..schemas import MENTIONS
-
-
-def _mentions_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    compiled = P.compiled_entity_patterns()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        texts = pdf["text"].fillna("")
-        conv = pdf["conv_id"]
-        outs = []
-        for ti, etype, pi, rx in compiled:
-            m = texts.str.extractall(rx)
-            if m.empty:
-                continue
-            names = m[0].str.strip()
-            keep = names.str.len() >= 2  # entity_extractor.py:222-223
-            if not keep.any():
-                continue
-            names = names[keep]
-            idx = names.index
-            row_labels = idx.get_level_values(0)
-            match_idx = idx.get_level_values(1).to_numpy()
-            base = (ti * 100 + pi) * 1_000_000
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "conv_id": conv.loc[row_labels].to_numpy(),
-                        "name": names.to_numpy(),
-                        "entity_type": etype,
-                        "seq": base + match_idx,
-                    }
-                )
-            )
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
 
 
 def entity_confidence_col(name_col: str = "name") -> F.Column:
@@ -76,16 +35,6 @@ def entity_confidence_col(name_col: str = "name") -> F.Column:
         - F.when(F.lower(name).isin(P.STOPWORDS), 0.3).otherwise(0.0)
     )
     return F.least(F.lit(1.0), F.greatest(F.lit(0.0), conf))
-
-
-def extract_mentions(documents: DataFrame) -> DataFrame:
-    """E1: (conv_id, text) -> mention rows with emission-order key and E2
-    confidence, filtered at the 0.5 threshold (entity_extractor.py:225-227)."""
-    raw = documents.select("conv_id", "text").mapInPandas(_mentions_kernel, schema=MENTIONS)
-    return (
-        raw.withColumn("confidence", entity_confidence_col("name"))
-        .where(F.col("confidence") >= P.CONFIDENCE_THRESHOLD)
-    )
 
 
 def keyword_counts(documents: DataFrame, id_col: str = "conv_id") -> DataFrame:
@@ -108,50 +57,3 @@ def keyword_counts(documents: DataFrame, id_col: str = "conv_id") -> DataFrame:
     return counts.withColumn("rk", F.row_number().over(w)).where(
         F.col("rk") <= P.KEYWORD_TOP_K
     )
-
-
-def extract_keywords(documents: DataFrame) -> DataFrame:
-    """E3: frequent-word concept entities with fixed confidence 0.6
-    (entity_extractor.py:242-251)."""
-    return (
-        keyword_counts(documents)
-        .select(
-            "conv_id",
-            F.col("word").alias("name"),
-            F.lit("concept").alias("entity_type"),
-            (F.lit(P.KEYWORD_SEQ_BASE) + F.col("rk")).alias("seq"),
-            F.lit(P.KEYWORD_CONFIDENCE).alias("confidence"),
-        )
-    )
-
-
-def dedup_entities(mentions: DataFrame) -> DataFrame:
-    """D1: first-seen-wins per (conv_id, lower(name)); merged confidence is
-    the max over the group (entity_extractor.py:106-123). Keeps the first
-    occurrence's surface name and entity type; ``entity_order`` is the dict
-    insertion position used by downstream order-sensitive ops (E6 pairing,
-    E7 fuzzy resolution)."""
-    return (
-        mentions.groupBy("conv_id", F.lower(F.col("name")).alias("name_norm"))
-        .agg(
-            F.min_by(F.struct("name", "entity_type"), "seq").alias("first"),
-            F.max("confidence").alias("confidence"),
-            F.min("seq").alias("entity_order"),
-        )
-        .select(
-            "conv_id",
-            F.col("first.name").alias("name"),
-            "name_norm",
-            F.col("first.entity_type").alias("entity_type"),
-            "confidence",
-            "entity_order",
-        )
-    )
-
-
-def extract_entities(documents: DataFrame) -> DataFrame:
-    """E1+E2+E3+D1 composed: per-conversation deduplicated entity set in
-    reference emission order."""
-    mentions = extract_mentions(documents)
-    keywords = extract_keywords(documents)
-    return dedup_entities(mentions.unionByName(keywords))

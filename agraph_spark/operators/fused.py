@@ -12,11 +12,13 @@ entity linking, connected components) remain Spark-side.
 
 Entity and candidate extraction is vectorized pandas (str.extractall per
 pattern per batch, groupby aggregations); the relation steps loop per
-conversation, as the reference does per document. Semantics are identical
-to the modular operators in extraction.py and relations.py (same reference
-citations); tests/test_parity_reference.py holds the kernel and the
-modular operators to exact reference parity and
-tests/test_kernel_equivalence.py holds them to each other.
+conversation, as the reference does per document. This kernel is the
+library's one extraction implementation: ``pipeline.build_kg`` (transcripts)
+and ``pipeline.build_kg_from_texts`` (one-row documents) both explode its
+output. tests/test_parity_reference.py holds it to exact reference parity,
+and tests/test_kernel_equivalence.py holds its entities and triples to the
+tests' join-form oracle (Spark forms of E2/E3/D1 and the relations.py
+joins over this kernel's own regex steps).
 """
 
 from __future__ import annotations
@@ -185,8 +187,12 @@ _SENT_SEP = "\x00"
 
 
 def _candidates_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """E5 per-line anchored extraction (same as relations._candidates_kernel,
-    sans Spark plumbing): (row, pred, head_text, tail_text)."""
+    """E5 per-line anchored extraction: (row, pred, head_text, tail_text).
+
+    Exactly equivalent to whole-document ``finditer`` (no relation pattern
+    spans a newline) but keeps the backtracking '(.+?)...(.+)' patterns off
+    lines that can't match — the difference between O(doc_len^2) and
+    O(line_len^2 on matching lines only)."""
     lines = pdf["text"].fillna("").str.split("\n").explode()
     rows = lines.index
     lines = lines.fillna("").reset_index(drop=True)

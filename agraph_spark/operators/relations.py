@@ -1,12 +1,14 @@
-"""Relation extraction: pattern relations, co-occurrence, endpoint
-resolution, validation, and the canonical triples projection.
+"""Relation endpoint resolution, co-occurrence, validation and the
+canonical triples projection as Spark joins.
 
-Spark restatement of TextRelationExtractor
+The library's relation extraction runs in the fused kernel
+(operators/fused.py: E5 candidates and E7/E6/E9/D11 per conversation).
+These operators restate the per-conversation steps as conv_id joins over
+an entity table; perfbench's traced build and the tests' join-form oracle
+(tests/test_parity_reference.py) run them, and the entry's sentence
+queries read ``split_sentences``. Reference: TextRelationExtractor
 (/root/reference/agraph/extractors/relation_extractor.py:285-487):
 
-- E5 pattern candidates: ``mapInPandas`` kernel, pandas ``str.extractall``
-  per relation pattern (two capture groups -> head/tail text), vectorized
-  per Arrow batch.
 - E7 endpoint resolution: DISTINCT candidate texts joined against the
   per-conversation entity set; rank = exact match first, then first entity
   in emission order satisfying substring-either-direction containment
@@ -21,64 +23,14 @@ Spark restatement of TextRelationExtractor
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import patterns as P
 from ..caching import track
-from ..schemas import REL_CANDIDATES
 
 # Python str.strip() strips unicode whitespace; (?U) makes Java \s match it too
 _TRIM = r"(?U)^\s+|\s+$"
-
-
-def _candidates_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-line extraction with literal-anchor prefilter.
-
-    Exactly equivalent to whole-document ``finditer`` (no relation pattern
-    spans a newline) but keeps the backtracking '(.+?)...(.+)' patterns off
-    lines that can't match — the difference between O(doc_len^2) and
-    O(line_len^2 on matching lines only)."""
-    compiled = P.compiled_relation_patterns()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        lines = pdf["text"].fillna("").str.split("\n").explode()
-        convs = pdf["conv_id"].loc[lines.index].reset_index(drop=True)
-        lines = lines.fillna("").reset_index(drop=True)
-        outs = []
-        for pred, rx, anchor in compiled:
-            mask = lines.str.contains(anchor, regex=True, na=False)
-            if not mask.any():
-                continue
-            m = lines[mask].str.extractall(rx)
-            if m.empty:
-                continue
-            head = m[0].str.strip().str.lower()
-            tail = m[1].str.strip().str.lower()
-            row_labels = m.index.get_level_values(0)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "conv_id": convs.loc[row_labels].to_numpy(),
-                        "pred": pred,
-                        "head_text": head.to_numpy(),
-                        "tail_text": tail.to_numpy(),
-                    }
-                )
-            )
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-
-def extract_relation_candidates(documents: DataFrame) -> DataFrame:
-    """E5: raw (head_text, pred, tail_text) capture-group rows."""
-    return documents.select("conv_id", "text").mapInPandas(
-        _candidates_kernel, schema=REL_CANDIDATES
-    )
 
 
 def resolve_mentions(mention_texts: DataFrame, entities: DataFrame) -> DataFrame:
@@ -216,13 +168,6 @@ def validate_relations(relations: DataFrame) -> DataFrame:
         & (F.col("conf") >= P.CONFIDENCE_THRESHOLD)
         & (valid_combo | relaxed)
     )
-
-
-def extract_relations(documents: DataFrame, entities: DataFrame) -> DataFrame:
-    """E5+E6+E9 composed: validated relation rows."""
-    pat = pattern_relations(extract_relation_candidates(documents), entities)
-    coo = cooccurrence_relations(documents, entities)
-    return validate_relations(pat.unionByName(coo))
 
 
 def to_triples(relations: DataFrame) -> DataFrame:

@@ -24,17 +24,6 @@ def salt_col(identity_col: str) -> Column:
     return F.pmod(F.xxhash64(F.col(identity_col)), F.lit(SALTS)).cast("int")
 
 
-def salted_count(df: DataFrame, key: str, identity_col: str) -> DataFrame:
-    """Two-phase count per key: immune to single-key partition blowup even
-    when one key owns most of the input."""
-    partial = (
-        df.withColumn("_salt", salt_col(identity_col))
-        .groupBy(key, "_salt")
-        .agg(F.count("*").alias("_partial"))
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").alias("cnt"))
-
-
 def salted_collect_set(
     df: DataFrame, key: str, value_col: str, identity_col: str
 ) -> DataFrame:

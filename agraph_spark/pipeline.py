@@ -53,9 +53,9 @@ def build_kg(transcripts: DataFrame, cache_documents: bool = True) -> KGBuild:
     (operators/fused.py). Entities and triples are narrow explodes of the
     cached kernel output; the reassembly is the build's only shuffle.
 
-    The modular operators (extraction.py, relations.py) compute the same
-    triples as per-stage joins; the test suite holds both to exact
-    reference parity and to each other."""
+    The kernel is the library's one extraction implementation. The test
+    suite holds it to exact reference parity and to a join-form oracle
+    (tests/test_parity_reference.py::modular_triples)."""
     extracted = extract_documents_fused(reassemble_conversations(transcripts))
     if cache_documents:
         extracted = track(extracted)
@@ -67,12 +67,14 @@ def build_kg(transcripts: DataFrame, cache_documents: bool = True) -> KGBuild:
     return KGBuild(extracted, _kernel_entities(extracted), _kernel_triples(extracted))
 
 
-def build_triples_from_texts(documents: DataFrame) -> DataFrame:
-    """Same pipeline for inputs that are already one-document-per-row
+def build_kg_from_texts(documents: DataFrame) -> KGBuild:
+    """Same kernel for inputs that are already one-document-per-row
     (e.g. the driver's ``documents`` parquet): expects (conv_id, text),
-    conv_id unique per row."""
+    conv_id unique per row. No reassembly shuffle; the entities and
+    triples are the same narrow explodes as ``build_kg``'s."""
     from .session import spread
 
-    # persisted so a caller's repeated actions on the triples reuse one
-    # kernel run; one consumer, so no eager build is needed
-    return _kernel_triples(track(extract_documents_fused(spread(documents))))
+    # persisted so a caller's repeated actions reuse one kernel run; lazy,
+    # since the entry's queries each read one explode
+    extracted = track(extract_documents_fused(spread(documents)))
+    return KGBuild(extracted, _kernel_entities(extracted), _kernel_triples(extracted))

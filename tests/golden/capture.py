@@ -69,7 +69,7 @@ def capture_triples(live: bool) -> None:
     from test_parity_fuzz import fuzz_docs
     from test_parity_reference import build_triples, golden_triples
 
-    from agraph_spark.pipeline import build_triples_from_texts
+    from agraph_spark.pipeline import build_kg_from_texts
     from agraph_spark.session import get_spark
     from agraph_spark.synth import make_transcripts, transcripts_df
 
@@ -93,7 +93,7 @@ def capture_triples(live: bool) -> None:
     else:
         df = spark.createDataFrame(docs, "conv_id string, text string")
         per_doc = {cid: set() for cid, _ in docs}
-        for r in build_triples_from_texts(df).select("conv_id", "subj", "pred", "obj").collect():
+        for r in build_kg_from_texts(df).triples.select("conv_id", "subj", "pred", "obj").collect():
             per_doc[r.conv_id].add((r.subj, r.pred, r.obj))
     _dump("parity_fuzz", [[cid, text, _triple_lists(per_doc[cid])] for cid, text in docs])
 

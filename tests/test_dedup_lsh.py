@@ -127,7 +127,7 @@ def test_caches_released_after_build(spark):
     tracked cache once results are materialized (the driver wraps each
     query this way)."""
     from agraph_spark.caching import release_caches
-    from agraph_spark.pipeline import build_triples_from_texts
+    from agraph_spark.pipeline import build_kg_from_texts
 
     release_caches(spark)  # drop anything earlier tests tracked
 
@@ -146,7 +146,7 @@ def test_caches_released_after_build(spark):
         [("c1", "Alice Johnson works at Acme Corp. Bob founded OpenAI."),
          ("c2", "The database contains a table. The table contains a column.")],
         "conv_id string, text string")
-    out = build_triples_from_texts(docs)
+    out = build_kg_from_texts(docs).triples
     assert out.count() > 0
     added = persistent_ids() - before
     assert added, "pipeline no longer persists its kernel output"

@@ -2,8 +2,9 @@
 and DeprecationWarning raised as errors. An invalid escape such as '\\s'
 in a non-raw string is a warning in Python 3.11 and an error in later
 versions, so it must never reach the tree. Library code leaves the
-session's global state alone, declares nothing that nothing loads and
-offers no option that no caller sets."""
+session's global state alone, declares nothing that nothing loads,
+offers no option that no caller sets and no function that only tests
+call."""
 
 from __future__ import annotations
 
@@ -237,3 +238,78 @@ def test_every_option_is_set_by_a_caller():
     unset = _unset_options()
     assert unset <= set(KEPT_OPTIONS), "\n".join(sorted(unset - set(KEPT_OPTIONS)))
     assert set(KEPT_OPTIONS) <= unset, "\n".join(sorted(set(KEPT_OPTIONS) - unset))
+
+
+# Public functions and classes no code outside tests/ loads that stay
+# anyway, each with its reason.
+KEPT_FUNCTIONS = {
+    "io.read_documents": "outside-input source: the extension-dispatched document reader",
+    "io.import_lightrag_graphml": "outside-input source: a LightRAG GraphML export",
+    "io.write_graph_json": "outside-output sink: the reference's graph.json export",
+    "operators.graph_queries.graph_summary":
+        "reference's signature: the summary report as text (graph_summary_lines' rows)",
+    "operators.graph_queries.recommendations":
+        "reference's signature: the recommendation strings (recommendations_df's rows)",
+    "operators.graph_queries.remove_conversations":
+        "reference's signature: lineage removal of conversations from a table",
+    "operators.retrieval.chat": "reference's signature: chat over the graph and chunks",
+    "operators.multimodal.fake_decoder": "seam: the deterministic stand-in media decoder",
+    "operators.multimodal.sample_video_frames":
+        "outside-input source: frame rows of video media before the decode",
+    "operators.multimodal.media_stats": "outside-input source: metadata of a media table",
+    "operators.vectors.cosine":
+        "test reference: the inline cosine that cosine_hoisted is held to bit for bit",
+    "operators.vectors.ivf_index":
+        "seam: the KMeans centroid fit the entry's fixed IVF centroids stand in for",
+    "streaming.stateful.start_first_seen_stream":
+        "outside-input source: the file-source wiring of the first-seen stream",
+    "streaming.windows.start_sessionized_stream":
+        "outside-input source: the file-source wiring of the sessionized stream",
+    "refload.reference_available": "test support: whether the reference runs live",
+    "refload.reference_triples": "test support: the reference extractors on one document",
+    "refload.load_reference_chunker": "test support: the reference chunkers",
+    "refload.golden": "test support: the recorded reference outputs",
+}
+
+
+def _uncalled_functions() -> set[str]:
+    """``module.name`` of every public top-level function and class in
+    agraph_spark/ whose name no file in CALLERS loads (a bare name, an
+    attribute or a from-import) outside that definition's own body."""
+    declared, owners = [], {}
+    for name in _tracked_python():
+        if not name.startswith(CALLERS):
+            continue
+        with open(os.path.join(ROOT, name), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), name)
+        module = name[len("agraph_spark/"):-len(".py")].replace("/", ".")
+        library = name.startswith("agraph_spark/")
+        for stmt in tree.body:
+            owner = None
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                owner = (name, stmt.name)
+                if library and not stmt.name.startswith("_"):
+                    declared.append((owner, f"{module}.{stmt.name}"))
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    loaded = [node.id]
+                elif isinstance(node, ast.Attribute):
+                    loaded = [node.attr]
+                elif isinstance(node, ast.ImportFrom):
+                    loaded = [alias.name for alias in node.names]
+                else:
+                    continue
+                for n in loaded:
+                    owners.setdefault(n, set()).add(owner)
+    return {label for owner, label in declared if not owners.get(owner[1], set()) - {owner}}
+
+
+def test_every_public_function_has_a_caller():
+    """Every public top-level function and class in agraph_spark/ is loaded
+    by some code outside tests/ other than its own body, or is in
+    KEPT_FUNCTIONS with its reason. A function only tests call is a second
+    implementation nothing runs in use, and it drifts from the one that
+    does."""
+    uncalled = _uncalled_functions()
+    assert uncalled <= set(KEPT_FUNCTIONS), "\n".join(sorted(uncalled - set(KEPT_FUNCTIONS)))
+    assert set(KEPT_FUNCTIONS) <= uncalled, "\n".join(sorted(set(KEPT_FUNCTIONS) - uncalled))

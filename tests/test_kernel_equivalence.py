@@ -1,8 +1,11 @@
-"""The fused document kernel computes endpoint resolution (E7), sentence
-co-occurrence (E6), validation (E9) and the triple dedup (D11) per
-conversation; the modular operators compute them as conv_id joins
-(operators/relations.py). Both must give the same triples, conf included,
-on the inputs where the two forms could part ways.
+"""The fused document kernel computes confidence (E2), keywords (E3), the
+entity dedup (D1), endpoint resolution (E7), sentence co-occurrence (E6),
+validation (E9) and the triple dedup (D11) per conversation; the tests'
+join-form oracle (test_parity_reference.modular_entities/modular_triples)
+computes them as Spark expressions, groupBys and conv_id joins
+(operators/extraction.py, operators/relations.py). Both must give the same
+entities and triples, conf included, on the inputs where the two forms
+could part ways.
 
 One real difference between the forms: the kernel strips sentences with
 Python's str.strip, the join form with Java's ``(?U)^\\s+|\\s+$``. Python
@@ -22,8 +25,8 @@ import pytest
 
 from agraph_spark.caching import release_caches
 from agraph_spark.operators.fused import conversation_triples
-from agraph_spark.pipeline import build_triples_from_texts
-from test_parity_reference import build_triples, modular_triples
+from agraph_spark.pipeline import build_kg_from_texts
+from test_parity_reference import build_triples, modular_entities, modular_triples
 
 TRANSCRIPT_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 
@@ -94,15 +97,55 @@ def test_kernel_triples_match_joins(spark, corpus):
     assert by_conv["sep"]
 
 
-def test_documents_kernel_matches_joins(spark):
-    """build_triples_from_texts over one-row documents, same cases."""
-    docs = spark.createDataFrame(
+def _documents(spark, convs: dict):
+    return spark.createDataFrame(
         [(cid, None if turns == [None, None] else "\n".join(turns))
-         for cid, turns in CONVERSATIONS.items()],
+         for cid, turns in convs.items()],
         "conv_id string, text string")
+
+
+def test_documents_kernel_matches_joins(spark):
+    """build_kg_from_texts over one-row documents, same cases."""
+    docs = _documents(spark, CONVERSATIONS)
     modular = _rows(modular_triples(docs))
     release_caches(spark)
-    assert _rows(build_triples_from_texts(docs)) == modular and modular
+    assert _rows(build_kg_from_texts(docs).triples) == modular and modular
+
+
+# names led by characters whose case rules differ across engines (long s,
+# the Kelvin sign, dotted capital I, CJK), stopword names (dropped below
+# the 0.5 confidence), stopword-led names, and repeated lowercase words
+# (keyword concepts)
+UNICODE_CONVERSATION = [
+    "ſtrange Things. \u212aelvin Smith. İzmir Port.",
+    "北京大学 and 清华大学 develop 人工智能 系统. 史蒂夫·乔布斯 visited 北京.",
+    "The Acme Corp hired An Editor. And Bob works for The Acme Corp. The. An.",
+    "data pipeline data pipeline data stream",
+]
+
+
+def test_kernel_entities_match_modular(spark):
+    """The kernel's entities equal the Spark-form oracle's (E1 mentions at
+    E2 confidence, E3 keywords, the D1 min_by dedup) on every conversation
+    but the null conv_id: pandas groupby drops a null key, so the kernel
+    gives that document no entities, where Spark's groupBy keeps it."""
+    docs = _documents(spark, {**CONVERSATIONS, "unicode": UNICODE_CONVERSATION})
+    cols = ("conv_id", "name", "name_norm", "entity_type", "confidence", "entity_order")
+
+    def by_conv(df) -> dict:
+        out = {}
+        for r in df.select(*cols).collect():
+            out.setdefault(r.conv_id, set()).add(tuple(r))
+        return out
+
+    modular = by_conv(modular_entities(docs))
+    kernel = by_conv(build_kg_from_texts(docs).entities)
+    release_caches(spark)
+    assert None not in kernel and modular.pop(None)
+    assert kernel == modular
+    names = {r[1] for r in kernel["unicode"]}
+    assert {"ſtrange Things", "\u212aelvin Smith", "İzmir Port", "清华大学", "And Bob",
+            "data", "pipeline"} <= names, sorted(names)
 
 
 def test_conversation_triples_rules():

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import random
 
-from agraph_spark.pipeline import build_triples_from_texts
+from agraph_spark.pipeline import build_kg_from_texts
 from agraph_spark.refload import golden, reference_available, reference_triples
 
 TOKENS = [
@@ -63,7 +63,7 @@ def test_fuzz_parity(spark):
         wants = {cid: {tuple(t) for t in triples} for cid, _, triples in recorded}
     assert any(wants.values()), "no parity oracle ran"
     df = spark.createDataFrame(docs, "conv_id string, text string")
-    got_rows = build_triples_from_texts(df).select("conv_id", "subj", "pred", "obj").collect()
+    got_rows = build_kg_from_texts(df).triples.select("conv_id", "subj", "pred", "obj").collect()
     got: dict[str, set] = {}
     for r in got_rows:
         got.setdefault(r.conv_id, set()).add((r.subj, r.pred, r.obj))

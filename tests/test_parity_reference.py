@@ -11,11 +11,19 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from agraph_spark import patterns as P
 from agraph_spark.caching import track
-from agraph_spark.operators.extraction import extract_entities
+from agraph_spark.operators.extraction import entity_confidence_col, keyword_counts
+from agraph_spark.operators.fused import _candidates_batch, _mentions_frame
 from agraph_spark.operators.reassemble import TURN_SEPARATOR, reassemble_conversations
-from agraph_spark.operators.relations import extract_relations, to_triples
+from agraph_spark.operators.relations import (
+    cooccurrence_relations,
+    pattern_relations,
+    to_triples,
+    validate_relations,
+)
 from agraph_spark.pipeline import build_kg
 from agraph_spark.refload import golden, reference_available, reference_triples
 from agraph_spark.synth import make_transcripts, transcripts_df
@@ -31,11 +39,82 @@ def golden_triples(pdf: pd.DataFrame) -> set[tuple[str, str, str]]:
     return out
 
 
+# The join-form oracle. The raw regex steps (E1 mentions, E5 candidates)
+# are the kernel's own functions, run in a mapInPandas of their own: the
+# two forms would only differ in plumbing there, and test_triple_parity
+# holds those steps to the reference's regex run. Everything after them is
+# restated in Spark: E2 confidence and E3 keywords as column expressions,
+# the D1 dedup as a min_by groupBy, and E7/E6/E9/D11 as conv_id joins.
+# The mapInPandas functions are nested so that they are pickled by value:
+# the Python workers cannot import this test module.
+
+
+def modular_entities(documents):
+    """(conv_id, text) documents -> per-conversation deduplicated entities:
+    E1 mentions at E2 confidence >= 0.5, plus E3 keyword concepts, deduped
+    first-seen-wins on (conv_id, lower(name)) with the max confidence
+    (entity_extractor.py:93-125)."""
+    def raw_mentions(batches):
+        for pdf in batches:
+            m = _mentions_frame(pdf["text"].fillna(""), pdf["conv_id"])
+            if len(m):
+                yield m
+
+    mentions = (
+        documents.select("conv_id", "text")
+        .mapInPandas(raw_mentions, schema="conv_id string, name string, entity_type string,"
+                     " seq bigint")
+        .withColumn("confidence", entity_confidence_col("name"))
+        .where(F.col("confidence") >= P.CONFIDENCE_THRESHOLD)
+    )
+    keywords = keyword_counts(documents).select(
+        "conv_id",
+        F.col("word").alias("name"),
+        F.lit("concept").alias("entity_type"),
+        (F.lit(P.KEYWORD_SEQ_BASE) + F.col("rk")).alias("seq"),
+        F.lit(P.KEYWORD_CONFIDENCE).alias("confidence"),
+    )
+    return (
+        mentions.unionByName(keywords)
+        .groupBy("conv_id", F.lower(F.col("name")).alias("name_norm"))
+        .agg(
+            F.min_by(F.struct("name", "entity_type"), "seq").alias("first"),
+            F.max("confidence").alias("confidence"),
+            F.min("seq").alias("entity_order"),
+        )
+        .select(
+            "conv_id",
+            F.col("first.name").alias("name"),
+            "name_norm",
+            F.col("first.entity_type").alias("entity_type"),
+            "confidence",
+            "entity_order",
+        )
+    )
+
+
 def modular_triples(documents):
-    """The kernel's independent oracle: (conv_id, text) documents through
-    the modular operators, per-stage Spark joins instead of one kernel."""
+    """The kernel's join-form oracle: (conv_id, text) documents through
+    per-stage Spark joins instead of one kernel pass."""
+    def raw_candidates(batches):
+        for pdf in batches:
+            c = _candidates_batch(pdf.reset_index(drop=True))
+            if len(c):
+                yield pd.DataFrame({
+                    "conv_id": pdf["conv_id"].to_numpy()[c["row"].to_numpy(dtype="int64")],
+                    "pred": c["pred"].to_numpy(),
+                    "head_text": c["head_text"].to_numpy(),
+                    "tail_text": c["tail_text"].to_numpy(),
+                })
+
     documents = track(documents)
-    return to_triples(extract_relations(documents, track(extract_entities(documents))))
+    entities = track(modular_entities(documents))
+    candidates = documents.select("conv_id", "text").mapInPandas(
+        raw_candidates,
+        schema="conv_id string, pred string, head_text string, tail_text string")
+    relations = pattern_relations(candidates, entities).unionByName(
+        cooccurrence_relations(documents, entities))
+    return to_triples(validate_relations(relations))
 
 
 def build_triples(tdf, path: str):

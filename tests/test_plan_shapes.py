@@ -196,12 +196,13 @@ def test_zero_pair_lsh_mirror_is_local_and_cheap(spark):
 def test_kernel_build_has_no_joins_and_one_exchange(spark):
     """Relation resolution, co-occurrence, validation and the triple dedup
     run inside the fused document kernel: the fused build_kg triples plan
-    and the build_triples_from_texts plan hold no join, and the fused
-    build's only shuffle is the reassembly Exchange."""
+    and the build_kg_from_texts triples and entities plans hold no join,
+    the documents plans run the kernel once, and the fused build's only
+    shuffle is the reassembly Exchange."""
     import re
 
     from agraph_spark.caching import release_caches
-    from agraph_spark.pipeline import build_kg, build_triples_from_texts
+    from agraph_spark.pipeline import build_kg, build_kg_from_texts
     from agraph_spark.synth import transcripts_df
 
     def joins(p):
@@ -215,8 +216,14 @@ def test_kernel_build_has_no_joins_and_one_exchange(spark):
     docs = spark.createDataFrame(
         [("a", "Alice Smith works for Acme Corp. Acme Corp develops Python.")],
         "conv_id string, text string")
-    p = plan_of(build_triples_from_texts(docs))
-    assert not joins(p) and "MapInPandas" in p, p
+    build = build_kg_from_texts(docs)
+    for out in (build.triples, build.entities):
+        p = plan_of(out)
+        assert not joins(p), p
+        # the formatted plan names each operator once in its tree and once
+        # in its detail section, under one id
+        assert len(set(re.findall(r"\bMapInPandas \((\d+)\)", p))) == 1, p
+    release_caches(spark)
 
 
 def _lambda_bodies(plan: str) -> list[str]:
